@@ -208,7 +208,7 @@ object Cdc {
 
     // The DataSource V2 streaming surface (readStream.format(...)): same
     // envelope as q60 but through Spark's MicroBatchExecution + the
-    // row-granular partition readers; oracle identical to q60's.
+    // source's partition readers; oracle identical to q60's.
     QueryDef.sqlBacked(
       "q64_cdc_stream_v2",
       """SELECT 'c' AS op,

@@ -283,7 +283,7 @@ object StreamingLive {
     },
 
     // Trigger.AvailableNow backlog drain: a 3-commit CDC backlog streams
-    // through the row-granular source under maxVersionsPerTrigger=1 and
+    // through the DSv2 source under maxVersionsPerTrigger=1 and
     // the AvailableNow pin — the query must terminate BY ITSELF after
     // exactly the pinned commits, in bounded batches. Per-commit counts
     // and cents land in the sink and DuckDB recomputes them from the

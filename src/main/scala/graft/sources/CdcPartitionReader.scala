@@ -1,40 +1,43 @@
 package graft.sources
 
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Row-granular reader for one CDC file event. Streams parquet rows via
-  * parquet-mr's example Group API — intentionally the same physical
-  * approach as the reference's ParquetReaderUtils (java:72–91) but
-  * iterator-based (no whole-file List on the heap) and with correct typed
-  * extraction per the DECLARED Spark schema, fixing the reference's
-  * positional-index addressing (defect #13) by resolving fields by NAME.
-  *
-  * Partition-column values come from the log's partitionValues (hive-dir
-  * style), cast to the declared type. Timestamps are INT64 micros
-  * (TableWriter pins outputTimestampType=TIMESTAMP_MICROS).
+/** Reads one CDC file event through the stream's [[FileRows]]: the rows
+  * in the event's resume bounds, deletion-vector filtered (dead rows stay
+  * dead; a DV transition emits only its own kills), behind the CDC
+  * envelope — or, for the `readStream.table` tail (`envelope = false`),
+  * bare payload rows. Partition-column values come from the log's
+  * partitionValues (hive-dir style), cast to the declared type.
   */
-private[sources] class CdcPartitionReaderFactory extends PartitionReaderFactory {
+private[sources] class CdcPartitionReaderFactory(rows: FileRows,
+    envelope: Boolean) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
-      case f: CdcFilePartition => new CdcFileReader(f)
-      case m: CdcMetaPartition => new CdcMetaReader(m)
+      case f: CdcFilePartition =>
+        val payload = rows.columns(f.partitionValues)
+        val out =
+          if (!envelope) payload
+          else Array[FileRows.Out](
+            FileRows.Value(UTF8String.fromString(f.op)),
+            FileRows.Value(UTF8String.fromString(f.partitionValue)),
+            FileRows.Value(f.ts), FileRows.Value(f.version)) ++ payload
+        rows.open(f.filePath, (f.rangeStart, f.rangeEnd), f.size, out,
+          dv = f.dv, skipRows = f.skipRows, untilRow = f.untilRow)
+      case m: CdcMetaPartition =>
+        new CdcMetaReader(m, GraftCdc.EnvelopeCols + rows.readSchema.length)
     }
 }
 
-private[sources] class CdcMetaReader(p: CdcMetaPartition)
+private[sources] class CdcMetaReader(p: CdcMetaPartition, width: Int)
     extends PartitionReader[InternalRow] {
   private var emitted = false
-  private val payload = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
   override def next(): Boolean = if (emitted) false else { emitted = true; true }
   override def get(): InternalRow = {
-    val row = new Array[Any](GraftCdc.EnvelopeCols + payload.length)
+    val row = new Array[Any](width)
     row(0) = UTF8String.fromString("m")
     row(1) = UTF8String.fromString("")
     row(2) = 0L
@@ -44,204 +47,8 @@ private[sources] class CdcMetaReader(p: CdcMetaPartition)
   override def close(): Unit = ()
 }
 
-private[sources] class CdcFileReader(p: CdcFilePartition)
-    extends PartitionReader[InternalRow] {
-
-  private val payload: StructType = {
-    val full = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
-    StructType(full.fields.drop(GraftCdc.EnvelopeCols))
-  }
-
-  private val isSplit: Boolean = ParquetSplits.isSplit(p.rangeStart, p.rangeEnd)
-
-  private val reader: ParquetReader[Group] = {
-    val b = ParquetReader
-      .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(p.filePath))
-      .withConf(p.conf.value)
-    (if (isSplit) b.withFileRange(p.rangeStart, p.rangeEnd) else b).build()
-  }
-
-  private var current: Group = _
-  // file-absolute row numbering: a byte-range split starts counting at
-  // the row count of the row groups before its range, so resume bounds
-  // (skipRows/untilRow) and DV positions apply unchanged across splits
-  private var rowIdx: Long =
-    (if (isSplit) ParquetSplits.rowsBefore(p.filePath, p.conf.value,
-      p.rangeStart) else 0L) - 1L
-
-  /** Deletion-vector row positions for THIS file, loaded lazily from the
-    * sidecar (small by design — dead rows, not file rows): in "live" mode
-    * the set is every dead row (skip them); in "dead" mode it is the rows
-    * that died at exactly dvVersion (emit only them, as op='d').
-    */
-  private lazy val dvSet: org.roaringbitmap.longlong.Roaring64Bitmap =
-    if (p.dvMode == "none") new org.roaringbitmap.longlong.Roaring64Bitmap()
-    else graft.txn.DeletionVectors.deadPositions(p.dvDir, p.conf.value,
-      new org.apache.hadoop.fs.Path(p.filePath).getName,
-      keep = if (p.dvMode == "live") _ => true else _ == p.dvVersion)
-
-  override def next(): Boolean = {
-    // mid-file resume bounds: yield only rows in [skipRows, untilRow) —
-    // RAW row positions; the DV filter below skips without renumbering
-    while (true) {
-      current = reader.read()
-      if (current == null) return false
-      rowIdx += 1
-      if (p.untilRow >= 0 && rowIdx >= p.untilRow) return false
-      if (rowIdx >= p.skipRows) {
-        val emit = p.dvMode match {
-          case "live" => !dvSet.contains(rowIdx) // dead rows stay dead
-          case "dead" => dvSet.contains(rowIdx)  // only this commit's kills
-          case _      => true
-        }
-        if (emit) return true
-      }
-      // else: before the resume point or DV-filtered — keep skipping
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = {
-    val row = new Array[Any](GraftCdc.EnvelopeCols + payload.length)
-    row(0) = UTF8String.fromString(p.op)
-    row(1) = UTF8String.fromString(p.partitionValue)
-    row(2) = p.ts
-    row(3) = p.version
-    val fileSchema = current.getType
-    var i = 0
-    while (i < payload.length) {
-      val f = payload(i)
-      row(GraftCdc.EnvelopeCols + i) =
-        if (p.partitionValues.contains(f.name))
-          castPartitionValue(p.partitionValues(f.name), f.dataType)
-        else if (!fileSchema.containsField(f.name)) {
-          // Schema evolution: file predates an add-column Metadata commit —
-          // surface the column as null (getFieldIndex would throw).
-          null
-        } else {
-          val idx = fileSchema.getFieldIndex(f.name)
-          if (current.getFieldRepetitionCount(idx) == 0) null
-          else extract(current, idx, f.dataType)
-        }
-      i += 1
-    }
-    new GenericInternalRow(row)
-  }
-
-  private def extract(g: Group, idx: Int, dt: DataType): Any =
-    GroupRows.extract(g, idx, dt)
-
-  private def castPartitionValue(s: String, dt: DataType): Any =
-    GroupRows.castPartitionValue(s, dt)
-
-  override def close(): Unit = reader.close()
-}
-
-/** Typed extraction from parquet-mr example Groups per the DECLARED Spark
-  * type — shared by the streaming CDC reader and the batch DSv2 reader.
-  * Fixes the reference's positional addressing (defect #13, SURVEY §0.1)
-  * by resolving fields by NAME at the call sites.
-  */
+/** Hive partition values (the log's strings) as Spark internal values. */
 private[sources] object GroupRows {
-
-  def extract(g: Group, idx: Int, dt: DataType): Any = dt match {
-    case IntegerType => g.getInteger(idx, 0)
-    // LONG/DOUBLE switch on the FILE's physical type: after a widening
-    // ALTER COLUMN TYPE (int→long, int→double, float→double) old files
-    // keep their narrower encoding forever — the declared type alone
-    // would getLong an INT32 page and throw
-    case LongType =>
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-        case INT32 => g.getInteger(idx, 0).toLong
-        case _ => g.getLong(idx, 0)
-      }
-    case DoubleType =>
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-        case INT32 => g.getInteger(idx, 0).toDouble
-        case FLOAT => g.getFloat(idx, 0).toDouble
-        case _ => g.getDouble(idx, 0)
-      }
-    case FloatType => g.getFloat(idx, 0)
-    case BooleanType => g.getBoolean(idx, 0)
-    case ShortType => g.getInteger(idx, 0).toShort
-    case ByteType => g.getInteger(idx, 0).toByte
-    case StringType => UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
-    case BinaryType => g.getBinary(idx, 0).getBytes
-    case TimestampType | TimestampNTZType =>
-      g.getLong(idx, 0) // INT64 micros by writer contract
-    case DateType => g.getInteger(idx, 0)
-    case dt: DecimalType =>
-      // Spark's parquet writer encodes decimals by precision:
-      // ≤9 INT32, ≤18 INT64, else FIXED_LEN_BYTE_ARRAY (big-endian
-      // two's-complement unscaled value) — read all three.
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-        case INT32 => Decimal(g.getInteger(idx, 0).toLong, dt.precision, dt.scale)
-        case INT64 => Decimal(g.getLong(idx, 0), dt.precision, dt.scale)
-        case FIXED_LEN_BYTE_ARRAY | BINARY =>
-          val unscaled = new java.math.BigInteger(g.getBinary(idx, 0).getBytes)
-          Decimal(new java.math.BigDecimal(unscaled, dt.scale), dt.precision, dt.scale)
-        case other => throw new UnsupportedOperationException(
-          s"decimal stored as $other not supported")
-      }
-    case ArrayType(et, _) =>
-      // Standard 3-level parquet LIST (Spark's writer default):
-      //   optional group col (LIST) { repeated group list { <element>; } }
-      val lst = g.getGroup(idx, 0)
-      val n = lst.getFieldRepetitionCount(0)
-      val out = new Array[Any](n)
-      var j = 0
-      while (j < n) {
-        val entry = lst.getGroup(0, j)
-        out(j) =
-          if (entry.getFieldRepetitionCount(0) == 0) null
-          else extract(entry, 0, et)
-        j += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    case MapType(kt, vt, _) =>
-      // Standard parquet MAP:
-      //   optional group col (MAP) { repeated group key_value { key; value; } }
-      val mp = g.getGroup(idx, 0)
-      val n = mp.getFieldRepetitionCount(0)
-      val keys = new Array[Any](n)
-      val vals = new Array[Any](n)
-      var j = 0
-      while (j < n) {
-        val kv = mp.getGroup(0, j)
-        keys(j) = extract(kv, 0, kt)
-        vals(j) =
-          if (kv.getFieldRepetitionCount(1) == 0) null
-          else extract(kv, 1, vt)
-        j += 1
-      }
-      new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(vals))
-    case st: StructType =>
-      // Nested group: recurse with the same name-resolved extraction the
-      // top level uses (schema evolution inside structs reads as null).
-      val sub = g.getGroup(idx, 0)
-      val subType = sub.getType
-      val out = new Array[Any](st.length)
-      var j = 0
-      while (j < st.length) {
-        val f = st(j)
-        out(j) =
-          if (!subType.containsField(f.name)) null
-          else {
-            val subIdx = subType.getFieldIndex(f.name)
-            if (sub.getFieldRepetitionCount(subIdx) == 0) null
-            else extract(sub, subIdx, f.dataType)
-          }
-        j += 1
-      }
-      new GenericInternalRow(out)
-    case other => throw new UnsupportedOperationException(
-      s"row-granular reader does not support $other yet (use the batch CDC path)")
-  }
 
   def castPartitionValue(s: String, dt: DataType): Any = dt match {
     // TableWriter encodes a null partition value as the hive sentinel
@@ -261,6 +68,6 @@ private[sources] object GroupRows {
     // epoch — LocalDate.parse is zone-free, exactly the inference parse
     case DateType => java.time.LocalDate.parse(s).toEpochDay.toInt
     case other => throw new UnsupportedOperationException(
-      s"partition column type $other not supported in row-granular reader")
+      s"partition column type $other not supported")
   }
 }

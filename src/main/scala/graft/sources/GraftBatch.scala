@@ -1,11 +1,6 @@
 package graft.sources
 
 import graft.txn._
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -16,7 +11,6 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 import java.util
 import java.util.OptionalLong
@@ -32,7 +26,7 @@ import scala.jdk.CollectionConverters._
   *    stats + hive partition values + the per-file bloom index, BEFORE
   *    any file opens (every pushed filter is also kept as a residual, so
   *    pruning only ever has to be sound, never complete);
-  *  - **Column pruning** → the parquet-mr read schema is cut to the
+  *  - **Column pruning** → the parquet read schema is cut to the
   *    required columns, so unprojected columns are never decoded;
   *  - **Limit pushdown** → each partition reader stops early;
   *  - **Statistics** → sizeInBytes/rowCount of the PRUNED file list, so
@@ -1239,11 +1233,21 @@ private[sources] class GraftBatchScan(
     }
   }
 
+  /** The file reader of this scan, built once at planning: the pruned
+    * PHYSICAL schema (file-spelling names) minus the metadata columns no
+    * file carries — `_graft_row_id` stays, read where a rewrite
+    * materialized it.
+    */
+  private lazy val rows: FileRows = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    FileRows(spark, StructType(
+      ColumnMapping.physicalSchema(required, resolved.mapping).fields
+        .filterNot(f => f.name == GraftBatch.FileMetadataColumn ||
+          f.name == GraftBatch.PosMetadataColumn)),
+      spark.sessionState.newHadoopConf())
+  }
+
   override def planInputPartitions(): Array[InputPartition] = {
-    val serConf = new SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    val physRequired =
-      ColumnMapping.physicalSchema(required, resolved.mapping)
     // Same predicate as outputPartitioning(): when the scan reported
     // key grouping, every partition must carry its typed key (Spark
     // groups same-key files into one task-side partition).
@@ -1265,34 +1269,30 @@ private[sources] class GraftBatchScan(
         GraftBatchPartition(
           TxnLog.dataPath(resolved.tablePath, f.path),
           f.partitionValues,
-          physRequired.json,
-          serConf,
-          dvDir = f.dv.map(d => TxnLog.dataPath(resolved.tablePath, d))
-            .getOrElse(""),
+          dv = f.dv.map(d =>
+            FileRows.Dv(TxnLog.dataPath(resolved.tablePath, d))),
           limit = limit,
           baseRowId = f.baseRowId,
           keyValues = spj.map(_.map(fd => GroupRows.castPartitionValue(
             f.partitionValues(fd.name), fd.dataType)).toArray),
           rangeStart = rs,
-          rangeEnd = re)
+          rangeEnd = re,
+          size = f.size)
       }
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftBatchReaderFactory
+    new GraftBatchReaderFactory(rows, required)
 }
 
-/** One live data file of the bound snapshot. `schemaJson` is the pruned
-  * PHYSICAL schema (file-spelling names); `dvDir` non-empty means rows
-  * listed in that deletion-vector sidecar are skipped.
+/** One byte range of a live data file of the bound snapshot; rows its
+  * deletion vector `dv` lists are skipped.
   */
 private[sources] case class GraftBatchPartition(
     filePath: String,
     partitionValues: Map[String, String],
-    schemaJson: String,
-    conf: SerializableConfiguration,
-    dvDir: String,
+    dv: Option[FileRows.Dv],
     limit: Int,
     baseRowId: Option[Long] = None,
     keyValues: Option[Array[Any]] = None,
@@ -1300,7 +1300,8 @@ private[sources] case class GraftBatchPartition(
     // takes row groups whose MIDPOINT lands in [start, end) — parquet's
     // own range rule, so every row group lands in exactly one split
     rangeStart: Long = 0L,
-    rangeEnd: Long = Long.MaxValue)
+    rangeEnd: Long = Long.MaxValue,
+    size: Long = -1L)
   extends InputPartition with HasPartitionKey {
 
   /** Typed hive partition values in declared partition-column order.
@@ -1312,24 +1313,35 @@ private[sources] case class GraftBatchPartition(
     new GenericInternalRow(keyValues.getOrElse(Array.empty[Any]))
 }
 
-private[sources] class GraftBatchReaderFactory extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new GraftBatchFileReader(p.asInstanceOf[GraftBatchPartition])
-}
-
-/** parquet-mr read support that prunes the FILE schema to the requested
-  * top-level columns — unprojected columns are never decoded (the batch
-  * scan's physical half of column pruning). Requested names absent from
-  * the file (schema evolution) simply don't survive the intersection;
-  * the reader surfaces them as null.
+/** Projects each file's rows to the scan's `required` (logical) columns:
+  * `_graft_file` is the absolute data path (what the runtime group filter
+  * compares against), `_graft_pos` the raw position in the file (with the
+  * file, the delta row-level operation's row id — exactly the handle a
+  * deletion-vector sidecar marks dead), `_graft_row_id` the stable row
+  * id; every other column is read or comes from the log's partition
+  * values.
   */
-private[sources] class ProjectingGroupReadSupport(names: Set[String])
-  extends GroupReadSupport {
-  override def init(context: InitContext): ReadSupport.ReadContext = {
-    val fileSchema = context.getFileSchema
-    val keep = fileSchema.getFields.asScala.filter(f => names.contains(f.getName))
-    new ReadSupport.ReadContext(
-      new MessageType(fileSchema.getName, keep.asJava))
+private[sources] class GraftBatchReaderFactory(rows: FileRows,
+    required: StructType) extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val f = p.asInstanceOf[GraftBatchPartition]
+    val columns = rows.columns(f.partitionValues)
+    val names = rows.readSchema.fieldNames
+    var next = 0 // required minus the two unread metadata columns = read order
+    val out = required.fieldNames.map {
+      case GraftBatch.FileMetadataColumn =>
+        FileRows.Value(org.apache.spark.unsafe.types.UTF8String
+          .fromString(f.filePath))
+      case GraftBatch.PosMetadataColumn => FileRows.Pos
+      case _ =>
+        val i = next
+        next += 1
+        if (names(i) == GraftBatch.RowIdMetadataColumn)
+          FileRows.RowId(i, f.baseRowId)
+        else columns(i)
+    }
+    rows.open(f.filePath, (f.rangeStart, f.rangeEnd), f.size, out,
+      dv = f.dv, limit = f.limit)
   }
 }
 
@@ -1409,29 +1421,7 @@ private[sources] class GraftTableTailStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftTableTailReaderFactory(payload.json)
-}
-
-private[sources] class GraftTableTailReaderFactory(payloadJson: String)
-  extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val payload = DataType.fromJson(payloadJson).asInstanceOf[StructType]
-    val innerReader = new CdcFileReader(p.asInstanceOf[CdcFilePartition])
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = innerReader.next()
-      override def get(): InternalRow = {
-        val r = innerReader.get()
-        val out = new Array[Any](payload.length)
-        var i = 0
-        while (i < payload.length) {
-          out(i) = r.get(GraftCdc.EnvelopeCols + i, payload(i).dataType)
-          i += 1
-        }
-        new GenericInternalRow(out)
-      }
-      override def close(): Unit = innerReader.close()
-    }
-  }
+    inner.readerFactory(envelope = false)
 }
 
 /** Completely-pushed aggregate: one partition, one row per group (one
@@ -1485,102 +1475,3 @@ private[sources] class GraftBatchAggScan(
 private[sources] case class GraftBatchAggPartition(
     schemaJson: String,
     rows: Seq[Array[Any]]) extends InputPartition
-
-private[sources] class GraftBatchFileReader(p: GraftBatchPartition)
-  extends PartitionReader[InternalRow] {
-
-  private val schema: StructType =
-    DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
-
-  // partition columns live in the log, not the file
-  private val fileFieldNames: Set[String] =
-    schema.fields.map(_.name).toSet -- p.partitionValues.keySet
-
-  private val isSplit: Boolean =
-    p.rangeStart != 0L || p.rangeEnd != Long.MaxValue
-
-  private val reader: ParquetReader[Group] = {
-    val b = ParquetReader
-      .builder(new ProjectingGroupReadSupport(fileFieldNames),
-        new org.apache.hadoop.fs.Path(p.filePath))
-      .withConf(p.conf.value)
-    (if (isSplit) b.withFileRange(p.rangeStart, p.rangeEnd) else b).build()
-  }
-
-  /** File-absolute row position of this split's first row — positions
-    * stay file-absolute, so deletion vectors and base+position row ids
-    * are split-invariant. Derived from parquet's own range filter (see
-    * [[ParquetSplits.rowsBefore]]), never re-implemented arithmetic.
-    */
-  private val rowsBefore: Long =
-    if (!isSplit) 0L
-    else ParquetSplits.rowsBefore(p.filePath, p.conf.value, p.rangeStart)
-
-  private var current: Group = _
-  private var rowIdx: Long = rowsBefore - 1L
-  private var emitted: Long = 0L
-
-  /** Dead row positions of this file as ONE roaring bitmap — bounded
-    * memory however wide the vector (bitmap sidecars fold by OR; legacy
-    * row-per-dead-row sidecars add position-by-position).
-    */
-  private lazy val dvSet: org.roaringbitmap.longlong.Roaring64Bitmap =
-    if (p.dvDir.isEmpty) new org.roaringbitmap.longlong.Roaring64Bitmap()
-    else graft.txn.DeletionVectors.deadPositions(p.dvDir, p.conf.value,
-      new org.apache.hadoop.fs.Path(p.filePath).getName)
-
-  override def next(): Boolean = {
-    if (p.limit >= 0 && emitted >= p.limit) return false
-    while (true) {
-      current = reader.read()
-      if (current == null) return false
-      rowIdx += 1
-      if (p.dvDir.isEmpty || !dvSet.contains(rowIdx)) {
-        emitted += 1
-        return true
-      }
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = {
-    val row = new Array[Any](schema.length)
-    val fileSchema = current.getType
-    var i = 0
-    while (i < schema.length) {
-      val f = schema(i)
-      row(i) =
-        if (f.name == GraftBatch.FileMetadataColumn)
-          // the `_graft_file` metadata column: the absolute data path,
-          // matching what the runtime group filter compares against
-          org.apache.spark.unsafe.types.UTF8String.fromString(p.filePath)
-        else if (f.name == GraftBatch.RowIdMetadataColumn) {
-          // stable row id: a physical column (materialized by an
-          // id-preserving rewrite) wins; else base + position. The DV
-          // skip above never renumbers — rowIdx is the RAW position.
-          if (fileSchema.containsField(f.name) &&
-              current.getFieldRepetitionCount(
-                fileSchema.getFieldIndex(f.name)) > 0)
-            GroupRows.extract(current, fileSchema.getFieldIndex(f.name),
-              org.apache.spark.sql.types.LongType)
-          else p.baseRowId.map(b => java.lang.Long.valueOf(b + rowIdx)).orNull
-        } else if (f.name == GraftBatch.PosMetadataColumn)
-          // raw position in file (DV skips never renumber): with the
-          // file name this is the delta row-level operation's row id —
-          // exactly the handle a deletion-vector sidecar marks dead
-          java.lang.Long.valueOf(rowIdx)
-        else if (p.partitionValues.contains(f.name))
-          GroupRows.castPartitionValue(p.partitionValues(f.name), f.dataType)
-        else if (!fileSchema.containsField(f.name)) null // schema evolution
-        else {
-          val idx = fileSchema.getFieldIndex(f.name)
-          if (current.getFieldRepetitionCount(idx) == 0) null
-          else GroupRows.extract(current, idx, f.dataType)
-        }
-      i += 1
-    }
-    new GenericInternalRow(row)
-  }
-
-  override def close(): Unit = reader.close()
-}

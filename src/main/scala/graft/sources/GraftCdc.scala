@@ -8,7 +8,6 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 import java.util
 import scala.jdk.CollectionConverters._
@@ -27,12 +26,10 @@ import scala.jdk.CollectionConverters._
   * phase parallelizes across the cluster instead of serializing each file
   * through one task. Row positions stay file-absolute across splits, so
   * mid-file resume offsets and deletion-vector positions are
-  * split-invariant. The reader streams rows from its range (parquet-mr)
-  * and attaches the CDC envelope. This is deliberately the row-granular
-  * path — batch analytics go through the vectorized [[CdcReader.cdc]];
-  * the streaming tail's per-commit volume is small, matching the
-  * reference's design point (ParquetReaderUtils.java:72–91, minus the
-  * whole-file materialization and the defects).
+  * split-invariant. Partitions read through the stream's [[FileRows]] —
+  * Spark's parquet reader, the one the batch [[CdcReader.cdc]] runs,
+  * built once per stream instance — which applies the resume bounds and
+  * deletion vectors and attaches the CDC envelope.
   */
 class GraftCdc extends TableProvider
   with org.apache.spark.sql.sources.DataSourceRegister {
@@ -73,8 +70,9 @@ object GraftCdc {
         StructField("ts", LongType, nullable = false) ::
         StructField("commit_version", LongType, nullable = false) ::
         // payload is always nullable on read: under schema evolution, files
-        // written before an add-column commit surface that column as null
-        payload.fields.map(_.copy(nullable = true)).toList)
+        // written before an add-column commit surface that column (or
+        // nested field) as null
+        FileRows.asNullable(payload).fields.toList)
 }
 
 private[sources] class GraftCdcTable(
@@ -103,17 +101,17 @@ private[sources] class GraftCdcMicroBatchStream(
   with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
   private val opts = CdcOptions.parse(options)
-  // session Hadoop conf captured on the driver, shipped to executors in
-  // each partition — s3a/hdfs credentials configured on the session work
-  private val serConf = new SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+  private val spark = org.apache.spark.sql.SparkSession.active
+  // session Hadoop conf captured at construction; the file readers carry it
+  // to the executors — s3a/hdfs credentials configured on the session work
+  private val hadoopConf = spark.sessionState.newHadoopConf()
+  private val readers = new FileRows.PerSchema(spark, hadoopConf)
   // session SQLConf handle captured here (planInputPartitions runs on the
   // stream-execution thread, where the thread-local SQLConf.get is not
   // guaranteed to be this session's) — read live at plan time so conf
   // changes between micro-batches apply
-  private val sqlConf =
-    org.apache.spark.sql.SparkSession.active.sessionState.conf
-  private def log = new TxnLog(opts.tablePath, serConf.value)
+  private val sqlConf = spark.sessionState.conf
+  private def log = new TxnLog(opts.tablePath, hadoopConf)
 
 
   override def initialOffset(): Offset = {
@@ -234,8 +232,8 @@ private[sources] class GraftCdcMicroBatchStream(
         val rows = a.stats.map(_.numRecords).getOrElse(-1L)
         if (a.dv.isDefined)
           CdcFileEvent(a.path, a.partitionValues, "d", a.modificationTime,
-            dvMode = "dead", dvDir = a.dv.get, dvVersion = v, size = a.size,
-            rows = rows)
+            dv = Some(FileRows.Dv(a.dv.get, diedAt = Some(v))),
+            size = a.size, rows = rows)
         else CdcFileEvent(a.path, a.partitionValues, "c", a.modificationTime,
           size = a.size, rows = rows)
       case r: RemoveFile if r.dataChange && opts.keepPartition(r.partitionValues) &&
@@ -244,7 +242,7 @@ private[sources] class GraftCdcMicroBatchStream(
         val rows = pre.flatMap(_.stats).map(_.numRecords).getOrElse(-1L)
         pre.flatMap(_.dv) match {
           case Some(d) => CdcFileEvent(r.path, r.partitionValues, "r",
-            r.deletionTimestamp, dvMode = "live", dvDir = d,
+            r.deletionTimestamp, dv = Some(FileRows.Dv(d)),
             size = pre.map(_.size).getOrElse(-1L), rows = rows)
           case None =>
             CdcFileEvent(r.path, r.partitionValues, "r", r.deletionTimestamp,
@@ -254,7 +252,7 @@ private[sources] class GraftCdcMicroBatchStream(
   }
 
   /** Snapshot file list at v (replay order — the FULL_COPY index space).
-    * DV-carrying files emit live rows only (mode "live"). Memoized per
+    * DV-carrying files emit live rows only. Memoized per
     * version: a row-capped backfill replays THIS list every trigger.
     */
   private def snapshotEventsOf(l: TxnLog, v: Long): IndexedSeq[CdcFileEvent] =
@@ -267,7 +265,7 @@ private[sources] class GraftCdcMicroBatchStream(
         val rows = f.stats.map(_.numRecords).getOrElse(-1L)
         f.dv match {
           case Some(d) => CdcFileEvent(f.path, f.partitionValues, "c",
-            f.modificationTime, dvMode = "live", dvDir = d, size = f.size,
+            f.modificationTime, dv = Some(FileRows.Dv(d)), size = f.size,
             rows = rows)
           case None => CdcFileEvent(f.path, f.partitionValues, "c",
             f.modificationTime, size = f.size, rows = rows)
@@ -287,7 +285,7 @@ private[sources] class GraftCdcMicroBatchStream(
       val p = new org.apache.hadoop.fs.Path(
         TxnLog.dataPath(opts.tablePath, ev.rel))
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(p, serConf.value)
+        .fromPath(p, hadoopConf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRecordCount finally r.close()
     })
@@ -437,13 +435,13 @@ private[sources] class GraftCdcMicroBatchStream(
     val l = log
     val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
     val latestMeta = latestMetadata(l)
-    val partCols = latestMeta.map(_.partitionColumns).getOrElse(Nil)
-    // Column mapping (RENAME COLUMN): the per-file reader resolves parquet
-    // fields BY NAME, so partitions carry the PHYSICAL spelling of the
-    // envelope schema; the stream's output schema stays logical (rows are
-    // positional — names never travel with them).
-    val physJson = graft.txn.ColumnMapping.physicalSchema(schema,
-      latestMeta.map(_.columnMapping).getOrElse(Map.empty)).json
+    // Column mapping (RENAME COLUMN): the file reader resolves parquet
+    // fields BY NAME, so it reads the PHYSICAL spelling of the payload;
+    // the stream's output schema stays logical (rows are positional —
+    // names never travel with them).
+    planned = readers(graft.txn.ColumnMapping.physicalSchema(
+      StructType(schema.fields.drop(GraftCdc.EnvelopeCols)),
+      latestMeta.map(_.columnMapping).getOrElse(Map.empty)))
 
     // Large files byte-range split (the batch scan's contract): each
     // range carries the SAME file-absolute skip/until resume bounds —
@@ -455,13 +453,11 @@ private[sources] class GraftCdcMicroBatchStream(
         untilRow: Long): Unit =
       ParquetSplits.ranges(ev.size, maxSplit).foreach { case (rs, re) =>
         parts += CdcFilePartition(TxnLog.dataPath(opts.tablePath, ev.rel), ev.op,
-          CdcReader.partitionValueString(ev.pv), ev.pv, ev.ts, v, physJson,
-          partCols, serConf, skipRows, untilRow,
-          dvMode = ev.dvMode,
-          dvDir = if (ev.dvDir.isEmpty) ""
-            else TxnLog.dataPath(opts.tablePath, ev.dvDir),
-          dvVersion = ev.dvVersion,
-          rangeStart = rs, rangeEnd = re)
+          CdcReader.partitionValueString(ev.pv), ev.pv, ev.ts, v,
+          skipRows, untilRow,
+          dv = ev.dv.map(d =>
+            d.copy(dir = TxnLog.dataPath(opts.tablePath, d.dir))),
+          rangeStart = rs, rangeEnd = re, size = ev.size)
       }
 
     // Emit the events of one indexed segment (snapshot or a commit),
@@ -507,7 +503,7 @@ private[sources] class GraftCdcMicroBatchStream(
       // s.version here by construction, so a version split across
       // row-capped batches emits its 'm' row exactly once)
       actions.foreach {
-        case _: graft.txn.Metadata => parts += CdcMetaPartition(v, schema.json)
+        case _: graft.txn.Metadata => parts += CdcMetaPartition(v)
         case _ => ()
       }
       val events = fileEventsOf(l, v)
@@ -519,8 +515,18 @@ private[sources] class GraftCdcMicroBatchStream(
     parts.toArray
   }
 
+  // the reader of the last planned batch (Spark plans a batch's
+  // partitions before it asks for their reader factory)
+  @volatile private var planned: FileRows = _
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new CdcPartitionReaderFactory
+    readerFactory(envelope = true)
+
+  /** Reader factory of the planned batch; `envelope = false` reads bare
+    * payload rows (the `readStream.table` tail).
+    */
+  private[sources] def readerFactory(envelope: Boolean): PartitionReaderFactory =
+    new CdcPartitionReaderFactory(planned, envelope)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -530,18 +536,16 @@ private[sources] case class WrappedOffset(o: CdcOffset) extends Offset {
   override def json(): String = o.json
 }
 
-/** One planned file event, pre-partition: `dvMode` ∈ none/live/dead —
-  * "live" (snapshot of a DV file) emits rows NOT in the vector; "dead"
-  * (a DV transition) emits only rows whose deleted_at == dvVersion.
+/** One planned file event, pre-partition. `dv` (sidecar dir relative
+  * to the table): a snapshot of a DV file emits rows NOT in the vector;
+  * a DV transition emits only the rows that died at its version.
   */
 private[sources] case class CdcFileEvent(
     rel: String,
     pv: Map[String, String],
     op: String,
     ts: Long,
-    dvMode: String = "none",
-    dvDir: String = "",
-    dvVersion: Long = -1L,
+    dv: Option[FileRows.Dv] = None,
     // logged file size (bytes) for byte-range split planning; -1 =
     // unknown (pre-size-retention removes) → plan the whole file
     size: Long = -1L,
@@ -562,21 +566,18 @@ private[sources] case class CdcFilePartition(
     partitionValues: Map[String, String],
     ts: Long,
     version: Long,
-    schemaJson: String,
-    partitionColumns: Seq[String],
-    conf: SerializableConfiguration,
     skipRows: Long = 0L,
     untilRow: Long = -1L,
-    dvMode: String = "none",
-    dvDir: String = "",
-    dvVersion: Long = -1L,
+    dv: Option[FileRows.Dv] = None,
     // byte range of the split ((0, MaxValue) = whole file): the reader
     // keeps row groups whose midpoint lands in [start, end) and numbers
-    // rows file-absolutely from ParquetSplits.rowsBefore, so skip/until
-    // and DV positions are split-invariant
+    // rows file-absolutely, so skip/until and DV positions are
+    // split-invariant
     rangeStart: Long = 0L,
-    rangeEnd: Long = Long.MaxValue) extends InputPartition
+    rangeEnd: Long = Long.MaxValue,
+    // logged file size; -1 = unknown (looked up by the reader)
+    size: Long = -1L) extends InputPartition
 
 /** A schema-change control row (op='m'). */
-private[sources] case class CdcMetaPartition(
-    version: Long, schemaJson: String) extends InputPartition
+private[sources] case class CdcMetaPartition(version: Long)
+  extends InputPartition

@@ -3,7 +3,6 @@ package graft.sources
 import graft.txn._
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -11,13 +10,12 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 import java.util
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 micro-batch STREAMING source over the change data feed —
-  * `spark.readStream.format("graft.sources.GraftCdf")` (Delta's
+  * `spark.readStream.format("graft-cdf")` (Delta's
   * `readChangeFeed` streaming surface). Where [[GraftCdc]] streams the
   * file-level op envelope, this source streams ROW-LEVEL change records:
   * `_change_type` ∈ {insert, update_preimage, update_postimage, delete}
@@ -68,7 +66,7 @@ object GraftCdf {
     * change columns, appended LAST like Delta's CDF.
     */
   def cdfSchema(payload: StructType): StructType =
-    StructType(payload.fields.map(_.copy(nullable = true)).toList :::
+    StructType(FileRows.asNullable(payload).fields.toList :::
       StructField(ChangeDataFeed.TypeCol, StringType, nullable = false) ::
       StructField(ChangeDataFeed.VersionCol, LongType, nullable = false) ::
       StructField(ChangeDataFeed.TimestampCol, LongType, nullable = false) ::
@@ -138,19 +136,23 @@ private[sources] class GraftCdfMicroBatchStream(
     options.get("partitionPredicate").filter(_.nonEmpty)
       .map(org.apache.spark.sql.functions.expr)
 
-  private val serConf = new SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-  // captured like serConf: planInputPartitions runs on the
+  private val spark = org.apache.spark.sql.SparkSession.active
+  // captured at construction: planInputPartitions runs on the
   // stream-execution thread where the thread-local SQLConf is not
   // guaranteed to be this session's
-  private val sqlConf =
-    org.apache.spark.sql.SparkSession.active.sessionState.conf
-  private def log = new TxnLog(tablePath, serConf.value)
+  private val hadoopConf = spark.sessionState.newHadoopConf()
+  private val sqlConf = spark.sessionState.conf
+  private def log = new TxnLog(tablePath, hadoopConf)
 
   // payload = declared table columns (the three change columns are
   // appended by the reader, never read from the log schema)
-  private val payloadJson =
-    StructType(schema.fields.dropRight(3)).json
+  private val payload = StructType(schema.fields.dropRight(3))
+  private val readers = new FileRows.PerSchema(spark, hadoopConf)
+  // sidecars carry LOGICAL names plus their own `_change_type`; data
+  // files carry the physical names of the latest planned mapping
+  private lazy val sidecarRows = readers(
+    payload.add(ChangeDataFeed.TypeCol, StringType))
+  @volatile private var dataRows: FileRows = _
 
   override def initialOffset(): Offset = CdfOffset(startingVersion - 1)
 
@@ -212,7 +214,8 @@ private[sources] class GraftCdfMicroBatchStream(
     // the log; columns a file predates read as null through the reader's
     // by-name resolution.
     val snapMeta = l.snapshotLatest().metadata
-    val mapping = snapMeta.map(_.columnMapping).getOrElse(Map.empty)
+    dataRows = readers(ColumnMapping.physicalSchema(payload,
+      snapMeta.map(_.columnMapping).getOrElse(Map.empty)))
     val versioned = inRange.map(v => v -> l.read(v))
     // one evaluation over the admitted range's distinct partition
     // values builds the predicate's action-level keep function
@@ -239,8 +242,7 @@ private[sources] class GraftCdfMicroBatchStream(
     // Large files byte-range split, exactly like the batch scan and the
     // CDC source: change sidecars are change-volume-sized (rarely split),
     // but inferred-insert AddFiles of a CONVERTed lake can be multi-GB —
-    // those must backfill as many parallel tasks, never one. The CDF
-    // reader tracks no row positions, so ranges need no rowsBefore.
+    // those must backfill as many parallel tasks, never one.
     val maxSplit = sqlConf.filesMaxPartitionBytes
     versioned.flatMap { case (v, actions) =>
       val ts = actions.collectFirst { case c: CommitInfo => c.timestamp }
@@ -272,10 +274,9 @@ private[sources] class GraftCdfMicroBatchStream(
             case (rs, re) => CdfFilePartition(
               TxnLog.dataPath(tablePath, c.path), constKind = None,
               partitionValues = Map.empty, version = v, ts = ts,
-              schemaJson = payloadJson, mapping = Map.empty, conf = serConf,
               rowFilter =
                 if (c.partitionValues.isEmpty) partitionFilter else Map.empty,
-              rangeStart = rs, rangeEnd = re)
+              rangeStart = rs, rangeEnd = re, size = c.size)
           })
       } else {
         val adds = actions.collect { case a: AddFile if a.dataChange => a }
@@ -306,8 +307,7 @@ private[sources] class GraftCdfMicroBatchStream(
             CdfFilePartition(TxnLog.dataPath(tablePath, a.path),
               constKind = Some(ChangeDataFeed.Insert),
               partitionValues = a.partitionValues, version = v, ts = ts,
-              schemaJson = payloadJson, mapping = mapping, conf = serConf,
-              rangeStart = rs, rangeEnd = re)
+              rangeStart = rs, rangeEnd = re, size = a.size)
           }
         }
       }
@@ -315,7 +315,7 @@ private[sources] class GraftCdfMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CdfReaderFactory
+    new CdfReaderFactory(sidecarRows, dataRows)
 }
 
 private[sources] final case class CdfFilePartition(
@@ -324,106 +324,36 @@ private[sources] final case class CdfFilePartition(
     partitionValues: Map[String, String],
     version: Long,
     ts: Long,
-    schemaJson: String,
-    mapping: Map[String, String], // logical → physical (data files only)
-    conf: SerializableConfiguration,
     // partition-column equality filter applied ROW-side — only for
     // legacy pv-less sidecars that action-level pruning can't prove out
     rowFilter: Map[String, String] = Map.empty,
-    // byte range of the split ((0, MaxValue) = whole file); CDF rows
-    // carry no positions, so ranges compose with nothing else
+    // byte range of the split ((0, MaxValue) = whole file)
     rangeStart: Long = 0L,
-    rangeEnd: Long = Long.MaxValue) extends InputPartition
+    rangeEnd: Long = Long.MaxValue,
+    // logged file size; -1 = unknown (looked up by the reader)
+    size: Long = -1L) extends InputPartition
 
-private[sources] class CdfReaderFactory extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new CdfFileReader(p.asInstanceOf[CdfFilePartition])
-}
-
-/** Streams one data or change file as CDF rows: payload columns resolved
-  * by NAME against the file (hive partition values from the log; columns
-  * the file predates surface as null), then `_change_type` (constant for
-  * inferred inserts, read from the sidecar otherwise), `_commit_version`,
-  * `_commit_timestamp`.
+/** Reads one data or change file as CDF rows: the payload columns (hive
+  * partition values from the log; columns a file predates read as null),
+  * then `_change_type` (constant for inferred inserts, read from the
+  * sidecar otherwise), `_commit_version`, `_commit_timestamp`.
   */
-private[sources] class CdfFileReader(p: CdfFilePartition)
-    extends PartitionReader[InternalRow] {
-
-  private val payload =
-    DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
-
-  private val reader = {
-    val b = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(p.filePath))
-      .withConf(p.conf.value)
-    (if (ParquetSplits.isSplit(p.rangeStart, p.rangeEnd))
-      b.withFileRange(p.rangeStart, p.rangeEnd)
-    else b).build()
+private[sources] class CdfReaderFactory(sidecarRows: FileRows,
+    dataRows: FileRows) extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val f = p.asInstanceOf[CdfFilePartition]
+    val rows = if (f.constKind.isEmpty) sidecarRows else dataRows
+    val columns = rows.columns(f.partitionValues)
+    val n = rows.readSchema.length
+    val kind = f.constKind.fold[FileRows.Out](FileRows.Read(n - 1))(k =>
+      FileRows.Value(UTF8String.fromString(k)))
+    val payloadLen = if (f.constKind.isEmpty) n - 1 else n
+    rows.open(f.filePath, (f.rangeStart, f.rangeEnd), f.size,
+      columns.take(payloadLen) ++ Array(kind, FileRows.Value(f.version),
+        FileRows.Value(f.ts)),
+      where = f.rowFilter.toSeq.map { case (k, v) =>
+        val i = rows.readSchema.fieldIndex(k)
+        i -> GroupRows.castPartitionValue(v, rows.readSchema(i).dataType)
+      })
   }
-
-  private var current: org.apache.parquet.example.data.Group = _
-
-  // expected internal values for the row filter, resolved once against
-  // the payload schema (hive null sentinel → null)
-  private val filterExpect: Seq[(String, Any)] = p.rowFilter.toSeq.map {
-    case (k, v) =>
-      val dt = payload(payload.fieldIndex(k)).dataType
-      k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
-            else GroupRows.castPartitionValue(v, dt))
-  }
-
-  private def matches(g: org.apache.parquet.example.data.Group): Boolean =
-    filterExpect.forall { case (k, want) =>
-      val fs = g.getType
-      val fileField = p.mapping.getOrElse(k, k)
-      val got =
-        if (!fs.containsField(fileField)) null
-        else {
-          val idx = fs.getFieldIndex(fileField)
-          if (g.getFieldRepetitionCount(idx) == 0) null
-          else GroupRows.extract(g, idx,
-            payload(payload.fieldIndex(k)).dataType)
-        }
-      if (want == null) got == null else want == got
-    }
-
-  override def next(): Boolean = {
-    current = reader.read()
-    while (current != null && !matches(current)) current = reader.read()
-    current != null
-  }
-
-  override def get(): InternalRow = {
-    val row = new Array[Any](payload.length + 3)
-    val fileSchema = current.getType
-    var i = 0
-    while (i < payload.length) {
-      val f = payload(i)
-      // data files carry PHYSICAL names (column mapping); sidecars are
-      // logical and ship an empty mapping
-      val fileField = p.mapping.getOrElse(f.name, f.name)
-      row(i) =
-        if (p.partitionValues.contains(f.name))
-          GroupRows.castPartitionValue(p.partitionValues(f.name), f.dataType)
-        else if (!fileSchema.containsField(fileField)) null
-        else {
-          val idx = fileSchema.getFieldIndex(fileField)
-          if (current.getFieldRepetitionCount(idx) == 0) null
-          else GroupRows.extract(current, idx, f.dataType)
-        }
-      i += 1
-    }
-    row(payload.length) = p.constKind match {
-      case Some(k) => UTF8String.fromString(k)
-      case None =>
-        val idx = fileSchema.getFieldIndex(ChangeDataFeed.TypeCol)
-        UTF8String.fromString(current.getString(idx, 0))
-    }
-    row(payload.length + 1) = p.version
-    row(payload.length + 2) = p.ts
-    new GenericInternalRow(row)
-  }
-
-  override def close(): Unit = reader.close()
 }

@@ -1,17 +1,15 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-
-import scala.jdk.CollectionConverters._
-
 /** Byte-range splitting arithmetic shared by the batch DSv2 scan and the
   * streaming CDC/CDF sources: a file larger than
   * `spark.sql.files.maxPartitionBytes` plans as several range partitions
   * (pure byte arithmetic — no footer read at plan time), and each range
   * reader keeps the row groups whose MIDPOINT falls inside its range —
-  * parquet-mr's own `filterFileMetaDataByMidpoint` contract, so every row
-  * group lands in exactly one split however the footer lays them out.
+  * parquet-mr's own `filterFileMetaDataByMidpoint` contract, which
+  * Spark's parquet reader applies, so every row group lands in exactly
+  * one split however the footer lays them out. Row positions stay
+  * file-absolute across splits: [[FileRows]] numbers rows by Spark's
+  * row-index column, which counts from the start of the file.
   *
   * Without this, a multi-GB data file — a CONVERTed foreign lake's,
   * typically — reads as ONE task; with it, the same file reads as
@@ -22,9 +20,6 @@ private[graft] object ParquetSplits {
   /** Whole-file sentinel range. */
   val WholeFile: (Long, Long) = (0L, Long.MaxValue)
 
-  def isSplit(rangeStart: Long, rangeEnd: Long): Boolean =
-    rangeStart != 0L || rangeEnd != Long.MaxValue
-
   /** Byte ranges covering a file of `size` bytes under a `maxSplit`
     * budget. `size <= 0` (unknown — e.g. a RemoveFile action predating
     * size retention) or `maxSplit <= 0` plans the whole file as one
@@ -34,28 +29,4 @@ private[graft] object ParquetSplits {
     if (maxSplit <= 0 || size <= 0 || size <= maxSplit) Seq(WholeFile)
     else (0L until size by maxSplit)
       .map(s => (s, math.min(s + maxSplit, size)))
-
-  /** File-absolute row position of a range's first row: the total row
-    * count of the row groups BEFORE `rangeStart`. Derived from
-    * parquet-mr's OWN range filter — a footer opened with range
-    * [0, rangeStart) keeps exactly the row groups the midpoint rule puts
-    * before this split — never re-implemented arithmetic, so if a parquet
-    * upgrade ever changes the midpoint rule, the reader's
-    * `withFileRange` and this count move together instead of silently
-    * misaligning deletion-vector positions and base+position row ids.
-    *
-    * One executor-side footer read, only for split partitions with a
-    * non-zero start.
-    */
-  def rowsBefore(filePath: String, conf: Configuration, rangeStart: Long): Long =
-    if (rangeStart <= 0L) 0L
-    else {
-      val opts = org.apache.parquet.HadoopReadOptions.builder(conf)
-        .withRange(0L, rangeStart).build()
-      val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(filePath), conf), opts)
-      try fr.getRowGroups.asScala.iterator.map(_.getRowCount).sum
-      finally fr.close()
-    }
 }

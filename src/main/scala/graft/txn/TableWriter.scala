@@ -69,8 +69,8 @@ object TableWriter extends Serializable {
       operation: String = "WRITE",
       extraActions: Seq[Action] = Seq.empty,
       generated: Map[String, String] = Map.empty): Unit = {
-    // INT64-micros timestamps (not INT96) so every reader — including the
-    // row-granular streaming PartitionReader — sees a plain long column.
+    // INT64-micros timestamps (not INT96): the parquet type every
+    // reader and external engine reads without a legacy rebase.
     // Scoped to this write: the previous session value is restored after.
     val tsTypeKey = "spark.sql.parquet.outputTimestampType"
     val prevTsType = spark.conf.getOption(tsTypeKey)
@@ -540,10 +540,9 @@ object TableWriter extends Serializable {
   /** ALTER COLUMN TYPE — WIDENING ONLY (Delta's type widening): ONE
     * metadata commit re-declares the column's type; no data file is
     * rewritten. Old files keep their narrower physical encoding forever
-    * and every reader upcasts at scan time: Spark 4's vectorized parquet
-    * reader reads INT32 pages under a declared LONG/DOUBLE schema
-    * natively, and the row-granular CDC reader switches on the file's
-    * physical type ([[graft.sources.CdcPartitionReader]]). Narrowing and
+    * and every reader upcasts at scan time: Spark 4's parquet reader —
+    * behind the v1 scans and all three DSv2 sources — reads INT32 pages
+    * under a declared LONG/DOUBLE schema natively. Narrowing and
     * lossy changes refuse — a long → int would silently corrupt.
     *
     * float→double additionally DROPS the column's min/max from every

@@ -21,6 +21,22 @@ object SparkTestSession {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with Spark's task-failure logging off, for probes that
+    * EXPECT a task to fail: the executor's and the scheduler's stack
+    * traces for such a task would bury real failures in the test log.
+    * The previous levels come back afterwards.
+    */
+  def withoutTaskFailureLogs[A](body: => A): A = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.config.Configurator
+    val loggers = Seq("org.apache.spark.executor.Executor",
+      "org.apache.spark.scheduler.TaskSetManager")
+    val before = loggers.map(n => n -> LogManager.getLogger(n).getLevel)
+    loggers.foreach(Configurator.setLevel(_, org.apache.logging.log4j.Level.OFF))
+    try body
+    finally before.foreach { case (n, level) => Configurator.setLevel(n, level) }
+  }
 }
 
 /** Smoke + semantic checks for every registry query at sf0.001. The full

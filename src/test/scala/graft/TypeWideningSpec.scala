@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Type widening (ALTER COLUMN TYPE): one metadata commit re-declares a
   * column wider; old files keep their narrow physical encoding and read
-  * upcast — vectorized batch scans, appends in the wide type, and the
-  * row-granular CDC stream all agree. Narrowing refuses. float→double
+  * upcast — the snapshot reader, the `graft` scan, the `graft-cdc` and
+  * `graft-cdf` streams, and appends in the wide type all agree. Narrowing refuses. float→double
   * drops that column's min/max (half-ulp bound drift would make
   * skipping unsound); integer-ladder widenings keep stats.
   */
@@ -18,6 +18,20 @@ class TypeWideningSpec extends AnyFunSuite {
 
   private def freshDir(tag: String) =
     java.nio.file.Files.createTempDirectory(tag).toString + "/t"
+
+  private def graftScan(dir: String) =
+    spark.read.format("graft").option("tablePath", dir).load()
+
+  /** Every change the `graft-cdf` stream delivers, drained to memory. */
+  private def cdfRows(dir: String, name: String) = {
+    val q = spark.readStream.format("graft-cdf").option("tablePath", dir)
+      .load().writeStream.format("memory").queryName(name)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory(name + "_ck").toString)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    spark.table(name)
+  }
 
   test("int widens to long: both file generations read and append wide") {
     val dir = freshDir("tw1")
@@ -34,7 +48,11 @@ class TypeWideningSpec extends AnyFunSuite {
       Seq((11L, 5000000000L)).toDF("id", "v"), dir, commitTs = 3000L)
     assert(SnapshotReader.read(spark, dir).agg(sum(col("v")))
       .head().getLong(0) == 5000000055L)
-    // the row-granular CDC stream reads the INT32 generation too
+    // the DSv2 scan and both streams read the INT32 generation too
+    assert(graftScan(dir).agg(sum(col("v"))).head().getLong(0) ==
+      5000000055L)
+    assert(cdfRows(dir, "tw1_cdf").agg(sum(col("v"))).head().getLong(0) ==
+      5000000055L)
     val events = spark.readStream.format("graft-cdc")
       .option("tablePath", dir).option("startingVersion", "0")
       .option("includeHistory", "true").load()
@@ -66,6 +84,10 @@ class TypeWideningSpec extends AnyFunSuite {
     val t = SnapshotReader.read(spark, dir)
     assert(t.schema("f").dataType == DoubleType)
     assert(t.filter(col("id") === 1L).head().getDouble(1) == 1.5d)
+    assert(graftScan(dir).filter(col("id") === 1L).head().getDouble(1) ==
+      1.5d)
+    assert(cdfRows(dir, "tw2_cdf").filter(col("id") === 1L).head()
+      .getDouble(1) == 1.5d)
   }
 
   test("int-ladder widening keeps stats; skipping still prunes") {

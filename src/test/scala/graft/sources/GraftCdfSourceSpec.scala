@@ -29,7 +29,7 @@ class GraftCdfSourceSpec extends AnyFunSuite {
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, String, Long)]
     var batches = 0L
-    val reader = spark.readStream.format("graft.sources.GraftCdf")
+    val reader = spark.readStream.format("graft-cdf")
       .option("tablePath", dir)
       .option("startingVersion", "0")
     val q = maxVersions.fold(reader)(m =>

@@ -11,9 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * ONLY through `fs.mockfs.impl` in the session Hadoop conf. Every path
   * below the table root then resolves through the non-default scheme,
   * so a green test proves the write path, the snapshot reader, the
-  * batch DSv2 partition readers, and the row-granular CDC readers all
-  * carry the session conf to the executor side (the
-  * SerializableConfiguration plumbing) instead of falling back to the
+  * batch DSv2 partition readers, and the CDC stream readers all carry
+  * the session conf to the executor side (the conf each scan or stream
+  * broadcasts with its file reader) instead of falling back to the
   * default filesystem — exactly what s3a needs, minus the credentials
   * this container doesn't have.
   */
