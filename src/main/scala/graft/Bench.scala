@@ -8,6 +8,44 @@ import org.apache.spark.sql.SparkSession
   * one-time fixture write don't land on whichever query runs first.
   */
 object Bench {
+  type Query = (SparkSession, String) => org.apache.spark.sql.DataFrame
+
+  // Full materialization, not count(): the noop sink evaluates every
+  // column of every row (count() lets Catalyst prune unevaluated
+  // projections, flattering projection-heavy queries).
+  private[graft] def consume(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Wall seconds of one query, or None when it throws: the failure is
+    * reported on stderr, and an exception never scores as a fast run.
+    * Any cache the query built is cleared after the clock stops.
+    */
+  private[graft] def timeQuery(spark: SparkSession, sfDir: String,
+      name: String, fn: Query): Option[Double] = {
+    val t0 = System.nanoTime()
+    val ok =
+      try { consume(fn(spark, sfDir)); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        false
+      }
+    val dt = (System.nanoTime() - t0) / 1e9
+    spark.catalog.clearCache()
+    if (ok) Some(dt) else None
+  }
+
+  /** Times `queries` in name order: the times of those that ran, and
+    * the names of those that threw — left out of every time and total.
+    */
+  private[graft] def timeAll(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, Query)]): (Map[String, Double], Seq[String]) = {
+    val timed = queries.sortBy(_._1).map { case (name, fn) =>
+      name -> timeQuery(spark, sfDir, name, fn)
+    }
+    (timed.collect { case (n, Some(t)) => n -> t }.toMap,
+      timed.collect { case (n, None) => n })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -22,12 +60,6 @@ object Bench {
       .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // Full materialization, not count(): the noop sink evaluates every
-    // column of every row (count() lets Catalyst prune unevaluated
-    // projections, flattering projection-heavy queries).
-    def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     // untimed warmup: JIT/codegen + one-time amortized artifacts (the CDC
     // fixture and the persisted IVF index — queries measure steady-state
@@ -98,17 +130,7 @@ object Bench {
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => args.exists(n.contains) }
 
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try consume(fn(spark, sfDir)) catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      dt
-    }
-
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> timeOne(fn)
-    }.toMap
+    val (results, failed) = timeAll(spark, sfDir, selected.toSeq)
 
     // Self-annotating noise protocol: any query >2x its previous round's
     // time gets ONE isolated re-measure at the end of the run (same JVM,
@@ -159,8 +181,8 @@ object Bench {
     // noise the re-measure exists to remove — observed re-measures
     // landing 3-4x SLOWER than their first pass without this.
     if (outliers.nonEmpty) { System.gc(); Thread.sleep(500) }
-    val remeasured = outliers.map { name =>
-      name -> timeOne(selected(name))
+    val remeasured = outliers.flatMap { name =>
+      timeQuery(spark, sfDir, name, selected(name)).map(name -> _)
     }.toMap
     // Full-resolution per-query times (long names) go to stderr for humans;
     // the machine-read line on stdout stays compact — short keys (the qNN
@@ -252,6 +274,6 @@ object Bench {
     // FIRST and the summary + noise annotations (value / value_isolated /
     // remeasured / load + calibration) LAST so the numbers that matter
     // survive tail truncation.
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","queries":$qs,"remeasured":$rs,"anchors":$as,"loadavg":"$loadStart","loadavg_end":"$loadEnd","calib_s":${f"$calibStart%.3f"},"calib_end_s":${f"$calibEnd%.3f"},"value_isolated":${f"$totalIso%.3f"},"value":${f"$total%.3f"}}""")
+    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","queries":$qs,"remeasured":$rs,"anchors":$as,"loadavg":"$loadStart","loadavg_end":"$loadEnd","calib_s":${f"$calibStart%.3f"},"calib_end_s":${f"$calibEnd%.3f"},"failed":${failed.size},"value_isolated":${f"$totalIso%.3f"},"value":${f"$total%.3f"}}""")
   }
 }

@@ -39,8 +39,9 @@ class GraftCdc extends TableProvider
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     // fail fast on bad options at load(), not first batch
     val parsed = CdcOptions.parse(options.asCaseSensitiveMap().asScala.toMap)
-    GraftCdc.envelopeSchema(GraftCdc.declaredSchema(
-      parsed.tablePath, new Configuration()))
+    val payload = GraftCdc.declaredSchema(parsed.tablePath, new Configuration())
+    GraftCdc.refuseEnvelopeClash(payload, parsed.tablePath)
+    GraftCdc.envelopeSchema(payload)
   }
 
   override def getTable(
@@ -52,7 +53,14 @@ class GraftCdc extends TableProvider
 
 object GraftCdc {
 
-  val EnvelopeCols = 4
+  /** The change envelope every event carries ahead of the row. */
+  private val Envelope: Seq[StructField] = Seq(
+    StructField("op", StringType, nullable = false),
+    StructField("partition_value", StringType, nullable = false),
+    StructField("ts", LongType, nullable = false),
+    StructField("commit_version", LongType, nullable = false))
+
+  val EnvelopeCols: Int = Envelope.size
 
   def declaredSchema(tablePath: String, conf: Configuration): StructType = {
     require(tablePath != null && tablePath.nonEmpty, "tablePath is required")
@@ -63,16 +71,29 @@ object GraftCdc {
         s"no Metadata action in $tablePath — cannot infer schema"))
   }
 
+  /** Refuse a table with a column named like an envelope column: the
+    * stream would carry two columns of that name, and any later
+    * reference to it would fail as ambiguous. Names compare as Spark
+    * resolves them, case-insensitively.
+    */
+  def refuseEnvelopeClash(payload: StructType, tablePath: String): Unit = {
+    val names = Envelope.map(_.name)
+    val clash = payload.fieldNames.filter(n =>
+      names.exists(_.equalsIgnoreCase(n)))
+    if (clash.nonEmpty)
+      throw new IllegalArgumentException(
+        s"graft-cdc cannot stream $tablePath: table column(s) " +
+          clash.map(c => s"`$c`").mkString(", ") + " share a name with " +
+          s"the change envelope (${names.mkString(", ")}); rename the " +
+          "column(s), or read the table through graft-cdf or " +
+          "readStream.table")
+  }
+
+  // payload is always nullable on read: under schema evolution, files
+  // written before an add-column commit surface that column (or nested
+  // field) as null
   def envelopeSchema(payload: StructType): StructType =
-    StructType(
-      StructField("op", StringType, nullable = false) ::
-        StructField("partition_value", StringType, nullable = false) ::
-        StructField("ts", LongType, nullable = false) ::
-        StructField("commit_version", LongType, nullable = false) ::
-        // payload is always nullable on read: under schema evolution, files
-        // written before an add-column commit surface that column (or
-        // nested field) as null
-        FileRows.asNullable(payload).fields.toList)
+    StructType(Envelope ++ FileRows.asNullable(payload).fields)
 }
 
 private[sources] class GraftCdcTable(

@@ -38,10 +38,20 @@ import scala.jdk.CollectionConverters._
   * [[SupportsDelta]]: each task's [[DeltaWriter]] receives discriminated
   * delete(id) / update(id, row) / insert(row) calls, so exact CDF images
   * come for free — dead handles stage per task (with an 'u'/'d' kind),
-  * update rows and insert rows write to SEPARATE data files, and the
-  * commit reconstructs update_preimage/delete rows by joining the
-  * handles back to the affected files (the only re-read, proportional
-  * to AFFECTED files, not the table).
+  * update rows and insert rows write to SEPARATE data files.
+  *
+  * The commit step runs as few Spark jobs as it can:
+  *  - affected files come from the writers: each task reports the
+  *    basenames it wrote handles for, so the commit never re-reads or
+  *    shuffles the handles to learn them;
+  *  - the new vector folds the handles into bitmaps per partition and
+  *    copies the affected files' carried bitmap rows as they are — one
+  *    write job, no shuffle ([[DeletionVectors.stageVector]]);
+  *  - update_preimage/delete rows join the handles back to a PLAIN scan
+  *    of the affected files (the only re-read, proportional to AFFECTED
+  *    files, not the table). No vector is applied there: the handles
+  *    name rows that were live at scan time, and the identity check
+  *    proves the files' pointers unchanged since.
   */
 private[sources] class GraftDeltaRowLevelOperation(
     cmd: RowLevelOperation.Command,
@@ -92,12 +102,14 @@ private[sources] class GraftDeltaRowLevelOperation(
 
 /** One task's delta output: new data files (update images and inserts
   * written SEPARATELY so the commit can classify CDF rows without
-  * re-deriving anything) plus the staged dead-handle files.
+  * re-deriving anything), the staged dead-handle files, and the
+  * basenames of the data files those handles point into.
   */
 private[sources] case class GraftDeltaCommitMessage(
     updateAdds: Seq[AddFile],
     insertAdds: Seq[AddFile],
-    handleFiles: Seq[String]) extends WriterCommitMessage
+    handleFiles: Seq[String],
+    affectedFiles: Seq[String]) extends WriterCommitMessage
 
 private[sources] object GraftDeltaBatchWrite {
   /** Staged dead-handle row shape: which file, which raw position, and
@@ -170,17 +182,14 @@ private[sources] class GraftDeltaBatchWrite(
     try GraftRowLevelOps.validateReplacement(tablePath, conf, newAdds, log)
     catch { case t: Throwable => dropStaging(); throw t }
 
+    // built once: the vector and the pre-images both read the handles
     val handles =
       if (handlePaths.isEmpty) None
       else Some(spark.read.schema(GraftDeltaBatchWrite.HandleSchema)
-        .parquet(handlePaths: _*).persist())
+        .parquet(handlePaths: _*))
     try {
-      // bounded: one row per file that LOST rows (≤ |files|)
-      val affectedNames: Set[String] = handles match {
-        case None => Set.empty
-        case Some(h) => h.select(col("file_name")).distinct()
-          .collect().map(_.getString(0)).toSet
-      }
+      // the writers report the files they marked rows in (≤ |files|)
+      val affectedNames = msgs.flatMap(_.affectedFiles).toSet
       val scan = boundScan().getOrElse(throw new IllegalStateException(
         s"$op at $tablePath: no bound scan — the delta write cannot " +
           "locate the rows it marks dead"))
@@ -231,14 +240,10 @@ private[sources] class GraftDeltaBatchWrite(
         val version = snap.version + 1
         // the new vector: this statement's dead rows + the affected
         // files' prior kills (pointers replace, never chain)
-        val dvRel: Option[String] = handles.map { h =>
-          val newDead = h.select(col("file_name"), col("row_index"),
-            lit(version).as("deleted_at"))
-          val allRows = DeletionVectors
-            .carriedRows(spark, tablePath, affected)
-            .fold(newDead)(newDead.unionByName(_))
-          DeletionVectors.stageVector(spark, tablePath, version, allRows)
-        }
+        val dvRel: Option[String] = handles.map(h =>
+          DeletionVectors.stageVector(spark, tablePath, version,
+            h.select(col("file_name"), col("row_index")),
+            carryFrom = affected))
         val removes = affected.map(f =>
           RemoveFile(f.path, ts, f.partitionValues))
         val readds = affected.map(_.copy(
@@ -269,16 +274,18 @@ private[sources] class GraftDeltaBatchWrite(
             Thread.sleep(1L + scala.util.Random.nextInt(8))
         }
       }
-    } finally {
-      handles.foreach(_.unpersist())
-      dropStaging()
-    }
+    } finally dropStaging()
   }
 
   /** Exact change rows for the feed: update/delete PREIMAGES join the
-    * dead handles back to the affected files' live rows (the only
-    * re-read — affected files, never the table); update POSTIMAGES and
-    * inserts read straight from the just-staged new files.
+    * dead handles back to the affected files' rows (the only re-read —
+    * affected files, never the table); update POSTIMAGES and inserts
+    * read straight from the just-staged new files.
+    *
+    * The pre-image scan applies no deletion vector: the handles name
+    * rows that were live at scan time, and the commit's identity check
+    * proved the affected files' pointers unchanged since, so the join
+    * on the handles alone yields exactly the pre-images.
     */
   private def stageCdf(
       spark: org.apache.spark.sql.SparkSession,
@@ -294,7 +301,7 @@ private[sources] class GraftDeltaBatchWrite(
       snap.metadata.map(_.partitionColumns).getOrElse(Seq.empty)
     val pre = handles.filter(_ => affected.nonEmpty).map { h =>
       DeletionVectors.readFiles(spark, tablePath, affected, declared,
-          withRowMeta = true)
+          withRowMeta = true, applyVectors = false)
         .join(h, col("_fn") === col("file_name") &&
           col("_ri") === col("row_index"))
         .withColumn(ChangeDataFeed.TypeCol,
@@ -364,6 +371,7 @@ private[sources] class GraftDeltaDataWriter(
   private var handleWriter: org.apache.parquet.hadoop.ParquetWriter[
     org.apache.parquet.example.data.Group] = _
   private var handleRel: String = _
+  private val touched = scala.collection.mutable.LinkedHashSet.empty[String]
 
   private def handles() = {
     if (handleWriter == null) {
@@ -380,8 +388,10 @@ private[sources] class GraftDeltaDataWriter(
   private def writeHandle(id: InternalRow, kind: String): Unit = {
     // rowId() order: (_graft_file absolute path, _graft_pos)
     val abs = id.getUTF8String(0).toString
+    val name = abs.substring(abs.lastIndexOf('/') + 1)
+    touched += name
     val g = handleFactory.newGroup()
-    g.add("file_name", abs.substring(abs.lastIndexOf('/') + 1))
+    g.add("file_name", name)
     g.add("row_index", id.getLong(1))
     g.add("kind", kind)
     handles().write(g)
@@ -418,7 +428,8 @@ private[sources] class GraftDeltaDataWriter(
     GraftDeltaCommitMessage(
       updateAdds = addsOf(updWriter),
       insertAdds = addsOf(insWriter),
-      handleFiles = Option(handleRel).toSeq)
+      handleFiles = Option(handleRel).toSeq,
+      affectedFiles = touched.toSeq)
   }
 
   override def abort(): Unit = {

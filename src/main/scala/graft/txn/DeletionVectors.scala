@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * the table instead of silently resurrecting deleted rows.
   *
   * Layout: one DV directory per delete commit, `_dv/dv-<version>/`,
-  * holding parquet rows `(file_name, row_index, deleted_at)`. The
+  * holding the dead rows of its files (see the encodings below). The
   * affected `AddFile` re-commits with `dv` pointing at the directory;
   * a file deleted from twice gets a NEW directory holding the UNION of
   * its dead rows (pointers replace, never chain), with each row keeping
@@ -34,15 +34,18 @@ object DeletionVectors {
   def dvDir(version: Long): String = f"_dv/dv-$version%020d"
 
   /** Sidecar encodings. Vectors written since round 12 are ROARING
-    * BITMAPS: one parquet row per (file_name, deleted_at) pair holding
-    * the dead positions as a serialized Roaring64Bitmap plus its
-    * cardinality — a 10⁸-row delete is one compressed-bitmap row, not
-    * 10⁸ parquet rows, and readers hold ONE bitmap per file (bounded
-    * memory) instead of a hash set of boxed longs. Row-granular
-    * `deleted_at` survives exactly where the CDC needs it: per-version
-    * bitmaps, since a row's kill version keys the op='d' replay.
-    * LEGACY dirs (rounds 4–11: one row per dead row) read forever —
-    * format is detected per directory from the parquet schema.
+    * BITMAPS `(file_name, deleted_at, n_rows, bitmap)`: one or more
+    * disjoint rows per (file_name, deleted_at) pair, each holding dead
+    * positions as a serialized Roaring64Bitmap plus its cardinality —
+    * a 10⁸-row delete is a few compressed-bitmap rows, not 10⁸ parquet
+    * rows, and readers hold ONE bitmap per file (bounded memory)
+    * instead of a hash set of boxed longs: [[deadPositions]] ORs a
+    * pair's rows, [[readDvDirs]] expands them and [[deletedPerFile]]
+    * sums their counts. Row-granular `deleted_at` survives exactly
+    * where the CDC needs it: per-version bitmaps, since a row's kill
+    * version keys the op='d' replay. LEGACY dirs (rounds 4–11:
+    * `(file_name, row_index, deleted_at)`, one row per dead row) read
+    * forever — format is detected per directory from a footer.
     */
   private[graft] def serializeBitmap(
       bm: org.roaringbitmap.longlong.Roaring64Bitmap): Array[Byte] = {
@@ -59,46 +62,89 @@ object DeletionVectors {
     bm
   }
 
-  /** One read per vector dir NORMALIZED to the bitmap shape
-    * `(file_name, deleted_at, n_rows, bitmap, _dv_src)` — legacy
+  /** The spark schema of one vector dir, from ONE footer read where
+    * the plan is built — never a schema-inference job. Every part of a
+    * dir is written by one statement, so the first part speaks for all;
+    * a dir with no part reads as an empty bitmap vector.
+    */
+  private def dirSchema(
+      spark: SparkSession,
+      dir: Path,
+      conf: org.apache.hadoop.conf.Configuration): StructType = {
+    val fs = dir.getFileSystem(conf)
+    fs.listStatus(dir).find(_.getPath.getName.endsWith(".parquet")) match {
+      case None => BitmapSchema
+      case Some(st) =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromStatus(st, conf))
+        try new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+          .convert(r.getFooter.getFileMetaData.getSchema)
+        finally r.close()
+    }
+  }
+
+  private val BitmapSchema: StructType = StructType.fromDDL(
+    "file_name STRING, deleted_at BIGINT, n_rows BIGINT, bitmap BINARY")
+
+  /** One vector dir NORMALIZED to the bitmap shape `(file_name,
+    * deleted_at, n_rows, bitmap, row_index, _dv_src)` — legacy
     * row-per-dead-row dirs surface n_rows=1 and a null bitmap with
     * their row_index kept aside; `_dv_src` carries the EXACT pointer
     * string the AddFile holds: pointers may be table-relative (own
     * deletes) or absolute (shallow-clone-imported source vectors), and
     * a clone can hold both a local `_dv/dv-N` and a source `/…/_dv/dv-N`
     * whose suffixes collide — tagging by pointer, not by a path regexp,
-    * keys every validity join unambiguously.
+    * keys every validity join unambiguously. The format is detected per
+    * directory from its footer.
     */
-  private def readDvDirsRaw(
+  private def readDvDir(
       spark: SparkSession,
       tablePath: String,
-      dirs: Seq[String]): DataFrame =
-    dirs.map { d =>
-      val raw = spark.read.parquet(TxnLog.dataPath(tablePath, d))
-      val norm =
-        if (raw.columns.contains("bitmap"))
-          raw.select(col("file_name"), col("deleted_at"), col("n_rows"),
-            col("bitmap"), lit(null).cast("long").as("row_index"))
-        else
-          raw.select(col("file_name"), col("deleted_at"),
-            lit(1L).as("n_rows"),
-            lit(null).cast("binary").as("bitmap"), col("row_index"))
-      norm.withColumn("_dv_src", lit(d))
-    }.reduce(_ unionByName _)
+      conf: org.apache.hadoop.conf.Configuration,
+      dir: String): DataFrame = {
+    val path = TxnLog.dataPath(tablePath, dir)
+    val schema = dirSchema(spark, new Path(path), conf)
+    val raw = spark.read.schema(schema).parquet(path)
+    val norm =
+      if (schema.fieldNames.contains("bitmap"))
+        raw.select(col("file_name"), col("deleted_at"), col("n_rows"),
+          col("bitmap"), lit(null).cast("long").as("row_index"))
+      else
+        raw.select(col("file_name"), col("deleted_at"),
+          lit(1L).as("n_rows"),
+          lit(null).cast("binary").as("bitmap"), col("row_index"))
+    norm.withColumn("_dv_src", lit(dir))
+  }
 
-  /** The ROW-EXPANDED view `(file_name, row_index, deleted_at,
-    * _dv_src)` of the given vector dirs — bitmap rows unpack through a
-    * LAZY iterator (flatMap never materializes a whole dead set), so a
-    * wide vector streams. The SHARED loader behind [[dvRows]],
-    * [[SnapshotReader.statsCount]], and the CDC DV-transition reader —
-    * pointer-resolution fixes land once.
+  /** The VALID raw rows for `files`: each DV-carrying file's rows in the
+    * dir its CURRENT pointer names (rows for the same file in superseded
+    * dirs are ignored). A filter per dir on the names pointing at it —
+    * bounded by the file count, like the pointers themselves — so no
+    * join. None when no file carries a vector.
     */
-  private[graft] def readDvDirs(
+  private def validRaw(
       spark: SparkSession,
       tablePath: String,
-      dirs: Seq[String]): DataFrame = {
+      files: Seq[AddFile]): Option[DataFrame] = {
+    val byDir = files.filter(_.dv.isDefined).groupBy(_.dv.get)
+    if (byDir.isEmpty) return None
+    val conf = spark.sessionState.newHadoopConf()
+    Some(byDir.toSeq.sortBy(_._1).map { case (dir, fs) =>
+      val names = fs.map(f => new Path(f.path).getName).distinct
+      readDvDir(spark, tablePath, conf, dir)
+        .filter(col("file_name").isin(names: _*))
+    }.reduce(_ unionByName _))
+  }
+
+  /** Normalized raw rows expanded to one row per dead position,
+    * `(file_name, row_index, deleted_at, _dv_src)` — bitmap rows unpack
+    * through a LAZY iterator (flatMap never materializes a whole dead
+    * set), so a wide vector streams.
+    */
+  private def expand(spark: SparkSession, raw: DataFrame): DataFrame = {
     import spark.implicits._
-    val raw = readDvDirsRaw(spark, tablePath, dirs)
     val legacy = raw.filter(col("bitmap").isNull)
       .select(col("file_name"), col("row_index"), col("deleted_at"),
         col("_dv_src"))
@@ -116,6 +162,20 @@ object DeletionVectors {
       }
       .toDF("file_name", "row_index", "deleted_at", "_dv_src")
     legacy.unionByName(packed)
+  }
+
+  /** The ROW-EXPANDED view `(file_name, row_index, deleted_at,
+    * _dv_src)` of the given vector dirs. The SHARED loader behind
+    * [[SnapshotReader.statsCount]] and the CDC DV-transition reader —
+    * pointer-resolution fixes land once.
+    */
+  private[graft] def readDvDirs(
+      spark: SparkSession,
+      tablePath: String,
+      dirs: Seq[String]): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    expand(spark,
+      dirs.map(readDvDir(spark, tablePath, conf, _)).reduce(_ unionByName _))
   }
 
   /** EXECUTOR-side sidecar fold (plain parquet-mr, no SparkSession):
@@ -163,28 +223,16 @@ object DeletionVectors {
       DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
 
   /** The valid DV rows for `files` — (file_name, row_index, deleted_at),
-    * honoring each file's CURRENT pointer (rows in superseded DV dirs for
-    * the same file are ignored). Empty frame when no file carries a DV.
+    * honoring each file's CURRENT pointer. None when no file carries a
+    * DV.
     */
   private def dvRows(
       spark: SparkSession,
       tablePath: String,
-      files: Seq[AddFile]): Option[DataFrame] = {
-    val withDv = files.filter(_.dv.isDefined)
-    if (withDv.isEmpty) return None
-    import spark.implicits._
-    // (file_name → its current dv dir): the validity map. Small by
-    // construction (one row per DV-carrying file) — broadcast.
-    val pointer = withDv
-      .map(f => (new Path(f.path).getName, f.dv.get)).toDF("file_name", "dv")
-    val rows = readDvDirs(spark, tablePath, withDv.map(_.dv.get).distinct)
-    Some(rows
-      .join(broadcast(pointer),
-        rows("file_name") === pointer("file_name") &&
-          rows("_dv_src") === pointer("dv"))
-      .select(rows("file_name").as("_dv_fn"), col("row_index").as("_dv_ri"),
+      files: Seq[AddFile]): Option[DataFrame] =
+    validRaw(spark, tablePath, files).map(raw => expand(spark, raw)
+      .select(col("file_name").as("_dv_fn"), col("row_index").as("_dv_ri"),
         col("deleted_at")))
-  }
 
   /** Dead-row count per DV-carrying file of `files` — `(file_name,
     * n_deleted)`, empty when no file carries a vector. Metadata-sized
@@ -197,27 +245,22 @@ object DeletionVectors {
       tablePath: String,
       files: Seq[AddFile]): DataFrame = {
     import spark.implicits._
-    val withDv = files.filter(_.dv.isDefined)
-    if (withDv.isEmpty)
-      return Seq.empty[(String, Long)].toDF("file_name", "n_deleted")
     // counts come straight from the sidecars' n_rows (bitmap rows carry
-    // their cardinality; legacy rows normalize to 1) — a wide vector is
-    // never expanded just to be counted
-    val pointer = withDv
-      .map(f => (new Path(f.path).getName, f.dv.get)).toDF("file_name", "dv")
-    val raw = readDvDirsRaw(spark, tablePath, withDv.map(_.dv.get).distinct)
-    raw.join(broadcast(pointer),
-        raw("file_name") === pointer("file_name") &&
-          raw("_dv_src") === pointer("dv"))
-      .groupBy(raw("file_name").as("file_name"))
-      .agg(sum(col("n_rows")).as("n_deleted"))
-      .select(col("file_name"), col("n_deleted"))
+    // their cardinality; legacy rows normalize to 1; a pair's disjoint
+    // rows add up) — a wide vector is never expanded just to be counted
+    validRaw(spark, tablePath, files) match {
+      case None => Seq.empty[(String, Long)].toDF("file_name", "n_deleted")
+      case Some(raw) => raw.groupBy(col("file_name"))
+        .agg(sum(col("n_rows")).as("n_deleted"))
+    }
   }
 
   /** Read `files` of the table with deletion vectors applied. With
     * `withRowMeta`, the result keeps `_fn` (file name), `_ri` (row
     * index) and `_path` (normalized full path) columns — the handles the
-    * delete/CDC machinery joins on.
+    * delete/CDC machinery joins on. `applyVectors = false` reads every
+    * row of the files, dead or not: for a caller whose row handles
+    * already name only live rows.
     */
   def readFiles(
       spark: SparkSession,
@@ -225,7 +268,8 @@ object DeletionVectors {
       files: Seq[AddFile],
       schema: Option[StructType],
       withRowMeta: Boolean = false,
-      mapping: Map[String, String] = Map.empty): DataFrame = {
+      mapping: Map[String, String] = Map.empty,
+      applyVectors: Boolean = true): DataFrame = {
     require(files.nonEmpty, "readFiles needs at least one file")
     // Partition evolution: files written under DIFFERENT partition specs
     // (setPartitioning changes the layout of future writes only) cannot
@@ -267,14 +311,16 @@ object DeletionVectors {
       .reduce(_ unionByName _)
     // DV-free fast path: a plain vectorized scan with zero added columns
     // (the common case must not pay for the feature)
-    if (!withRowMeta && files.forall(_.dv.isEmpty))
+    if (!withRowMeta && (!applyVectors || files.forall(_.dv.isEmpty)))
       return scan(identity)
     val raw = scan(df => df
       .withColumn("_fn", col("_metadata.file_name"))
       .withColumn("_ri", col("_metadata.row_index"))
       .withColumn("_path",
         regexp_replace(col("_metadata.file_path"), "^file:/+", "/")))
-    val live = dvRows(spark, tablePath, files) match {
+    val vectors =
+      if (applyVectors) dvRows(spark, tablePath, files) else None
+    val live = vectors match {
       case None => raw
       case Some(dv) =>
         // dead rows are a sliver of the table; the join keys are the
@@ -332,25 +378,22 @@ object DeletionVectors {
       live => live.join(keys.select(keyCols.map(col): _*).distinct(),
         keyCols, "left_semi"))
 
-  /** Existing valid dead rows of `files` under their CURRENT pointers,
-    * as (file_name, row_index, deleted_at) — what a new vector for the
-    * same files must carry forward (pointers replace, never chain).
-    * None when no file carries a vector.
-    */
-  private[graft] def carriedRows(
-      spark: SparkSession,
-      tablePath: String,
-      files: Seq[AddFile]): Option[DataFrame] =
-    dvRows(spark, tablePath, files.filter(_.dv.isDefined))
-      .map(_.select(col("_dv_fn").as("file_name"),
-        col("_dv_ri").as("row_index"), col("deleted_at")))
-
-  /** Write `allRows` (file_name, row_index, deleted_at) as version
-    * `version`'s deletion-vector directory (staged, then renamed into
-    * place) and return the table-relative pointer the re-committed
-    * AddFiles must carry. The caller folds the pointer into its OWN
-    * commit; an uncommitted directory is invisible (vacuum's stale-
-    * staging sweep reclaims crashed leftovers).
+  /** Write version `version`'s deletion-vector directory (staged, then
+    * renamed into place) and return the table-relative pointer the
+    * re-committed AddFiles must carry. The vector holds `dead` — this
+    * statement's kills, `(file_name, row_index)` — plus the valid kills
+    * of `carryFrom` under their current pointers, each keeping its
+    * original deleted_at (pointers replace, never chain). The caller
+    * folds the pointer into its OWN commit; an uncommitted directory is
+    * invisible (vacuum's stale-staging sweep reclaims crashed
+    * leftovers).
+    *
+    * No shuffle: each partition folds its positions into one Roaring
+    * bitmap per (file, deleted_at) and writes them as bitmap rows;
+    * carried bitmap rows are copied as they are, never expanded. So a
+    * pair may span several rows — disjoint, since a position dies once
+    * — which every reader ORs, expands or sums. One task writes the
+    * vector, so it lands in one part file.
     *
     * The directory name carries an ATTEMPT-UNIQUE suffix: two writers
     * racing on the same target version would otherwise stage and
@@ -363,7 +406,8 @@ object DeletionVectors {
       spark: SparkSession,
       tablePath: String,
       version: Long,
-      allRows: DataFrame): String = {
+      dead: DataFrame,
+      carryFrom: Seq[AddFile]): String = {
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
     val attempt = java.util.UUID.randomUUID().toString.take(8)
@@ -371,22 +415,30 @@ object DeletionVectors {
     val staging = new Path(tablePath, s".staging-dv-$version-$attempt")
     val fs = staging.getFileSystem(conf)
     fs.delete(staging, true)
-    // pack to the bitmap encoding: one row per (file, kill version),
-    // positions as a Roaring64Bitmap — the shuffle moves row handles
-    // (exactly what the legacy write moved) but what lands on disk is
-    // compressed-bitmap-sized, and each group folds through ONE bitmap
-    val packed = allRows
-      .select(col("file_name").cast("string"),
-        col("row_index").cast("long"), col("deleted_at").cast("long"))
-      .as[(String, Long, Long)]
-      .groupByKey(t => (t._1, t._3))
-      .mapGroups { (key: (String, Long), it: Iterator[(String, Long, Long)]) =>
-        val bm = new org.roaringbitmap.longlong.Roaring64Bitmap()
-        it.foreach(t => bm.addLong(t._2))
-        (key._1, key._2, bm.getLongCardinality, serializeBitmap(bm))
+    val fresh = dead.select(col("file_name").cast("string"),
+      lit(version).as("deleted_at"), lit(null).cast("long").as("n_rows"),
+      lit(null).cast("binary").as("bitmap"),
+      col("row_index").cast("long"))
+    val rows = validRaw(spark, tablePath, carryFrom)
+      .fold(fresh)(c => fresh.unionByName(c.drop("_dv_src")))
+    val packed = rows.mapPartitions { it =>
+      val open = scala.collection.mutable.LinkedHashMap
+        .empty[(String, Long), org.roaringbitmap.longlong.Roaring64Bitmap]
+      val copied = it.flatMap { r =>
+        if (!r.isNullAt(3))
+          Iterator.single((r.getString(0), r.getLong(1), r.getLong(2),
+            r.getAs[Array[Byte]](3)))
+        else {
+          open.getOrElseUpdate((r.getString(0), r.getLong(1)),
+            new org.roaringbitmap.longlong.Roaring64Bitmap())
+            .addLong(r.getLong(4))
+          Iterator.empty
+        }
       }
-      .toDF("file_name", "deleted_at", "n_rows", "bitmap")
-    packed.write.mode("overwrite").parquet(staging.toString)
+      copied ++ open.iterator.map { case ((f, d), bm) =>
+        (f, d, bm.getLongCardinality, serializeBitmap(bm)) }
+    }.toDF("file_name", "deleted_at", "n_rows", "bitmap")
+    packed.coalesce(1).write.mode("overwrite").parquet(staging.toString)
     val dest = new Path(tablePath, rel)
     fs.mkdirs(dest.getParent)
     // attempt-unique name: the destination cannot pre-exist, so no
@@ -395,6 +447,17 @@ object DeletionVectors {
       throw new IllegalStateException(s"rename failed: $dest")
     rel
   }
+
+  /** The distinct values of string column `column` of `df`, in one
+    * job: each partition drops its own duplicates and the collect
+    * unions the rest. For the names of the files a DML touches — bounded by
+    * the table's file count, so no shuffle is needed to shrink them.
+    */
+  private[graft] def distinctValues(
+      df: DataFrame, column: String): Set[String] =
+    df.select(col(column)).as(org.apache.spark.sql.Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(org.apache.spark.sql.Encoders.STRING)
+      .collect().toSet
 
   /** Drop an UNCOMMITTED staged vector dir (commit-retry cleanup). */
   private[graft] def dropVector(
@@ -426,23 +489,17 @@ object DeletionVectors {
       withRowMeta = true))
     val cached = (if (cdfOn) markedRaw
       else markedRaw.select(col("_fn"), col("_ri"))).persist()
-    val matched = cached
-      .select(col("_fn").as("file_name"), col("_ri").as("row_index"),
-        lit(version).as("deleted_at"))
     try {
-    val affectedNames = matched.select("file_name").distinct()
-      .collect().map(_.getString(0)).toSet // file names only, ≤ |files|
+    val affectedNames = distinctValues(cached, "_fn")
     if (affectedNames.isEmpty) {
       log.commit(version, Seq(CommitInfo("DELETE_DV", commitTs)))
       return
     }
     val affected = snap.files
       .filter(f => affectedNames.contains(new Path(f.path).getName))
-    // union the affected files' EXISTING dead rows into the new vector
-    // (pointers replace, never chain), keeping original deleted_at
-    val carried = carriedRows(spark, tablePath, affected)
-    val allRows = carried.fold(matched)(matched.unionByName(_))
-    val rel = stageVector(spark, tablePath, version, allRows)
+    val rel = stageVector(spark, tablePath, version,
+      cached.select(col("_fn").as("file_name"), col("_ri").as("row_index")),
+      carryFrom = affected)
 
     val removes = affected.map(f =>
       RemoveFile(f.path, commitTs, f.partitionValues))

@@ -1781,9 +1781,8 @@ object TableWriter extends Serializable {
     val target = DeletionVectors
       .readSnapshot(spark, tablePath, snap, withRowMeta = true)
       .withColumnRenamed("_path", "_file")
-    val affected = target.filter(pred)
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0)).flatMap(byRel.get).toIndexedSeq
+    val affected = DeletionVectors.distinctValues(target.filter(pred), "_file")
+      .toSeq.sorted.flatMap(byRel.get).toIndexedSeq
     val combined =
       if (affected.isEmpty) aligned
       else readDeclared(spark, tablePath, snap, affected)
@@ -2016,10 +2015,8 @@ object TableWriter extends Serializable {
       .readSnapshot(spark, tablePath, snap, withRowMeta = true)
       .withColumnRenamed("_path", "_file")
     val srcKeys = source.select(keyCols.map(col): _*).distinct()
-    val affectedPaths = target
-      .join(srcKeys, keyCols, "left_semi")
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0)) // file names only — bounded by |files|
+    val affectedPaths = DeletionVectors.distinctValues( // bounded by |files|
+      target.join(srcKeys, keyCols, "left_semi"), "_file").toSeq.sorted
     val affected = affectedPaths.flatMap(byRel.get)
 
     val survivors =
@@ -2122,9 +2119,8 @@ object TableWriter extends Serializable {
     val target = DeletionVectors
       .readSnapshot(spark, tablePath, snap, withRowMeta = true)
       .withColumnRenamed("_path", "_file")
-    val affected = target.filter(scope)
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0)).flatMap(byRel.get) // file names only
+    val affected = DeletionVectors.distinctValues(target.filter(scope), "_file")
+      .toSeq.sorted.flatMap(byRel.get)
     // in-scope target rows all die (matched ones are replaced by their
     // source version, unmatched-by-source ones are deleted); survivors
     // of an affected file are its NOT-in-scope rows — scope IS TRUE
@@ -2192,9 +2188,8 @@ object TableWriter extends Serializable {
     val target = DeletionVectors
       .readSnapshot(spark, tablePath, snap, withRowMeta = true)
       .withColumnRenamed("_path", "_file")
-    val affected = target.filter(pred)
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0)).flatMap(byRel.get)
+    val affected = DeletionVectors.distinctValues(target.filter(pred), "_file")
+      .toSeq.sorted.flatMap(byRel.get)
     if (affected.isEmpty) {
       log.commit(version, Seq(CommitInfo("DELETE", commitTs)))
       return
@@ -2262,9 +2257,8 @@ object TableWriter extends Serializable {
     val target = DeletionVectors
       .readSnapshot(spark, tablePath, snap, withRowMeta = true)
       .withColumnRenamed("_path", "_file")
-    val affected = target.filter(pred)
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0)).flatMap(byRel.get)
+    val affected = DeletionVectors.distinctValues(target.filter(pred), "_file")
+      .toSeq.sorted.flatMap(byRel.get)
     if (affected.isEmpty) {
       log.commit(version, Seq(CommitInfo("UPDATE", commitTs)))
       return

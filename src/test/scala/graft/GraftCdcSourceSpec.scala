@@ -347,4 +347,21 @@ class GraftCdcSourceSpec extends AnyFunSuite {
     val (rows2, _) = runOnce("second drain")
     assert(rows2 == 200, s"expected 200 total rows after second drain, got $rows2")
   }
+
+  test("a table column named like an envelope column is refused at " +
+    "stream start, naming the column") {
+    import spark.implicits._
+    def refusal(cols: String*): String = {
+      val table = Files.createTempDirectory("cdc_clash").toString + "/t"
+      TableWriter.write(spark, Seq((1L, 2L)).toDF(cols: _*), table,
+        version = 0L, commitTs = 1000L)
+      intercept[IllegalArgumentException](
+        spark.readStream.format(fmt).option("tablePath", table).load()
+      ).getMessage
+    }
+    assert(refusal("k", "ts").contains("`ts`"))
+    // Spark resolves names case-insensitively, so the clash does too
+    val both = refusal("OP", "Commit_Version")
+    assert(both.contains("`OP`") && both.contains("`Commit_Version`"), both)
+  }
 }
