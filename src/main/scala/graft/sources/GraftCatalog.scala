@@ -566,18 +566,12 @@ private[sources] class StagedGraftTable(
               override def insert(
                   data: org.apache.spark.sql.DataFrame,
                   overwrite: Boolean): Unit = {
-                // stage only — the commit happens in commitStagedChanges
-                val tsTypeKey = "spark.sql.parquet.outputTimestampType"
-                val s = data.sparkSession
-                val prev = s.conf.getOption(tsTypeKey)
-                s.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
-                try stagedAdds ++= TableWriter.stageAndMove(s, data, dir,
-                  partCols, version = commitTs, commitTs = commitTs,
-                  dataChange = true)
-                finally prev match {
-                  case Some(v) => s.conf.set(tsTypeKey, v)
-                  case None    => s.conf.unset(tsTypeKey)
-                }
+                // write only — the commit happens in commitStagedChanges.
+                // The new table's own layout: no column mapping and no
+                // properties carry over from a table this one replaces.
+                stagedAdds ++= TableWriter.stageAndMove(data.sparkSession,
+                  data, dir, partCols, version = commitTs,
+                  commitTs = commitTs, dataChange = true, meta = None)
               }
             }
         }

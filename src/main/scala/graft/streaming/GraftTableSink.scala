@@ -30,16 +30,19 @@ object GraftTableSink {
       commitTs: Long = System.currentTimeMillis()): Boolean = {
     val spark = batch.sparkSession
     val log = new TxnLog(tablePath, spark.sessionState.newHadoopConf())
-    val committed = log.versions().reverse.view.map { v =>
+    val versions = log.versions()
+    val committed = versions.reverse.view.map { v =>
       log.read(v).collectFirst { case c: CommitInfo => c.operation }
     }.collectFirst {
       case Some(op) if op == marker(batchId) => true
       case Some(MarkerRe(k)) if k.toLong < batchId => false
     }.getOrElse(false)
     if (committed) return false
-    val next = log.latestVersion().map(_ + 1).getOrElse(0L)
-    TableWriter.write(batch.sparkSession, batch, tablePath, partitionBy,
-      version = next, commitTs = commitTs, operation = marker(batchId))
+    // the batch writes on the snapshot of the version the marker check saw
+    val base = versions.lastOption.map(log.snapshot)
+    TableWriter.writeOn(spark, batch, tablePath, base, partitionBy,
+      version = base.fold(0L)(_.version + 1), commitTs = commitTs,
+      operation = marker(batchId))
     true
   }
 

@@ -543,8 +543,8 @@ object DeletionVectors {
     if (doomed.isEmpty) return Seq.empty
     val partCols = snap.metadata.map(_.partitionColumns).getOrElse(Seq.empty)
     val live = readFiles(spark, tablePath, doomed, declaredSchema(snap))
-    val adds = TableWriter.rewrite(spark, live, tablePath, partCols, version,
-      commitTs, dataChange = false)
+    val adds = TableWriter.stageAndMove(spark, live, tablePath, partCols,
+      version, commitTs, dataChange = false, snap.metadata)
     val removes = doomed.map(f =>
       RemoveFile(f.path, commitTs, f.partitionValues, dataChange = false))
     log.commit(version, (removes ++ adds) :+ CommitInfo("PURGE_DV", commitTs))

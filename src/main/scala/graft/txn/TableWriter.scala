@@ -4,15 +4,17 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, expr}
 
-/** Versioned-parquet table writer: stages a DataFrame write, then commits
-  * AddFile actions atomically — the "Delta sink" of SURVEY.md §7.1 step 3.
-  * Files are written by Spark's distributed parquet writer (one task per
-  * partition), so the data path scales with the cluster; only the
-  * file-list commit is driver-side.
+/** Versioned-parquet table writer: writes a DataFrame's files, then
+  * commits their AddFile actions atomically — the "Delta sink" of
+  * SURVEY.md §7.1 step 3. Spark's distributed parquet writer (one task
+  * per partition) writes each file once, straight to its final name
+  * under the table, and reads its footer stats in the task
+  * ([[TableCommitProtocol]]), so the data path scales with the cluster;
+  * only the file-list commit is driver-side.
   */
-// Serializable because the big-commit move pass ships a closure over
-// this module's helpers (footerStats, partitionValuesOf) to executors —
-// the module is stateless, so serializing the reference is free.
+// Serializable because task closures (vacuum's and clone's file passes)
+// call this module's helpers — the module is stateless, so serializing
+// the reference is free.
 object TableWriter extends Serializable {
 
   /** Max CODE POINTS of a string min/max bound in the log (Delta caps at
@@ -69,44 +71,38 @@ object TableWriter extends Serializable {
       operation: String = "WRITE",
       extraActions: Seq[Action] = Seq.empty,
       generated: Map[String, String] = Map.empty): Unit = {
-    // INT64-micros timestamps (not INT96): the parquet type every
-    // reader and external engine reads without a legacy rebase.
-    // Scoped to this write: the previous session value is restored after.
-    val tsTypeKey = "spark.sql.parquet.outputTimestampType"
-    val prevTsType = spark.conf.getOption(tsTypeKey)
-    spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
-    try doWrite(spark, df, tablePath, partitionBy, version, commitTs,
+    val base =
+      if (version == 0L) None
+      else {
+        val log = new TxnLog(tablePath, spark.sessionState.newHadoopConf())
+        log.latestVersion().map(log.snapshot)
+      }
+    writeOn(spark, df, tablePath, base, partitionBy, version, commitTs,
       operation, extraActions, generated)
-    finally prevTsType match {
-      case Some(v) => spark.conf.set(tsTypeKey, v)
-      case None    => spark.conf.unset(tsTypeKey)
-    }
   }
 
-  private def doWrite(
+  /** [[write]] on the snapshot `base` the caller already read (None for a
+    * new table): the write reads the log no further before its commit.
+    * Returns the table's metadata after the commit.
+    */
+  private[graft] def writeOn(
       spark: SparkSession,
       df0: DataFrame,
       tablePath: String,
+      base: Option[Snapshot],
       partitionBy: Seq[String],
       version: Long,
       commitTs: Long,
       operation: String,
-      extraActions: Seq[Action],
-      generated: Map[String, String] = Map.empty): Unit = {
+      extraActions: Seq[Action] = Seq.empty,
+      generated: Map[String, String] = Map.empty): Option[Metadata] = {
     val conf = spark.sessionState.newHadoopConf()
-    val priorMeta: Option[Metadata] =
-      if (version > 0L) {
-        val log0 = new TxnLog(tablePath, conf)
-        if (log0.latestVersion().isDefined) {
-          val snap0 = log0.snapshotLatest()
-          // Writer-protocol guard on EVERY non-initial write — including
-          // schema-evolution commits (a Metadata action must not bypass
-          // the minWriterVersion check: that is exactly the corruption
-          // the guard exists to prevent).
-          TxnLog.assertWritable(snap0, tablePath)
-          snap0.metadata
-        } else None
-      } else None
+    // Writer-protocol guard on EVERY non-initial write — including
+    // schema-evolution commits (a Metadata action must not bypass the
+    // minWriterVersion check: that is exactly the corruption the guard
+    // exists to prevent).
+    base.foreach(TxnLog.assertWritable(_, tablePath))
+    val priorMeta: Option[Metadata] = base.flatMap(_.metadata)
     // Generated columns: declared on the initial write, carried forward
     // after. The writer may omit them (computed here) or supply them
     // (validated here — a disagreeing value is rejected, Delta
@@ -180,7 +176,7 @@ object TableWriter extends Serializable {
       .getOrElse(priorMeta.map(_.constraints).getOrElse(Seq.empty))
     enforceConstraints(dfW, constraints, tablePath)
     val adds = stageAndMove(spark, dfW, tablePath, partitionBy, version,
-      commitTs, dataChange = true)
+      commitTs, dataChange = true, priorMeta)
     // schemaJson stays LOGICAL; the column mapping, generated-column,
     // and identity definitions (if any) carry forward so later
     // readers/writers keep translating, computing, and allocating
@@ -196,6 +192,7 @@ object TableWriter extends Serializable {
       metaAction ++ extraActions.filterNot(_.isInstanceOf[Metadata]) ++
         adds :+ CommitInfo(operation, commitTs,
           identityHighWater = identityClaims(idCursors, adds)))
+    if (metaAction.nonEmpty) Some(meta) else priorMeta
   }
 
   /** Fill GENERATED ALWAYS AS IDENTITY columns: writer-supplied
@@ -710,24 +707,13 @@ object TableWriter extends Serializable {
       CommitInfo("DROP COLUMN", commitTs)))
   }
 
-  /** Stage-and-move for sibling txn modules (DeletionVectors.purge):
-    * write `df`'s parts into the table tree and return their AddFiles
-    * WITHOUT committing — the caller owns the commit.
-    */
-  private[txn] def rewrite(
-      spark: SparkSession,
-      df: DataFrame,
-      tablePath: String,
-      partitionBy: Seq[String],
-      version: Long,
-      commitTs: Long,
-      dataChange: Boolean): Seq[AddFile] =
-    stageAndMove(spark, df, tablePath, partitionBy, version, commitTs,
-      dataChange)
-
-  /** Write `df` under a staging dir, move the parts into the table tree
-    * under stable names, and return their AddFile actions (including
-    * footer-derived column stats for data skipping).
+  /** Write `df`'s parquet files straight into the table tree and return
+    * their AddFile actions (with footer-derived column stats for data
+    * skipping) WITHOUT committing: the caller owns the commit. The tasks
+    * write through [[TableCommitProtocol]], so nothing is staged, renamed
+    * or re-opened on the driver. `meta` is the table's metadata at the
+    * snapshot the write builds on (None for a new table): its column
+    * mapping and `graft.optimizeWrite` property apply.
     */
   private[graft] def stageAndMove(
       spark: SparkSession,
@@ -736,35 +722,18 @@ object TableWriter extends Serializable {
       partitionBy: Seq[String],
       version: Long,
       commitTs: Long,
-      dataChange: Boolean): Seq[AddFile] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(conf)
-    // Attempt-unique staging AND destination names: two optimistic
-    // writers racing the same version must never share a staging dir or
-    // — worse — a destination path, where the loser's posix rename would
-    // silently replace the committed winner's bytes under the same name.
-    // The loser's uniquely-named files become orphans; vacuum sweeps them.
-    val attemptId = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(tablePath, s".staging-$version-$attemptId")
-    fs.delete(staging, true)
-
+      dataChange: Boolean,
+      meta: Option[Metadata]): Seq[AddFile] = {
     // Column mapping: files are ALWAYS written under physical names, so
     // appends/compactions/merges after a RENAME COLUMN stay consistent
     // with the files already on disk. Callers hand in logical frames;
     // this is the single point where every write path translates.
     // (Partition columns never map — renameColumn refuses them.)
-    val tableMeta: Option[Metadata] =
-      if (version == 0L) None
-      else {
-        val l = new TxnLog(tablePath, conf)
-        if (l.latestVersion().isEmpty) None else l.snapshotLatest().metadata
-      }
-    val mapping = tableMeta.map(_.columnMapping).getOrElse(Map.empty)
-    val physDf0 = ColumnMapping.toPhysical(df, mapping)
+    val physDf0 = ColumnMapping.toPhysical(df,
+      meta.map(_.columnMapping).getOrElse(Map.empty))
 
     // Optimized write (`graft.optimizeWrite` table property, Delta's
-    // optimizeWrite idea): ONE adaptive REBALANCE before staging sizes
+    // optimizeWrite idea): ONE adaptive REBALANCE before the write sizes
     // output files at birth — N tiny upstream shuffle partitions (the
     // classic 32-shuffle-partitions × many-partition-values flood)
     // bin-pack to `spark.sql.adaptive.advisoryPartitionSizeInBytes`-
@@ -775,119 +744,57 @@ object TableWriter extends Serializable {
     // columns, co-locating each value's rows so a task writes whole
     // files per value instead of a sliver of every value. Prevention at
     // write time; autoCompact stays the after-the-fact repair.
-    val physDf = tableMeta.map(_.properties).getOrElse(Map.empty)
-      .get("graft.optimizeWrite").filter(_.equalsIgnoreCase("true"))
+    val physDf = meta.flatMap(_.properties.get("graft.optimizeWrite"))
+      .filter(_.equalsIgnoreCase("true"))
       .map { _ =>
         if (partitionBy.nonEmpty)
           physDf0.hint("rebalance", partitionBy.map(col): _*)
         else physDf0.hint("rebalance")
       }.getOrElse(physDf0)
 
-    val writer = if (partitionBy.nonEmpty) physDf.write.partitionBy(partitionBy: _*)
-    else physDf.write
-    // Staging writes use the TASK-COMMIT committer (fileoutputcommitter
-    // algorithm 2): each task renames its output into the staging dir
-    // at task end, so job commit never walks _temporary on the driver —
-    // an O(output files) listing walk at a 5k-file commit. v2's usual
-    // caveat (partial output visible after a failed job) is moot HERE:
-    // the staging dir is private to this attempt, table-level atomicity
-    // is the LOG commit, and leftover staging dirs are deleted/swept.
-    writer
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .mode("overwrite").parquet(staging.toString)
-
-    // Enumerate staged output: one listStatus per STAGING DIRECTORY
-    // (driver O(dirs) — the file metadata rides the listing); the
-    // per-FILE work (one rename RPC + one footer read each) is what
-    // scales with output size, and runs as a cluster job past the
-    // threshold — a 5k-file commit must not serialize 5k footer opens
-    // through the driver. Small commits (the overwhelmingly common
-    // case) keep the zero-job driver loop.
-    val staged = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, Long)] // (src path, rel dir, size)
-    def visit(dir: Path, rel: String): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) visit(st.getPath, if (rel.isEmpty) name else s"$rel/$name")
-        else if (name.endsWith(".parquet"))
-          staged += ((st.getPath.toString, rel, st.getLen))
-      }
-    visit(staging, "")
-    val named = staged.sortBy(t => (t._2, t._1)).zipWithIndex.map {
-      case ((src, rel, len), i) =>
-        val destRel = (if (rel.isEmpty) "" else s"$rel/") +
-          f"part-$version%05d-$i%05d-$attemptId.parquet"
-        (src, rel, len, destRel)
-    }.toSeq
-    // destination dirs pre-created on the driver (O(dirs), idempotent)
-    named.map(_._4).map(r => new Path(table, r).getParent).distinct
-      .foreach(fs.mkdirs)
-    def moveOne(src: String, rel: String, len: Long, destRel: String,
-        c: org.apache.hadoop.conf.Configuration): AddFile = {
-      val s = new Path(src)
-      val dest = new Path(TxnLog.dataPath(tablePath, destRel))
-      val dfs = dest.getFileSystem(c)
-      val renamed = renameIdempotent(dfs, s, dest)
-      AddFile(
-        path = destRel,
-        partitionValues = partitionValuesOf(rel),
-        size = if (renamed) len else dfs.getFileStatus(dest).getLen,
-        modificationTime = commitTs,
-        dataChange = dataChange,
-        stats = footerStats(dest, c))
+    // Spark's file writer with this write's own commit protocol, passed
+    // explicitly (never through the session-wide commit protocol class)
+    val qe = physDf.queryExecution
+    val plan = qe.executedPlan
+    val resolver = spark.sessionState.conf.resolver
+    val partAttrs = partitionBy.map(c => plan.output.find(a => resolver(a.name, c))
+      .getOrElse(throw new IllegalArgumentException(
+        s"partition column '$c' is not in ${physDf.columns.mkString(", ")}")))
+    val protocol = new TableCommitProtocol(tablePath, version,
+      java.util.UUID.randomUUID().toString.take(8))
+    // INT64-micros timestamps (not INT96): the parquet type every reader
+    // and external engine reads without a legacy rebase. The writer reads
+    // it from the session; the previous value is restored after.
+    val tsTypeKey = "spark.sql.parquet.outputTimestampType"
+    val prevTsType = spark.conf.getOption(tsTypeKey)
+    spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
+    try org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+        Some(s"graft write $tablePath")) {
+      import org.apache.spark.sql.execution.datasources.FileFormatWriter
+      FileFormatWriter.write(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        protocol, FileFormatWriter.OutputSpec(tablePath, Map.empty, plan.output),
+        spark.sessionState.newHadoopConf(), partAttrs, None, Nil, Map.empty)
+    } finally prevTsType match {
+      case Some(v) => spark.conf.set(tsTypeKey, v)
+      case None    => spark.conf.unset(tsTypeKey)
     }
-    val adds: Seq[AddFile] =
-      if (named.size <= DriverMoveThreshold)
-        named.map { case (s, r, l, d) => moveOne(s, r, l, d, conf) }
-      else {
-        val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-        spark.sparkContext
-          .parallelize(named, math.max(1, math.min(named.size, 64)))
-          .map { case (s, r, l, d) => moveOne(s, r, l, d, serConf.value) }
-          .collect().toSeq.sortBy(_.path)
-      }
-    fs.delete(staging, true)
-    adds
-  }
-
-  /** Staged-file count above which the rename + footer-stats pass runs
-    * as a cluster job instead of the driver loop (Fsck's
-    * DriverDirThreshold pattern): small commits stay zero-job, big ones
-    * never serialize per-file RPCs through the driver.
-    */
-  private val DriverMoveThreshold = 64
-
-  /** Move a staged file into the table tree, idempotent under Spark task
-    * retry/speculation: a re-executed task whose first attempt already
-    * moved this file sees rename fail with dest present and src gone —
-    * that IS success (dest names are deterministic per (version, index,
-    * attemptId), so no other writer can have claimed the slot), and the
-    * caller recomputes the size from dest rather than trusting the stale
-    * src length. Throws only when the move genuinely didn't happen —
-    * without this, one transient task failure after a partial move would
-    * abort the whole otherwise-successful commit and orphan the files
-    * the first attempt already renamed.
-    *
-    * @return true when THIS call performed the rename, false when a
-    *         prior attempt already had
-    */
-  private[txn] def renameIdempotent(
-      dfs: org.apache.hadoop.fs.FileSystem, s: Path, dest: Path): Boolean = {
-    val renamed = dfs.rename(s, dest)
-    if (!renamed && !(dfs.exists(dest) && !dfs.exists(s)))
-      throw new IllegalStateException(s"rename failed: $dest")
-    renamed
+    protocol.addFiles(commitTs, dataChange)
   }
 
   /** Column stats from the parquet footer (no data read): row count plus
     * min/max for long/int/double/float/string columns across row groups.
     */
   private[graft] def footerStats(
-      p: Path, conf: org.apache.hadoop.conf.Configuration): Option[FileStats] = {
+      p: Path, conf: org.apache.hadoop.conf.Configuration): Option[FileStats] =
+    footerStats(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+
+  private[graft] def footerStats(
+      in: org.apache.parquet.io.InputFile): Option[FileStats] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import scala.jdk.CollectionConverters._
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       val blocks = reader.getFooter.getBlocks.asScala
       var rows = 0L
@@ -1154,7 +1061,7 @@ object TableWriter extends Serializable {
       case _ => src.coalesce(1)
     }
     val adds = stageAndMove(spark, packed, tablePath, partCols, version,
-      commitTs, dataChange = false)
+      commitTs, dataChange = false, snap.metadata)
     val removes = doomed.map(f =>
       RemoveFile(f.path, commitTs, f.partitionValues, dataChange = false))
     log.commit(version, (removes ++ adds) :+ CommitInfo("OPTIMIZE", commitTs))
@@ -1410,19 +1317,22 @@ object TableWriter extends Serializable {
     val log = new TxnLog(tablePath, spark.sessionState.newHadoopConf())
     var attempt = 0
     while (true) {
-      val next = log.latestVersion().map(_ + 1).getOrElse(0L)
+      // one snapshot per attempt: the write, its checks and the
+      // auto-compaction switch all read it
+      val base = log.latestVersion().map(log.snapshot)
+      val next = base.fold(0L)(_.version + 1)
       // Follow the table's CURRENT partition spec unless the caller
       // pins one — after setPartitioning, plain appends land in the
       // evolved layout (Delta/Iceberg semantics). Resolved inside the
       // retry loop: a concurrent setPartitioning must win.
       val effSpec =
-        if (partitionBy.nonEmpty || next == 0L) partitionBy
-        else log.snapshotLatest().metadata
-          .map(_.partitionColumns).getOrElse(Seq.empty)
+        if (partitionBy.nonEmpty) partitionBy
+        else base.flatMap(_.metadata).fold(partitionBy)(_.partitionColumns)
       try {
-        write(spark, df, tablePath, effSpec, version = next,
-          commitTs = commitTs)
-        maybeAutoCompact(spark, tablePath)
+        val meta = writeOn(spark, df, tablePath, base, effSpec,
+          version = next, commitTs = commitTs, operation = "WRITE")
+        maybeAutoCompact(spark, tablePath,
+          meta.fold(Map.empty[String, String])(_.properties))
         return next
       } catch {
         case e: IllegalStateException if e.getMessage.contains("concurrent") =>
@@ -1489,26 +1399,25 @@ object TableWriter extends Serializable {
     * the small files just wait for the next append or an explicit
     * OPTIMIZE. Off unless `spark.graft.autoCompact.enabled=true`: a
     * write path that silently doubles its commits should be a choice.
+    * `props` are the table's properties as of the append's commit; a
+    * fresh snapshot is read only when auto-compaction is on.
     */
-  private def maybeAutoCompact(spark: SparkSession, tablePath: String): Unit =
+  private def maybeAutoCompact(spark: SparkSession, tablePath: String,
+      props: Map[String, String]): Unit =
     // the WHOLE pass is best-effort — the append already committed, so
     // nothing here may surface as a write failure: not a compaction
     // race, and not a malformed persisted property (a bad
     // graft.autoCompact.minFiles would otherwise brick every append
-    // until someone fixes the table property). The price of the
-    // property check is one snapshot read per append (checkpoint +
-    // ≤interval tail) — driver-side milliseconds next to the append's
-    // own staging job.
+    // until someone fixes the table property)
     try {
-      val log = new TxnLog(tablePath, spark.sessionState.newHadoopConf())
-      val snap = log.snapshotLatest()
       // TABLE properties take precedence over the session conf (the
       // Delta convention: the owner's declaration beats a job's default)
-      val props = snap.metadata.map(_.properties).getOrElse(Map.empty)
       def opt(key: String): Option[String] = props.get(s"graft.$key")
         .orElse(spark.conf.getOption(s"spark.graft.$key"))
       if (!opt("autoCompact.enabled").exists(_.equalsIgnoreCase("true")))
         return
+      val snap = new TxnLog(tablePath, spark.sessionState.newHadoopConf())
+        .snapshotLatest()
       val minFiles = opt("autoCompact.minFiles").map(_.toInt).getOrElse(16)
       val targetBytes = opt("autoCompact.targetFileMB").map(_.toLong)
         .getOrElse(64L) * 1024L * 1024L
@@ -1598,17 +1507,9 @@ object TableWriter extends Serializable {
           s"does not match the table schema at $tablePath")
     enforceConstraints(dfW, meta.constraints, tablePath)
 
-    // stage ONCE — `version` only seeds unique file names
-    val tsTypeKey = "spark.sql.parquet.outputTimestampType"
-    val prevTsType = spark.conf.getOption(tsTypeKey)
-    spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
-    val adds =
-      try stageAndMove(spark, dfW, tablePath, meta.partitionColumns,
-        readVersion + 1, commitTs, dataChange = true)
-      finally prevTsType match {
-        case Some(v) => spark.conf.set(tsTypeKey, v)
-        case None    => spark.conf.unset(tsTypeKey)
-      }
+    // write ONCE — `version` only seeds unique file names
+    val adds = stageAndMove(spark, dfW, tablePath, meta.partitionColumns,
+      readVersion + 1, commitTs, dataChange = true, Some(meta))
 
     def dropStaged(): Unit = {
       val fs = new Path(tablePath).getFileSystem(conf)
@@ -1806,7 +1707,7 @@ object TableWriter extends Serializable {
           tablePath, version, partitionColumns = partCols)
       }
     val adds = stageAndMove(spark, combined, tablePath, partCols, version,
-      commitTs, dataChange = true)
+      commitTs, dataChange = true, snap.metadata)
     val removes = affected.map(f =>
       RemoveFile(f.path, commitTs, f.partitionValues))
     log.commit(version,
@@ -2061,7 +1962,7 @@ object TableWriter extends Serializable {
           partitionColumns = partCols)
       }
     val adds = stageAndMove(spark, survivors, tablePath, partCols, version,
-      commitTs, dataChange = true)
+      commitTs, dataChange = true, snap.metadata)
     val removes = affected.map(f =>
       RemoveFile(f.path, commitTs, f.partitionValues)).toIndexedSeq
     val metaAction: Seq[Action] =
@@ -2155,7 +2056,7 @@ object TableWriter extends Serializable {
           partitionColumns = partCols)
       }
     val adds = stageAndMove(spark, survivors, tablePath, partCols, version,
-      commitTs, dataChange = true)
+      commitTs, dataChange = true, snap.metadata)
     val removes = affected.map(f =>
       RemoveFile(f.path, commitTs, f.partitionValues)).toIndexedSeq
     log.commit(version,
@@ -2209,7 +2110,7 @@ object TableWriter extends Serializable {
           .withColumn(ChangeDataFeed.TypeCol, lit(ChangeDataFeed.Delete)),
         tablePath, version, partitionColumns = partCols)
     val adds = stageAndMove(spark, survivors, tablePath, partCols, version,
-      commitTs, dataChange = true)
+      commitTs, dataChange = true, snap.metadata)
     val removes = affected.map(f =>
       RemoveFile(f.path, commitTs, f.partitionValues)).toIndexedSeq
     log.commit(version,
@@ -2296,7 +2197,7 @@ object TableWriter extends Serializable {
           tablePath, version, partitionColumns = partCols)
       }
     val adds = stageAndMove(spark, rewritten, tablePath, partCols, version,
-      commitTs, dataChange = true)
+      commitTs, dataChange = true, snap.metadata)
     val removes = affected.map(f =>
       RemoveFile(f.path, commitTs, f.partitionValues)).toIndexedSeq
     log.commit(version,

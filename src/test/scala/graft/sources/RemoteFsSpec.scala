@@ -203,7 +203,11 @@ class CountingMockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     // listing (the 100 TB shape) from a driver walk
     if (org.apache.spark.TaskContext.get() != null)
       CountingMockFs.taskLists.incrementAndGet()
-    else CountingMockFs.driverLists.incrementAndGet()
+    else {
+      CountingMockFs.driverLists.incrementAndGet()
+      if (p.toString.contains("_txn_log"))
+        CountingMockFs.driverLogLists.incrementAndGet()
+    }
     super.listStatus(p)
   }
   // EVERY create overload of RawLocalFileSystem funnels through this
@@ -214,7 +218,21 @@ class CountingMockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
       : java.io.OutputStream = {
     if (org.apache.spark.TaskContext.get() != null)
       CountingMockFs.taskCreates.incrementAndGet()
+    CountingMockFs.noteStaging(p)
     super.createOutputStreamWithMode(p, append, permission)
+  }
+  override def mkdirs(p: Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission): Boolean = {
+    CountingMockFs.noteStaging(p)
+    super.mkdirs(p, permission)
+  }
+  override def mkdirs(p: Path): Boolean = {
+    CountingMockFs.noteStaging(p)
+    super.mkdirs(p)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    CountingMockFs.renames.incrementAndGet()
+    super.rename(src, dst)
   }
 }
 
@@ -229,4 +247,11 @@ object CountingMockFs {
   val taskLists = new java.util.concurrent.atomic.AtomicInteger(0)
   val driverLists = new java.util.concurrent.atomic.AtomicInteger(0)
   val taskCreates = new java.util.concurrent.atomic.AtomicInteger(0)
+  val driverLogLists = new java.util.concurrent.atomic.AtomicInteger(0)
+  val renames = new java.util.concurrent.atomic.AtomicInteger(0)
+  // files or directories created under a `.staging-*` directory
+  val stagingCreates = new java.util.concurrent.atomic.AtomicInteger(0)
+  private[sources] def noteStaging(p: Path): Unit =
+    if (p.toString.split('/').exists(_.startsWith(".staging-")))
+      stagingCreates.incrementAndGet()
 }
