@@ -352,9 +352,11 @@ private[sources] class GraftBatchTable(
     *    vastly outnumber writes and reorg windows are scarce.
     * CHECK constraints and generated columns are enforced over the
     * new rows before the commit on BOTH paths (same one-pass rules as
-    * the append path). Column-mapped tables still refuse: the writers
-    * emit logical field names, which a mapped table's files must not
-    * contain.
+    * the append path). Both write through the streaming sink's task
+    * writer ([[GraftStreamingDataWriter]], Spark's parquet writer with
+    * names from [[graft.txn.TableCommitProtocol]]). Column-mapped tables
+    * still refuse: that writer writes the plan's logical field names,
+    * which a mapped table's files must not contain.
     */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)

@@ -1,10 +1,7 @@
 package graft.sources
 
 import graft.txn._
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
@@ -12,7 +9,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -150,8 +147,10 @@ private[sources] class GraftDeltaBatchWrite(
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory =
-    GraftDeltaWriterFactory(tablePath, dataSchema.json, partCols,
-      stagingRel, new SerializableConfiguration(conf))
+    GraftDeltaWriterFactory(
+      TaskFiles.prepare(tablePath, dataSchema, partCols),
+      TaskFiles.prepare(tablePath, GraftDeltaBatchWrite.HandleSchema,
+        Seq.empty, sidecarDir = Some(stagingRel)))
 
   private def dropStaging(): Unit = {
     val p = new Path(tablePath, stagingRel)
@@ -172,7 +171,7 @@ private[sources] class GraftDeltaBatchWrite(
     // only files named by SUCCESSFUL task commits count — the staging
     // dir may hold orphans from failed attempts
     val handlePaths = msgs.flatMap(_.handleFiles)
-      .map(rel => s"$tablePath/$stagingRel/$rel")
+      .map(rel => new Path(tablePath, rel).toString)
     val log = new TxnLog(tablePath, conf)
     def fail(t: Throwable): Nothing = {
       GraftRowLevelOps.dropFiles(tablePath, conf, newAdds)
@@ -332,69 +331,44 @@ private[sources] class GraftDeltaBatchWrite(
 }
 
 private[sources] case class GraftDeltaWriterFactory(
-    tablePath: String,
-    schemaJson: String,
-    partitionColumns: Seq[String],
-    stagingRel: String,
-    conf: SerializableConfiguration) extends DeltaWriterFactory {
+    data: TaskFiles, handles: TaskFiles) extends DeltaWriterFactory {
 
   override def createWriter(
       partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new GraftDeltaDataWriter(tablePath,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType],
-      partitionColumns, stagingRel, conf.value, partitionId, taskId)
+    new GraftDeltaDataWriter(data, handles, partitionId, taskId)
 }
 
 /** One task's delta writer. Update images and inserts go to SEPARATE
-  * data writers (distinct epoch tags keep the attempt-unique names
-  * apart) so the commit can classify CDF rows by file provenance; dead
-  * handles stream to one small parquet sidecar in the write's staging
-  * dir. All three writers are lazy — a task that only deletes writes
-  * no data file at all.
+  * data files (distinct name stems) so the commit can classify CDF rows
+  * by file provenance; dead handles go to small parquet files flat in
+  * the write's staging dir, which the commit reads back for the vector
+  * and the pre-images and then drops. All three are the same
+  * [[GraftStreamingDataWriter]] (Spark's parquet writer, names from
+  * [[TableCommitProtocol]]) and all are lazy — a task that only deletes
+  * writes no data file at all.
   */
 private[sources] class GraftDeltaDataWriter(
-    tablePath: String,
-    schema: StructType,
-    partitionColumns: Seq[String],
-    stagingRel: String,
-    conf: Configuration,
+    data: TaskFiles,
+    handles: TaskFiles,
     partitionId: Int,
     taskId: Long) extends DeltaWriter[InternalRow] {
 
   private var updWriter: GraftStreamingDataWriter = _
   private var insWriter: GraftStreamingDataWriter = _
-
-  private val handleSchema = GraftDeltaBatchWrite.HandleSchema
-  private val handleType =
-    GraftStreamingWrite.messageTypeOf(handleSchema, Seq.empty)
-  private val handleFactory = new SimpleGroupFactory(handleType)
-  private var handleWriter: org.apache.parquet.hadoop.ParquetWriter[
-    org.apache.parquet.example.data.Group] = _
-  private var handleRel: String = _
+  private var handleWriter: GraftStreamingDataWriter = _
   private val touched = scala.collection.mutable.LinkedHashSet.empty[String]
-
-  private def handles() = {
-    if (handleWriter == null) {
-      val attempt = java.util.UUID.randomUUID().toString.take(8)
-      handleRel = f"handles-$partitionId%05d-$taskId-$attempt.parquet"
-      val p = new Path(new Path(tablePath, stagingRel), handleRel)
-      p.getFileSystem(conf).mkdirs(p.getParent)
-      handleWriter = ExampleParquetWriter.builder(p)
-        .withType(handleType).withConf(conf).build()
-    }
-    handleWriter
-  }
 
   private def writeHandle(id: InternalRow, kind: String): Unit = {
     // rowId() order: (_graft_file absolute path, _graft_pos)
     val abs = id.getUTF8String(0).toString
     val name = abs.substring(abs.lastIndexOf('/') + 1)
     touched += name
-    val g = handleFactory.newGroup()
-    g.add("file_name", name)
-    g.add("row_index", id.getLong(1))
-    g.add("kind", kind)
-    handles().write(g)
+    if (handleWriter == null)
+      handleWriter =
+        new GraftStreamingDataWriter(handles, "handles", partitionId,
+          taskId)
+    handleWriter.write(InternalRow(UTF8String.fromString(name),
+      id.getLong(1), UTF8String.fromString(kind)))
   }
 
   override def delete(meta: InternalRow, id: InternalRow): Unit =
@@ -404,49 +378,33 @@ private[sources] class GraftDeltaDataWriter(
       meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
     writeHandle(id, "u")
     if (updWriter == null)
-      updWriter = new GraftStreamingDataWriter(tablePath, schema,
-        partitionColumns, conf, partitionId, taskId, epochId = 1L)
+      updWriter =
+        new GraftStreamingDataWriter(data, "part-s00001", partitionId, taskId)
     updWriter.write(row)
   }
 
   override def insert(row: InternalRow): Unit = {
     if (insWriter == null)
-      insWriter = new GraftStreamingDataWriter(tablePath, schema,
-        partitionColumns, conf, partitionId, taskId, epochId = 2L)
+      insWriter =
+        new GraftStreamingDataWriter(data, "part-s00002", partitionId, taskId)
     insWriter.write(row)
   }
 
-  private def addsOf(w: GraftStreamingDataWriter): Seq[AddFile] =
-    if (w == null) Seq.empty
-    else w.commit() match {
-      case m: GraftStreamCommitMessage => m.adds
-      case _ => Seq.empty
-    }
+  private def writers = Seq(updWriter, insWriter, handleWriter).filter(_ != null)
+
+  private def committed(w: GraftStreamingDataWriter) =
+    Option(w).toSeq.flatMap(_.committed())
 
   override def commit(): WriterCommitMessage = {
-    if (handleWriter != null) handleWriter.close()
+    val now = System.currentTimeMillis()
     GraftDeltaCommitMessage(
-      updateAdds = addsOf(updWriter),
-      insertAdds = addsOf(insWriter),
-      handleFiles = Option(handleRel).toSeq,
+      updateAdds = committed(updWriter).map(_.addFile(now, dataChange = true)),
+      insertAdds = committed(insWriter).map(_.addFile(now, dataChange = true)),
+      handleFiles = committed(handleWriter).map(_.relPath),
       affectedFiles = touched.toSeq)
   }
 
-  override def abort(): Unit = {
-    if (handleWriter != null) {
-      try handleWriter.close() catch { case _: Throwable => () }
-      val p = new Path(new Path(tablePath, stagingRel), handleRel)
-      try p.getFileSystem(conf).delete(p, false)
-      catch { case _: Throwable => () }
-    }
-    if (updWriter != null) updWriter.abort()
-    if (insWriter != null) insWriter.abort()
-  }
+  override def abort(): Unit = writers.foreach(_.abort())
 
-  override def close(): Unit = {
-    if (handleWriter != null)
-      try handleWriter.close() catch { case _: Throwable => () }
-    if (updWriter != null) updWriter.close()
-    if (insWriter != null) insWriter.close()
-  }
+  override def close(): Unit = writers.foreach(_.close())
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
@@ -141,8 +140,9 @@ private[sources] object GraftRowLevelOps {
   }
 }
 
-/** The replacing write: task writers reuse the streaming sink's
-  * parquet writer (hive layout, attempt-unique names, footer stats);
+/** The replacing write: task writers are the streaming sink's
+  * [[GraftStreamingDataWriter]] (Spark's parquet writer, hive layout,
+  * names and footer stats from [[TableCommitProtocol]]);
   * the driver validates the replacement rows against the table's
   * write-path rules (CHECK constraints, generated columns), then
   * commits removes+adds atomically under two conflict checks:
@@ -173,10 +173,9 @@ private[sources] class GraftRowLevelBatchWrite(
     .sessionState.newHadoopConf()
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    val serConf = new SerializableConfiguration(conf)
-    GraftRowLevelWriterFactory(tablePath, writeSchema.json, partCols, serConf)
-  }
+      info: PhysicalWriteInfo): DataWriterFactory =
+    GraftRowLevelWriterFactory(
+      TaskFiles.prepare(tablePath, writeSchema, partCols))
 
   private def dropFiles(adds: Seq[AddFile]): Unit =
     GraftRowLevelOps.dropFiles(tablePath, conf, adds)
@@ -246,16 +245,10 @@ private[sources] class GraftRowLevelBatchWrite(
     }.toSeq)
 }
 
-private[sources] case class GraftRowLevelWriterFactory(
-    tablePath: String,
-    schemaJson: String,
-    partitionColumns: Seq[String],
-    conf: SerializableConfiguration) extends DataWriterFactory {
+private[sources] case class GraftRowLevelWriterFactory(files: TaskFiles)
+    extends DataWriterFactory {
 
-  override def createWriter(
-      partitionId: Int, taskId: Long): DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
-    new GraftStreamingDataWriter(tablePath,
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[StructType],
-      partitionColumns, conf.value, partitionId, taskId, epochId = 0L)
+  override def createWriter(partitionId: Int, taskId: Long)
+      : DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
+    new GraftStreamingDataWriter(files, "part-s00000", partitionId, taskId)
 }

@@ -1,14 +1,16 @@
 package graft.sources
 
 import graft.txn._
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+import org.apache.hadoop.mapreduce.{TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.internal.io.FileNameSpec
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -24,17 +26,18 @@ import org.apache.spark.util.SerializableConfiguration
   * restarts. The marker scan reads newest-first and stops at the first
   * older epoch of the same query, so steady-state cost is O(1) commits.
   *
-  * Restrictions (refused loudly at planning): column-mapped tables
-  * (files must carry physical names) and nested/decimal payload types
-  * (the task-side writer covers the primitive surface).
+  * Tasks write through Spark's parquet writer ([[GraftStreamingDataWriter]]),
+  * so every type [[graft.txn.TableWriter]] writes streams too — nested
+  * and decimal payloads, partition columns of any type. One restriction,
+  * refused loudly at planning: column-mapped tables (the task writer
+  * writes the plan's logical names; a mapped table's files must carry
+  * physical names).
   */
-private[sources] class GraftStreamingWrite(
+private[graft] class GraftStreamingWrite(
     tablePath: String,
     schema: StructType,
     declaredPartitionColumns: Seq[String],
     queryId: String) extends StreamingWrite {
-
-  import GraftStreamingWrite._
 
   // Partition columns come from the table's OWN metadata, not the caller:
   // via the TableProvider path (writeStream.format("graft")) the caller
@@ -43,7 +46,6 @@ private[sources] class GraftStreamingWrite(
   // hive inference and pruning. A non-empty ctor value must agree.
   // `readVersion` anchors the per-epoch metadata-commutativity scan.
   private val (partitionColumns: Seq[String], readVersion: Long) = {
-    val conf = new Configuration()
     val snap = new TxnLog(tablePath, conf).snapshotLatest()
     val meta = snap.metadata.getOrElse(throw new IllegalArgumentException(
       s"no table metadata at $tablePath"))
@@ -60,8 +62,6 @@ private[sources] class GraftStreamingWrite(
     require(shape(declared) == shape(schema),
       s"streaming write schema ${schema.simpleString} does not match the " +
         s"table schema at $tablePath")
-    schema.fields.filterNot(f => meta.partitionColumns.contains(f.name))
-      .foreach(f => messageFieldOf(f)) // fail fast on unsupported types
     (meta.partitionColumns, snap.version)
   }
 
@@ -74,12 +74,9 @@ private[sources] class GraftStreamingWrite(
   private val markerRe = s"STREAMV2_${java.util.regex.Pattern.quote(queryId)}_(\\d+)".r
 
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val serConf = new SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    GraftStreamingWriterFactory(tablePath, schema.json,
-      partitionColumns, serConf)
-  }
+      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    GraftStreamingWriterFactory(
+      TaskFiles.prepare(tablePath, schema, partitionColumns))
 
   private def conf = org.apache.spark.sql.SparkSession.active
     .sessionState.newHadoopConf()
@@ -153,168 +150,129 @@ private[sources] class GraftStreamingWrite(
     }.toSeq)
 }
 
-private[sources] object GraftStreamingWrite {
+private[graft] case class GraftStreamCommitMessage(adds: Seq[AddFile])
+  extends WriterCommitMessage
 
-  /** Spark field → parquet field (primitive surface only). */
-  def messageFieldOf(f: StructField): org.apache.parquet.schema.Type = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val b = f.dataType match {
-      case LongType => Types.optional(INT64)
-      case IntegerType => Types.optional(INT32)
-      case DoubleType => Types.optional(DOUBLE)
-      case FloatType => Types.optional(FLOAT)
-      case BooleanType => Types.optional(BOOLEAN)
-      case StringType =>
-        Types.optional(BINARY).as(LogicalTypeAnnotation.stringType())
-      case TimestampType => Types.optional(INT64).as(
-        LogicalTypeAnnotation.timestampType(true,
-          LogicalTypeAnnotation.TimeUnit.MICROS))
-      case TimestampNTZType => Types.optional(INT64).as(
-        LogicalTypeAnnotation.timestampType(false,
-          LogicalTypeAnnotation.TimeUnit.MICROS))
-      case DateType => Types.optional(INT32).as(
-        LogicalTypeAnnotation.dateType())
-      case ShortType => Types.optional(INT32).as(
-        LogicalTypeAnnotation.intType(16, true))
-      case ByteType => Types.optional(INT32).as(
-        LogicalTypeAnnotation.intType(8, true))
-      case other => throw new UnsupportedOperationException(
-        s"streaming write does not support column '${f.name}': $other " +
-          "(use GraftTableSink.append/foreachBatch for nested payloads)")
-    }
-    b.named(f.name)
-  }
+/** What every task writer of one write shares, prepared once on the
+  * driver: Spark's parquet writer factory for the data columns (the
+  * session's codec, INT64 `TIMESTAMP_MICROS`) with its Hadoop conf, and
+  * the write id and sidecar dir [[TableCommitProtocol]] names the files
+  * with.
+  */
+private[graft] case class TaskFiles(
+    tablePath: String,
+    schema: StructType,
+    partitionColumns: Seq[String],
+    factory: OutputWriterFactory,
+    conf: SerializableConfiguration,
+    writeId: String,
+    timeZone: String,
+    sidecarDir: Option[String])
 
-  def messageTypeOf(schema: StructType, partitionColumns: Seq[String]): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.filterNot(f => partitionColumns.contains(f.name))
-      .foreach(f => b.addField(messageFieldOf(f)))
-    b.named("spark_schema")
+private[graft] object TaskFiles {
+  def prepare(tablePath: String, schema: StructType,
+      partitionColumns: Seq[String],
+      sidecarDir: Option[String] = None): TaskFiles = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    val (factory, conf) = TableCommitProtocol.prepareParquet(spark,
+      StructType(schema.filterNot(f => partitionColumns.contains(f.name))))
+    TaskFiles(tablePath, schema, partitionColumns, factory,
+      new SerializableConfiguration(conf),
+      java.util.UUID.randomUUID().toString.take(8),
+      spark.sessionState.conf.sessionLocalTimeZone, sidecarDir)
   }
 }
 
-private[sources] case class GraftStreamCommitMessage(adds: Seq[AddFile])
-  extends WriterCommitMessage
-
-private[sources] case class GraftStreamingWriterFactory(
-    tablePath: String,
-    schemaJson: String,
-    partitionColumns: Seq[String],
-    conf: SerializableConfiguration) extends StreamingDataWriterFactory {
+private[graft] case class GraftStreamingWriterFactory(files: TaskFiles)
+    extends StreamingDataWriterFactory {
 
   override def createWriter(
       partitionId: Int,
       taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new GraftStreamingDataWriter(tablePath,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType],
-      partitionColumns, conf.value, partitionId, taskId, epochId)
+    new GraftStreamingDataWriter(files, f"part-s$epochId%05d", partitionId,
+      taskId)
 }
 
-/** One task's writer: a parquet file per touched hive partition, written
-  * directly under the table tree with an attempt-unique name (uncommitted
-  * files are invisible to readers; vacuum sweeps aborted ones).
+/** One task's writer, shared by the streaming sink and the row-level
+  * writes: Spark's parquet writer, one file per touched hive partition,
+  * written straight under the table tree with the name
+  * [[TableCommitProtocol]] gives it, `<stem>-<partition>-<seq>-<writeId>.<taskId>`
+  * (Spark's task attempt id keeps the attempts of one partition apart;
+  * uncommitted files are invisible to readers, vacuum sweeps aborted
+  * ones). Partition columns leave the files, as in every graft write.
   */
-private[sources] class GraftStreamingDataWriter(
-    tablePath: String,
-    schema: StructType,
-    partitionColumns: Seq[String],
-    conf: Configuration,
+private[graft] class GraftStreamingDataWriter(
+    files: TaskFiles,
+    stem: String,
     partitionId: Int,
-    taskId: Long,
-    epochId: Long) extends DataWriter[InternalRow] {
+    taskId: Long) extends DataWriter[InternalRow] {
+  import files._
 
-  private val fileSchema =
-    GraftStreamingWrite.messageTypeOf(schema, partitionColumns)
-  private val factory = new SimpleGroupFactory(fileSchema)
-  private val attempt = java.util.UUID.randomUUID().toString.take(8)
-  private val partIdx: Seq[Int] =
-    partitionColumns.map(c => schema.fieldIndex(c))
-  private val dataFields: Seq[(StructField, Int)] =
-    schema.fields.zipWithIndex.toSeq
-      .filterNot { case (f, _) => partitionColumns.contains(f.name) }
+  private val protocol =
+    new TableCommitProtocol(tablePath, stem, writeId, sidecarDir)
+  private val ctx = new TaskAttemptContextImpl(conf.value,
+    new TaskAttemptID("graft", 0, TaskType.MAP, partitionId, taskId.toInt))
+  protocol.setupTask(ctx)
 
-  // partition-value dir (hive layout, declared order) → open writer
-  private val writers = scala.collection.mutable.LinkedHashMap.empty[
-    String, org.apache.parquet.hadoop.ParquetWriter[
-      org.apache.parquet.example.data.Group]]
-  private var fileSeq = 0
+  private val partIdx = partitionColumns.map(schema.fieldIndex)
+  private val dataSchema = StructType(
+    schema.filterNot(f => partitionColumns.contains(f.name)))
+  private val toData: InternalRow => InternalRow =
+    if (partIdx.isEmpty) identity
+    else UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.collect {
+      case (f, i) if !partIdx.contains(i) =>
+        BoundReference(i, f.dataType, f.nullable)
+    })
+  // partition values as the strings of their hive dir, cast the way
+  // Spark's own partitioned write casts them
+  private val partValues = UnsafeProjection.create(partIdx.map(i =>
+    Cast(BoundReference(i, schema(i).dataType, nullable = true),
+      StringType, Some(timeZone))))
 
-  private def relDirOf(row: InternalRow): String =
-    partitionColumns.zip(partIdx).map { case (c, i) =>
-      val v =
-        if (row.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__"
-        else schema(c).dataType match {
-          case StringType => row.getUTF8String(i).toString
-          case LongType => row.getLong(i).toString
-          case IntegerType => row.getInt(i).toString
-          case other => throw new UnsupportedOperationException(
-            s"streaming-write partition column '$c' of type $other")
-        }
-      s"$c=$v"
-    }.mkString("/")
+  // partition values → open writer
+  private val writers =
+    scala.collection.mutable.LinkedHashMap.empty[InternalRow, OutputWriter]
 
-  private def writerFor(relDir: String) =
-    writers.getOrElseUpdate(relDir, {
-      val rel = (if (relDir.isEmpty) "" else s"$relDir/") +
-        f"part-s$epochId%05d-$partitionId%05d-$fileSeq%03d-$attempt.parquet"
-      fileSeq += 1
-      val p = new Path(TxnLog.dataPath(tablePath, rel))
-      p.getFileSystem(conf).mkdirs(p.getParent)
-      val w = ExampleParquetWriter.builder(p)
-        .withType(fileSchema).withConf(conf).build()
-      pathsByDir(relDir) = rel
+  private def writerFor(row: InternalRow): OutputWriter = {
+    val key = partValues(row)
+    writers.getOrElse(key, {
+      val dir = partitionColumns.zipWithIndex.map { case (c, j) =>
+        ExternalCatalogUtils.getPartitionPathString(c,
+          if (key.isNullAt(j)) null else key.getUTF8String(j).toString)
+      }
+      val path = protocol.newTaskTempFile(ctx,
+        if (dir.isEmpty) None else Some(dir.mkString("/")),
+        FileNameSpec("", ".parquet"))
+      val w = factory.newInstance(path, dataSchema, ctx)
+      writers(key.copy()) = w
       w
     })
+  }
 
-  private val pathsByDir = scala.collection.mutable.LinkedHashMap.empty[String, String]
+  override def write(row: InternalRow): Unit =
+    writerFor(row).write(toData(row))
 
-  override def write(row: InternalRow): Unit = {
-    val relDir = relDirOf(row)
-    val g = factory.newGroup()
-    dataFields.foreach { case (f, i) =>
-      if (!row.isNullAt(i)) f.dataType match {
-        case LongType | TimestampType | TimestampNTZType =>
-          g.add(f.name, row.getLong(i))
-        case IntegerType | DateType => g.add(f.name, row.getInt(i))
-        case DoubleType => g.add(f.name, row.getDouble(i))
-        case FloatType => g.add(f.name, row.getFloat(i))
-        case BooleanType => g.add(f.name, row.getBoolean(i))
-        case StringType => g.add(f.name, row.getUTF8String(i).toString)
-        case ShortType => g.add(f.name, row.getShort(i).toInt)
-        case ByteType => g.add(f.name, row.getByte(i).toInt)
-        case other => throw new UnsupportedOperationException(other.toString)
-      }
-    }
-    writerFor(relDir).write(g)
+  /** Close the files and report them through the protocol. */
+  def committed(): Seq[TableCommitProtocol.Written] = {
+    writers.values.foreach(_.close())
+    writers.clear()
+    protocol.commitTask(ctx).obj
+      .asInstanceOf[Seq[TableCommitProtocol.Written]]
   }
 
   override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_.close())
     val now = System.currentTimeMillis()
-    val adds = pathsByDir.toSeq.map { case (relDir, rel) =>
-      val p = new Path(TxnLog.dataPath(tablePath, rel))
-      val fs = p.getFileSystem(conf)
-      AddFile(
-        path = rel,
-        partitionValues = TableWriter.partitionValuesOf(relDir),
-        size = fs.getFileStatus(p).getLen,
-        modificationTime = now,
-        dataChange = true,
-        stats = TableWriter.footerStats(p, conf))
-    }
-    GraftStreamCommitMessage(adds)
+    GraftStreamCommitMessage(committed().map(_.addFile(now, dataChange = true)))
   }
 
   override def abort(): Unit = {
-    writers.values.foreach(w => try w.close() catch { case _: Throwable => () })
-    pathsByDir.values.foreach { rel =>
-      val p = new Path(TxnLog.dataPath(tablePath, rel))
-      try p.getFileSystem(conf).delete(p, false)
-      catch { case _: Throwable => () }
-    }
+    close()
+    protocol.abortTask(ctx)
   }
 
-  override def close(): Unit =
+  override def close(): Unit = {
     writers.values.foreach(w => try w.close() catch { case _: Throwable => () })
+    writers.clear()
+  }
 }

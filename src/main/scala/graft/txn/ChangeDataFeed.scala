@@ -65,20 +65,25 @@ object ChangeDataFeed {
   private val MaxSidecarFiles = 16
   private val SidecarCoalesceBytes = 256L * 1024 * 1024
 
-  /** Stage `changes` (table columns + [[TypeCol]]) as parquet under
-    * `_change_data/` and return the [[CdcFile]] actions the caller must
-    * fold into the SAME commit as the data it describes. Partition
+  /** Write `changes` (table columns + [[TypeCol]]) as parquet sidecars
+    * and return the [[CdcFile]] actions the caller must fold into the
+    * SAME commit as the data it describes. The files land once, at their
+    * final names, flat under `_change_data/`
+    * (`cd-<version>-<task>-<seq>-<writeId>.<attempt>.parquet`, through
+    * [[TableCommitProtocol]]): nothing is staged or renamed, and an
+    * uncommitted attempt's files are orphans no reader sees. Partition
     * columns ride INSIDE the files as regular columns — change files
     * answer "what changed", never "where does this row live", so hive
     * routing would buy nothing and cost a directory walk at read.
     *
-    * With `partitionColumns` set, the staged write is SPLIT per changed
-    * partition (duplicated shadow columns drive a partitionBy, so the
-    * originals still ride inside the files) and each [[CdcFile]] carries
-    * its partitionValues — the feed readers then prune sidecars at the
-    * ACTION level, before any parquet I/O (the reference's one optimizer
-    * idea, DeltaReader.java:181–226, applied to the row-level feed).
-    * Sidecar count = changed partitions, bounded by the change set.
+    * With `partitionColumns` set, the write is SPLIT per changed
+    * partition (duplicated `_cdp_*` shadow columns drive the split, so
+    * the originals still ride inside the files) and each [[CdcFile]]
+    * carries the partitionValues of its shadow dir — the feed readers
+    * then prune sidecars at the ACTION level, before any parquet I/O
+    * (the reference's one optimizer idea, DeltaReader.java:181–226,
+    * applied to the row-level feed). Sidecar count = changed partitions,
+    * bounded by the change set.
     */
   def stage(
       spark: SparkSession,
@@ -88,79 +93,46 @@ object ChangeDataFeed {
       partitionColumns: Seq[String] = Seq.empty): Seq[CdcFile] = {
     require(changes.columns.contains(TypeCol),
       s"change frame must carry $TypeCol")
-    val conf = spark.sessionState.newHadoopConf()
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(conf)
-    val attemptId = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(tablePath, s".staging-cdc-$version-$attemptId")
-    fs.delete(staging, true)
-    val partCols = partitionColumns.filter(changes.columns.contains)
-    if (partCols.isEmpty) {
-      changes.write.mode("overwrite").parquet(staging.toString)
-      def parts() = fs.listStatus(staging)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-      var staged = parts()
-      // many-tiny-files consolidation (see MaxSidecarFiles): re-write the
-      // staged bytes coalesced — the data is small by the size guard, so
-      // the second pass is metadata-cheap
-      if (staged.length > MaxSidecarFiles &&
-          staged.map(_.getLen).sum < SidecarCoalesceBytes) {
-        val tmp = new Path(tablePath, s".staging-cdc2-$version-$attemptId")
-        fs.delete(tmp, true)
-        spark.read.parquet(staging.toString).coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(staging, true)
-        if (!fs.rename(tmp, staging))
-          throw new IllegalStateException(s"rename failed: $staging")
-        staged = parts()
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[CdcFile]
-      staged.foreach { st =>
-        val destRel =
-          f"_change_data/cd-$version%020d-${out.size}%05d-$attemptId.parquet"
-        val dest = new Path(table, destRel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(st.getPath, dest))
-          throw new IllegalStateException(s"rename failed: $dest")
-        out += CdcFile(destRel, Map.empty, st.getLen)
-      }
-      fs.delete(staging, true)
-      out.toSeq
-    } else {
-      // shadow copies keep the REAL columns inside the files (readers
-      // are unchanged); repartition on them consolidates to ~one file
-      // per changed partition before the partitionBy split
-      val shadow = partCols.map(c => s"_cdp_$c")
-      val shadowed = partCols.zip(shadow).foldLeft(changes) {
-        case (df, (c, sc)) => df.withColumn(sc, org.apache.spark.sql
-          .functions.col(c))
-      }
-      shadowed.repartition(shadow.map(org.apache.spark.sql.functions.col): _*)
-        .write.mode("overwrite").partitionBy(shadow: _*)
-        .parquet(staging.toString)
-      val out = scala.collection.mutable.ArrayBuffer.empty[CdcFile]
-      def visit(dir: Path, rel: String): Unit =
-        fs.listStatus(dir).foreach { st =>
-          val name = st.getPath.getName
-          if (st.isDirectory)
-            visit(st.getPath, if (rel.isEmpty) name else s"$rel/$name")
-          else if (name.endsWith(".parquet")) {
-            val pv = TableWriter.partitionValuesOf(rel).map {
-              case (k, v) => k.stripPrefix("_cdp_") -> v
-            }
-            val destRel =
-              f"_change_data/cd-$version%020d-${out.size}%05d-$attemptId.parquet"
-            val dest = new Path(table, destRel)
-            fs.mkdirs(dest.getParent)
-            if (!fs.rename(st.getPath, dest))
-              throw new IllegalStateException(s"rename failed: $dest")
-            out += CdcFile(destRel, pv, st.getLen)
-          }
-        }
-      visit(staging, "")
-      fs.delete(staging, true)
-      out.toSeq
+    def write(df: DataFrame, partitionBy: Seq[String]) = {
+      val protocol = new TableCommitProtocol(tablePath, f"cd-$version%020d",
+        java.util.UUID.randomUUID().toString.take(8),
+        sidecarDir = Some("_change_data"))
+      TableCommitProtocol.write(spark, df, partitionBy, protocol)
+      protocol.committed.sortBy(_.relPath)
     }
+    val partCols = partitionColumns.filter(changes.columns.contains)
+    val written =
+      if (partCols.isEmpty) {
+        val first = write(changes, Seq.empty)
+        // many-tiny-files consolidation (see MaxSidecarFiles): re-write
+        // the first pass's bytes coalesced and delete its files — the
+        // data is small by the size guard, so the second pass is
+        // metadata-cheap
+        if (first.size <= MaxSidecarFiles ||
+            first.map(_.size).sum >= SidecarCoalesceBytes) first
+        else {
+          val paths = first.map(w => new Path(tablePath, w.relPath))
+          val second = write(spark.read.schema(changes.schema)
+            .parquet(paths.map(_.toString): _*).coalesce(1), Seq.empty)
+          val fs = new Path(tablePath)
+            .getFileSystem(spark.sessionState.newHadoopConf())
+          paths.foreach(fs.delete(_, false))
+          second
+        }
+      } else {
+        // shadow copies keep the REAL columns inside the files (readers
+        // are unchanged); repartition on them consolidates to ~one file
+        // per changed partition before the split
+        val shadow = partCols.map(c => s"_cdp_$c")
+        val shadowed = partCols.zip(shadow).foldLeft(changes) {
+          case (df, (c, sc)) => df.withColumn(sc, col(c))
+        }
+        write(shadowed.repartition(shadow.map(col): _*), shadow)
+      }
+    written.map(w => CdcFile(w.relPath,
+      TableWriter.partitionValuesOf(w.partitionDir).map {
+        case (k, v) => k.stripPrefix("_cdp_") -> v
+      }, w.size))
   }
 
   /** Refuse a change-feed range that reaches at or below the earliest

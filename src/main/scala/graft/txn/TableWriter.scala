@@ -752,34 +752,9 @@ object TableWriter extends Serializable {
         else physDf0.hint("rebalance")
       }.getOrElse(physDf0)
 
-    // Spark's file writer with this write's own commit protocol, passed
-    // explicitly (never through the session-wide commit protocol class)
-    val qe = physDf.queryExecution
-    val plan = qe.executedPlan
-    val resolver = spark.sessionState.conf.resolver
-    val partAttrs = partitionBy.map(c => plan.output.find(a => resolver(a.name, c))
-      .getOrElse(throw new IllegalArgumentException(
-        s"partition column '$c' is not in ${physDf.columns.mkString(", ")}")))
-    val protocol = new TableCommitProtocol(tablePath, version,
+    val protocol = new TableCommitProtocol(tablePath, f"part-$version%05d",
       java.util.UUID.randomUUID().toString.take(8))
-    // INT64-micros timestamps (not INT96): the parquet type every reader
-    // and external engine reads without a legacy rebase. The writer reads
-    // it from the session; the previous value is restored after.
-    val tsTypeKey = "spark.sql.parquet.outputTimestampType"
-    val prevTsType = spark.conf.getOption(tsTypeKey)
-    spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
-    try org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
-        Some(s"graft write $tablePath")) {
-      import org.apache.spark.sql.execution.datasources.FileFormatWriter
-      FileFormatWriter.write(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan,
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-        protocol, FileFormatWriter.OutputSpec(tablePath, Map.empty, plan.output),
-        spark.sessionState.newHadoopConf(), partAttrs, None, Nil, Map.empty)
-    } finally prevTsType match {
-      case Some(v) => spark.conf.set(tsTypeKey, v)
-      case None    => spark.conf.unset(tsTypeKey)
-    }
+    TableCommitProtocol.write(spark, physDf, partitionBy, protocol)
     protocol.addFiles(commitTs, dataChange)
   }
 
@@ -1251,13 +1226,15 @@ object TableWriter extends Serializable {
       .unionByName(cdcOrphans.select("rel"))
       .unionByName(dataOrphans.select("rel"))
 
-    // stale STAGING leftovers: the DML paths stage under `.staging-*`
-    // dirs and rename into place on success — a crash between staging
-    // and commit strands the directory, and the dot-dir skip above
-    // would otherwise hide it from the sweep forever. Age by the NEWEST
-    // file inside the dir (an object store's dir mtime can be creation
-    // time — a long-running statement still writing must not lose its
-    // staging mid-flight); an empty dir falls back to its own mtime.
+    // stale STAGING leftovers: only deletion vectors (`.staging-dv-*`,
+    // renamed into place on success) and row-level handles
+    // (`.staging-rlh-*`, dropped after the commit) are staged now — a
+    // crash before the commit strands the directory, and the dot-dir
+    // skip above would otherwise hide it from the sweep forever. Age by
+    // the NEWEST file inside the dir (an object store's dir mtime can be
+    // creation time — a long-running statement still writing must not
+    // lose its staging mid-flight); an empty dir falls back to its own
+    // mtime.
     val staleStaging: Seq[String] = rootEntries
       .filter(st => st.isDirectory &&
         st.getPath.getName.startsWith(".staging-"))

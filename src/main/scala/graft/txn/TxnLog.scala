@@ -213,22 +213,23 @@ final class TxnLog(
     (stamped, Some(cursor))
   }
 
-  /** First unused stable row id as of version `uptoV` (inclusive). */
+  /** First unused stable row id as of version `uptoV` (inclusive): the
+    * newest persisted mark, found by reading commits back from `uptoV`
+    * (no log listing). The walk ends at the first missing commit (log
+    * start or expired prefix); a log with no mark in reach seeds from
+    * the live files at `uptoV`.
+    */
   def rowIdHighWater(uptoV: Long): Long = {
-    val vs = versions().filter(_ <= uptoV).sorted.reverse
-    vs.foreach { v =>
-      read(v).collectFirst {
-        case c: CommitInfo if c.rowIdHighWater.isDefined =>
-          c.rowIdHighWater.get
-      } match {
-        case Some(h) => return h
-        case None    =>
-      }
-    }
-    if (vs.isEmpty) 0L
-    else snapshot(uptoV).files
+    val commits = Iterator.iterate(uptoV)(_ - 1).takeWhile(_ >= 0)
+      .map(v => try Some(read(v))
+        catch { case _: java.io.FileNotFoundException => None })
+      .takeWhile(_.nonEmpty).flatten.buffered
+    if (!commits.hasNext) return 0L // no commit at uptoV
+    commits.flatMap(_.collectFirst {
+      case c: CommitInfo if c.rowIdHighWater.isDefined => c.rowIdHighWater.get
+    }).nextOption().getOrElse(snapshot(uptoV).files
       .flatMap(f => f.baseRowId.map(_ + f.stats.map(_.numRecords).getOrElse(0L)))
-      .foldLeft(0L)(math.max)
+      .foldLeft(0L)(math.max))
   }
 
   /** Next unallocated value of a GENERATED ALWAYS AS IDENTITY column as

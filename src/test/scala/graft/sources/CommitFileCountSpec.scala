@@ -11,6 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * open on the driver), and the append reads the log once. The log
   * counts are exact: a second snapshot replay or a re-read of the
   * table's metadata shows as more `_txn_log` listings and opens.
+  *
+  * SQL DML on a change-feed table writes its new data files and its
+  * change-data sidecars the same way: the one rename left is the
+  * deletion-vector directory's.
   */
 class CommitFileCountSpec extends AnyFunSuite {
   import graft.SparkTestSession._
@@ -62,9 +66,9 @@ class CommitFileCountSpec extends AnyFunSuite {
       commitTs = 3000L))
     info(s"append: $c")
     assertDirect(c)
-    // latestVersion, the snapshot's version and checkpoint listings, and
-    // the commit's row-id mark lookup
-    assert(c.logLists == 4, c)
+    // latestVersion and the snapshot's version and checkpoint listings;
+    // the commit reads its row-id mark without a listing
+    assert(c.logLists == 3, c)
     // the replay reads v0 and v1; the commit reads v1's row-id mark
     assert(c.logOpens == 3, c)
     assert(SnapshotReader.read(spark, t).count() == 600L)
@@ -80,9 +84,8 @@ class CommitFileCountSpec extends AnyFunSuite {
       GraftTableSink.commitBatch(rows(500L, 600L), t, 1L, Seq("p"), 3000L)))
     info(s"commitBatch: $c")
     assertDirect(c)
-    // the marker check's listing, the snapshot's two and the commit's
-    // row-id mark lookup
-    assert(c.logLists == 4, c)
+    // the marker check's listing and the snapshot's two
+    assert(c.logLists == 3, c)
     // the marker check reads v1; the replay v0 and v1; the commit v1's
     // row-id mark
     assert(c.logOpens == 4, c)
@@ -90,4 +93,91 @@ class CommitFileCountSpec extends AnyFunSuite {
     assert(!GraftTableSink.commitBatch(rows(500L, 600L), t, 1L, Seq("p")),
       "a replayed batch is skipped")
   }
+
+  private lazy val warehouse: String = {
+    val wh = freshTable()
+    spark.conf.set("spark.sql.catalog.gcfc", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gcfc.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gcfc.default")
+    wh
+  }
+
+  /** 40 rows `(k, p = k % 4, v = 10k)`, partitioned by p, change feed on. */
+  private def dmlTable(t: String): Unit = {
+    warehouse
+    spark.sql(
+      s"""CREATE TABLE gcfc.default.$t (k BIGINT, p INT, v BIGINT)
+         |PARTITIONED BY (p)
+         |TBLPROPERTIES ('graft.enableChangeDataFeed'='true')""".stripMargin)
+    spark.sql(s"INSERT INTO gcfc.default.$t SELECT /*+ COALESCE(1) */ * " +
+      (0 until 40).map(k => s"($k, ${k % 4}, ${10 * k})")
+        .mkString("FROM VALUES ", ", ", " AS s(k, p, v)"))
+  }
+
+  /** `body`'s counts, its `.staging-cdc*` creates and its renames. */
+  private def countedDml(body: => Unit)
+      : (Counts, Int, Seq[(String, String)]) = {
+    import scala.jdk.CollectionConverters._
+    val cdc0 = CountingMockFs.stagingCdcCreates.get()
+    val renamed0 = CountingMockFs.renamed.size()
+    val c = counted(body)
+    (c, CountingMockFs.stagingCdcCreates.get() - cdc0,
+      CountingMockFs.renamed.asScala.toSeq.drop(renamed0))
+  }
+
+  /** The deletion vector is the one thing still staged: Spark's file
+    * committer renames its part file twice (task commit, job commit)
+    * and the vector's directory moves into `_dv/` once. Nothing else —
+    * no data file, no change-data sidecar — is renamed.
+    */
+  private def assertVectorRenamesOnly(moved: Seq[(String, String)]): Unit = {
+    assert(moved.forall(_._1.contains("/.staging-dv-")),
+      s"only the vector's staging may be renamed: ${moved.mkString("\n")}")
+    assert(moved.count(_._2.contains("/_dv/")) == 1, moved)
+    assert(moved.size == 3, moved)
+  }
+
+  private def newCdcFiles(t: String): Seq[CdcFile] = {
+    val log = new TxnLog(s"$warehouse/default/$t",
+      spark.sessionState.newHadoopConf())
+    log.read(log.latestVersion().get).collect { case c: CdcFile => c }
+  }
+
+  test("one SQL DV UPDATE on a change-feed table: only the " +
+      "vector is renamed, no change-data staging") {
+    dmlTable("u")
+    val (c, cdc, moved) = countedDml(spark.sql(
+      "UPDATE gcfc.default.u SET v = v + 1 WHERE k IN (4, 9)"))
+    info(s"UPDATE: $c")
+    assert(newCdcFiles("u").map(_.partitionValues("p")).sorted ==
+      Seq("0", "1"), "one sidecar per changed partition")
+    assertVectorRenamesOnly(moved)
+    assert(cdc == 0, "no .staging-cdc* path may be created")
+    assert(c.driverDataOpens == DmlDriverDataOpens, c)
+    assert(spark.sql("SELECT sum(v) FROM gcfc.default.u").head().getLong(0)
+      == (0 until 40).map(10L * _).sum + 2)
+  }
+
+  test("one SQL MERGE on a change-feed table: only the vector is " +
+      "renamed, no change-data staging") {
+    dmlTable("m")
+    spark.sql("SELECT * FROM VALUES (4L, 0, -4L), (9L, 1, -9L), " +
+      "(100L, 2, 1000L) AS s(k, p, v)").createOrReplaceTempView("cfc_src")
+    val (c, cdc, moved) = countedDml(spark.sql(
+      """MERGE INTO gcfc.default.m t USING cfc_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET t.v = s.v
+        |WHEN NOT MATCHED THEN INSERT (k, p, v) VALUES (s.k, s.p, s.v)
+        |""".stripMargin))
+    info(s"MERGE: $c")
+    assert(newCdcFiles("m").map(_.partitionValues("p")).sorted ==
+      Seq("0", "1", "2"), "one sidecar per changed partition")
+    assertVectorRenamesOnly(moved)
+    assert(cdc == 0, "no .staging-cdc* path may be created")
+    assert(c.driverDataOpens == DmlDriverDataOpens, c)
+    assert(spark.sql("SELECT count(*) FROM gcfc.default.m").head().getLong(0)
+      == 41L)
+  }
+
+  // the DML statements open no data file on the driver
+  private val DmlDriverDataOpens = 0
 }

@@ -32,8 +32,9 @@ class GraftStreamingWriteSpec extends AnyFunSuite {
   /** Stage rows through a real task writer, return its commit message. */
   private def stage(table: String, partitionColumns: Seq[String],
       epochId: Long, rows: Seq[(Long, String)]): GraftStreamCommitMessage = {
-    val w = new GraftStreamingDataWriter(table, schema, partitionColumns,
-      conf, partitionId = 0, taskId = 0L, epochId = epochId)
+    val w = new GraftStreamingDataWriter(
+      TaskFiles.prepare(table, schema, partitionColumns),
+      f"part-s$epochId%05d", partitionId = 0, taskId = 0L)
     rows.foreach { case (id, tag) =>
       w.write(InternalRow(id, UTF8String.fromString(tag)))
     }
@@ -129,5 +130,32 @@ class GraftStreamingWriteSpec extends AnyFunSuite {
       new GraftStreamingWrite(table, schema, Seq("id"), "q5")
     }
     assert(e.getMessage.contains("partition columns"))
+  }
+
+  test("decimal, struct, array and map payloads stream into a table and " +
+      "read back equal") {
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val payload = Seq("id", "CAST(id AS DECIMAL(12, 2)) / 4 AS d",
+      "named_struct('a', id, 'b', CAST(id AS STRING)) AS s",
+      "array(id, id + 1) AS arr", "map(CAST(id AS STRING), id * 2) AS m")
+    val table = java.nio.file.Files.createTempDirectory("gsw_wide").toString
+    TableWriter.write(spark, spark.range(0L, 2L).selectExpr(payload: _*), table)
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Long]
+    val q = mem.toDF().selectExpr("value AS id").selectExpr(payload: _*)
+      .writeStream.format("graft").option("tablePath", table)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("gsw_wide_ck").toString)
+      .start()
+    try {
+      mem.addData(2L, 3L, 4L)
+      q.processAllAvailable()
+      mem.addData(5L)
+      q.processAllAvailable()
+    } finally q.stop()
+    val expected = spark.range(0L, 6L).selectExpr(payload: _*)
+    assert(SnapshotReader.read(spark, table).orderBy("id").collect().toSeq ==
+      expected.orderBy("id").collect().toSeq)
   }
 }

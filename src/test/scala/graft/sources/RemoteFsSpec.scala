@@ -232,6 +232,7 @@ class CountingMockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   }
   override def rename(src: Path, dst: Path): Boolean = {
     CountingMockFs.renames.incrementAndGet()
+    CountingMockFs.renamed.add((src.toString, dst.toString))
     super.rename(src, dst)
   }
 }
@@ -249,9 +250,17 @@ object CountingMockFs {
   val taskCreates = new java.util.concurrent.atomic.AtomicInteger(0)
   val driverLogLists = new java.util.concurrent.atomic.AtomicInteger(0)
   val renames = new java.util.concurrent.atomic.AtomicInteger(0)
-  // files or directories created under a `.staging-*` directory
+  // every rename's (source, destination), in call order
+  val renamed = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+  // files or directories created under a `.staging-*` directory, and
+  // of those under a change-data `.staging-cdc*` one
   val stagingCreates = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[sources] def noteStaging(p: Path): Unit =
-    if (p.toString.split('/').exists(_.startsWith(".staging-")))
+  val stagingCdcCreates = new java.util.concurrent.atomic.AtomicInteger(0)
+  private[sources] def noteStaging(p: Path): Unit = {
+    val segments = p.toString.split('/')
+    if (segments.exists(_.startsWith(".staging-")))
       stagingCreates.incrementAndGet()
+    if (segments.exists(_.startsWith(".staging-cdc")))
+      stagingCdcCreates.incrementAndGet()
+  }
 }

@@ -486,8 +486,10 @@ class RowLevelSpec extends AnyFunSuite
       .find(f => new org.apache.hadoop.fs.Path(f.path).getName == targetName)
       .get
     val fileName = new org.apache.hadoop.fs.Path(target.path).getName
-    val w = new GraftDeltaDataWriter(path, dataSchema, Seq.empty,
-      write.stagingRel, spark.sessionState.newHadoopConf(), 0, 0L)
+    val w = write.createBatchWriterFactory(
+      new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
+        override def numPartitions(): Int = 1
+      }).createWriter(0, 0L)
     val id = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(
         s"$path/${target.path}"), 1L))

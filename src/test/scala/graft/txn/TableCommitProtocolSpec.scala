@@ -64,7 +64,7 @@ class TableCommitProtocolSpec extends AnyFunSuite {
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(table).getFileSystem(conf)
     val job = Job.getInstance(conf)
-    val driver = new TableCommitProtocol(table, 1L, "retry001")
+    val driver = new TableCommitProtocol(table, "part-00001", "retry001")
     driver.setupJob(job)
     val rows = (10L until 20L)
 
@@ -105,7 +105,7 @@ class TableCommitProtocolSpec extends AnyFunSuite {
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(table).getFileSystem(conf)
     val job = Job.getInstance(conf)
-    val driver = new TableCommitProtocol(table, 1L, "abort001")
+    val driver = new TableCommitProtocol(table, "part-00001", "abort001")
     driver.setupJob(job)
     val (ctx, task, file) = runAttempt(driver, job, 1, Seq(42L))
     driver.onTaskCommit(task.commitTask(ctx))
@@ -113,6 +113,59 @@ class TableCommitProtocolSpec extends AnyFunSuite {
     assert(!fs.exists(file))
     intercept[IllegalStateException](driver.addFiles(2000L, dataChange = true))
     assert(SnapshotReader.read(spark, table).count() == 10L)
+  }
+
+  test("the DSv2 task writer: the aborted attempt's files are gone, only " +
+      "the accepted attempt's AddFiles reach the commit, rows read once") {
+    import graft.sources.{GraftStreamCommitMessage, GraftStreamingWrite}
+    import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
+    import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
+    val table = freshTable()
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(table).getFileSystem(conf)
+    val sink = new GraftStreamingWrite(table, schema, Seq.empty, "retry-q")
+    val factory = sink.createStreamingWriterFactory(new PhysicalWriteInfo {
+      override def numPartitions(): Int = 1
+    })
+    def files(m: WriterCommitMessage) = m.asInstanceOf[GraftStreamCommitMessage]
+      .adds.map(a => new Path(TxnLog.dataPath(table, a.path)))
+    // attempt `taskId` of partition 0, on its own copy of the factory
+    def attempt(taskId: Long) = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(factory); out.close()
+      val w = new java.io.ObjectInputStream(
+        new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[StreamingDataWriterFactory]
+        .createWriter(0, taskId, 0L)
+      (10L until 20L).foreach(i => w.write(InternalRow(i)))
+      w
+    }
+
+    // attempt 1 fails after writing its file: Spark aborts the task
+    val failed = attempt(1L)
+    val failedFiles = new java.io.File(table).listFiles()
+      .filter(_.getName.endsWith(".1.parquet"))
+    assert(failedFiles.nonEmpty, "the attempt writes before it commits")
+    failed.abort()
+    failedFiles.foreach(f =>
+      assert(!f.exists(), s"an aborted attempt's file must be deleted: $f"))
+
+    // attempt 2 is accepted; a speculative attempt 3 also commits its
+    // task but loses the race, so its message never reaches the epoch
+    val accepted = attempt(2L).commit()
+    val losing = attempt(3L).commit()
+    assert((files(accepted) ++ files(losing)).distinct.size == 2,
+      "names must be attempt-unique")
+    sink.commit(0L, Array(accepted))
+
+    val live = new TxnLog(table, conf).snapshotLatest().files
+      .map(a => new Path(TxnLog.dataPath(table, a.path)))
+    assert(files(accepted).forall(live.contains))
+    assert(!files(losing).exists(live.contains))
+    assert(files(losing).forall(fs.exists), "the loser stays an orphan")
+    val ids = SnapshotReader.read(spark, table).collect().map(_.getLong(0))
+    assert(ids.sorted.toSeq == (0L until 20L))
   }
 
   test("a write through TableWriter stages nothing and names its files " +
