@@ -484,7 +484,7 @@ object GraftExtensions {
           val statRows =
             if (!allStats) None
             else Some(snap.files.map(_.stats.get.numRecords).sum -
-              deletedTotal(spark, path, snap))
+              graft.txn.DeletionVectors.deletedCount(spark, path, snap.files))
           Seq((snap.version, snap.files.size.toLong,
             snap.files.map(_.size).sum, statRows,
             snap.metadata.map(_.partitionColumns.mkString(",")).getOrElse(""),
@@ -496,17 +496,6 @@ object GraftExtensions {
               "min_reader_version")
             .queryExecution.logical
         }))
-
-  /** Dead rows across the whole snapshot (sidecar reads only). */
-  private def deletedTotal(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      snap: graft.txn.Snapshot): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, sum}
-    if (snap.files.forall(_.dv.isEmpty)) 0L
-    else graft.txn.DeletionVectors.deletedPerFile(spark, path, snap.files)
-      .agg(coalesce(sum("n_deleted"), lit(0L))).head().getLong(0)
-  }
 
   /** The graft_partitions frame: partition columns (string-typed, as
     * stored in the log; the hive null sentinel maps back to NULL) +
@@ -529,7 +518,11 @@ object GraftExtensions {
         org.apache.spark.sql.types.StructField("recs",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("has_stats",
-          org.apache.spark.sql.types.BooleanType, nullable = false)))
+          org.apache.spark.sql.types.BooleanType, nullable = false),
+        org.apache.spark.sql.types.StructField("n_deleted",
+          org.apache.spark.sql.types.LongType, nullable = false)))
+    // dead rows per file from the KB-scale vector sidecars
+    val masks = graft.txn.DeletionVectors.masks(spark, path, snap.files)
     val rows = snap.files.map { f =>
       org.apache.spark.sql.Row.fromSeq(
         pcols.map(c => f.partitionValues.get(c)
@@ -537,15 +530,12 @@ object GraftExtensions {
           new org.apache.hadoop.fs.Path(f.path).getName,
           f.size,
           f.stats.map(s => java.lang.Long.valueOf(s.numRecords)).orNull,
-          f.stats.isDefined))
+          f.stats.isDefined,
+          masks.count(f)))
     }
-    val files = spark.createDataFrame(
+    val withDel = spark.createDataFrame(
       new java.util.ArrayList(scala.jdk.CollectionConverters
         .SeqHasAsJava(rows).asJava), schema)
-    val withDel = files
-      .join(graft.txn.DeletionVectors.deletedPerFile(spark, path, snap.files),
-        Seq("file_name"), "left")
-      .na.fill(0L, Seq("n_deleted"))
     val grouped =
       if (pcols.isEmpty) withDel.groupBy()
       else withDel.groupBy(pcols.map(col): _*)

@@ -7,6 +7,7 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.metric.{CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -28,8 +29,9 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   *    column), also across byte-range splits, so deletion vectors,
   *    resume offsets and base+position row ids never depend on how a
   *    file was split;
-  *  - a deletion-vector bitmap drops dead rows, or keeps only the rows
-  *    that died at one version;
+  *  - a deletion-vector bitmap, shipped with the split, drops dead rows
+  *    (counted in the scan's `dvDroppedRows` metric), or keeps only the
+  *    rows that died at one version;
   *  - mid-file resume bounds `[skipRows, untilRow)` and a pushed limit;
   *  - each output column is a column as read, a per-file constant (hive
   *    partition value, CDC envelope, CDF trailer, file path), the row's
@@ -82,17 +84,14 @@ private[sources] final class FileRows private (
     val (start, end) = range
     val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(file),
       start, math.min(end, fileSize) - start, Array.empty, 0L, fileSize))
-    // dead positions of THIS file, one bitmap (bounded however wide)
-    lazy val dead: Roaring64Bitmap = dv.fold(new Roaring64Bitmap()) { d =>
-      graft.txn.DeletionVectors.deadPositions(d.dir, conf.value.value,
-        file.getName, keep = d.diedAt.fold((_: Long) => true)(v => _ == v))
-    }
-    val onlyDead = dv.exists(_.diedAt.isDefined)
+    val mask = dv.map(_.rows).orNull
+    val onlyDead = dv.exists(_.onlyDead)
 
     new PartitionReader[InternalRow] {
       private var row: InternalRow = _
       private var pos = -1L
       private var emitted = 0L
+      private var dropped = 0L
 
       override def next(): Boolean = {
         if (limit >= 0 && emitted >= limit) return false
@@ -101,14 +100,28 @@ private[sources] final class FileRows private (
           pos = row.getLong(posIdx)
           // positions ascend within a range: past the bound, nothing follows
           if (untilRow >= 0 && pos >= untilRow) return false
-          if (pos >= skipRows && (dv.isEmpty || dead.contains(pos) == onlyDead) &&
-              where.forall { case (i, want) => want == valueAt(i) }) {
-            emitted += 1
-            return true
+          if (pos >= skipRows) {
+            if (mask != null && mask.contains(pos) != onlyDead) {
+              if (!onlyDead) dropped += 1
+            } else if (where.forall { case (i, want) => want == valueAt(i) }) {
+              emitted += 1
+              return true
+            }
           }
         }
         false
       }
+
+      // a task reading several splits (key-grouped partitions) carries
+      // the count from reader to reader
+      override def initMetricsValues(metrics: Array[CustomTaskMetric]): Unit =
+        metrics.find(_.name == DvDroppedRows.Name).foreach(m => dropped = m.value)
+
+      override def currentMetricsValues(): Array[CustomTaskMetric] =
+        Array(new CustomTaskMetric {
+          override def name(): String = DvDroppedRows.Name
+          override def value(): Long = dropped
+        })
 
       private def valueAt(i: Int): Any =
         if (row.isNullAt(i)) null else row.get(i, types(i))
@@ -159,11 +172,12 @@ private[sources] object FileRows {
     */
   final case class RowId(i: Int, base: Option[Long]) extends Out
 
-  /** A file's deletion vector (sidecar directory `dir`): by default its
-    * dead rows are dropped; with `diedAt` only the rows that died at
-    * exactly that version are kept.
+  /** A file's deletion-vector mask, loaded where the partitions are
+    * planned ([[graft.txn.DeletionVectors.masks]]): by default the
+    * positions in `rows` are dropped; with `onlyDead` only they are kept
+    * (the rows that died at one version).
     */
-  final case class Dv(dir: String, diedAt: Option[Long] = None)
+  final case class Dv(rows: Roaring64Bitmap, onlyDead: Boolean = false)
 
   def apply(spark: SparkSession, readSchema: StructType,
       hadoopConf: Configuration): FileRows = {
@@ -204,4 +218,14 @@ private[sources] object FileRows {
       built.getOrElseUpdate(readSchema, FileRows(spark, readSchema, hadoopConf))
     }
   }
+}
+
+/** Rows a scan's deletion vectors dropped, summed over its readers. */
+final class DvDroppedRows extends CustomSumMetric {
+  override def name(): String = DvDroppedRows.Name
+  override def description(): String = "rows dropped by deletion vectors"
+}
+
+object DvDroppedRows {
+  val Name = "dvDroppedRows"
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.CustomMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
@@ -1249,6 +1250,18 @@ private[sources] class GraftBatchScan(
       spark.sessionState.newHadoopConf())
   }
 
+  /** The dead positions of the scanned files' deletion vectors, loaded
+    * once per scan where its partitions are planned: a re-plan after
+    * runtime filtering (which only narrows `kept`) reuses them, and a
+    * row-level write carries the affected files' kills from them.
+    */
+  private[sources] lazy val masks: DeletionVectors.Masks =
+    DeletionVectors.masks(org.apache.spark.sql.SparkSession.active,
+      resolved.tablePath, kept)
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new DvDroppedRows)
+
   override def planInputPartitions(): Array[InputPartition] = {
     // Same predicate as outputPartitioning(): when the scan reported
     // key grouping, every partition must carry its typed key (Spark
@@ -1267,12 +1280,12 @@ private[sources] class GraftBatchScan(
       val ranges: Seq[(Long, Long)] =
         if (limit >= 0) Seq(ParquetSplits.WholeFile)
         else ParquetSplits.ranges(f.size, maxSplit)
+      val dv = f.dv.map(p => FileRows.Dv(masks.dead(f.path, p)))
       ranges.map { case (rs, re) =>
         GraftBatchPartition(
           TxnLog.dataPath(resolved.tablePath, f.path),
           f.partitionValues,
-          dv = f.dv.map(d =>
-            FileRows.Dv(TxnLog.dataPath(resolved.tablePath, d))),
+          dv = dv,
           limit = limit,
           baseRowId = f.baseRowId,
           keyValues = spj.map(_.map(fd => GroupRows.castPartitionValue(
@@ -1289,7 +1302,7 @@ private[sources] class GraftBatchScan(
 }
 
 /** One byte range of a live data file of the bound snapshot; rows its
-  * deletion vector `dv` lists are skipped.
+  * deletion-vector mask `dv` (this file's bitmap only) lists are skipped.
   */
 private[sources] case class GraftBatchPartition(
     filePath: String,

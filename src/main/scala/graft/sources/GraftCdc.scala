@@ -253,8 +253,7 @@ private[sources] class GraftCdcMicroBatchStream(
         val rows = a.stats.map(_.numRecords).getOrElse(-1L)
         if (a.dv.isDefined)
           CdcFileEvent(a.path, a.partitionValues, "d", a.modificationTime,
-            dv = Some(FileRows.Dv(a.dv.get, diedAt = Some(v))),
-            size = a.size, rows = rows)
+            dv = a.dv, size = a.size, rows = rows)
         else CdcFileEvent(a.path, a.partitionValues, "c", a.modificationTime,
           size = a.size, rows = rows)
       case r: RemoveFile if r.dataChange && opts.keepPartition(r.partitionValues) &&
@@ -263,7 +262,7 @@ private[sources] class GraftCdcMicroBatchStream(
         val rows = pre.flatMap(_.stats).map(_.numRecords).getOrElse(-1L)
         pre.flatMap(_.dv) match {
           case Some(d) => CdcFileEvent(r.path, r.partitionValues, "r",
-            r.deletionTimestamp, dv = Some(FileRows.Dv(d)),
+            r.deletionTimestamp, dv = Some(d),
             size = pre.map(_.size).getOrElse(-1L), rows = rows)
           case None =>
             CdcFileEvent(r.path, r.partitionValues, "r", r.deletionTimestamp,
@@ -286,7 +285,7 @@ private[sources] class GraftCdcMicroBatchStream(
         val rows = f.stats.map(_.numRecords).getOrElse(-1L)
         f.dv match {
           case Some(d) => CdcFileEvent(f.path, f.partitionValues, "c",
-            f.modificationTime, dv = Some(FileRows.Dv(d)), size = f.size,
+            f.modificationTime, dv = Some(d), size = f.size,
             rows = rows)
           case None => CdcFileEvent(f.path, f.partitionValues, "c",
             f.modificationTime, size = f.size, rows = rows)
@@ -454,7 +453,6 @@ private[sources] class GraftCdcMicroBatchStream(
     val s = start.asInstanceOf[WrappedOffset].o
     val e = end.asInstanceOf[WrappedOffset].o
     val l = log
-    val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
     val latestMeta = latestMetadata(l)
     // Column mapping (RENAME COLUMN): the file reader resolves parquet
     // fields BY NAME, so it reads the PHYSICAL spelling of the payload;
@@ -469,17 +467,34 @@ private[sources] class GraftCdcMicroBatchStream(
     // every range reader emits only rows in its row groups ∩ [skip,
     // until), so the union across ranges is exactly the unsplit read and
     // offsets never learn about splitting.
+    // Deletion vectors: the batch's events are gathered first, so every
+    // vector directory they name is read once for the trigger, then each
+    // split ships its own file's mask.
     val maxSplit = sqlConf.filesMaxPartitionBytes
+    val pending = scala.collection.mutable.ArrayBuffer
+      .empty[Either[InputPartition, (CdcFileEvent, Long, Long, Long)]]
     def filePart(ev: CdcFileEvent, v: Long, skipRows: Long,
-        untilRow: Long): Unit =
-      ParquetSplits.ranges(ev.size, maxSplit).foreach { case (rs, re) =>
-        parts += CdcFilePartition(TxnLog.dataPath(opts.tablePath, ev.rel), ev.op,
-          CdcReader.partitionValueString(ev.pv), ev.pv, ev.ts, v,
-          skipRows, untilRow,
-          dv = ev.dv.map(d =>
-            d.copy(dir = TxnLog.dataPath(opts.tablePath, d.dir))),
-          rangeStart = rs, rangeEnd = re, size = ev.size)
+        untilRow: Long): Unit = pending += Right((ev, v, skipRows, untilRow))
+    def partitions(): Array[InputPartition] = {
+      val masks = masksOf(pending.collect {
+        case Right((ev, _, _, _)) if ev.dv.isDefined => (ev.rel, ev.dv.get)
+      }.toSet)
+      pending.toArray.flatMap {
+        case Left(meta) => Seq(meta)
+        case Right((ev, v, skipRows, untilRow)) =>
+          // a DV transition ('d') emits only the rows that died at v
+          val dv = ev.dv.map(p =>
+            if (ev.op == "d")
+              FileRows.Dv(masks.diedAt(ev.rel, p, v), onlyDead = true)
+            else FileRows.Dv(masks.dead(ev.rel, p)))
+          ParquetSplits.ranges(ev.size, maxSplit).map { case (rs, re) =>
+            CdcFilePartition(TxnLog.dataPath(opts.tablePath, ev.rel), ev.op,
+              CdcReader.partitionValueString(ev.pv), ev.pv, ev.ts, v,
+              skipRows, untilRow, dv = dv,
+              rangeStart = rs, rangeEnd = re, size = ev.size)
+          }
       }
+    }
 
     // Emit the events of one indexed segment (snapshot or a commit),
     // bounded below by the start position and above by the end position.
@@ -506,7 +521,7 @@ private[sources] class GraftCdcMicroBatchStream(
       val (endIdx, endRow) =
         if (e.phase == CdcOffset.FullCopy) (e.fileIndex, e.rowNum) else (-1L, -1L)
       emitRange(snapEvents, s.version, s.fileIndex, s.rowNum, endIdx, endRow)
-      if (e.phase == CdcOffset.FullCopy) return parts.toArray
+      if (e.phase == CdcOffset.FullCopy) return partitions()
     }
 
     // finish a partially-consumed incremental version first
@@ -516,7 +531,7 @@ private[sources] class GraftCdcMicroBatchStream(
         if (e.version == s.version && e.fileIndex >= 0) (e.fileIndex, e.rowNum)
         else (-1L, -1L)
       emitRange(events, s.version, s.fileIndex, s.rowNum, endIdx, endRow)
-      if (e.version == s.version) return parts.toArray
+      if (e.version == s.version) return partitions()
     }
 
     l.changes(s.version + 1).takeWhile(_._1 <= e.version).foreach { case (v, actions) =>
@@ -524,7 +539,7 @@ private[sources] class GraftCdcMicroBatchStream(
       // s.version here by construction, so a version split across
       // row-capped batches emits its 'm' row exactly once)
       actions.foreach {
-        case _: graft.txn.Metadata => parts += CdcMetaPartition(v)
+        case _: graft.txn.Metadata => pending += Left(CdcMetaPartition(v))
         case _ => ()
       }
       val events = fileEventsOf(l, v)
@@ -533,7 +548,19 @@ private[sources] class GraftCdcMicroBatchStream(
         else (-1L, -1L)
       emitRange(events, v, -1L, -1L, endIdx, endRow)
     }
-    parts.toArray
+    partitions()
+  }
+
+  // The masks of the last planned batch. Spark may plan one batch more
+  // than once, and a row-capped backfill plans the same snapshot files
+  // trigger after trigger: a batch whose vectors were all loaded reuses
+  // them (a committed vector never changes).
+  private var lastMasks =
+    (Set.empty[(String, String)], graft.txn.DeletionVectors.Masks.empty)
+  private def masksOf(files: Set[(String, String)]) = {
+    if (!files.subsetOf(lastMasks._1)) lastMasks = (files,
+      graft.txn.DeletionVectors.masks(hadoopConf, opts.tablePath, files))
+    lastMasks._2
   }
 
   // the reader of the last planned batch (Spark plans a batch's
@@ -557,16 +584,16 @@ private[sources] case class WrappedOffset(o: CdcOffset) extends Offset {
   override def json(): String = o.json
 }
 
-/** One planned file event, pre-partition. `dv` (sidecar dir relative
-  * to the table): a snapshot of a DV file emits rows NOT in the vector;
-  * a DV transition emits only the rows that died at its version.
+/** One planned file event, pre-partition. `dv` is the file's vector
+  * pointer: a snapshot of a DV file emits rows NOT in the vector; a DV
+  * transition (op 'd') emits only the rows that died at its version.
   */
 private[sources] case class CdcFileEvent(
     rel: String,
     pv: Map[String, String],
     op: String,
     ts: Long,
-    dv: Option[FileRows.Dv] = None,
+    dv: Option[String] = None,
     // logged file size (bytes) for byte-range split planning; -1 =
     // unknown (pre-size-retention removes) → plan the whole file
     size: Long = -1L,

@@ -42,8 +42,9 @@ import scala.jdk.CollectionConverters._
   *    basenames it wrote handles for, so the commit never re-reads or
   *    shuffles the handles to learn them;
   *  - the new vector folds the handles into bitmaps per partition and
-  *    copies the affected files' carried bitmap rows as they are — one
-  *    write job, no shuffle ([[DeletionVectors.stageVector]]);
+  *    carries the affected files' kills from the masks the scan loaded —
+  *    one write job, no shuffle, no second vector read
+  *    ([[DeletionVectors.stageVector]]);
   *  - update_preimage/delete rows join the handles back to a PLAIN scan
   *    of the affected files (the only re-read, proportional to AFFECTED
   *    files, not the table). No vector is applied there: the handles
@@ -242,7 +243,7 @@ private[sources] class GraftDeltaBatchWrite(
         val dvRel: Option[String] = handles.map(h =>
           DeletionVectors.stageVector(spark, tablePath, version,
             h.select(col("file_name"), col("row_index")),
-            carryFrom = affected))
+            carryFrom = affected, masks = scan.masks))
         val removes = affected.map(f =>
           RemoveFile(f.path, ts, f.partitionValues))
         val readds = affected.map(_.copy(
@@ -300,7 +301,7 @@ private[sources] class GraftDeltaBatchWrite(
       snap.metadata.map(_.partitionColumns).getOrElse(Seq.empty)
     val pre = handles.filter(_ => affected.nonEmpty).map { h =>
       DeletionVectors.readFiles(spark, tablePath, affected, declared,
-          withRowMeta = true, applyVectors = false)
+          withRowMeta = true, masks = Some(DeletionVectors.Masks.empty))
         .join(h, col("_fn") === col("file_name") &&
           col("_ri") === col("row_index"))
         .withColumn(ChangeDataFeed.TypeCol,

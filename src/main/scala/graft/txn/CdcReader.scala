@@ -104,8 +104,8 @@ object CdcReader {
         p.getFileSystem(hadoopConf).makeQualified(p).toString
       } else new org.apache.hadoop.fs.Path(tableQ, rel).toString
 
-    // (filePath, op, eventTs, version) for every whole-file event
-    val fileEvents = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long)]
+    // (file, op, eventTs, version) for every whole-file event
+    val fileEvents = scala.collection.mutable.ArrayBuffer.empty[(AddFile, String, Long, Long)]
     // snapshot-phase files whose rows need the DV filter applied
     val snapDv = scala.collection.mutable.ArrayBuffer.empty[AddFile]
     var snapVersion = startingVersion
@@ -128,7 +128,7 @@ object CdcReader {
       snapVersion = seedSnap.version
       seedSnap.files.filter(f => keep(f.partitionValues)).foreach { f =>
         if (f.dv.isDefined) snapDv += f
-        else fileEvents += ((qualify(f.path), "c", f.modificationTime, seedSnap.version))
+        else fileEvents += ((f, "c", f.modificationTime, seedSnap.version))
       }
     }
     var metaRows = Seq.empty[(String, Long, Long)] // (op,ts,version) for 'm'
@@ -157,7 +157,7 @@ object CdcReader {
         // dataChange=false (compaction/reorganization) is not a CDC event
         case a: AddFile if a.dataChange && keep(a.partitionValues) =>
           if (a.dv.isDefined) dvTransitions += ((a, v))
-          else fileEvents += ((qualify(a.path), "c", a.modificationTime, v))
+          else fileEvents += ((a, "c", a.modificationTime, v))
         case r: RemoveFile if r.dataChange && keep(r.partitionValues) &&
             !dvPaths.contains(r.path) =>
           dvByPath.get(r.path) match {
@@ -168,7 +168,8 @@ object CdcReader {
             case Some(d) => removeLive += ((AddFile(r.path, r.partitionValues,
               0L, 0L, dataChange = true, dv = Some(d)), r.deletionTimestamp, v))
             case None =>
-              fileEvents += ((qualify(r.path), "r", r.deletionTimestamp, v))
+              fileEvents += ((AddFile(r.path, r.partitionValues, 0L, 0L,
+                dataChange = true), "r", r.deletionTimestamp, v))
           }
         case m: Metadata if v > startingVersion =>
           metaRows ++= Seq(("m", 0L, v))
@@ -190,7 +191,10 @@ object CdcReader {
     // Read with the LOG's declared schema (latest Metadata action), not
     // whatever file Spark samples first — after a schema-change commit,
     // older files surface the added columns as nulls (Delta semantics).
-    val latestSnap = log.snapshotLatest()
+    // A read of the newest version (a backfill) replays the log once.
+    val latestSnap =
+      if (log.latestVersionFrom(seedSnap.version).contains(seedSnap.version)) seedSnap
+      else log.snapshotLatest()
     val declaredSchema = latestSnap.metadata
       .map(m => org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
@@ -225,116 +229,30 @@ object CdcReader {
       if (partCols.isEmpty) lit("")
       else concat_ws(",", partCols.sorted.map(c =>
         concat_ws("=", lit(c), col(c).cast("string"))): _*)
-    def normalize(p: String): String = p.replaceFirst("^file:/+", "/")
-    def readWithPath(paths: Seq[String]): DataFrame = {
-      def readGroup(group: Seq[String]): DataFrame = {
-        // basePath (hive partition inference) only fits all-local file
-        // sets; shallow-clone imports are external AND unpartitioned
-        val tq = tableQ.toString
-        val reader0 =
-          if (group.exists(p => !p.startsWith(tq))) spark.read
-          else spark.read.option("basePath", tablePath)
-        // scan under PHYSICAL names (column mapping), surface logical
-        val reader = declaredSchema.fold(reader0)(s =>
-          reader0.schema(ColumnMapping.physicalSchema(s, colMapping)))
-        ColumnMapping.toLogical(reader.parquet(group: _*), colMapping)
-          .withColumn("_cdc_path", // on the scan frame: _metadata does
-            // not resolve through a Union
-            regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
-      }
-      // partition evolution: a replay range can span spec changes, and
-      // hive inference rejects mixed directory depths — group paths by
-      // the hive keys their directories carry, one scan per layout
-      def layoutOf(p: String): Set[String] = p.split('/')
-        .filter(_.contains('=')).map(_.split("=", 2)(0)).toSet
-      paths.groupBy(layoutOf).toSeq
-        .sortBy(_._1.toSeq.sorted.mkString(",")) // deterministic plan
-        .map { case (_, group) => readGroup(group) }
-        .reduce(_ unionByName _)
+    // Every event is one envelope row joined to ONE scan of the files by
+    // path (a path with several events yields a row per event). An event
+    // with a mask keeps only the rows its bitmap picks: a DV-carrying
+    // file's live rows, or, for a DV transition ('d'), the rows that died
+    // at exactly its version — a file deleted from twice emits each row
+    // once, at the version that killed it.
+    val masks = DeletionVectors.masks(hadoopConf, tablePath,
+      (snapDv.toSeq ++ dvTransitions.map(_._1) ++ removeLive.map(_._1))
+        .map(f => f.path -> f.dv.get))
+    val picks = scala.collection.mutable.HashMap
+      .empty[Any, (org.roaringbitmap.longlong.Roaring64Bitmap, Boolean)]
+    def pick(f: AddFile, diedAt: Option[Long]): Int = {
+      val id = picks.size
+      picks(id) = diedAt.fold(masks.dead(f.path, f.dv.get) -> false)(v =>
+        masks.diedAt(f.path, f.dv.get, v) -> true)
+      id
     }
-    // project a (payload + handles) frame into the envelope shape
-    val handles = Set("_cdc_path", "_metadata", "op", "ts", "commit_version",
-      "_fn", "_ri", "_path")
-    def envelopeize(joined: DataFrame): DataFrame = {
-      val payloadCols = joined.columns.filterNot(handles.contains)
-      joined.select(
-        (Seq(col("op"), pvExpr.as("partition_value"), col("ts"),
-          col("commit_version")) ++ payloadCols.map(col)): _*)
-    }
-
-    // 1. whole-file events ('c' from plain adds/snapshot, 'r' from removes)
-    val wholeFrame =
-      if (fileEvents.isEmpty) None
-      else {
-        val envelope = fileEvents.toSeq
-          .toDF("_cdc_path", "op", "ts", "commit_version")
-          .withColumn("_cdc_path", regexp_replace(col("_cdc_path"), "^file:/+", "/"))
-        val data = readWithPath(fileEvents.map(_._1).distinct.toSeq)
-        Some(envelopeize(data.join(broadcast(envelope), "_cdc_path")))
-      }
-
-    // 2. snapshot-phase 'c' rows of DV-carrying files: live rows only
-    val snapDvFrame =
-      if (snapDv.isEmpty) None
-      else {
-        val filtered = DeletionVectors.readFiles(spark, tablePath,
-            snapDv.toSeq, declaredSchema, withRowMeta = true,
-            mapping = colMapping)
-          .withColumnRenamed("_path", "_cdc_path")
-        val env = snapDv.toSeq
-          .map(f => (normalize(qualify(f.path)), "c", f.modificationTime,
-            snapVersion))
-          .toDF("_cdc_path", "op", "ts", "commit_version")
-        Some(envelopeize(filtered.join(broadcast(env), "_cdc_path")))
-      }
-
-    // 3. op='d' rows for DV transitions: the rows whose deleted_at equals
-    // the transition's commit version, joined back to their payloads by
-    // (file_name, row_index). A file deleted from twice emits each row
-    // exactly once, at the version that killed it.
-    val dFrame =
-      if (dvTransitions.isEmpty) None
-      else {
-        val pairs = dvTransitions.toSeq
-          .map { case (a, v) =>
-            (new org.apache.hadoop.fs.Path(a.path).getName, a.dv.get, v,
-              a.modificationTime)
-          }
-          .toDF("_p_fn", "_p_dv", "_p_v", "_p_ts")
-        val dirs = dvTransitions.map(_._1.dv.get).distinct.toSeq
-        val dvr = DeletionVectors.readDvDirs(spark, tablePath, dirs)
-        val dead = dvr
-          .join(broadcast(pairs),
-            dvr("file_name") === pairs("_p_fn") &&
-              col("_dv_src") === col("_p_dv") &&
-              col("deleted_at") === col("_p_v"))
-          .select(col("file_name").as("_fn"), col("row_index").as("_ri"),
-            col("_p_v").as("commit_version"), col("_p_ts").as("ts"))
-        val data = readWithPath(
-            dvTransitions.map(t => qualify(t._1.path)).distinct.toSeq)
-          .withColumn("_fn", col("_metadata.file_name"))
-          .withColumn("_ri", col("_metadata.row_index"))
-        Some(envelopeize(
-          data.join(dead, Seq("_fn", "_ri")).withColumn("op", lit("d"))))
-      }
-
-    // 4. op='r' rows of removed DV-carrying files: live rows only (the
-    // dead ones already emitted 'd' at the version that killed them)
-    val rLiveFrame =
-      if (removeLive.isEmpty) None
-      else {
-        val filtered = DeletionVectors.readFiles(spark, tablePath,
-            removeLive.map(_._1).toSeq, declaredSchema, withRowMeta = true,
-            mapping = colMapping)
-          .withColumnRenamed("_path", "_cdc_path")
-        val env = removeLive.toSeq
-          .map { case (f, ts, v) => (normalize(qualify(f.path)), "r", ts, v) }
-          .toDF("_cdc_path", "op", "ts", "commit_version")
-        Some(envelopeize(filtered.join(broadcast(env), "_cdc_path")))
-      }
-
-    val frames = Seq(wholeFrame, snapDvFrame, dFrame, rLiveFrame).flatten
-    if (frames.isEmpty) {
+    val events: Seq[(AddFile, String, Long, Long, Int)] =
+      fileEvents.toSeq.map { case (f, op, ts, v) => (f, op, ts, v, -1) } ++
+        snapDv.map(f => (f, "c", f.modificationTime, snapVersion, pick(f, None))) ++
+        dvTransitions.map { case (a, v) =>
+          (a, "d", a.modificationTime, v, pick(a, Some(v))) } ++
+        removeLive.map { case (f, ts, v) => (f, "r", ts, v, pick(f, None)) }
+    if (events.isEmpty) {
       // Schema-change-only commit range: emit the op='m' control rows with
       // null payload columns (same shape the DSv2 source produces).
       val m = metaRows.toDF("op", "ts", "commit_version")
@@ -346,7 +264,24 @@ object CdcReader {
         (Seq(col("op"), col("partition_value"), col("ts"),
           col("commit_version")) ++ payloadFields.map(f => col(f.name))): _*)
     }
-    val result = frames.reduce(_.unionByName(_))
+    val env = events
+      .map { case (f, op, ts, v, m) =>
+        (qualify(f.path).replaceFirst("^file:/+", "/"), op, ts, v, m) }
+      .toDF("_cdc_path", "op", "ts", "commit_version", "_mask")
+    val joined = DeletionVectors.readFiles(spark, tablePath,
+        events.map(_._1).groupBy(_.path).values.map(_.head).toSeq,
+        declaredSchema, withRowMeta = true, mapping = colMapping,
+        masks = Some(DeletionVectors.Masks.empty))
+      .withColumnRenamed("_path", "_cdc_path")
+      .join(broadcast(env), "_cdc_path")
+    val kept =
+      if (picks.isEmpty) joined
+      else joined.filter(DeletionVectors.picked(spark, col("_mask"), col("_ri"),
+        picks.toMap))
+    val payloadCols = kept.columns.filterNot(Set("_cdc_path", "op", "ts",
+      "commit_version", "_mask", "_fn", "_ri").contains)
+    val result = kept.select((Seq(col("op"), pvExpr.as("partition_value"),
+      col("ts"), col("commit_version")) ++ payloadCols.map(col)): _*)
 
     if (metaRows.isEmpty) result
     else {

@@ -478,18 +478,12 @@ object ChangeDataFeed {
           // exactly as the doomed branch does — raw numRecords would
           // overcount inserts relative to the rows the feed serves
           val total = c.adds.map(_.stats.get.numRecords).sum
-          val dead =
-            if (c.adds.forall(_.dv.isEmpty)) 0L
-            else DeletionVectors.deletedPerFile(spark, tablePath, c.adds)
-              .agg(coalesce(sum(col("n_deleted")), lit(0L))).head().getLong(0)
+          val dead = DeletionVectors.deletedCount(spark, tablePath, c.adds)
           metaRows += ((c.version, c.ts, Insert, total - dead))
         }
         if (c.doomed.nonEmpty) {
           val total = c.doomed.map(_.stats.get.numRecords).sum
-          val dead =
-            if (c.doomed.forall(_.dv.isEmpty)) 0L
-            else DeletionVectors.deletedPerFile(spark, tablePath, c.doomed)
-              .agg(coalesce(sum(col("n_deleted")), lit(0L))).head().getLong(0)
+          val dead = DeletionVectors.deletedCount(spark, tablePath, c.doomed)
           metaRows += ((c.version, c.ts, Delete, total - dead))
         }
       }

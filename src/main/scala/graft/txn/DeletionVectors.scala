@@ -1,9 +1,20 @@
 package graft.txn
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter,
+  PrimitiveConverter, RecordMaterializer}
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.longlong.Roaring64Bitmap
+import scala.jdk.CollectionConverters._
 
 /** Deletion vectors: row-level DELETE that never rewrites a data file —
   * the delete records WHICH rows died (by file + row position) in a small
@@ -38,229 +49,186 @@ object DeletionVectors {
     * disjoint rows per (file_name, deleted_at) pair, each holding dead
     * positions as a serialized Roaring64Bitmap plus its cardinality —
     * a 10⁸-row delete is a few compressed-bitmap rows, not 10⁸ parquet
-    * rows, and readers hold ONE bitmap per file (bounded memory)
-    * instead of a hash set of boxed longs: [[deadPositions]] ORs a
-    * pair's rows, [[readDvDirs]] expands them and [[deletedPerFile]]
-    * sums their counts. Row-granular `deleted_at` survives exactly
-    * where the CDC needs it: per-version bitmaps, since a row's kill
-    * version keys the op='d' replay. LEGACY dirs (rounds 4–11:
-    * `(file_name, row_index, deleted_at)`, one row per dead row) read
-    * forever — format is detected per directory from a footer.
+    * rows. Row-granular `deleted_at` survives exactly where the CDC
+    * needs it: per-version bitmaps, since a row's kill version keys the
+    * op='d' replay. LEGACY dirs (rounds 4–11: `(file_name, row_index,
+    * deleted_at)`, one row per dead row) read forever — each part's own
+    * footer says which shape it holds.
+    *
+    * Every reader applies a vector the same way: [[masks]] reads each
+    * directory a read needs ONCE, on the driver (one LIST, each part
+    * file once, no Spark job), into one bitmap per (file, deleted_at)
+    * for the files the read touches; the DSv2 readers ship each split
+    * its own file's bitmap, the DataFrame reads ([[readFiles]]) filter
+    * `_metadata.row_index` against the broadcast per-file masks.
     */
-  private[graft] def serializeBitmap(
-      bm: org.roaringbitmap.longlong.Roaring64Bitmap): Array[Byte] = {
+  private[graft] def serializeBitmap(bm: Roaring64Bitmap): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     bm.serialize(new java.io.DataOutputStream(bos))
     bos.toByteArray
   }
 
-  private[graft] def deserializeBitmap(
-      bytes: Array[Byte]): org.roaringbitmap.longlong.Roaring64Bitmap = {
-    val bm = new org.roaringbitmap.longlong.Roaring64Bitmap()
+  private[graft] def deserializeBitmap(bytes: Array[Byte]): Roaring64Bitmap = {
+    val bm = new Roaring64Bitmap()
     bm.deserialize(new java.io.DataInputStream(
       new java.io.ByteArrayInputStream(bytes)))
     bm
   }
 
-  /** The spark schema of one vector dir, from ONE footer read where
-    * the plan is built — never a schema-inference job. Every part of a
-    * dir is written by one statement, so the first part speaks for all;
-    * a dir with no part reads as an empty bitmap vector.
+  /** The dead positions of the files one read needs: per (file name,
+    * vector pointer), a (kill version, bitmap) entry per bitmap row of
+    * the vector (a pair's rows are disjoint; a legacy dir's rows fold
+    * into one per version). A file is looked up by its logged path and
+    * the pointer its entry carries — relative (own deletes) or absolute
+    * (shallow-clone imports) — so a superseded directory is never read.
     */
-  private def dirSchema(
-      spark: SparkSession,
-      dir: Path,
-      conf: org.apache.hadoop.conf.Configuration): StructType = {
-    val fs = dir.getFileSystem(conf)
-    fs.listStatus(dir).find(_.getPath.getName.endsWith(".parquet")) match {
-      case None => BitmapSchema
-      case Some(st) =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, conf))
-        try new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(spark.sessionState.conf)
-          .convert(r.getFooter.getFileMetaData.getSchema)
-        finally r.close()
+  final class Masks private[DeletionVectors] (
+      vectors: Map[(String, String), Seq[(Long, Roaring64Bitmap)]]) {
+    private def of(path: String, pointer: String) =
+      vectors.getOrElse((new Path(path).getName, pointer), Nil)
+
+    private def union(bms: Seq[Roaring64Bitmap]): Roaring64Bitmap = {
+      val out = new Roaring64Bitmap()
+      bms.foreach(out.or)
+      out
     }
+
+    /** Positions of `path` dead at any version. */
+    def dead(path: String, pointer: String): Roaring64Bitmap =
+      union(of(path, pointer).map(_._2))
+
+    /** Positions of `path` that died at exactly `version`. */
+    def diedAt(path: String, pointer: String, version: Long): Roaring64Bitmap =
+      union(of(path, pointer).collect { case (`version`, bm) => bm })
+
+    /** Dead-row count of `f` (0 without a vector). */
+    def count(f: AddFile): Long =
+      f.dv.fold(0L)(of(f.path, _).map(_._2.getLongCardinality).sum)
+
+    /** `f`'s kills as vector rows `(file_name, deleted_at, n_rows,
+      * bitmap)`, one per entry.
+      */
+    def rows(f: AddFile): Seq[(String, Long, Long, Array[Byte])] =
+      f.dv.toSeq.flatMap(of(f.path, _).map { case (v, bm) =>
+        (new Path(f.path).getName, v, bm.getLongCardinality,
+          serializeBitmap(bm)) })
   }
 
-  private val BitmapSchema: StructType = StructType.fromDDL(
-    "file_name STRING, deleted_at BIGINT, n_rows BIGINT, bitmap BINARY")
+  object Masks {
+    /** No dead positions: a read through it keeps every row. */
+    val empty: Masks = new Masks(Map.empty)
+  }
 
-  /** One vector dir NORMALIZED to the bitmap shape `(file_name,
-    * deleted_at, n_rows, bitmap, row_index, _dv_src)` — legacy
-    * row-per-dead-row dirs surface n_rows=1 and a null bitmap with
-    * their row_index kept aside; `_dv_src` carries the EXACT pointer
-    * string the AddFile holds: pointers may be table-relative (own
-    * deletes) or absolute (shallow-clone-imported source vectors), and
-    * a clone can hold both a local `_dv/dv-N` and a source `/…/_dv/dv-N`
-    * whose suffixes collide — tagging by pointer, not by a path regexp,
-    * keys every validity join unambiguously. The format is detected per
-    * directory from its footer.
+  /** Load the masks of `files` (logged path, vector pointer): one LIST
+    * per directory, each part file read once on the driver, only the
+    * rows of the named files kept.
     */
-  private def readDvDir(
-      spark: SparkSession,
-      tablePath: String,
+  def masks(
       conf: org.apache.hadoop.conf.Configuration,
-      dir: String): DataFrame = {
-    val path = TxnLog.dataPath(tablePath, dir)
-    val schema = dirSchema(spark, new Path(path), conf)
-    val raw = spark.read.schema(schema).parquet(path)
-    val norm =
-      if (schema.fieldNames.contains("bitmap"))
-        raw.select(col("file_name"), col("deleted_at"), col("n_rows"),
-          col("bitmap"), lit(null).cast("long").as("row_index"))
-      else
-        raw.select(col("file_name"), col("deleted_at"),
-          lit(1L).as("n_rows"),
-          lit(null).cast("binary").as("bitmap"), col("row_index"))
-    norm.withColumn("_dv_src", lit(dir))
-  }
-
-  /** The VALID raw rows for `files`: each DV-carrying file's rows in the
-    * dir its CURRENT pointer names (rows for the same file in superseded
-    * dirs are ignored). A filter per dir on the names pointing at it —
-    * bounded by the file count, like the pointers themselves — so no
-    * join. None when no file carries a vector.
-    */
-  private def validRaw(
-      spark: SparkSession,
       tablePath: String,
-      files: Seq[AddFile]): Option[DataFrame] = {
-    val byDir = files.filter(_.dv.isDefined).groupBy(_.dv.get)
-    if (byDir.isEmpty) return None
-    val conf = spark.sessionState.newHadoopConf()
-    Some(byDir.toSeq.sortBy(_._1).map { case (dir, fs) =>
-      val names = fs.map(f => new Path(f.path).getName).distinct
-      readDvDir(spark, tablePath, conf, dir)
-        .filter(col("file_name").isin(names: _*))
-    }.reduce(_ unionByName _))
-  }
-
-  /** Normalized raw rows expanded to one row per dead position,
-    * `(file_name, row_index, deleted_at, _dv_src)` — bitmap rows unpack
-    * through a LAZY iterator (flatMap never materializes a whole dead
-    * set), so a wide vector streams.
-    */
-  private def expand(spark: SparkSession, raw: DataFrame): DataFrame = {
-    import spark.implicits._
-    val legacy = raw.filter(col("bitmap").isNull)
-      .select(col("file_name"), col("row_index"), col("deleted_at"),
-        col("_dv_src"))
-    val packed = raw.filter(col("bitmap").isNotNull)
-      .select(col("file_name"), col("deleted_at"), col("bitmap"),
-        col("_dv_src"))
-      .as[(String, Long, Array[Byte], String)]
-      .flatMap { case (f, d, b, src) =>
-        val it = deserializeBitmap(b).getLongIterator
-        new Iterator[(String, Long, Long, String)] {
-          override def hasNext: Boolean = it.hasNext
-          override def next(): (String, Long, Long, String) =
-            (f, it.next(), d, src)
-        }
-      }
-      .toDF("file_name", "row_index", "deleted_at", "_dv_src")
-    legacy.unionByName(packed)
-  }
-
-  /** The ROW-EXPANDED view `(file_name, row_index, deleted_at,
-    * _dv_src)` of the given vector dirs. The SHARED loader behind
-    * [[SnapshotReader.statsCount]] and the CDC DV-transition reader —
-    * pointer-resolution fixes land once.
-    */
-  private[graft] def readDvDirs(
-      spark: SparkSession,
-      tablePath: String,
-      dirs: Seq[String]): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    expand(spark,
-      dirs.map(readDvDir(spark, tablePath, conf, _)).reduce(_ unionByName _))
-  }
-
-  /** EXECUTOR-side sidecar fold (plain parquet-mr, no SparkSession):
-    * the dead positions of `fileName` across every part of `dvDirPath`,
-    * restricted to kill versions passing `keep`. Returns ONE
-    * Roaring64Bitmap — the streaming/batch readers' bounded-memory
-    * application path: a 10⁸-row vector folds as compressed bitmap ORs,
-    * never a hash set of boxed longs. Handles both encodings.
-    */
-  private[graft] def deadPositions(
-      dvDirPath: String,
-      conf: org.apache.hadoop.conf.Configuration,
-      fileName: String,
-      keep: Long => Boolean = _ => true)
-      : org.roaringbitmap.longlong.Roaring64Bitmap = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    val out = new org.roaringbitmap.longlong.Roaring64Bitmap()
-    val dir = new Path(dvDirPath)
-    val fs = dir.getFileSystem(conf)
-    fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
-      .foreach { st =>
-        val r = ParquetReader.builder(new GroupReadSupport(), st.getPath)
-          .withConf(conf).build()
-        try {
-          var g = r.read()
-          while (g != null) {
-            val t = g.getType
-            if (g.getString(t.getFieldIndex("file_name"), 0) == fileName &&
-                keep(g.getLong(t.getFieldIndex("deleted_at"), 0))) {
-              if (t.containsField("bitmap"))
-                out.or(deserializeBitmap(
-                  g.getBinary(t.getFieldIndex("bitmap"), 0).getBytes))
-              else out.addLong(g.getLong(t.getFieldIndex("row_index"), 0))
+      files: Iterable[(String, String)]): Masks = {
+    import scala.collection.mutable
+    val out = mutable.HashMap.empty[(String, String),
+      mutable.ArrayBuffer[(Long, Roaring64Bitmap)]]
+    val legacy = mutable.HashMap.empty[((String, String), Long), Roaring64Bitmap]
+    files.groupBy(_._2).toSeq.sortBy(_._1).foreach { case (pointer, fs) =>
+      val names = fs.map(f => new Path(f._1).getName).toSet
+      val dir = new Path(TxnLog.dataPath(tablePath, pointer))
+      dir.getFileSystem(conf).listStatus(dir)
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .foreach { st =>
+          val r = org.apache.parquet.hadoop.ParquetReader
+            .builder(new VectorRows, st.getPath).withConf(conf).build()
+          try {
+            var row = r.read()
+            while (row != null) {
+              val file = (row.name, pointer)
+              def add(bm: Roaring64Bitmap): Roaring64Bitmap = {
+                out.getOrElseUpdate(file, mutable.ArrayBuffer.empty) +=
+                  (row.deletedAt -> bm)
+                bm
+              }
+              if (!names.contains(row.name)) ()
+              else if (row.bitmap != null) add(deserializeBitmap(row.bitmap))
+              else legacy.getOrElseUpdate((file, row.deletedAt),
+                add(new Roaring64Bitmap())).addLong(row.rowIndex)
+              row = r.read()
             }
-            g = r.read()
-          }
-        } finally r.close()
+          } finally r.close()
+        }
+    }
+    new Masks(out.map { case (file, bms) => file -> bms.toSeq }.toMap)
+  }
+
+  /** The masks of the vector-carrying files among `files`. */
+  def masks(spark: SparkSession, tablePath: String, files: Seq[AddFile]): Masks = {
+    val refs = files.flatMap(f => f.dv.map(f.path -> _))
+    if (refs.isEmpty) Masks.empty
+    else masks(spark.sessionState.newHadoopConf(), tablePath, refs)
+  }
+
+  /** Reads a vector part of either encoding, one row at a time, into
+    * its own fields: `bitmap` stays null for a legacy row, which names
+    * its one dead position in `rowIndex`; `n_rows` is skipped (a bitmap
+    * knows its cardinality).
+    */
+  private final class VectorRows extends ReadSupport[VectorRows] {
+    var name: String = _
+    var deletedAt = 0L
+    var bitmap: Array[Byte] = _
+    var rowIndex = 0L
+
+    override def init(ctx: InitContext): ReadSupport.ReadContext =
+      new ReadSupport.ReadContext(ctx.getFileSchema)
+
+    override def prepareForRead(conf: org.apache.hadoop.conf.Configuration,
+        meta: java.util.Map[String, String], schema: MessageType,
+        ctx: ReadSupport.ReadContext): RecordMaterializer[VectorRows] = {
+      def binary(set: Binary => Unit): Converter = new PrimitiveConverter {
+        override def addBinary(v: Binary): Unit = set(v) }
+      def long(set: Long => Unit): Converter = new PrimitiveConverter {
+        override def addLong(v: Long): Unit = set(v) }
+      val fields = schema.getFields.asScala.map(_.getName match {
+        case "file_name" => binary(v => name = v.toStringUsingUTF8)
+        case "deleted_at" => long(deletedAt = _)
+        case "bitmap" => binary(v => bitmap = v.getBytes)
+        case "row_index" => long(rowIndex = _)
+        case _ => long(_ => ())
+      }).toArray
+      val root = new GroupConverter {
+        override def getConverter(i: Int): Converter = fields(i)
+        override def start(): Unit = bitmap = null
+        override def end(): Unit = ()
       }
-    out
+      new RecordMaterializer[VectorRows] {
+        override def getCurrentRecord: VectorRows = VectorRows.this
+        override def getRootConverter: GroupConverter = root
+      }
+    }
   }
 
   private def declaredSchema(snap: Snapshot): Option[StructType] =
     snap.metadata.map(m =>
       DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
 
-  /** The valid DV rows for `files` — (file_name, row_index, deleted_at),
-    * honoring each file's CURRENT pointer. None when no file carries a
-    * DV.
+  /** Dead rows across `files`. Metadata-sized work: only the KB-scale
+    * sidecars are read, never the data files — what keeps SHOW
+    * PARTITIONS-style row counts exact on a DV table without a scan.
     */
-  private def dvRows(
-      spark: SparkSession,
-      tablePath: String,
-      files: Seq[AddFile]): Option[DataFrame] =
-    validRaw(spark, tablePath, files).map(raw => expand(spark, raw)
-      .select(col("file_name").as("_dv_fn"), col("row_index").as("_dv_ri"),
-        col("deleted_at")))
-
-  /** Dead-row count per DV-carrying file of `files` — `(file_name,
-    * n_deleted)`, empty when no file carries a vector. Metadata-sized
-    * work: only the KB-scale sidecars are read, never the data files —
-    * this is what lets SHOW PARTITIONS-style row counts stay exact on a
-    * DV table without scanning it.
-    */
-  def deletedPerFile(
-      spark: SparkSession,
-      tablePath: String,
-      files: Seq[AddFile]): DataFrame = {
-    import spark.implicits._
-    // counts come straight from the sidecars' n_rows (bitmap rows carry
-    // their cardinality; legacy rows normalize to 1; a pair's disjoint
-    // rows add up) — a wide vector is never expanded just to be counted
-    validRaw(spark, tablePath, files) match {
-      case None => Seq.empty[(String, Long)].toDF("file_name", "n_deleted")
-      case Some(raw) => raw.groupBy(col("file_name"))
-        .agg(sum(col("n_rows")).as("n_deleted"))
-    }
+  def deletedCount(spark: SparkSession, tablePath: String,
+      files: Seq[AddFile]): Long = {
+    val m = masks(spark, tablePath, files)
+    files.map(m.count).sum
   }
 
   /** Read `files` of the table with deletion vectors applied. With
     * `withRowMeta`, the result keeps `_fn` (file name), `_ri` (row
     * index) and `_path` (normalized full path) columns — the handles the
-    * delete/CDC machinery joins on. `applyVectors = false` reads every
-    * row of the files, dead or not: for a caller whose row handles
-    * already name only live rows.
+    * delete/CDC machinery joins on. `masks` are the dead positions to
+    * drop, loaded here when None: a statement that reads the same files
+    * more than once loads them once and passes them. `Masks.empty`
+    * reads every row of the files, dead or not: for a caller whose row
+    * handles already name only live rows.
     */
   def readFiles(
       spark: SparkSession,
@@ -269,7 +237,7 @@ object DeletionVectors {
       schema: Option[StructType],
       withRowMeta: Boolean = false,
       mapping: Map[String, String] = Map.empty,
-      applyVectors: Boolean = true): DataFrame = {
+      masks: Option[Masks] = None): DataFrame = {
     require(files.nonEmpty, "readFiles needs at least one file")
     // Partition evolution: files written under DIFFERENT partition specs
     // (setPartitioning changes the layout of future writes only) cannot
@@ -301,7 +269,7 @@ object DeletionVectors {
     def logical(df: DataFrame): DataFrame = ColumnMapping.toLogical(df, mapping)
     // `_metadata` resolves only against a scan relation, never through a
     // Union — so the per-group transform (logical rename + row-meta
-    // columns) applies BEFORE generations merge.
+    // columns + the mask) applies BEFORE generations merge.
     def scan(perGroup: DataFrame => DataFrame): DataFrame = files
       .groupBy(f => (f.partitionValues.keySet, rootOf(f))).toSeq
       .sortBy { case ((ks, root), _) =>
@@ -309,27 +277,71 @@ object DeletionVectors {
       .map { case ((_, root), group) =>
         perGroup(logical(scanOne(group, root))) }
       .reduce(_ unionByName _)
+    val loaded = masks.getOrElse(this.masks(spark, tablePath, files))
+    val dead = files.flatMap(f => f.dv.map(p =>
+      new Path(f.path).getName -> loaded.dead(f.path, p)))
+      .filterNot(_._2.isEmpty).toMap
     // DV-free fast path: a plain vectorized scan with zero added columns
     // (the common case must not pay for the feature)
-    if (!withRowMeta && (!applyVectors || files.forall(_.dv.isEmpty)))
-      return scan(identity)
-    val raw = scan(df => df
-      .withColumn("_fn", col("_metadata.file_name"))
-      .withColumn("_ri", col("_metadata.row_index"))
-      .withColumn("_path",
-        regexp_replace(col("_metadata.file_path"), "^file:/+", "/")))
-    val vectors =
-      if (applyVectors) dvRows(spark, tablePath, files) else None
-    val live = vectors match {
-      case None => raw
-      case Some(dv) =>
-        // dead rows are a sliver of the table; the join keys are the
-        // (name, index) pair, so only row handles shuffle — and with a
-        // small vector the anti-join broadcasts
-        raw.join(dv.select(col("_dv_fn").as("_fn"), col("_dv_ri").as("_ri")),
-          Seq("_fn", "_ri"), "left_anti")
+    if (!withRowMeta && dead.isEmpty) return scan(identity)
+    lazy val live = picked(spark, col("_metadata.file_name"),
+      col("_metadata.row_index"), dead.map { case (n, bm) =>
+        (UTF8String.fromString(n): Any) -> (bm -> false) })
+    scan { df =>
+      val kept = if (dead.isEmpty) df else df.filter(live)
+      if (!withRowMeta) kept
+      else kept
+        .withColumn("_fn", col("_metadata.file_name"))
+        .withColumn("_ri", col("_metadata.row_index"))
+        .withColumn("_path",
+          regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
     }
-    if (withRowMeta) live else live.drop("_fn", "_ri", "_path")
+  }
+
+  /** A filter on rows whose mask, the one `masks` holds under the row's
+    * `key`, picks position `pos`: `(bitmap, false)` keeps the positions
+    * the bitmap does not name (a file's live rows), `(bitmap, true)` only
+    * the ones it names; a key without a mask keeps the row. The masks are
+    * broadcast once per filter.
+    */
+  private[graft] def picked(spark: SparkSession, key: Column, pos: Column,
+      masks: Map[Any, (Roaring64Bitmap, Boolean)]): Column =
+    ColumnBridge.column(Picked(ColumnBridge.expression(key),
+      ColumnBridge.expression(pos), spark.sparkContext.broadcast(masks)))
+
+  /** [[picked]]'s expression. A scan reads a file's rows together, so
+    * the last key's mask is kept: per row, one key compare and one
+    * bitmap probe, called straight from the generated code (which is why
+    * the class is not private).
+    */
+  private[txn] case class Picked(key: Expression, pos: Expression,
+      masks: Broadcast[Map[Any, (Roaring64Bitmap, Boolean)]])
+      extends BinaryExpression {
+    override def left: Expression = key
+    override def right: Expression = pos
+    override def dataType: DataType = BooleanType
+    @transient private var last: (Any, (Roaring64Bitmap, Boolean)) = _
+
+    def keep(k: Any, p: Long): Boolean = {
+      if (last == null || last._1 != k) {
+        val own = k match { case s: UTF8String => s.clone(); case other => other }
+        last = (own, masks.value.getOrElse(own, null))
+      }
+      last._2 == null || last._2._1.contains(p) == last._2._2
+    }
+
+    override def nullSafeEval(k: Any, p: Any): Any = keep(k, p.asInstanceOf[Long])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val self = ctx.addReferenceObj("picked", this)
+      defineCodeGen(ctx, ev, (k, p) =>
+        if (key.dataType == IntegerType)
+          s"$self.keep((Object) Integer.valueOf($k), $p)"
+        else s"$self.keep((Object) $k, $p)")
+    }
+
+    override protected def withNewChildrenInternal(
+        l: Expression, r: Expression): Expression = copy(key = l, pos = r)
   }
 
   /** Snapshot read with DVs applied (the [[SnapshotReader]] back end). */
@@ -337,9 +349,10 @@ object DeletionVectors {
       spark: SparkSession,
       tablePath: String,
       snap: Snapshot,
-      withRowMeta: Boolean = false): DataFrame =
+      withRowMeta: Boolean = false,
+      masks: Option[Masks] = None): DataFrame =
     readFiles(spark, tablePath, snap.files, declaredSchema(snap), withRowMeta,
-      snap.metadata.map(_.columnMapping).getOrElse(Map.empty))
+      snap.metadata.map(_.columnMapping).getOrElse(Map.empty), masks)
 
   /** Row-level DELETE WHERE via deletion vectors: no data file is
     * rewritten — matched row positions are written to a new DV directory
@@ -382,8 +395,9 @@ object DeletionVectors {
     * renamed into place) and return the table-relative pointer the
     * re-committed AddFiles must carry. The vector holds `dead` — this
     * statement's kills, `(file_name, row_index)` — plus the valid kills
-    * of `carryFrom` under their current pointers, each keeping its
-    * original deleted_at (pointers replace, never chain). The caller
+    * of `carryFrom` under their current pointers (from `masks`, which
+    * must cover them), each keeping its original deleted_at (pointers
+    * replace, never chain). The caller
     * folds the pointer into its OWN commit; an uncommitted directory is
     * invisible (vacuum's stale-staging sweep reclaims crashed
     * leftovers).
@@ -392,8 +406,8 @@ object DeletionVectors {
     * bitmap per (file, deleted_at) and writes them as bitmap rows;
     * carried bitmap rows are copied as they are, never expanded. So a
     * pair may span several rows — disjoint, since a position dies once
-    * — which every reader ORs, expands or sums. One task writes the
-    * vector, so it lands in one part file.
+    * — which [[masks]] ORs. One task writes the vector, so it lands in
+    * one part file.
     *
     * The directory name carries an ATTEMPT-UNIQUE suffix: two writers
     * racing on the same target version would otherwise stage and
@@ -407,7 +421,8 @@ object DeletionVectors {
       tablePath: String,
       version: Long,
       dead: DataFrame,
-      carryFrom: Seq[AddFile]): String = {
+      carryFrom: Seq[AddFile],
+      masks: Masks): String = {
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
     val attempt = java.util.UUID.randomUUID().toString.take(8)
@@ -419,19 +434,21 @@ object DeletionVectors {
       lit(version).as("deleted_at"), lit(null).cast("long").as("n_rows"),
       lit(null).cast("binary").as("bitmap"),
       col("row_index").cast("long"))
-    val rows = validRaw(spark, tablePath, carryFrom)
-      .fold(fresh)(c => fresh.unionByName(c.drop("_dv_src")))
+    val carried = carryFrom.flatMap(masks.rows)
+    val rows =
+      if (carried.isEmpty) fresh
+      else fresh.unionByName(carried.toDF("file_name", "deleted_at",
+        "n_rows", "bitmap").withColumn("row_index", lit(null).cast("long")))
     val packed = rows.mapPartitions { it =>
       val open = scala.collection.mutable.LinkedHashMap
-        .empty[(String, Long), org.roaringbitmap.longlong.Roaring64Bitmap]
+        .empty[(String, Long), Roaring64Bitmap]
       val copied = it.flatMap { r =>
         if (!r.isNullAt(3))
           Iterator.single((r.getString(0), r.getLong(1), r.getLong(2),
             r.getAs[Array[Byte]](3)))
         else {
           open.getOrElseUpdate((r.getString(0), r.getLong(1)),
-            new org.roaringbitmap.longlong.Roaring64Bitmap())
-            .addLong(r.getLong(4))
+            new Roaring64Bitmap()).addLong(r.getLong(4))
           Iterator.empty
         }
       }
@@ -485,8 +502,10 @@ object DeletionVectors {
     // every consumer can derive from: row handles in the common case,
     // full rows only when the feed needs them.
     val cdfOn = ChangeDataFeed.enabled(snap)
+    // loaded once: the marking scan drops them, the new vector carries them
+    val loaded = masks(spark, tablePath, snap.files)
     val markedRaw = mark(readSnapshot(spark, tablePath, snap,
-      withRowMeta = true))
+      withRowMeta = true, masks = Some(loaded)))
     val cached = (if (cdfOn) markedRaw
       else markedRaw.select(col("_fn"), col("_ri"))).persist()
     try {
@@ -499,7 +518,7 @@ object DeletionVectors {
       .filter(f => affectedNames.contains(new Path(f.path).getName))
     val rel = stageVector(spark, tablePath, version,
       cached.select(col("_fn").as("file_name"), col("_ri").as("row_index")),
-      carryFrom = affected)
+      carryFrom = affected, masks = loaded)
 
     val removes = affected.map(f =>
       RemoveFile(f.path, commitTs, f.partitionValues))

@@ -61,39 +61,23 @@ object SnapshotReader {
       spark: SparkSession,
       tablePath: String,
       versionAsOf: Option[Long] = None): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
+    import org.apache.spark.sql.functions.{col, sum}
     val log = new TxnLog(tablePath, spark.sessionState.newHadoopConf())
     val version = versionAsOf.getOrElse(log.latestVersion().getOrElse(
       throw new IllegalArgumentException(s"empty table at $tablePath")))
     val snap = log.snapshot(version)
     val partCols = snap.metadata.map(_.partitionColumns).getOrElse(Seq.empty)
+    // dead rows per file from the (small) vector sidecars, each read once
+    val masks = DeletionVectors.masks(spark, tablePath, snap.files)
     import spark.implicits._
-    val perFile = snap.files.map { f =>
+    val grouped = snap.files.map { f =>
       val n = f.stats.map(_.numRecords).getOrElse(
         throw new IllegalStateException(
           s"no stats for ${f.path} at $tablePath — metadata count unsound"))
-      (new org.apache.hadoop.fs.Path(f.path).getName,
-        partCols.map(c => f.partitionValues.get(c).orNull), n, f.dv)
-    }.toDF("_fn", "_pv", "_n", "_dv")
-    // dead rows per file from the (small) DV sidecars — only when DVs
-    // exist at all
-    val dvDirs = snap.files.flatMap(_.dv).distinct
-    val withDead =
-      if (dvDirs.isEmpty) perFile.withColumn("_dead", lit(0L))
-      else {
-        val dead = DeletionVectors.readDvDirs(spark, tablePath, dvDirs)
-          .groupBy(col("file_name").as("_fn"), col("_dv_src"))
-          .count().withColumnRenamed("count", "_dead")
-        // honor each file's CURRENT pointer (superseded dirs ignored)
-        perFile.join(dead,
-            perFile("_fn") === dead("_fn") && perFile("_dv") === dead("_dv_src"),
-            "left")
-          .select(perFile("_fn"), col("_pv"), col("_n"),
-            coalesce(col("_dead"), lit(0L)).as("_dead"))
-      }
-    val grouped = withDead
+      (partCols.map(c => f.partitionValues.get(c).orNull), n - masks.count(f))
+    }.toDF("_pv", "_live")
       .select((partCols.zipWithIndex.map { case (c, i) =>
-        col("_pv").getItem(i).as(c) } :+ (col("_n") - col("_dead")).as("_live")): _*)
+        col("_pv").getItem(i).as(c) } :+ col("_live")): _*)
     if (partCols.isEmpty) grouped.agg(sum(col("_live")).as("n"))
     else grouped.groupBy(partCols.map(col): _*)
       .agg(sum(col("_live")).as("n"))

@@ -1656,14 +1656,15 @@ object TableWriter extends Serializable {
     }
     val byRel = snap.files.map(f => new Path(tableQ, f.path).toString
       .replaceFirst("^file:/+", "/") -> f).toMap
+    val masks = Some(DeletionVectors.masks(spark, tablePath, snap.files))
     val target = DeletionVectors
-      .readSnapshot(spark, tablePath, snap, withRowMeta = true)
+      .readSnapshot(spark, tablePath, snap, withRowMeta = true, masks)
       .withColumnRenamed("_path", "_file")
     val affected = DeletionVectors.distinctValues(target.filter(pred), "_file")
       .toSeq.sorted.flatMap(byRel.get).toIndexedSeq
     val combined =
       if (affected.isEmpty) aligned
-      else readDeclared(spark, tablePath, snap, affected)
+      else readDeclared(spark, tablePath, snap, affected, masks)
         .filter(!(pred <=> lit(true)))
         .unionByName(aligned)
     // Change data feed (Delta writes CDF for replaceWhere too): a slice
@@ -1676,7 +1677,7 @@ object TableWriter extends Serializable {
         import ChangeDataFeed.{TypeCol, Insert, Delete}
         val dead =
           if (affected.isEmpty) None
-          else Some(readDeclared(spark, tablePath, snap, affected)
+          else Some(readDeclared(spark, tablePath, snap, affected, masks)
             .filter(pred <=> lit(true))
             .withColumn(TypeCol, lit(Delete)))
         val ins = aligned.withColumn(TypeCol, lit(Insert))
@@ -1889,8 +1890,9 @@ object TableWriter extends Serializable {
     }
     // reads go through the DV filter — an upsert against a DV table must
     // not resurrect (or re-match) already-deleted rows
+    val masks = Some(DeletionVectors.masks(spark, tablePath, snap.files))
     val target = DeletionVectors
-      .readSnapshot(spark, tablePath, snap, withRowMeta = true)
+      .readSnapshot(spark, tablePath, snap, withRowMeta = true, masks)
       .withColumnRenamed("_path", "_file")
     val srcKeys = source.select(keyCols.map(col): _*).distinct()
     val affectedPaths = DeletionVectors.distinctValues( // bounded by |files|
@@ -1899,7 +1901,7 @@ object TableWriter extends Serializable {
 
     val survivors =
       if (affected.isEmpty) source
-      else readDeclared(spark, tablePath, snap, affected.toIndexedSeq)
+      else readDeclared(spark, tablePath, snap, affected.toIndexedSeq, masks)
         .join(srcKeys, keyCols, "left_anti")
         // with evolution, survivors lack the source-only columns — they
         // fill as null, same as every untouched file will read
@@ -1924,7 +1926,7 @@ object TableWriter extends Serializable {
           if (affected.isEmpty) source.withColumn(TypeCol, lit(Insert))
           else {
             val pre = readDeclared(spark, tablePath, snap,
-                affected.toIndexedSeq)
+                affected.toIndexedSeq, masks)
               .join(srcKeys, keyCols, "left_semi")
             val matchedKeys = pre.select(keyCols.map(col): _*).distinct()
             val post = source.join(matchedKeys, keyCols, "left_semi")
@@ -1994,8 +1996,9 @@ object TableWriter extends Serializable {
     require(outOfScope == 0L,
       s"mergeFullSync: $outOfScope source rows fall outside the sync " +
         s"scope at $tablePath — the scope predicate must cover the source")
+    val masks = Some(DeletionVectors.masks(spark, tablePath, snap.files))
     val target = DeletionVectors
-      .readSnapshot(spark, tablePath, snap, withRowMeta = true)
+      .readSnapshot(spark, tablePath, snap, withRowMeta = true, masks)
       .withColumnRenamed("_path", "_file")
     val affected = DeletionVectors.distinctValues(target.filter(scope), "_file")
       .toSeq.sorted.flatMap(byRel.get)
@@ -2008,7 +2011,7 @@ object TableWriter extends Serializable {
     // depend on file layout
     val survivors =
       if (affected.isEmpty) source
-      else readDeclared(spark, tablePath, snap, affected.toIndexedSeq)
+      else readDeclared(spark, tablePath, snap, affected.toIndexedSeq, masks)
         .filter(!(scope <=> lit(true)))
         .unionByName(source)
     enforceConstraints(source,
@@ -2024,7 +2027,7 @@ object TableWriter extends Serializable {
         import ChangeDataFeed.{TypeCol, Insert, Delete}
         val dead =
           if (affected.isEmpty) None
-          else Some(readDeclared(spark, tablePath, snap, affected.toIndexedSeq)
+          else Some(readDeclared(spark, tablePath, snap, affected.toIndexedSeq, masks)
             .filter(scope <=> lit(true))
             .withColumn(TypeCol, lit(Delete)))
         val ins = source.withColumn(TypeCol, lit(Insert))
@@ -2063,8 +2066,10 @@ object TableWriter extends Serializable {
     }
     val byRel = snap.files.map(f => new Path(tableQ, f.path).toString
       .replaceFirst("^file:/+", "/") -> f).toMap
+    // the vectors' masks load once for every read of the statement
+    val masks = Some(DeletionVectors.masks(spark, tablePath, snap.files))
     val target = DeletionVectors
-      .readSnapshot(spark, tablePath, snap, withRowMeta = true)
+      .readSnapshot(spark, tablePath, snap, withRowMeta = true, masks)
       .withColumnRenamed("_path", "_file")
     val affected = DeletionVectors.distinctValues(target.filter(pred), "_file")
       .toSeq.sorted.flatMap(byRel.get)
@@ -2075,7 +2080,7 @@ object TableWriter extends Serializable {
     // SQL DELETE deletes rows where pred IS TRUE; a row whose predicate
     // evaluates NULL (e.g. `x > 5` with null x) survives. `!pred` alone
     // would map NULL → NULL and silently drop those rows at rewrite.
-    val base = readDeclared(spark, tablePath, snap, affected.toIndexedSeq)
+    val base = readDeclared(spark, tablePath, snap, affected.toIndexedSeq, masks)
     val survivors = base
       .filter(!(pred <=> org.apache.spark.sql.functions.lit(true)))
     // Change data feed: the exact deleted rows (pred IS TRUE — the same
@@ -2132,8 +2137,9 @@ object TableWriter extends Serializable {
     }
     val byRel = snap.files.map(f => new Path(tableQ, f.path).toString
       .replaceFirst("^file:/+", "/") -> f).toMap
+    val masks = Some(DeletionVectors.masks(spark, tablePath, snap.files))
     val target = DeletionVectors
-      .readSnapshot(spark, tablePath, snap, withRowMeta = true)
+      .readSnapshot(spark, tablePath, snap, withRowMeta = true, masks)
       .withColumnRenamed("_path", "_file")
     val affected = DeletionVectors.distinctValues(target.filter(pred), "_file")
       .toSeq.sorted.flatMap(byRel.get)
@@ -2143,7 +2149,7 @@ object TableWriter extends Serializable {
     }
     // SQL UPDATE semantics: every SET expression AND the predicate see
     // the OLD row — stage all new values first, swap in one pass
-    val base = readDeclared(spark, tablePath, snap, affected.toIndexedSeq)
+    val base = readDeclared(spark, tablePath, snap, affected.toIndexedSeq, masks)
     val staged = set.toSeq.zipWithIndex.foldLeft(base) {
       case (d, ((c, e), i)) =>
         d.withColumn(s"_upd_$i", when(pred, e).otherwise(col(c)))
@@ -2189,13 +2195,15 @@ object TableWriter extends Serializable {
       spark: SparkSession,
       tablePath: String,
       snap: Snapshot,
-      files: Seq[AddFile]): DataFrame =
+      files: Seq[AddFile],
+      masks: Option[DeletionVectors.Masks] = None): DataFrame =
     DeletionVectors.readFiles(spark, tablePath, files,
       snap.metadata.map(m =>
         org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
           .asInstanceOf[org.apache.spark.sql.types.StructType]),
       withRowMeta = false,
-      mapping = snap.metadata.map(_.columnMapping).getOrElse(Map.empty))
+      mapping = snap.metadata.map(_.columnMapping).getOrElse(Map.empty),
+      masks = masks)
 
   /** RESTORE the table to the live-file state it had at `toVersion`, as
     * a NEW commit (history is preserved; Delta's RESTORE semantics): the

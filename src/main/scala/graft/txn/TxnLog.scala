@@ -598,20 +598,23 @@ final class TxnLog(
         s"version $asOf does not exist in $tablePath (earliest: " +
           s"${versions().headOption.getOrElse("<empty log>")})")
     val cp = checkpointVersions().filter(_ <= asOf).lastOption
-    var files = scala.collection.immutable.ListMap.empty[String, AddFile]
+    // insertion-ordered and mutable: O(1) per action, so a replay is
+    // linear in the files; a re-added path keeps its place, a removed
+    // then re-added one moves last
+    val files = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
     var meta: Option[Metadata] = None
     var proto: Option[Protocol] = None
     var txns = Map.empty[String, SetTxn]
     cp.foreach { cv =>
       val (cpFiles, cpMeta, cpProto, cpTxns) = readCheckpoint(cv)
-      files = scala.collection.immutable.ListMap(cpFiles.map(a => a.path -> a): _*)
+      cpFiles.foreach(a => files(a.path) = a)
       meta = cpMeta
       proto = cpProto
       txns = cpTxns
     }
     vs.filter(v => cp.forall(v > _)).foreach { v =>
       read(v).foreach {
-        case a: AddFile    => files += (a.path -> a)
+        case a: AddFile    => files(a.path) = a
         case r: RemoveFile => files -= r.path
         case m: Metadata   => meta = Some(m)
         case p: Protocol   => proto = Some(p)

@@ -449,9 +449,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(dvBytes * 4 < legacyBytes,
       s"bitmap $dvBytes must be well under the row encoding $legacyBytes")
     // cardinality rides the sidecar: the count answers without expansion
-    val counted = DeletionVectors.deletedPerFile(spark, path,
+    val counted = DeletionVectors.deletedCount(spark, path,
         l.snapshotLatest().files)
-      .agg(sum(col("n_deleted"))).head().getLong(0)
     assert(counted == n / 2)
   }
 
@@ -514,9 +513,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     DeletionVectors.deleteWhere(spark, path, col("id") >= 95L,
       version = 2L, commitTs = 3000L)
     assert(SnapshotReader.read(spark, path).count() == 85L)
-    val counted = DeletionVectors.deletedPerFile(spark, path,
+    val counted = DeletionVectors.deletedCount(spark, path,
         l.snapshotLatest().files)
-      .agg(sum(col("n_deleted"))).head().getLong(0)
     assert(counted == 15L)
   }
 

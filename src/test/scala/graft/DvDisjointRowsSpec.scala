@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** A bitmap vector may hold several disjoint rows for one (file_name,
   * deleted_at) pair. Every reader must see such a vector exactly as it
-  * would the same positions in one row: the executor fold, the expanded
-  * rows, the per-file counts, snapshot reads and both CDC readers. A
+  * would the same positions in one row: the loaded masks (all kills and
+  * per kill version), the per-file counts, snapshot reads and both CDC
+  * readers. A
   * later delete from the same file must carry the rows forward intact.
   */
 class DvDisjointRowsSpec extends AnyFunSuite {
@@ -79,19 +80,16 @@ class DvDisjointRowsSpec extends AnyFunSuite {
     assert(carried.count() == 2, "carried bitmap rows are copied as they are")
 
     val dead = (first ++ second).toSet
-    val dvPath = TxnLog.dataPath(dir, f2.dv.get)
-    assert(DeletionVectors.deadPositions(dvPath, conf, name)
-      .toArray.toSet == dead)
-    assert(DeletionVectors.deadPositions(dvPath, conf, name, _ == 1L)
+    val masks = DeletionVectors.masks(spark, dir, Seq(f2))
+    assert(masks.dead(f2.path, f2.dv.get).toArray.toSet == dead)
+    assert(masks.diedAt(f2.path, f2.dv.get, 1L)
       .getLongCardinality == first.size)
-    val expanded = DeletionVectors.readDvDirs(spark, dir, Seq(f2.dv.get))
-      .select("file_name", "row_index", "deleted_at").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val expanded = Seq(1L, 2L).flatMap(v =>
+      masks.diedAt(f2.path, f2.dv.get, v).toArray.map(k => (name, k, v))).toSet
     assert(expanded == first.map(k => (name, k, 1L)).toSet ++
       second.map(k => (name, k, 2L)))
-    val counts = DeletionVectors.deletedPerFile(spark, dir, Seq(f2)).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(counts == Map(name -> dead.size.toLong))
+    assert(masks.count(f2) == dead.size.toLong)
+    assert(DeletionVectors.deletedCount(spark, dir, Seq(f2)) == dead.size)
 
     val live = (0L until 20L).toSet -- dead
     assert(ks(SnapshotReader.read(spark, dir)) == live)

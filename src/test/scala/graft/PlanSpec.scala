@@ -205,14 +205,16 @@ class PlanSpec extends AnyFunSuite {
       "the pair join must key on cell, never cross the corpus")
   }
 
-  test("q85 DV read: the dead-row anti-join broadcasts the vector side") {
-    // the vector is small by design (dead rows, not file rows) — it must
-    // broadcast; a shuffled anti-join would tax every DV read at scale
+  test("q85 DV read: the vector applies as a position mask, never a join") {
+    // the masks are loaded on the driver and broadcast as per-file
+    // bitmaps: the scan's rows are filtered by position, so no join, no
+    // broadcast exchange and no job reads the vector
     val df = SparkEntry.queries("q85_dv_delete")(spark, sf)
     df.collect() // AQE-finalized plan
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
-      s"DV subtraction should be a broadcast anti-join:\n${p.take(2000)}")
+    assert(!p.contains("Join") && !p.contains("BroadcastExchange") &&
+      p.contains("row_index"),
+      s"DV subtraction should be a position filter on the scan:\n${p.take(2000)}")
   }
 
   test("q100 forward fill: one window pass, no join, no extra exchange") {

@@ -159,10 +159,10 @@ class DmlJobCountSpec extends AnyFunSuite
     val hit = before.filter(r => r._1 == 8L || r._1 == 13L)
     assert(table("d") == before -- hit)
     assert(changes("d") == Map(ChangeDataFeed.Delete -> hit))
-    // the marking scan (broadcast of the table's dead rows, the cache
-    // it fills) and the affected-file collect; the vector write; the
-    // change rows' shuffle and write, both from the cache
-    assertJobs("DV DELETE", sites, 6)
+    // the marking scan, which fills the cache and collects the affected
+    // files (the vector's masks are loaded on the driver, no job); the
+    // vector write; the change rows' shuffle and write, both from the cache
+    assertJobs("DV DELETE", sites, 4)
   }
 
   test("copy-on-write DELETE: jobs, table and change rows") {
@@ -174,9 +174,9 @@ class DmlJobCountSpec extends AnyFunSuite
     val hit = before.filter(r => r._1 == 12L || r._1 == 13L)
     assert(table("c") == before -- hit)
     assert(changes("c") == Map(ChangeDataFeed.Delete -> hit))
-    // each of the three scans of the table (affected-file collect,
-    // survivors, change rows) broadcasts the dead rows first; then the
-    // collect, the survivors' write, the change rows' shuffle and write
-    assertJobs("copy-on-write DELETE", sites, 7)
+    // the affected-file collect, the survivors' write, the change rows'
+    // shuffle and write: the three scans share masks loaded once on the
+    // driver, so none of them broadcasts the dead rows in a job
+    assertJobs("copy-on-write DELETE", sites, 4)
   }
 }

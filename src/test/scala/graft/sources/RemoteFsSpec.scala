@@ -186,6 +186,7 @@ class CountingMockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def open(p: Path, bufferSize: Int)
       : org.apache.hadoop.fs.FSDataInputStream = {
     CountingMockFs.opens.incrementAndGet()
+    if (CountingMockFs.underDv(p)) CountingMockFs.dvOpens.incrementAndGet()
     if (CountingMockFs.recordPaths) CountingMockFs.recordedOpens.add(p.toString)
     if (org.apache.spark.TaskContext.get() == null) {
       CountingMockFs.driverOpens.incrementAndGet()
@@ -198,6 +199,7 @@ class CountingMockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     super.open(p, bufferSize)
   }
   override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (CountingMockFs.underDv(p)) CountingMockFs.dvLists.incrementAndGet()
     // counted only when running INSIDE a Spark task: local[n] shares the
     // JVM, so TaskContext presence is what separates executor-side
     // listing (the 100 TB shape) from a driver walk
@@ -250,6 +252,12 @@ object CountingMockFs {
   val taskCreates = new java.util.concurrent.atomic.AtomicInteger(0)
   val driverLogLists = new java.util.concurrent.atomic.AtomicInteger(0)
   val renames = new java.util.concurrent.atomic.AtomicInteger(0)
+  // opens and listings under a table's `_dv/` vector directories, on the
+  // driver and in tasks alike
+  val dvOpens = new java.util.concurrent.atomic.AtomicInteger(0)
+  val dvLists = new java.util.concurrent.atomic.AtomicInteger(0)
+  private[sources] def underDv(p: Path): Boolean =
+    p.toString.split('/').contains("_dv")
   // every rename's (source, destination), in call order
   val renamed = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
   // files or directories created under a `.staging-*` directory, and
