@@ -449,18 +449,30 @@ private[sources] class GraftCdcMicroBatchStream(
     metaCache._2
   }
 
+  // The last planned batch: its offsets, partitions and reader. Spark
+  // plans one batch more than once (4 times for an AvailableNow
+  // backfill), and each plan would otherwise re-derive the splits and
+  // re-read the batch's vectors.
+  @volatile private var planned: ((CdcOffset, CdcOffset), Array[InputPartition],
+    FileRows) = _
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[WrappedOffset].o
-    val e = end.asInstanceOf[WrappedOffset].o
-    val l = log
-    val latestMeta = latestMetadata(l)
-    // Column mapping (RENAME COLUMN): the file reader resolves parquet
-    // fields BY NAME, so it reads the PHYSICAL spelling of the payload;
-    // the stream's output schema stays logical (rows are positional —
-    // names never travel with them).
-    planned = readers(graft.txn.ColumnMapping.physicalSchema(
-      StructType(schema.fields.drop(GraftCdc.EnvelopeCols)),
-      latestMeta.map(_.columnMapping).getOrElse(Map.empty)))
+    val key = (start.asInstanceOf[WrappedOffset].o, end.asInstanceOf[WrappedOffset].o)
+    if (planned == null || planned._1 != key) {
+      val l = log
+      // Column mapping (RENAME COLUMN): the file reader resolves parquet
+      // fields BY NAME, so it reads the PHYSICAL spelling of the payload;
+      // the stream's output schema stays logical (rows are positional —
+      // names never travel with them).
+      val reader = readers(graft.txn.ColumnMapping.physicalSchema(
+        StructType(schema.fields.drop(GraftCdc.EnvelopeCols)),
+        latestMetadata(l).map(_.columnMapping).getOrElse(Map.empty)))
+      planned = (key, plan(l, key._1, key._2), reader)
+    }
+    planned._2
+  }
+
+  private def plan(l: TxnLog, s: CdcOffset, e: CdcOffset): Array[InputPartition] = {
 
     // Large files byte-range split (the batch scan's contract): each
     // range carries the SAME file-absolute skip/until resume bounds —
@@ -476,9 +488,10 @@ private[sources] class GraftCdcMicroBatchStream(
     def filePart(ev: CdcFileEvent, v: Long, skipRows: Long,
         untilRow: Long): Unit = pending += Right((ev, v, skipRows, untilRow))
     def partitions(): Array[InputPartition] = {
-      val masks = masksOf(pending.collect {
-        case Right((ev, _, _, _)) if ev.dv.isDefined => (ev.rel, ev.dv.get)
-      }.toSet)
+      val masks = graft.txn.DeletionVectors.masks(hadoopConf, opts.tablePath,
+        pending.collect {
+          case Right((ev, _, _, _)) if ev.dv.isDefined => (ev.rel, ev.dv.get)
+        }.toSet)
       pending.toArray.flatMap {
         case Left(meta) => Seq(meta)
         case Right((ev, v, skipRows, untilRow)) =>
@@ -551,22 +564,6 @@ private[sources] class GraftCdcMicroBatchStream(
     partitions()
   }
 
-  // The masks of the last planned batch. Spark may plan one batch more
-  // than once, and a row-capped backfill plans the same snapshot files
-  // trigger after trigger: a batch whose vectors were all loaded reuses
-  // them (a committed vector never changes).
-  private var lastMasks =
-    (Set.empty[(String, String)], graft.txn.DeletionVectors.Masks.empty)
-  private def masksOf(files: Set[(String, String)]) = {
-    if (!files.subsetOf(lastMasks._1)) lastMasks = (files,
-      graft.txn.DeletionVectors.masks(hadoopConf, opts.tablePath, files))
-    lastMasks._2
-  }
-
-  // the reader of the last planned batch (Spark plans a batch's
-  // partitions before it asks for their reader factory)
-  @volatile private var planned: FileRows = _
-
   override def createReaderFactory(): PartitionReaderFactory =
     readerFactory(envelope = true)
 
@@ -574,7 +571,7 @@ private[sources] class GraftCdcMicroBatchStream(
     * payload rows (the `readStream.table` tail).
     */
   private[sources] def readerFactory(envelope: Boolean): PartitionReaderFactory =
-    new CdcPartitionReaderFactory(planned, envelope)
+    new CdcPartitionReaderFactory(planned._3, envelope)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -7,10 +7,12 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.functions.{col, lit, when}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Delta-based (merge-on-read) row-level operations — the DSv2
@@ -34,22 +36,23 @@ import scala.jdk.CollectionConverters._
   * Spark plans `WriteDelta` for an operation implementing
   * [[SupportsDelta]]: each task's [[DeltaWriter]] receives discriminated
   * delete(id) / update(id, row) / insert(row) calls, so exact CDF images
-  * come for free — dead handles stage per task (with an 'u'/'d' kind),
-  * update rows and insert rows write to SEPARATE data files.
+  * come for free — each task folds its dead row ids into per-file
+  * Roaring bitmaps, one set for updates ('u') and one for deletes ('d'),
+  * and writes update rows and insert rows to SEPARATE data files.
   *
   * The commit step runs as few Spark jobs as it can:
-  *  - affected files come from the writers: each task reports the
-  *    basenames it wrote handles for, so the commit never re-reads or
-  *    shuffles the handles to learn them;
-  *  - the new vector folds the handles into bitmaps per partition and
-  *    carries the affected files' kills from the masks the scan loaded —
-  *    one write job, no shuffle, no second vector read
-  *    ([[DeletionVectors.stageVector]]);
-  *  - update_preimage/delete rows join the handles back to a PLAIN scan
-  *    of the affected files (the only re-read, proportional to AFFECTED
-  *    files, not the table). No vector is applied there: the handles
-  *    name rows that were live at scan time, and the identity check
-  *    proves the files' pointers unchanged since.
+  *  - the kills arrive in the tasks' commit messages: the affected files
+  *    are their keys, and the driver ORs them per file, so nothing is
+  *    staged, re-read or shuffled to learn them;
+  *  - the driver writes the new vector — these kills plus the affected
+  *    files' carried kills from the masks the scan loaded — in place,
+  *    with no Spark job ([[DeletionVectors.commitVector]]);
+  *  - update_preimage/delete rows come from a PLAIN scan of the affected
+  *    files (the only re-read, proportional to AFFECTED files, not the
+  *    table) that keeps the positions this statement killed and tags
+  *    each by its kind. No vector is applied there: the kills name rows
+  *    that were live at scan time, and the identity check proves the
+  *    files' pointers unchanged since.
   */
 private[sources] class GraftDeltaRowLevelOperation(
     cmd: RowLevelOperation.Command,
@@ -100,24 +103,15 @@ private[sources] class GraftDeltaRowLevelOperation(
 
 /** One task's delta output: new data files (update images and inserts
   * written SEPARATELY so the commit can classify CDF rows without
-  * re-deriving anything), the staged dead-handle files, and the
-  * basenames of the data files those handles point into.
+  * re-deriving anything) and the rows it killed, as serialized Roaring
+  * bitmaps of raw positions per data file basename: those an UPDATE
+  * replaced and those a DELETE removed.
   */
 private[sources] case class GraftDeltaCommitMessage(
     updateAdds: Seq[AddFile],
     insertAdds: Seq[AddFile],
-    handleFiles: Seq[String],
-    affectedFiles: Seq[String]) extends WriterCommitMessage
-
-private[sources] object GraftDeltaBatchWrite {
-  /** Staged dead-handle row shape: which file, which raw position, and
-    * whether the row died to an UPDATE ('u') or a DELETE ('d').
-    */
-  val HandleSchema: StructType = StructType(Seq(
-    StructField("file_name", StringType, nullable = false),
-    StructField("row_index", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false)))
-}
+    updated: Seq[(String, Array[Byte])],
+    deleted: Seq[(String, Array[Byte])]) extends WriterCommitMessage
 
 /** The merge-on-read commit: one DV directory (new dead rows + carried
   * prior kills of the affected files), re-adds of the affected files
@@ -135,8 +129,6 @@ private[sources] class GraftDeltaBatchWrite(
     cmdName: String) extends DeltaBatchWrite {
 
   private val op = s"${cmdName}_DV"
-  private val txnId = java.util.UUID.randomUUID().toString.take(8)
-  private[sources] val stagingRel = s".staging-rlh-$txnId"
 
   require(!dataSchema.fieldNames.contains(GraftBatch.FileMetadataColumn) &&
       !dataSchema.fieldNames.contains(GraftBatch.PosMetadataColumn),
@@ -148,16 +140,7 @@ private[sources] class GraftDeltaBatchWrite(
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory =
-    GraftDeltaWriterFactory(
-      TaskFiles.prepare(tablePath, dataSchema, partCols),
-      TaskFiles.prepare(tablePath, GraftDeltaBatchWrite.HandleSchema,
-        Seq.empty, sidecarDir = Some(stagingRel)))
-
-  private def dropStaging(): Unit = {
-    val p = new Path(tablePath, stagingRel)
-    try p.getFileSystem(conf).delete(p, true)
-    catch { case _: Throwable => () }
-  }
+    GraftDeltaWriterFactory(TaskFiles.prepare(tablePath, dataSchema, partCols))
 
   private def collect(messages: Array[WriterCommitMessage])
       : Seq[GraftDeltaCommitMessage] =
@@ -169,129 +152,112 @@ private[sources] class GraftDeltaBatchWrite(
     val updateAdds = msgs.flatMap(_.updateAdds)
     val insertAdds = msgs.flatMap(_.insertAdds)
     val newAdds = updateAdds ++ insertAdds
-    // only files named by SUCCESSFUL task commits count — the staging
-    // dir may hold orphans from failed attempts
-    val handlePaths = msgs.flatMap(_.handleFiles)
-      .map(rel => new Path(tablePath, rel).toString)
+    // this statement's kills per file, from the tasks Spark accepted
+    val updated = DeletionVectors.orKills(msgs.flatMap(_.updated))
+    val kills =
+      DeletionVectors.orKills(msgs.flatMap(m => m.updated ++ m.deleted))
     val log = new TxnLog(tablePath, conf)
     def fail(t: Throwable): Nothing = {
       GraftRowLevelOps.dropFiles(tablePath, conf, newAdds)
-      dropStaging()
       throw t
     }
-    try GraftRowLevelOps.validateReplacement(tablePath, conf, newAdds, log)
-    catch { case t: Throwable => dropStaging(); throw t }
+    GraftRowLevelOps.validateReplacement(tablePath, conf, newAdds, log)
 
-    // built once: the vector and the pre-images both read the handles
-    val handles =
-      if (handlePaths.isEmpty) None
-      else Some(spark.read.schema(GraftDeltaBatchWrite.HandleSchema)
-        .parquet(handlePaths: _*))
-    try {
-      // the writers report the files they marked rows in (≤ |files|)
-      val affectedNames = msgs.flatMap(_.affectedFiles).toSet
-      val scan = boundScan().getOrElse(throw new IllegalStateException(
-        s"$op at $tablePath: no bound scan — the delta write cannot " +
-          "locate the rows it marks dead"))
-      // handles and DV sidecars key rows by file BASENAME — sound for
-      // files this table wrote (names embed version + ordinal) but a
-      // shallow-clone import can collide with a local name. A silent
-      // collision would mark the WRONG file's positions dead: refuse.
-      val dupNames = scan.boundResolved.files
-        .groupBy(f => new Path(f.path).getName)
-        .collect { case (n, fs) if fs.size > 1 => n }
-      if (dupNames.nonEmpty)
-        fail(new UnsupportedOperationException(
-          s"$op at $tablePath in dv mode: ${dupNames.size} live file " +
-            s"basename(s) collide (e.g. ${dupNames.head}; clone " +
-            "imports?) — deletion-vector row identity is " +
-            "basename-keyed; run in copy-on-write mode or deep-clone " +
-            "first"))
-      val byName = scan.boundResolved.files
-        .map(f => new Path(f.path).getName -> f).toMap
-      val affected = affectedNames.toSeq.sorted.map(n => byName.getOrElse(n,
+    val scan = boundScan().getOrElse(throw new IllegalStateException(
+      s"$op at $tablePath: no bound scan — the delta write cannot " +
+        "locate the rows it marks dead"))
+    // kills and DV sidecars key rows by file BASENAME — sound for files
+    // this table wrote (names embed version + ordinal) but a
+    // shallow-clone import can collide with a local name. A silent
+    // collision would mark the WRONG file's positions dead: refuse.
+    val dupNames = scan.boundResolved.files
+      .groupBy(f => new Path(f.path).getName)
+      .collect { case (n, fs) if fs.size > 1 => n }
+    if (dupNames.nonEmpty)
+      fail(new UnsupportedOperationException(
+        s"$op at $tablePath in dv mode: ${dupNames.size} live file " +
+          s"basename(s) collide (e.g. ${dupNames.head}; clone " +
+          "imports?) — deletion-vector row identity is " +
+          "basename-keyed; run in copy-on-write mode or deep-clone " +
+          "first"))
+    val byName = scan.boundResolved.files
+      .map(f => new Path(f.path).getName -> f).toMap
+    val affected = kills.keys.toSeq.sorted.map(n => byName.getOrElse(n,
+      fail(new IllegalStateException(
+        s"$op at $tablePath: a killed row names unknown file $n"))))
+
+    val ts = System.currentTimeMillis()
+    var attempt = 0
+    var committed = false
+    while (!committed) {
+      val snap = log.snapshotLatest()
+      TxnLog.assertWritable(snap, tablePath)
+      // identity, not path: a concurrent DV delete re-adds the same
+      // path with a NEW pointer — re-pointing it from OUR carried set
+      // would silently resurrect the concurrently deleted rows
+      val current = snap.files.map(f => f.path -> f).toMap
+      val stale = affected.filterNot(a => current.get(a.path).contains(a))
+      if (stale.nonEmpty)
         fail(new IllegalStateException(
-          s"$op at $tablePath: handle names unknown file $n"))))
+          s"$op conflict at $tablePath: ${stale.size} scanned file(s) " +
+            s"changed or vanished since the scan (e.g. " +
+            s"${stale.head.path}) — re-run the statement"))
+      val matching = GraftRowLevelOps.matchingConcurrentAppends(
+        log, scan, pushedFilters())
+      if (matching.nonEmpty)
+        fail(new IllegalStateException(
+          s"$op conflict at $tablePath: ${matching.size} file(s) " +
+            s"appended concurrently may match the operation's read " +
+            s"(e.g. ${matching.head.path}) — re-run the statement"))
 
-      val ts = System.currentTimeMillis()
-      var attempt = 0
-      var committed = false
-      while (!committed) {
-        val snap = log.snapshotLatest()
-        TxnLog.assertWritable(snap, tablePath)
-        // identity, not path: a concurrent DV delete re-adds the same
-        // path with a NEW pointer — re-pointing it from OUR carried set
-        // would silently resurrect the concurrently deleted rows
-        val current = snap.files.map(f => f.path -> f).toMap
-        val stale = affected.filterNot(a => current.get(a.path).contains(a))
-        if (stale.nonEmpty)
-          fail(new IllegalStateException(
-            s"$op conflict at $tablePath: ${stale.size} scanned file(s) " +
-              s"changed or vanished since the scan (e.g. " +
-              s"${stale.head.path}) — re-run the statement"))
-        val matching = GraftRowLevelOps.matchingConcurrentAppends(
-          log, scan, pushedFilters())
-        if (matching.nonEmpty)
-          fail(new IllegalStateException(
-            s"$op conflict at $tablePath: ${matching.size} file(s) " +
-              s"appended concurrently may match the operation's read " +
-              s"(e.g. ${matching.head.path}) — re-run the statement"))
-
-        val version = snap.version + 1
-        // the new vector: this statement's dead rows + the affected
-        // files' prior kills (pointers replace, never chain)
-        val dvRel: Option[String] = handles.map(h =>
-          DeletionVectors.stageVector(spark, tablePath, version,
-            h.select(col("file_name"), col("row_index")),
-            carryFrom = affected, masks = scan.masks))
-        val removes = affected.map(f =>
-          RemoveFile(f.path, ts, f.partitionValues))
-        val readds = affected.map(_.copy(
-          modificationTime = ts, dataChange = true, dv = dvRel))
-        val protocol: Seq[Action] =
-          if (dvRel.isEmpty ||
-              snap.protocol.exists(_.minReaderVersion >= 2)) Seq.empty
-          else Seq(Protocol(2, 2))
-        val cdcActions: Seq[Action] =
-          if (!ChangeDataFeed.enabled(snap)) Seq.empty
-          else stageCdf(spark, snap, affected, handles, updateAdds,
-            insertAdds, version)
-        try {
-          log.commit(version,
-            protocol ++ removes ++ readds ++ newAdds ++ cdcActions :+
-              CommitInfo(op, ts))
-          committed = true
-        } catch {
-          case e: IllegalStateException
-              if e.getMessage != null &&
-                e.getMessage.startsWith("concurrent commit") =>
-            // the staged vector is version-named: drop and re-stage
-            // against the new head next attempt (CDC files re-stage too;
-            // uncommitted leftovers are invisible and vacuum-swept)
-            dvRel.foreach(DeletionVectors.dropVector(spark, tablePath, _))
-            attempt += 1
-            if (attempt > 20) fail(e)
-            Thread.sleep(1L + scala.util.Random.nextInt(8))
-        }
+      val version = snap.version + 1
+      // the new vector: this statement's kills + the affected files'
+      // prior kills (pointers replace, never chain)
+      val vector =
+        if (kills.isEmpty) None
+        else Some(DeletionVectors.commitVector(spark, tablePath, snap,
+          version, ts, kills, affected, scan.masks))
+      val cdcActions: Seq[Action] =
+        if (!ChangeDataFeed.enabled(snap)) Seq.empty
+        else stageCdf(spark, snap, affected, kills, updated, updateAdds,
+          insertAdds, version)
+      try {
+        log.commit(version,
+          vector.toSeq.flatMap(_._2) ++ newAdds ++ cdcActions :+
+            CommitInfo(op, ts))
+        committed = true
+      } catch {
+        case e: IllegalStateException
+            if e.getMessage != null &&
+              e.getMessage.startsWith("concurrent commit") =>
+          // the vector is version-named: drop it and write it again
+          // against the new head next attempt (CDC files re-stage too;
+          // uncommitted leftovers are invisible and vacuum-swept)
+          vector.foreach(v => DeletionVectors.dropVector(spark, tablePath, v._1))
+          attempt += 1
+          if (attempt > 20) fail(e)
+          Thread.sleep(1L + scala.util.Random.nextInt(8))
       }
-    } finally dropStaging()
+    }
   }
 
-  /** Exact change rows for the feed: update/delete PREIMAGES join the
-    * dead handles back to the affected files' rows (the only re-read —
-    * affected files, never the table); update POSTIMAGES and inserts
-    * read straight from the just-staged new files.
+  /** Exact change rows for the feed: update/delete PREIMAGES are the
+    * killed positions of a plain scan of the affected files (the only
+    * re-read — affected files, never the table), an update's where
+    * `updated` names it; update POSTIMAGES and inserts read straight from
+    * the just-written new files.
     *
-    * The pre-image scan applies no deletion vector: the handles name
-    * rows that were live at scan time, and the commit's identity check
-    * proved the affected files' pointers unchanged since, so the join
-    * on the handles alone yields exactly the pre-images.
+    * The pre-image scan applies no deletion vector: the kills name rows
+    * that were live at scan time, and the commit's identity check proved
+    * the affected files' pointers unchanged since, so the kills alone
+    * pick exactly the pre-images.
     */
   private def stageCdf(
       spark: org.apache.spark.sql.SparkSession,
       snap: Snapshot,
       affected: Seq[AddFile],
-      handles: Option[org.apache.spark.sql.DataFrame],
+      kills: Map[String, Roaring64Bitmap],
+      updated: Map[String, Roaring64Bitmap],
       updateAdds: Seq[AddFile],
       insertAdds: Seq[AddFile],
       version: Long): Seq[CdcFile] = {
@@ -299,16 +265,19 @@ private[sources] class GraftDeltaBatchWrite(
       DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
     val partitionColumns =
       snap.metadata.map(_.partitionColumns).getOrElse(Seq.empty)
-    val pre = handles.filter(_ => affected.nonEmpty).map { h =>
+    // every affected file keyed, so a file with no entry in `bms` picks none
+    def picks(bms: Map[String, Roaring64Bitmap]) =
+      DeletionVectors.picked(spark, col("_fn"), col("_ri"),
+        kills.keys.map(n => (UTF8String.fromString(n): Any) ->
+          (bms.getOrElse(n, new Roaring64Bitmap()) -> true)).toMap)
+    val pre = if (affected.isEmpty) None else Some(
       DeletionVectors.readFiles(spark, tablePath, affected, declared,
           withRowMeta = true, masks = Some(DeletionVectors.Masks.empty))
-        .join(h, col("_fn") === col("file_name") &&
-          col("_ri") === col("row_index"))
+        .filter(picks(kills))
         .withColumn(ChangeDataFeed.TypeCol,
-          when(col("kind") === "u", ChangeDataFeed.UpdatePre)
+          when(picks(updated), ChangeDataFeed.UpdatePre)
             .otherwise(ChangeDataFeed.Delete))
-        .drop("_fn", "_ri", "_path", "file_name", "row_index", "kind")
-    }
+        .drop("_fn", "_ri", "_path"))
     def readNew(adds: Seq[AddFile], kind: String) =
       if (adds.isEmpty) None
       else Some(declared.fold(spark.read)(s => spark.read.schema(s))
@@ -327,57 +296,49 @@ private[sources] class GraftDeltaBatchWrite(
     val msgs = collect(messages)
     GraftRowLevelOps.dropFiles(tablePath, conf,
       msgs.flatMap(m => m.updateAdds ++ m.insertAdds))
-    dropStaging()
   }
 }
 
-private[sources] case class GraftDeltaWriterFactory(
-    data: TaskFiles, handles: TaskFiles) extends DeltaWriterFactory {
+private[sources] case class GraftDeltaWriterFactory(data: TaskFiles)
+    extends DeltaWriterFactory {
 
   override def createWriter(
       partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new GraftDeltaDataWriter(data, handles, partitionId, taskId)
+    new GraftDeltaDataWriter(data, partitionId, taskId)
 }
 
 /** One task's delta writer. Update images and inserts go to SEPARATE
   * data files (distinct name stems) so the commit can classify CDF rows
-  * by file provenance; dead handles go to small parquet files flat in
-  * the write's staging dir, which the commit reads back for the vector
-  * and the pre-images and then drops. All three are the same
-  * [[GraftStreamingDataWriter]] (Spark's parquet writer, names from
-  * [[TableCommitProtocol]]) and all are lazy — a task that only deletes
-  * writes no data file at all.
+  * by file provenance; both are the same [[GraftStreamingDataWriter]]
+  * (Spark's parquet writer, names from [[TableCommitProtocol]]) and both
+  * are lazy — a task that only deletes writes no file at all. Killed
+  * row ids fold into one Roaring bitmap per data file and kind, which
+  * the commit message carries to the driver.
   */
 private[sources] class GraftDeltaDataWriter(
     data: TaskFiles,
-    handles: TaskFiles,
     partitionId: Int,
     taskId: Long) extends DeltaWriter[InternalRow] {
 
   private var updWriter: GraftStreamingDataWriter = _
   private var insWriter: GraftStreamingDataWriter = _
-  private var handleWriter: GraftStreamingDataWriter = _
-  private val touched = scala.collection.mutable.LinkedHashSet.empty[String]
+  private val updated = mutable.HashMap.empty[String, Roaring64Bitmap]
+  private val deleted = mutable.HashMap.empty[String, Roaring64Bitmap]
 
-  private def writeHandle(id: InternalRow, kind: String): Unit = {
+  private def kill(into: mutable.HashMap[String, Roaring64Bitmap],
+      id: InternalRow): Unit = {
     // rowId() order: (_graft_file absolute path, _graft_pos)
     val abs = id.getUTF8String(0).toString
-    val name = abs.substring(abs.lastIndexOf('/') + 1)
-    touched += name
-    if (handleWriter == null)
-      handleWriter =
-        new GraftStreamingDataWriter(handles, "handles", partitionId,
-          taskId)
-    handleWriter.write(InternalRow(UTF8String.fromString(name),
-      id.getLong(1), UTF8String.fromString(kind)))
+    into.getOrElseUpdate(abs.substring(abs.lastIndexOf('/') + 1),
+      new Roaring64Bitmap()).addLong(id.getLong(1))
   }
 
   override def delete(meta: InternalRow, id: InternalRow): Unit =
-    writeHandle(id, "d")
+    kill(deleted, id)
 
   override def update(
       meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
-    writeHandle(id, "u")
+    kill(updated, id)
     if (updWriter == null)
       updWriter =
         new GraftStreamingDataWriter(data, "part-s00001", partitionId, taskId)
@@ -391,18 +352,21 @@ private[sources] class GraftDeltaDataWriter(
     insWriter.write(row)
   }
 
-  private def writers = Seq(updWriter, insWriter, handleWriter).filter(_ != null)
+  private def writers = Seq(updWriter, insWriter).filter(_ != null)
 
   private def committed(w: GraftStreamingDataWriter) =
     Option(w).toSeq.flatMap(_.committed())
+
+  private def serialized(kills: mutable.HashMap[String, Roaring64Bitmap]) =
+    kills.toSeq.map { case (f, bm) => f -> DeletionVectors.serializeBitmap(bm) }
 
   override def commit(): WriterCommitMessage = {
     val now = System.currentTimeMillis()
     GraftDeltaCommitMessage(
       updateAdds = committed(updWriter).map(_.addFile(now, dataChange = true)),
       insertAdds = committed(insWriter).map(_.addFile(now, dataChange = true)),
-      handleFiles = committed(handleWriter).map(_.relPath),
-      affectedFiles = touched.toSeq)
+      updated = serialized(updated),
+      deleted = serialized(deleted))
   }
 
   override def abort(): Unit = writers.foreach(_.abort())

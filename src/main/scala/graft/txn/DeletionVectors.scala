@@ -11,7 +11,9 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, StructType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType,
+  IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.longlong.Roaring64Bitmap
 import scala.jdk.CollectionConverters._
@@ -27,13 +29,20 @@ import scala.jdk.CollectionConverters._
   * don't understand the `dv` pointer (this engine before round 4) REFUSE
   * the table instead of silently resurrecting deleted rows.
   *
-  * Layout: one DV directory per delete commit, `_dv/dv-<version>/`,
-  * holding the dead rows of its files (see the encodings below). The
-  * affected `AddFile` re-commits with `dv` pointing at the directory;
-  * a file deleted from twice gets a NEW directory holding the UNION of
-  * its dead rows (pointers replace, never chain), with each row keeping
-  * the version that first deleted it — which is exactly what CDC needs
-  * to emit op='d' events per commit.
+  * Layout: one DV directory per delete commit,
+  * `_dv/dv-<version>-<attempt>/`, holding the dead rows of its files in
+  * one part file (see the encodings below). The affected `AddFile`
+  * re-commits with `dv` pointing at the directory; a file deleted from
+  * twice gets a NEW directory holding the UNION of its dead rows
+  * (pointers replace, never chain), with each row keeping the version
+  * that first deleted it — which is exactly what CDC needs to emit
+  * op='d' events per commit.
+  *
+  * Write path: a DML gathers its kills as one Roaring bitmap per file
+  * where it already sees the rows (the SQL delta writer's tasks, the
+  * API delete's marking scan), and [[commitVector]] writes the vector on
+  * the driver, straight into its final directory: no staging, no
+  * rename, no Spark job.
   *
   * Row identity is `_metadata.row_index` + `_metadata.file_name`: part
   * file names embed (version, ordinal) so they are unique per table, and
@@ -223,12 +232,12 @@ object DeletionVectors {
 
   /** Read `files` of the table with deletion vectors applied. With
     * `withRowMeta`, the result keeps `_fn` (file name), `_ri` (row
-    * index) and `_path` (normalized full path) columns — the handles the
-    * delete/CDC machinery joins on. `masks` are the dead positions to
-    * drop, loaded here when None: a statement that reads the same files
-    * more than once loads them once and passes them. `Masks.empty`
-    * reads every row of the files, dead or not: for a caller whose row
-    * handles already name only live rows.
+    * index) and `_path` (normalized full path) columns — the row
+    * identity the delete/CDC machinery keys on. `masks` are the dead
+    * positions to drop, loaded here when None: a statement that reads
+    * the same files more than once loads them once and passes them.
+    * `Masks.empty` reads every row of the files, dead or not: for a
+    * caller whose kills already name only live rows.
     */
   def readFiles(
       spark: SparkSession,
@@ -391,78 +400,100 @@ object DeletionVectors {
       live => live.join(keys.select(keyCols.map(col): _*).distinct(),
         keyCols, "left_semi"))
 
-  /** Write version `version`'s deletion-vector directory (staged, then
-    * renamed into place) and return the table-relative pointer the
-    * re-committed AddFiles must carry. The vector holds `dead` — this
-    * statement's kills, `(file_name, row_index)` — plus the valid kills
-    * of `carryFrom` under their current pointers (from `masks`, which
-    * must cover them), each keeping its original deleted_at (pointers
-    * replace, never chain). The caller
-    * folds the pointer into its OWN commit; an uncommitted directory is
-    * invisible (vacuum's stale-staging sweep reclaims crashed
-    * leftovers).
-    *
-    * No shuffle: each partition folds its positions into one Roaring
-    * bitmap per (file, deleted_at) and writes them as bitmap rows;
-    * carried bitmap rows are copied as they are, never expanded. So a
-    * pair may span several rows — disjoint, since a position dies once
-    * — which [[masks]] ORs. One task writes the vector, so it lands in
-    * one part file.
-    *
-    * The directory name carries an ATTEMPT-UNIQUE suffix: two writers
-    * racing on the same target version would otherwise stage and
-    * rename onto the SAME `_dv/dv-N` path — the loser's rename (or its
-    * conflict-cleanup delete) clobbering the WINNER's just-committed
-    * vector, resurrecting its deleted rows. Pointer strings are
-    * opaque to every reader, so uniqueness is free.
+  /** Per-file kills of `rows` — `(file name, row position)` — as
+    * Roaring bitmaps, in one job: each partition folds its own rows, the
+    * driver ORs what they return (a bitmap per file a partition saw, so
+    * the collect is bounded by the affected files, not the rows).
     */
-  private[graft] def stageVector(
+  private[graft] def collectKills(rows: DataFrame): Map[String, Roaring64Bitmap] = {
+    import org.apache.spark.sql.Encoders
+    orKills(rows.as(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .mapPartitions { it =>
+        val open = scala.collection.mutable.HashMap
+          .empty[String, Roaring64Bitmap]
+        it.foreach { case (f, p) =>
+          open.getOrElseUpdate(f, new Roaring64Bitmap()).addLong(p) }
+        open.iterator.map { case (f, bm) => f -> serializeBitmap(bm) }
+      }(Encoders.tuple(Encoders.STRING, Encoders.BINARY)).collect())
+  }
+
+  /** Serialized per-file bitmaps ORed into one bitmap per file. */
+  private[graft] def orKills(
+      kills: IterableOnce[(String, Array[Byte])]): Map[String, Roaring64Bitmap] = {
+    val out = scala.collection.mutable.HashMap.empty[String, Roaring64Bitmap]
+    kills.iterator.foreach { case (f, bytes) =>
+      out.getOrElseUpdate(f, new Roaring64Bitmap()).or(deserializeBitmap(bytes)) }
+    out.toMap
+  }
+
+  private val VectorSchema = StructType(Seq(
+    StructField("file_name", StringType),
+    StructField("deleted_at", LongType, nullable = false),
+    StructField("n_rows", LongType, nullable = false),
+    StructField("bitmap", BinaryType)))
+
+  /** Write version `version`'s deletion vector and return its pointer
+    * with the actions that commit it: the affected files' removes, their
+    * re-adds carrying the pointer, and the `Protocol(2, 2)` upgrade if
+    * `snap` lacks it. The vector holds `kills` — this statement's dead
+    * positions per file name, all of them in `affected` — as bitmaps
+    * dead at `version`, plus the kills `affected` already carry, copied
+    * from `masks` (which must cover them) with their original
+    * deleted_at: pointers replace, never chain. Both DML paths call it,
+    * the SQL UPDATE/MERGE commit and [[deleteRows]].
+    *
+    * The driver writes the vector's one part file, with no Spark job,
+    * straight into its final directory through the task writer every
+    * commit uses (session codec, [[TableCommitProtocol]] names): nothing
+    * is staged or renamed. The directory name carries an ATTEMPT-UNIQUE
+    * suffix, so two writers racing on one target version never write
+    * into, or drop, each other's vector, and no reader sees a directory
+    * before a commit points at it; vacuum sweeps the directories of
+    * commits that never land.
+    */
+  private[graft] def commitVector(
       spark: SparkSession,
       tablePath: String,
+      snap: Snapshot,
       version: Long,
-      dead: DataFrame,
-      carryFrom: Seq[AddFile],
-      masks: Masks): String = {
-    import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val rel = s"${dvDir(version)}-$attempt"
-    val staging = new Path(tablePath, s".staging-dv-$version-$attempt")
-    val fs = staging.getFileSystem(conf)
-    fs.delete(staging, true)
-    val fresh = dead.select(col("file_name").cast("string"),
-      lit(version).as("deleted_at"), lit(null).cast("long").as("n_rows"),
-      lit(null).cast("binary").as("bitmap"),
-      col("row_index").cast("long"))
-    val carried = carryFrom.flatMap(masks.rows)
-    val rows =
-      if (carried.isEmpty) fresh
-      else fresh.unionByName(carried.toDF("file_name", "deleted_at",
-        "n_rows", "bitmap").withColumn("row_index", lit(null).cast("long")))
-    val packed = rows.mapPartitions { it =>
-      val open = scala.collection.mutable.LinkedHashMap
-        .empty[(String, Long), Roaring64Bitmap]
-      val copied = it.flatMap { r =>
-        if (!r.isNullAt(3))
-          Iterator.single((r.getString(0), r.getLong(1), r.getLong(2),
-            r.getAs[Array[Byte]](3)))
-        else {
-          open.getOrElseUpdate((r.getString(0), r.getLong(1)),
-            new Roaring64Bitmap()).addLong(r.getLong(4))
-          Iterator.empty
-        }
+      commitTs: Long,
+      kills: Map[String, Roaring64Bitmap],
+      affected: Seq[AddFile],
+      masks: Masks): (String, Seq[Action]) = {
+    val rel = s"${dvDir(version)}-${java.util.UUID.randomUUID().toString.take(8)}"
+    val writer = new graft.sources.GraftStreamingDataWriter(
+      graft.sources.TaskFiles.prepare(tablePath, VectorSchema, Seq.empty,
+        sidecarDir = Some(rel)), "part-dv", 0, 0L)
+    try {
+      affected.foreach { f =>
+        val name = new Path(f.path).getName
+        val fresh = kills.get(name).map(bm => (name, version,
+          bm.getLongCardinality, serializeBitmap(bm)))
+        (masks.rows(f) ++ fresh).foreach { case (n, at, card, bytes) =>
+          writer.write(InternalRow(UTF8String.fromString(n), at, card, bytes)) }
       }
-      copied ++ open.iterator.map { case ((f, d), bm) =>
-        (f, d, bm.getLongCardinality, serializeBitmap(bm)) }
-    }.toDF("file_name", "deleted_at", "n_rows", "bitmap")
-    packed.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val dest = new Path(tablePath, rel)
-    fs.mkdirs(dest.getParent)
-    // attempt-unique name: the destination cannot pre-exist, so no
-    // delete-before-rename — a clobber here would be a UUID collision
-    if (!fs.rename(staging, dest))
-      throw new IllegalStateException(s"rename failed: $dest")
-    rel
+      writer.committed()
+    } catch { case t: Throwable =>
+      writer.close()
+      dropVector(spark, tablePath, rel)
+      throw t
+    }
+    val removes = affected.map(f =>
+      RemoveFile(f.path, commitTs, f.partitionValues))
+    val readds = affected.map(_.copy(
+      modificationTime = commitTs, dataChange = true, dv = Some(rel)))
+    val protocol =
+      if (snap.protocol.exists(_.minReaderVersion >= 2)) Seq.empty
+      else Seq(Protocol(2, 2))
+    (rel, protocol ++ removes ++ readds)
+  }
+
+  /** Drop an UNCOMMITTED vector dir (commit-retry cleanup). */
+  private[graft] def dropVector(
+      spark: SparkSession, tablePath: String, rel: String): Unit = {
+    val p = new Path(tablePath, rel)
+    try p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    catch { case _: Throwable => () }
   }
 
   /** The distinct values of string column `column` of `df`, in one
@@ -476,14 +507,6 @@ object DeletionVectors {
       .mapPartitions(_.toSet.iterator)(org.apache.spark.sql.Encoders.STRING)
       .collect().toSet
 
-  /** Drop an UNCOMMITTED staged vector dir (commit-retry cleanup). */
-  private[graft] def dropVector(
-      spark: SparkSession, tablePath: String, rel: String): Unit = {
-    val p = new Path(tablePath, rel)
-    try p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    catch { case _: Throwable => () }
-  }
-
   private def deleteRows(
       spark: SparkSession,
       tablePath: String,
@@ -496,50 +519,37 @@ object DeletionVectors {
     TxnLog.assertWritable(snap, tablePath)
     // the marker evaluates over the LIVE view (already-deleted rows
     // can't re-match — their deleted_at must keep the original version)
-    // persisted: feeds the affected-file discovery, the vector write,
-    // and (when the change feed is on) the delete change rows — without
-    // it the marking scan runs three times. Cache the narrowest frame
-    // every consumer can derive from: row handles in the common case,
-    // full rows only when the feed needs them.
     val cdfOn = ChangeDataFeed.enabled(snap)
     // loaded once: the marking scan drops them, the new vector carries them
     val loaded = masks(spark, tablePath, snap.files)
-    val markedRaw = mark(readSnapshot(spark, tablePath, snap,
+    val marked = mark(readSnapshot(spark, tablePath, snap,
       withRowMeta = true, masks = Some(loaded)))
-    val cached = (if (cdfOn) markedRaw
-      else markedRaw.select(col("_fn"), col("_ri"))).persist()
+    // with the change feed on, the marking scan also yields the delete
+    // change rows: cached, so the table is read once
+    if (cdfOn) marked.persist()
     try {
-    val affectedNames = distinctValues(cached, "_fn")
-    if (affectedNames.isEmpty) {
+    // the marking scan folds its kills into per-file bitmaps (one job)
+    val kills = collectKills(marked.select(col("_fn"), col("_ri")))
+    if (kills.isEmpty) {
       log.commit(version, Seq(CommitInfo("DELETE_DV", commitTs)))
       return
     }
     val affected = snap.files
-      .filter(f => affectedNames.contains(new Path(f.path).getName))
-    val rel = stageVector(spark, tablePath, version,
-      cached.select(col("_fn").as("file_name"), col("_ri").as("row_index")),
-      carryFrom = affected, masks = loaded)
-
-    val removes = affected.map(f =>
-      RemoveFile(f.path, commitTs, f.partitionValues))
-    val adds = affected.map(_.copy(
-      modificationTime = commitTs, dataChange = true, dv = Some(rel)))
-    val protocol: Seq[Action] =
-      if (snap.protocol.exists(_.minReaderVersion >= 2)) Seq.empty
-      else Seq(Protocol(2, 2))
+      .filter(f => kills.contains(new Path(f.path).getName))
+    val (_, vector) = commitVector(spark, tablePath, snap, version, commitTs,
+      kills, affected, loaded)
     // Change data feed: the exact deleted rows, straight from the cached
     // marking scan (no second table read)
     val cdcActions: Seq[Action] =
       if (!cdfOn) Seq.empty
       else ChangeDataFeed.stage(spark,
-        cached.drop("_fn", "_ri", "_path")
+        marked.drop("_fn", "_ri", "_path")
           .withColumn(ChangeDataFeed.TypeCol, lit(ChangeDataFeed.Delete)),
         tablePath, version, partitionColumns =
           snap.metadata.map(_.partitionColumns).getOrElse(Seq.empty))
     log.commit(version,
-      protocol ++ removes ++ adds ++ cdcActions :+
-        CommitInfo("DELETE_DV", commitTs))
-    } finally cached.unpersist()
+      vector ++ cdcActions :+ CommitInfo("DELETE_DV", commitTs))
+    } finally if (cdfOn) marked.unpersist()
   }
 
   /** Fold every deletion vector back into plain files: DV-carrying files

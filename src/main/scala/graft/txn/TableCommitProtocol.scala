@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 /** The commit protocol of every file a commit adds — data files, change
-  * data sidecars and row-level handles: each task writes its parquet
+  * data sidecars and deletion vectors: each task writes its parquet
   * files straight to final, attempt-unique names,
   * `<dir>/<stem>-<task>-<seq>-<writeId>.<attempt>.parquet`, so the log
   * commit is the only atomic step and nothing is renamed (on an object

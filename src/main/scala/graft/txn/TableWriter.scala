@@ -1226,11 +1226,12 @@ object TableWriter extends Serializable {
       .unionByName(cdcOrphans.select("rel"))
       .unionByName(dataOrphans.select("rel"))
 
-    // stale STAGING leftovers: only deletion vectors (`.staging-dv-*`,
-    // renamed into place on success) and row-level handles
-    // (`.staging-rlh-*`, dropped after the commit) are staged now — a
-    // crash before the commit strands the directory, and the dot-dir
-    // skip above would otherwise hide it from the sweep forever. Age by
+    // stale STAGING leftovers: no writer stages any more (every file
+    // lands at its final name, an uncommitted one is swept above as an
+    // orphan), but earlier writers staged deletion vectors
+    // (`.staging-dv-*`) and row-level handles (`.staging-rlh-*`), and a
+    // crash before their commit stranded the directory, which the
+    // dot-dir skip above would otherwise hide from the sweep forever. Age by
     // the NEWEST file inside the dir (an object store's dir mtime can be
     // creation time — a long-running statement still writing must not
     // lose its staging mid-flight); an empty dir falls back to its own

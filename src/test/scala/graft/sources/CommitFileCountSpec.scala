@@ -12,9 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * counts are exact: a second snapshot replay or a re-read of the
   * table's metadata shows as more `_txn_log` listings and opens.
   *
-  * SQL DML on a change-feed table writes its new data files and its
-  * change-data sidecars the same way: the one rename left is the
-  * deletion-vector directory's.
+  * SQL DML on a change-feed table writes its new data files, its
+  * change-data sidecars and its deletion vector the same way: nothing is
+  * renamed or staged, and the vector is one part file in its new `_dv/`
+  * directory. The Scala API's vector deletes write their vectors so too.
   */
 class CommitFileCountSpec extends AnyFunSuite {
   import graft.SparkTestSession._
@@ -125,16 +126,23 @@ class CommitFileCountSpec extends AnyFunSuite {
       CountingMockFs.renamed.asScala.toSeq.drop(renamed0))
   }
 
-  /** The deletion vector is the one thing still staged: Spark's file
-    * committer renames its part file twice (task commit, job commit)
-    * and the vector's directory moves into `_dv/` once. Nothing else —
-    * no data file, no change-data sidecar — is renamed.
+  /** The newest commit of `table` wrote its deletion vector in place:
+    * nothing renamed, no `.staging-*` path, and exactly one part file in
+    * the one new `_dv/` directory its re-added files point at.
     */
-  private def assertVectorRenamesOnly(moved: Seq[(String, String)]): Unit = {
-    assert(moved.forall(_._1.contains("/.staging-dv-")),
-      s"only the vector's staging may be renamed: ${moved.mkString("\n")}")
-    assert(moved.count(_._2.contains("/_dv/")) == 1, moved)
-    assert(moved.size == 3, moved)
+  private def assertVectorInPlace(table: String, c: Counts,
+      moved: Seq[(String, String)]): Unit = {
+    assert(moved.isEmpty && c.renames == 0,
+      s"nothing may be renamed: ${moved.mkString("\n")}")
+    assert(c.staging == 0, s"no .staging-* path may be created: $c")
+    val log = new TxnLog(table, spark.sessionState.newHadoopConf())
+    val dirs = log.read(log.latestVersion().get)
+      .collect { case a: AddFile if a.dv.isDefined => a.dv.get }.distinct
+    assert(dirs.size == 1 && dirs.head.startsWith("_dv/"), dirs)
+    val dir = new org.apache.hadoop.fs.Path(TxnLog.dataPath(table, dirs.head))
+    val parts = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(dir).map(_.getPath.getName).filter(_.endsWith(".parquet"))
+    assert(parts.length == 1, parts.mkString(", "))
   }
 
   private def newCdcFiles(t: String): Seq[CdcFile] = {
@@ -143,23 +151,23 @@ class CommitFileCountSpec extends AnyFunSuite {
     log.read(log.latestVersion().get).collect { case c: CdcFile => c }
   }
 
-  test("one SQL DV UPDATE on a change-feed table: only the " +
-      "vector is renamed, no change-data staging") {
+  test("one SQL DV UPDATE on a change-feed table: the vector is " +
+      "written in place, nothing renamed or staged") {
     dmlTable("u")
     val (c, cdc, moved) = countedDml(spark.sql(
       "UPDATE gcfc.default.u SET v = v + 1 WHERE k IN (4, 9)"))
     info(s"UPDATE: $c")
     assert(newCdcFiles("u").map(_.partitionValues("p")).sorted ==
       Seq("0", "1"), "one sidecar per changed partition")
-    assertVectorRenamesOnly(moved)
+    assertVectorInPlace(s"$warehouse/default/u", c, moved)
     assert(cdc == 0, "no .staging-cdc* path may be created")
     assert(c.driverDataOpens == DmlDriverDataOpens, c)
     assert(spark.sql("SELECT sum(v) FROM gcfc.default.u").head().getLong(0)
       == (0 until 40).map(10L * _).sum + 2)
   }
 
-  test("one SQL MERGE on a change-feed table: only the vector is " +
-      "renamed, no change-data staging") {
+  test("one SQL MERGE on a change-feed table: the vector is written " +
+      "in place, nothing renamed or staged") {
     dmlTable("m")
     spark.sql("SELECT * FROM VALUES (4L, 0, -4L), (9L, 1, -9L), " +
       "(100L, 2, 1000L) AS s(k, p, v)").createOrReplaceTempView("cfc_src")
@@ -171,11 +179,45 @@ class CommitFileCountSpec extends AnyFunSuite {
     info(s"MERGE: $c")
     assert(newCdcFiles("m").map(_.partitionValues("p")).sorted ==
       Seq("0", "1", "2"), "one sidecar per changed partition")
-    assertVectorRenamesOnly(moved)
+    assertVectorInPlace(s"$warehouse/default/m", c, moved)
     assert(cdc == 0, "no .staging-cdc* path may be created")
     assert(c.driverDataOpens == DmlDriverDataOpens, c)
     assert(spark.sql("SELECT count(*) FROM gcfc.default.m").head().getLong(0)
       == 41L)
+  }
+
+  test("one SQL DELETE in deletion-vector mode on a change-feed table: " +
+      "the vector is written in place, nothing renamed or staged") {
+    dmlTable("d")
+    spark.conf.set("spark.graft.delete.mode", "dv")
+    val (c, cdc, moved) =
+      try countedDml(spark.sql("DELETE FROM gcfc.default.d WHERE k IN (4, 9)"))
+      finally spark.conf.unset("spark.graft.delete.mode")
+    info(s"DELETE: $c")
+    assert(newCdcFiles("d").map(_.partitionValues("p")).sorted ==
+      Seq("0", "1"), "one sidecar per changed partition")
+    assertVectorInPlace(s"$warehouse/default/d", c, moved)
+    assert(cdc == 0, "no .staging-cdc* path may be created")
+    assert(c.driverDataOpens == DmlDriverDataOpens, c)
+    assert(spark.sql("SELECT count(*) FROM gcfc.default.d").head().getLong(0)
+      == 38L)
+  }
+
+  test("DeletionVectors.deleteWhere then deleteMatching on the same " +
+      "files: each vector is written in place, the second carrying the " +
+      "first's kills") {
+    val t = freshTable()
+    TableWriter.write(spark, rows(0L, 400L), t, Seq("p"), version = 0L,
+      commitTs = 1000L)
+    val (c1, _, moved1) = countedDml(DeletionVectors.deleteWhere(spark, t,
+      org.apache.spark.sql.functions.col("id") % 10 === 0, version = 1L,
+      commitTs = 2000L))
+    assertVectorInPlace(t, c1, moved1)
+    val (c2, _, moved2) = countedDml(DeletionVectors.deleteMatching(spark, t,
+      spark.range(2L, 400L, 20L).toDF("id"), Seq("id"), version = 2L,
+      commitTs = 3000L))
+    assertVectorInPlace(t, c2, moved2)
+    assert(SnapshotReader.read(spark, t).count() == 400L - 40L - 20L)
   }
 
   // the DML statements open no data file on the driver

@@ -123,9 +123,10 @@ class DmlJobCountSpec extends AnyFunSuite
     assert(table("u") == before -- hit ++ post)
     assert(changes("u") == Map(
       ChangeDataFeed.UpdatePre -> hit, ChangeDataFeed.UpdatePost -> post))
-    // the WriteDelta job; the vector write; the change rows: broadcast
-    // of the handles for the pre-image join, shuffle by partition, write
-    assertJobs("DV UPDATE", sites, 5)
+    // the WriteDelta job, whose tasks return the kills (the driver
+    // writes the vector, no job); the change rows' shuffle by partition
+    // and write (the pre-images are picked from the kills, no join)
+    assertJobs("DV UPDATE", sites, 3)
   }
 
   test("MERGE: jobs, table and change rows") {
@@ -146,8 +147,8 @@ class DmlJobCountSpec extends AnyFunSuite
     assert(changes("m") == Map(ChangeDataFeed.UpdatePre -> hit,
       ChangeDataFeed.UpdatePost -> post, ChangeDataFeed.Insert -> ins))
     // the MERGE join's two shuffle stages and its WriteDelta job; then
-    // the same four commit jobs as the UPDATE
-    assertJobs("MERGE", sites, 7)
+    // the same two change-row jobs as the UPDATE
+    assertJobs("MERGE", sites, 5)
   }
 
   test("DV DELETE: jobs, table and change rows") {
@@ -159,10 +160,11 @@ class DmlJobCountSpec extends AnyFunSuite
     val hit = before.filter(r => r._1 == 8L || r._1 == 13L)
     assert(table("d") == before -- hit)
     assert(changes("d") == Map(ChangeDataFeed.Delete -> hit))
-    // the marking scan, which fills the cache and collects the affected
-    // files (the vector's masks are loaded on the driver, no job); the
-    // vector write; the change rows' shuffle and write, both from the cache
-    assertJobs("DV DELETE", sites, 4)
+    // the marking scan, which fills the cache and collects the kills as
+    // per-file bitmaps (the masks are loaded and the vector written on
+    // the driver, no job); the change rows' shuffle and write, both from
+    // the cache
+    assertJobs("DV DELETE", sites, 3)
   }
 
   test("copy-on-write DELETE: jobs, table and change rows") {

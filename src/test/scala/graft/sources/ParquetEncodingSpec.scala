@@ -18,7 +18,9 @@ import scala.jdk.CollectionConverters._
   * change-data sidecars of each that has them. Each file's footer must
   * name the session's `spark.sql.parquet.compression.codec` (set to a
   * non-default codec here, so a writer that ignores the session shows)
-  * and store TIMESTAMP columns as INT64 `TIMESTAMP_MICROS`.
+  * and store TIMESTAMP columns as INT64 `TIMESTAMP_MICROS`. The
+  * deletion vector of a DV-mode UPDATE or MERGE is checked for the codec
+  * too (it holds no timestamp).
   */
 class ParquetEncodingSpec extends AnyFunSuite
     with org.scalatest.BeforeAndAfterAll {
@@ -76,6 +78,33 @@ class ParquetEncodingSpec extends AnyFunSuite
     }
   }
 
+  /** `rel`'s column chunks, each checked against the session codec. */
+  private def chunksOf(table: String, rel: String, what: String) = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(TxnLog.dataPath(table, rel)), conf))
+    try {
+      val footer = reader.getFooter
+      val chunks = footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      assert(chunks.nonEmpty, s"$what: $rel holds no rows")
+      chunks.foreach(c => assert(c.getCodec == Codec,
+        s"$what: $rel column ${c.getPath} is ${c.getCodec}, not $Codec"))
+      footer.getFileMetaData.getSchema
+    } finally reader.close()
+  }
+
+  /** The newest commit's deletion vector: one part file, in the codec. */
+  private def assertVectorEncoding(table: String, what: String): Unit = {
+    val log = new TxnLog(table, conf)
+    val dirs = log.read(log.latestVersion().get)
+      .collect { case a: AddFile if a.dv.isDefined => a.dv.get }.distinct
+    assert(dirs.size == 1, s"$what: one new vector expected: $dirs")
+    val dir = new Path(TxnLog.dataPath(table, dirs.head))
+    val parts = dir.getFileSystem(conf).listStatus(dir)
+      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+    assert(parts.length == 1, s"$what: ${parts.mkString(", ")}")
+    chunksOf(table, s"${dirs.head}/${parts.head}", s"$what vector")
+  }
+
   private def assertEncoding(table: String, what: String,
       sidecars: Boolean): Unit = {
     val files = addedFiles(table)
@@ -84,22 +113,12 @@ class ParquetEncodingSpec extends AnyFunSuite
     assert(files.exists(_.startsWith("_change_data/")) == sidecars,
       s"$what: change-data sidecars expected = $sidecars: $files")
     files.foreach { rel =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(TxnLog.dataPath(table, rel)), conf))
-      try {
-        val footer = reader.getFooter
-        val chunks = footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
-        assert(chunks.nonEmpty, s"$what: $rel holds no rows")
-        chunks.foreach(c => assert(c.getCodec == Codec,
-          s"$what: $rel column ${c.getPath} is ${c.getCodec}, not $Codec"))
-        val schema = footer.getFileMetaData.getSchema
-        val ts = schema.getType(schema.getFieldIndex("ts"))
-          .asPrimitiveType()
-        assert(ts.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
-          ts.getLogicalTypeAnnotation == LogicalTypeAnnotation.timestampType(
-            true, LogicalTypeAnnotation.TimeUnit.MICROS),
-          s"$what: $rel stores ts as $ts")
-      } finally reader.close()
+      val schema = chunksOf(table, rel, what)
+      val ts = schema.getType(schema.getFieldIndex("ts")).asPrimitiveType()
+      assert(ts.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+        ts.getLogicalTypeAnnotation == LogicalTypeAnnotation.timestampType(
+          true, LogicalTypeAnnotation.TimeUnit.MICROS),
+        s"$what: $rel stores ts as $ts")
     }
   }
 
@@ -132,12 +151,14 @@ class ParquetEncodingSpec extends AnyFunSuite
       spark.sql("UPDATE gpe.default.dvu SET v = v + 1 WHERE k IN (4, 5)")
     }
     assertEncoding(t, "DV UPDATE", sidecars = true)
+    assertVectorEncoding(t, "DV UPDATE")
   }
 
   test("SQL MERGE, deletion-vector mode, and its change-data sidecars") {
     val t = freshTable("dvm")
     withConf("spark.graft.update.mode", "dv")(spark.sql(mergeSql("dvm")))
     assertEncoding(t, "DV MERGE", sidecars = true)
+    assertVectorEncoding(t, "DV MERGE")
   }
 
   test("SQL MERGE, copy-on-write mode") {
