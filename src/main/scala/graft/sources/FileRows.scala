@@ -126,26 +126,31 @@ private[sources] final class FileRows private (
       private def valueAt(i: Int): Any =
         if (row.isNullAt(i)) null else row.get(i, types(i))
 
-      override def get(): InternalRow = {
-        val values = new Array[Any](out.length)
-        var i = 0
-        while (i < out.length) {
-          values(i) = out(i) match {
-            case Read(j) => valueAt(j)
-            case Value(v) => v
-            case Pos => pos
-            case RowId(j, base) =>
-              // a physical id column (an id-preserving rewrite) wins
-              if (!row.isNullAt(j)) row.getLong(j)
-              else base match {
-                case Some(b) => b + pos
-                case None => null
-              }
+      private def valueOf(o: Out): Any = o match {
+        case Read(j) => valueAt(j)
+        case Value(v) => v
+        case Pos => pos
+        case RowId(j, base) =>
+          // a physical id column (an id-preserving rewrite) wins
+          if (!row.isNullAt(j)) row.getLong(j)
+          else base match {
+            case Some(b) => b + pos
+            case None => null
           }
+        case Struct(fields) => valuesOf(fields)
+      }
+
+      private def valuesOf(fields: Array[Out]): InternalRow = {
+        val values = new Array[Any](fields.length)
+        var i = 0
+        while (i < fields.length) {
+          values(i) = valueOf(fields(i))
           i += 1
         }
         new GenericInternalRow(values)
       }
+
+      override def get(): InternalRow = valuesOf(out)
 
       override def close(): Unit = rows match {
         case c: java.io.Closeable => c.close()
@@ -171,6 +176,8 @@ private[sources] object FileRows {
     * `base` + position, else null.
     */
   final case class RowId(i: Int, base: Option[Long]) extends Out
+  /** A struct of `fields`. */
+  final case class Struct(fields: Array[Out]) extends Out
 
   /** A file's deletion-vector mask, loaded where the partitions are
     * planned ([[graft.txn.DeletionVectors.masks]]): by default the

@@ -78,6 +78,15 @@ private[sources] object GraftBatch {
     */
   val PosMetadataColumn = "_graft_pos"
 
+  /** Metadata column exposing each row as read, a struct of the table's
+    * columns: the old row a merge-on-read UPDATE, MERGE or DELETE hands
+    * its writer as the change feed's pre-image. Spark preserves a
+    * metadata column on update and delete by default
+    * (`MetadataColumn.PRESERVE_ON_UPDATE` / `PRESERVE_ON_DELETE`). Built
+    * only where a plan requests it.
+    */
+  val PreimageMetadataColumn = "_graft_preimage"
+
   /** The snapshot a scan binds to: resolved once, on the driver. */
   final case class Resolved(
       tablePath: String,
@@ -334,6 +343,13 @@ private[sources] class GraftBatchTable(
         override def dataType(): org.apache.spark.sql.types.DataType =
           org.apache.spark.sql.types.LongType
         override def isNullable: Boolean = false
+      },
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = GraftBatch.PreimageMetadataColumn
+        override def dataType(): org.apache.spark.sql.types.DataType =
+          tableSchema
+        // NULL in the rows a MERGE inserts
+        override def isNullable: Boolean = true
       })
 
   /** SQL `MERGE INTO` / `UPDATE` (and predicate DELETEs SupportsDelete
@@ -385,7 +401,7 @@ private[sources] class GraftBatchTable(
     () =>
       if (useDv)
         new GraftDeltaRowLevelOperation(info.command(), properties,
-          partitionColumns)
+          partitionColumns, ChangeDataFeed.enabled(snap))
       else
         new GraftRowLevelOperation(info.command(), properties,
           partitionColumns)
@@ -1236,17 +1252,29 @@ private[sources] class GraftBatchScan(
     }
   }
 
-  /** The file reader of this scan, built once at planning: the pruned
-    * PHYSICAL schema (file-spelling names) minus the metadata columns no
-    * file carries — `_graft_row_id` stays, read where a rewrite
-    * materialized it.
+  /** The logical columns the files are read for: the required ones
+    * minus the metadata columns no file carries (`_graft_row_id` stays,
+    * read where a rewrite materialized it), plus every table column when
+    * the pre-image is required.
+    */
+  private lazy val readColumns: StructType = {
+    val direct = required.fields.filterNot(f =>
+      f.name == GraftBatch.FileMetadataColumn ||
+        f.name == GraftBatch.PosMetadataColumn ||
+        f.name == GraftBatch.PreimageMetadataColumn)
+    val whole =
+      if (!required.fieldNames.contains(GraftBatch.PreimageMetadataColumn))
+        Array.empty[StructField]
+      else resolved.schema.fields.filterNot(f => direct.exists(_.name == f.name))
+    StructType(direct ++ whole)
+  }
+
+  /** The file reader of this scan, built once at planning, over the
+    * PHYSICAL (file-spelling) names of [[readColumns]].
     */
   private lazy val rows: FileRows = {
     val spark = org.apache.spark.sql.SparkSession.active
-    FileRows(spark, StructType(
-      ColumnMapping.physicalSchema(required, resolved.mapping).fields
-        .filterNot(f => f.name == GraftBatch.FileMetadataColumn ||
-          f.name == GraftBatch.PosMetadataColumn)),
+    FileRows(spark, ColumnMapping.physicalSchema(readColumns, resolved.mapping),
       spark.sessionState.newHadoopConf())
   }
 
@@ -1298,7 +1326,8 @@ private[sources] class GraftBatchScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftBatchReaderFactory(rows, required)
+    new GraftBatchReaderFactory(rows, readColumns.fieldNames, required,
+      resolved.schema.fieldNames)
 }
 
 /** One byte range of a live data file of the bound snapshot; rows its
@@ -1333,27 +1362,29 @@ private[sources] case class GraftBatchPartition(
   * compares against), `_graft_pos` the raw position in the file (with the
   * file, the delta row-level operation's row id — exactly the handle a
   * deletion-vector sidecar marks dead), `_graft_row_id` the stable row
-  * id; every other column is read or comes from the log's partition
-  * values.
+  * id, `_graft_preimage` the row's `tableColumns` as a struct; every
+  * other column is read (`readColumns`, in read order) or comes from the
+  * log's partition values.
   */
 private[sources] class GraftBatchReaderFactory(rows: FileRows,
-    required: StructType) extends PartitionReaderFactory {
+    readColumns: Array[String], required: StructType,
+    tableColumns: Array[String]) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val f = p.asInstanceOf[GraftBatchPartition]
     val columns = rows.columns(f.partitionValues)
-    val names = rows.readSchema.fieldNames
-    var next = 0 // required minus the two unread metadata columns = read order
+    def slot(name: String): FileRows.Out = {
+      val i = readColumns.indexOf(name)
+      if (name == GraftBatch.RowIdMetadataColumn) FileRows.RowId(i, f.baseRowId)
+      else columns(i)
+    }
     val out = required.fieldNames.map {
       case GraftBatch.FileMetadataColumn =>
         FileRows.Value(org.apache.spark.unsafe.types.UTF8String
           .fromString(f.filePath))
       case GraftBatch.PosMetadataColumn => FileRows.Pos
-      case _ =>
-        val i = next
-        next += 1
-        if (names(i) == GraftBatch.RowIdMetadataColumn)
-          FileRows.RowId(i, f.baseRowId)
-        else columns(i)
+      case GraftBatch.PreimageMetadataColumn =>
+        FileRows.Struct(tableColumns.map(slot))
+      case name => slot(name)
     }
     rows.open(f.filePath, (f.rangeStart, f.rangeEnd), f.size, out,
       dv = f.dv, limit = f.limit)

@@ -6,10 +6,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.functions.{col, lit, when}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import scala.collection.mutable
@@ -37,27 +35,28 @@ import scala.jdk.CollectionConverters._
   * [[SupportsDelta]]: each task's [[DeltaWriter]] receives discriminated
   * delete(id) / update(id, row) / insert(row) calls, so exact CDF images
   * come for free — each task folds its dead row ids into per-file
-  * Roaring bitmaps, one set for updates ('u') and one for deletes ('d'),
-  * and writes update rows and insert rows to SEPARATE data files.
+  * Roaring bitmaps and writes update images and inserts as new files.
   *
-  * The commit step runs as few Spark jobs as it can:
+  * The commit step runs no Spark job of its own:
   *  - the kills arrive in the tasks' commit messages: the affected files
   *    are their keys, and the driver ORs them per file, so nothing is
   *    staged, re-read or shuffled to learn them;
   *  - the driver writes the new vector — these kills plus the affected
   *    files' carried kills from the masks the scan loaded — in place,
   *    with no Spark job ([[DeletionVectors.commitVector]]);
-  *  - update_preimage/delete rows come from a PLAIN scan of the affected
-  *    files (the only re-read, proportional to AFFECTED files, not the
-  *    table) that keeps the positions this statement killed and tags
-  *    each by its kind. No vector is applied there: the kills name rows
-  *    that were live at scan time, and the identity check proves the
-  *    files' pointers unchanged since.
+  *  - with the change feed on, the tasks write the change rows as they
+  *    see them ([[ChangeRows]]): the old row arrives as the preserved
+  *    `_graft_preimage` metadata column (update_preimage, delete), the
+  *    new one as the written row (update_postimage, insert). Nothing is
+  *    re-read or read back, and no job shuffles the change rows (a
+  *    MERGE's join shuffle carries the old row along with the target
+  *    row); the sidecars are per (task, changed partition).
   */
 private[sources] class GraftDeltaRowLevelOperation(
     cmd: RowLevelOperation.Command,
     properties: Map[String, String],
-    partitionColumns: Seq[String])
+    partitionColumns: Seq[String],
+    changeFeed: Boolean)
   extends RowLevelOperation with SupportsDelta {
 
   private val tablePath = properties("tablePath")
@@ -92,26 +91,28 @@ private[sources] class GraftDeltaRowLevelOperation(
       override def build(): DeltaWrite = new DeltaWrite {
         override def toBatch: DeltaBatchWrite = new GraftDeltaBatchWrite(
           tablePath, info.schema(), partitionColumns,
-          () => Option(builtScan), () => builtFilters, cmd.toString)
+          () => Option(builtScan), () => builtFilters, cmd.toString,
+          preimages = changeFeed)
       }
     }
 
-  // row ids arrive via rowId(); partition values ride the data row
+  // row ids arrive via rowId(); partition values ride the data row; the
+  // old row, for the change feed's pre-images (row ids must not be null,
+  // so it cannot ride there)
   override def requiredMetadataAttributes(): Array[NamedReference] =
-    Array.empty
+    if (changeFeed) Array(Expressions.column(GraftBatch.PreimageMetadataColumn))
+    else Array.empty
 }
 
-/** One task's delta output: new data files (update images and inserts
-  * written SEPARATELY so the commit can classify CDF rows without
-  * re-deriving anything) and the rows it killed, as serialized Roaring
-  * bitmaps of raw positions per data file basename: those an UPDATE
-  * replaced and those a DELETE removed.
+/** One task's delta output: new data files (update images and inserts),
+  * the rows it killed (updated or deleted), as serialized Roaring bitmaps
+  * of raw positions per data file basename, and the change-data sidecars
+  * it wrote.
   */
 private[sources] case class GraftDeltaCommitMessage(
-    updateAdds: Seq[AddFile],
-    insertAdds: Seq[AddFile],
-    updated: Seq[(String, Array[Byte])],
-    deleted: Seq[(String, Array[Byte])]) extends WriterCommitMessage
+    adds: Seq[AddFile],
+    kills: Seq[(String, Array[Byte])],
+    changes: Seq[CdcFile]) extends WriterCommitMessage
 
 /** The merge-on-read commit: one DV directory (new dead rows + carried
   * prior kills of the affected files), re-adds of the affected files
@@ -119,6 +120,13 @@ private[sources] case class GraftDeltaCommitMessage(
   * — all in ONE log version, under the same two conflict checks as the
   * copy-on-write path (AddFile IDENTITY on every file gaining a
   * pointer; no concurrently appended file may have matched the read).
+  *
+  * The change feed is on for the statement iff it is on in the scan's
+  * bound snapshot; `preimages` says the plan carries the old rows it
+  * then needs. A statement that finds the setting changed, at the write
+  * or at the commit, fails as a conflict. Sidecars are named for the
+  * version after the bound one; a commit that lands later renames them
+  * first, so each carries the version it commits at.
   */
 private[sources] class GraftDeltaBatchWrite(
     tablePath: String,
@@ -126,9 +134,17 @@ private[sources] class GraftDeltaBatchWrite(
     partCols: Seq[String],
     boundScan: () => Option[GraftBatchScan],
     pushedFilters: () => Array[org.apache.spark.sql.sources.Filter],
-    cmdName: String) extends DeltaBatchWrite {
+    cmdName: String,
+    preimages: Boolean = false) extends DeltaBatchWrite {
 
   private val op = s"${cmdName}_DV"
+
+  private lazy val changeFeed: Boolean = boundScan()
+    .exists(s => ChangeDataFeed.enabled(s.boundResolved.tableProperties))
+
+  private def feedConflict() = new IllegalStateException(
+    s"$op conflict at $tablePath: the change data feed was switched " +
+      "on or off since the statement was planned — re-run the statement")
 
   require(!dataSchema.fieldNames.contains(GraftBatch.FileMetadataColumn) &&
       !dataSchema.fieldNames.contains(GraftBatch.PosMetadataColumn),
@@ -139,8 +155,20 @@ private[sources] class GraftDeltaBatchWrite(
     .sessionState.newHadoopConf()
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DeltaWriterFactory =
-    GraftDeltaWriterFactory(TaskFiles.prepare(tablePath, dataSchema, partCols))
+      info: PhysicalWriteInfo): DeltaWriterFactory = {
+    if (changeFeed != preimages) throw feedConflict()
+    val changes = boundScan().filter(_ => changeFeed).map { scan =>
+      // the pre-image struct is the bound schema's columns, in order
+      require(scan.boundResolved.schema.fieldNames.sameElements(
+          dataSchema.fieldNames),
+        s"$op at $tablePath: write columns ${dataSchema.simpleString} " +
+          s"differ from the scanned ${scan.boundResolved.schema.simpleString}")
+      ChangeRows.prepare(tablePath, dataSchema,
+        scan.boundResolved.partitionColumns, scan.boundVersion + 1)
+    }
+    GraftDeltaWriterFactory(TaskFiles.prepare(tablePath, dataSchema, partCols),
+      changes)
+  }
 
   private def collect(messages: Array[WriterCommitMessage])
       : Seq[GraftDeltaCommitMessage] =
@@ -149,19 +177,15 @@ private[sources] class GraftDeltaBatchWrite(
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val msgs = collect(messages)
-    val updateAdds = msgs.flatMap(_.updateAdds)
-    val insertAdds = msgs.flatMap(_.insertAdds)
-    val newAdds = updateAdds ++ insertAdds
+    val newAdds = msgs.flatMap(_.adds)
+    var changes = msgs.flatMap(_.changes)
     // this statement's kills per file, from the tasks Spark accepted
-    val updated = DeletionVectors.orKills(msgs.flatMap(_.updated))
-    val kills =
-      DeletionVectors.orKills(msgs.flatMap(m => m.updated ++ m.deleted))
+    val kills = DeletionVectors.orKills(msgs.flatMap(_.kills))
     val log = new TxnLog(tablePath, conf)
     def fail(t: Throwable): Nothing = {
-      GraftRowLevelOps.dropFiles(tablePath, conf, newAdds)
+      dropFiles(newAdds, changes)
       throw t
     }
-    GraftRowLevelOps.validateReplacement(tablePath, conf, newAdds, log)
 
     val scan = boundScan().getOrElse(throw new IllegalStateException(
       s"$op at $tablePath: no bound scan — the delta write cannot " +
@@ -189,9 +213,18 @@ private[sources] class GraftDeltaBatchWrite(
     val ts = System.currentTimeMillis()
     var attempt = 0
     var committed = false
+    var validated: Option[Option[Metadata]] = None
+    var named = scan.boundVersion + 1 // the version the sidecars carry
     while (!committed) {
       val snap = log.snapshotLatest()
       TxnLog.assertWritable(snap, tablePath)
+      if (ChangeDataFeed.enabled(snap) != changeFeed) fail(feedConflict())
+      // the new rows obey the table's rules as of the commit
+      if (!validated.contains(snap.metadata)) {
+        try GraftRowLevelOps.validateReplacement(tablePath, newAdds, snap)
+        catch { case t: Throwable => fail(t) }
+        validated = Some(snap.metadata)
+      }
       // identity, not path: a concurrent DV delete re-adds the same
       // path with a NEW pointer — re-pointing it from OUR carried set
       // would silently resurrect the concurrently deleted rows
@@ -203,7 +236,7 @@ private[sources] class GraftDeltaBatchWrite(
             s"changed or vanished since the scan (e.g. " +
             s"${stale.head.path}) — re-run the statement"))
       val matching = GraftRowLevelOps.matchingConcurrentAppends(
-        log, scan, pushedFilters())
+        log, snap, scan, pushedFilters())
       if (matching.nonEmpty)
         fail(new IllegalStateException(
           s"$op conflict at $tablePath: ${matching.size} file(s) " +
@@ -211,19 +244,21 @@ private[sources] class GraftDeltaBatchWrite(
             s"(e.g. ${matching.head.path}) — re-run the statement"))
 
       val version = snap.version + 1
+      if (version != named) {
+        changes =
+          try changes.map(ChangeRows.renamed(tablePath, conf, _, version))
+          catch { case t: Throwable => fail(t) }
+        named = version
+      }
       // the new vector: this statement's kills + the affected files'
       // prior kills (pointers replace, never chain)
       val vector =
         if (kills.isEmpty) None
         else Some(DeletionVectors.commitVector(spark, tablePath, snap,
           version, ts, kills, affected, scan.masks))
-      val cdcActions: Seq[Action] =
-        if (!ChangeDataFeed.enabled(snap)) Seq.empty
-        else stageCdf(spark, snap, affected, kills, updated, updateAdds,
-          insertAdds, version)
       try {
         log.commit(version,
-          vector.toSeq.flatMap(_._2) ++ newAdds ++ cdcActions :+
+          vector.toSeq.flatMap(_._2) ++ newAdds ++ changes :+
             CommitInfo(op, ts))
         committed = true
       } catch {
@@ -231,8 +266,7 @@ private[sources] class GraftDeltaBatchWrite(
             if e.getMessage != null &&
               e.getMessage.startsWith("concurrent commit") =>
           // the vector is version-named: drop it and write it again
-          // against the new head next attempt (CDC files re-stage too;
-          // uncommitted leftovers are invisible and vacuum-swept)
+          // against the new head next attempt (the sidecars are renamed)
           vector.foreach(v => DeletionVectors.dropVector(spark, tablePath, v._1))
           attempt += 1
           if (attempt > 20) fail(e)
@@ -241,135 +275,93 @@ private[sources] class GraftDeltaBatchWrite(
     }
   }
 
-  /** Exact change rows for the feed: update/delete PREIMAGES are the
-    * killed positions of a plain scan of the affected files (the only
-    * re-read — affected files, never the table), an update's where
-    * `updated` names it; update POSTIMAGES and inserts read straight from
-    * the just-written new files.
-    *
-    * The pre-image scan applies no deletion vector: the kills name rows
-    * that were live at scan time, and the commit's identity check proved
-    * the affected files' pointers unchanged since, so the kills alone
-    * pick exactly the pre-images.
-    */
-  private def stageCdf(
-      spark: org.apache.spark.sql.SparkSession,
-      snap: Snapshot,
-      affected: Seq[AddFile],
-      kills: Map[String, Roaring64Bitmap],
-      updated: Map[String, Roaring64Bitmap],
-      updateAdds: Seq[AddFile],
-      insertAdds: Seq[AddFile],
-      version: Long): Seq[CdcFile] = {
-    val declared = snap.metadata.map(m =>
-      DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
-    val partitionColumns =
-      snap.metadata.map(_.partitionColumns).getOrElse(Seq.empty)
-    // every affected file keyed, so a file with no entry in `bms` picks none
-    def picks(bms: Map[String, Roaring64Bitmap]) =
-      DeletionVectors.picked(spark, col("_fn"), col("_ri"),
-        kills.keys.map(n => (UTF8String.fromString(n): Any) ->
-          (bms.getOrElse(n, new Roaring64Bitmap()) -> true)).toMap)
-    val pre = if (affected.isEmpty) None else Some(
-      DeletionVectors.readFiles(spark, tablePath, affected, declared,
-          withRowMeta = true, masks = Some(DeletionVectors.Masks.empty))
-        .filter(picks(kills))
-        .withColumn(ChangeDataFeed.TypeCol,
-          when(picks(updated), ChangeDataFeed.UpdatePre)
-            .otherwise(ChangeDataFeed.Delete))
-        .drop("_fn", "_ri", "_path"))
-    def readNew(adds: Seq[AddFile], kind: String) =
-      if (adds.isEmpty) None
-      else Some(declared.fold(spark.read)(s => spark.read.schema(s))
-        .option("basePath", tablePath)
-        .parquet(adds.map(a => TxnLog.dataPath(tablePath, a.path)): _*)
-        .withColumn(ChangeDataFeed.TypeCol, lit(kind)))
-    val frames = pre.toSeq ++
-      readNew(updateAdds, ChangeDataFeed.UpdatePost).toSeq ++
-      readNew(insertAdds, ChangeDataFeed.Insert).toSeq
-    if (frames.isEmpty) Seq.empty
-    else ChangeDataFeed.stage(spark, frames.reduce(_ unionByName _),
-      tablePath, version, partitionColumns)
+  private def dropFiles(adds: Seq[AddFile], changes: Seq[CdcFile]): Unit = {
+    GraftRowLevelOps.dropFiles(tablePath, conf, adds)
+    ChangeRows.drop(tablePath, conf, changes)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = collect(messages)
-    GraftRowLevelOps.dropFiles(tablePath, conf,
-      msgs.flatMap(m => m.updateAdds ++ m.insertAdds))
+    dropFiles(msgs.flatMap(_.adds), msgs.flatMap(_.changes))
   }
 }
 
-private[sources] case class GraftDeltaWriterFactory(data: TaskFiles)
-    extends DeltaWriterFactory {
+private[sources] case class GraftDeltaWriterFactory(data: TaskFiles,
+    changes: Option[ChangeRows]) extends DeltaWriterFactory {
 
   override def createWriter(
       partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new GraftDeltaDataWriter(data, partitionId, taskId)
+    new GraftDeltaDataWriter(data, changes.map(_.writer(partitionId, taskId)),
+      partitionId, taskId)
 }
 
-/** One task's delta writer. Update images and inserts go to SEPARATE
-  * data files (distinct name stems) so the commit can classify CDF rows
-  * by file provenance; both are the same [[GraftStreamingDataWriter]]
-  * (Spark's parquet writer, names from [[TableCommitProtocol]]) and both
-  * are lazy — a task that only deletes writes no file at all. Killed
-  * row ids fold into one Roaring bitmap per data file and kind, which
-  * the commit message carries to the driver.
+/** One task's delta writer. Update images and inserts go to new data
+  * files through [[GraftStreamingDataWriter]] (Spark's parquet writer,
+  * names from [[TableCommitProtocol]]), opened lazily — a task that only
+  * deletes writes no data file at all. Killed row ids fold into one
+  * Roaring bitmap per data file, which the commit message carries to the
+  * driver. With the change feed on, every call also writes its change
+  * rows: the old row from `meta` (the `_graft_preimage` struct), the new
+  * one from `row`.
   */
 private[sources] class GraftDeltaDataWriter(
     data: TaskFiles,
+    changes: Option[ChangeRows.Writer],
     partitionId: Int,
     taskId: Long) extends DeltaWriter[InternalRow] {
 
-  private var updWriter: GraftStreamingDataWriter = _
-  private var insWriter: GraftStreamingDataWriter = _
-  private val updated = mutable.HashMap.empty[String, Roaring64Bitmap]
-  private val deleted = mutable.HashMap.empty[String, Roaring64Bitmap]
+  private var rows: GraftStreamingDataWriter = _
+  private val kills = mutable.HashMap.empty[String, Roaring64Bitmap]
+  private val width = data.schema.length
 
-  private def kill(into: mutable.HashMap[String, Roaring64Bitmap],
-      id: InternalRow): Unit = {
+  private def kill(id: InternalRow): Unit = {
     // rowId() order: (_graft_file absolute path, _graft_pos)
     val abs = id.getUTF8String(0).toString
-    into.getOrElseUpdate(abs.substring(abs.lastIndexOf('/') + 1),
+    kills.getOrElseUpdate(abs.substring(abs.lastIndexOf('/') + 1),
       new Roaring64Bitmap()).addLong(id.getLong(1))
   }
 
-  override def delete(meta: InternalRow, id: InternalRow): Unit =
-    kill(deleted, id)
+  private def add(row: InternalRow, kind: String): Unit = {
+    if (rows == null)
+      rows = new GraftStreamingDataWriter(data, "part-s00001", partitionId, taskId)
+    rows.write(row)
+    changes.foreach(_.write(row, kind))
+  }
+
+  private def preimage(meta: InternalRow, kind: String): Unit =
+    changes.foreach(_.write(meta.getStruct(0, width), kind))
+
+  override def delete(meta: InternalRow, id: InternalRow): Unit = {
+    kill(id)
+    preimage(meta, ChangeDataFeed.Delete)
+  }
 
   override def update(
       meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
-    kill(updated, id)
-    if (updWriter == null)
-      updWriter =
-        new GraftStreamingDataWriter(data, "part-s00001", partitionId, taskId)
-    updWriter.write(row)
+    kill(id)
+    preimage(meta, ChangeDataFeed.UpdatePre)
+    add(row, ChangeDataFeed.UpdatePost)
   }
 
-  override def insert(row: InternalRow): Unit = {
-    if (insWriter == null)
-      insWriter =
-        new GraftStreamingDataWriter(data, "part-s00002", partitionId, taskId)
-    insWriter.write(row)
-  }
-
-  private def writers = Seq(updWriter, insWriter).filter(_ != null)
-
-  private def committed(w: GraftStreamingDataWriter) =
-    Option(w).toSeq.flatMap(_.committed())
-
-  private def serialized(kills: mutable.HashMap[String, Roaring64Bitmap]) =
-    kills.toSeq.map { case (f, bm) => f -> DeletionVectors.serializeBitmap(bm) }
+  override def insert(row: InternalRow): Unit = add(row, ChangeDataFeed.Insert)
 
   override def commit(): WriterCommitMessage = {
     val now = System.currentTimeMillis()
     GraftDeltaCommitMessage(
-      updateAdds = committed(updWriter).map(_.addFile(now, dataChange = true)),
-      insertAdds = committed(insWriter).map(_.addFile(now, dataChange = true)),
-      updated = serialized(updated),
-      deleted = serialized(deleted))
+      adds = Option(rows).toSeq.flatMap(_.committed())
+        .map(_.addFile(now, dataChange = true)),
+      kills = kills.toSeq.map { case (f, bm) =>
+        f -> DeletionVectors.serializeBitmap(bm) },
+      changes = changes.toSeq.flatMap(_.committed()))
   }
 
-  override def abort(): Unit = writers.foreach(_.abort())
+  override def abort(): Unit = {
+    if (rows != null) rows.abort()
+    changes.foreach(_.abort())
+  }
 
-  override def close(): Unit = writers.foreach(_.close())
+  override def close(): Unit = {
+    if (rows != null) rows.close()
+    changes.foreach(_.close())
+  }
 }

@@ -83,21 +83,20 @@ private[sources] object GraftRowLevelOps {
       catch { case _: Throwable => () })
   }
 
-  /** One-pass validation of staged replacement/insert rows: read them
-    * back with the DECLARED schema and enforce CHECK constraints plus
-    * generated-column agreement — the same rules the append path runs.
-    * The rewrite plan supplies every column, so generated columns are
-    * VALIDATED (a value disagreeing with its GENERATED ALWAYS AS
-    * expression fails the statement) rather than recomputed. Drops the
-    * staged files before rethrowing.
+  /** One-pass validation of new replacement/insert rows: read them back
+    * with the DECLARED schema of `snap` and enforce CHECK constraints
+    * plus generated-column agreement — the same rules the append path
+    * runs. The rewrite plan supplies every column, so generated columns
+    * are VALIDATED (a value disagreeing with its GENERATED ALWAYS AS
+    * expression fails the statement) rather than recomputed. The caller
+    * drops the files when it throws.
     */
   def validateReplacement(
       tablePath: String,
-      conf: org.apache.hadoop.conf.Configuration,
       adds: Seq[AddFile],
-      log: TxnLog): Unit = {
+      snap: Snapshot): Unit = {
     if (adds.isEmpty) return
-    val meta = log.snapshotLatest().metadata.getOrElse(return)
+    val meta = snap.metadata.getOrElse(return)
     val genChecks = meta.generatedColumns.toSeq.map { case (c, e) =>
       s"`$c` <=> ($e)"
     }
@@ -108,23 +107,25 @@ private[sources] object GraftRowLevelOps {
     val staged = spark.read.schema(declared)
       .option("basePath", tablePath)
       .parquet(adds.map(a => TxnLog.dataPath(tablePath, a.path)): _*)
-    try TableWriter.enforceConstraints(
+    TableWriter.enforceConstraints(
       staged, meta.constraints ++ genChecks, tablePath)
-    catch { case t: Throwable => dropFiles(tablePath, conf, adds); throw t }
   }
 
   /** Concurrently appended files that may have matched the operation's
-    * read: stats overlap against the pushed predicate ranges; with no
-    * pushable predicate the read was effectively full-table (a MERGE
-    * join), so ANY genuinely new dataChange file conflicts.
+    * read, among the commits after the scan's bound version up to `snap`
+    * (versions are contiguous, so they are read by number): stats overlap
+    * against the pushed predicate ranges; with no pushable predicate the
+    * read was effectively full-table (a MERGE join), so ANY genuinely new
+    * dataChange file conflicts.
     */
   def matchingConcurrentAppends(
       log: TxnLog,
+      snap: Snapshot,
       scan: GraftBatchScan,
       pushed: Array[org.apache.spark.sql.sources.Filter]): Seq[AddFile] = {
     val resolved = scan.boundResolved
     val boundPaths = resolved.files.map(_.path).toSet
-    val appended = log.versions().filter(_ > scan.boundVersion)
+    val appended = (scan.boundVersion + 1 to snap.version)
       .flatMap(v => log.read(v))
       .collect {
         case a: AddFile if a.dataChange && !boundPaths.contains(a.path) => a
@@ -188,12 +189,18 @@ private[sources] class GraftRowLevelBatchWrite(
     val scan = boundScan()
     val removes = scan.map(_.kept).getOrElse(Seq.empty)
     val log = new TxnLog(tablePath, conf)
-    GraftRowLevelOps.validateReplacement(tablePath, conf, adds, log)
     val ts = System.currentTimeMillis()
     var attempt = 0
+    var validated: Option[Option[Metadata]] = None
     while (true) {
       val snap = log.snapshotLatest()
       TxnLog.assertWritable(snap, tablePath)
+      // the new rows obey the table's rules as of the commit
+      if (!validated.contains(snap.metadata)) {
+        try GraftRowLevelOps.validateReplacement(tablePath, adds, snap)
+        catch { case t: Throwable => dropFiles(adds); throw t }
+        validated = Some(snap.metadata)
+      }
       // every replaced file must still be live AS SCANNED — identity,
       // not path: a concurrent DV delete re-adds the same path with a
       // new dv pointer, and replacing it from the pre-DV content would
@@ -213,7 +220,7 @@ private[sources] class GraftRowLevelBatchWrite(
       // join), so ANY genuinely new file conflicts
       scan.foreach { sc =>
         val matching = GraftRowLevelOps.matchingConcurrentAppends(
-          log, sc, pushedFilters())
+          log, snap, sc, pushedFilters())
         if (matching.nonEmpty) {
           dropFiles(adds)
           throw new IllegalStateException(

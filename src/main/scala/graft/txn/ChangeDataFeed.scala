@@ -28,6 +28,13 @@ import org.apache.spark.sql.functions._
   * changed) — because inferring there would read the file's surviving
   * rows as fresh inserts.
   *
+  * Two writers produce the sidecars, in one layout. SQL merge-on-read
+  * UPDATE / MERGE / DELETE and copy-on-write DELETE write the change rows
+  * in the tasks that already hold them ([[graft.sources.ChangeRows]]):
+  * one sidecar per (task, changed partition), no job of their own. The
+  * Scala-API DML stages a change frame in a pass of its own ([[stage]]):
+  * one sidecar per changed partition.
+  *
   * Scale shape: change files are proportional to the CHANGED rows, never
   * the table — a 100-row MERGE into a 100 TB table writes KB-scale
   * sidecars. The reader is ONE incremental log walk (a single seed
@@ -52,8 +59,34 @@ object ChangeDataFeed {
   /** Is CDF on for this snapshot? DML paths consult this at their write
     * snapshot, so enabling the property captures every LATER commit.
     */
-  def enabled(snap: Snapshot): Boolean =
-    snap.metadata.exists(_.properties.get(Prop).exists(_.equalsIgnoreCase("true")))
+  def enabled(snap: Snapshot): Boolean = snap.metadata.exists(m => enabled(m.properties))
+
+  /** Is CDF on under these table properties? */
+  def enabled(properties: Map[String, String]): Boolean =
+    properties.get(Prop).exists(_.equalsIgnoreCase("true"))
+
+  /** The change rows a delete writes where it finds its doomed `rows`
+    * (the table's columns plus row metadata), or None with the feed off
+    * in `snap`: `delete` rows of the declared columns, to be committed
+    * at `version`.
+    */
+  private[graft] def deleteRows(snap: Snapshot, tablePath: String,
+      rows: DataFrame, version: Long): Option[graft.sources.ChangeRows] =
+    if (!enabled(snap)) None
+    else snap.metadata.map(m => graft.sources.ChangeRows.prepare(tablePath,
+      org.apache.spark.sql.types.StructType(
+        org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
+          .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
+          .map(rows.schema(_))),
+      m.partitionColumns, version))
+
+  /** The action of a written sidecar: its partition values are those of
+    * the `_cdp_*` shadow dir it was split by.
+    */
+  private[graft] def cdcFile(w: TableCommitProtocol.Written): CdcFile =
+    CdcFile(w.relPath, TableWriter.partitionValuesOf(w.partitionDir).map {
+      case (k, v) => k.stripPrefix("_cdp_") -> v
+    }, w.size)
 
   /** Cap on sidecar files per commit for SMALL change sets: a change
     * frame arriving in many near-empty partitions (a union of shuffled
@@ -66,6 +99,8 @@ object ChangeDataFeed {
   private val SidecarCoalesceBytes = 256L * 1024 * 1024
 
   /** Write `changes` (table columns + [[TypeCol]]) as parquet sidecars
+    * in a pass of their own — the Scala-API DML's writer; SQL DML writes
+    * its change rows in its own tasks ([[graft.sources.ChangeRows]]) —
     * and return the [[CdcFile]] actions the caller must fold into the
     * SAME commit as the data it describes. The files land once, at their
     * final names, flat under `_change_data/`
@@ -83,7 +118,8 @@ object ChangeDataFeed {
     * then prune sidecars at the ACTION level, before any parquet I/O
     * (the reference's one optimizer idea, DeltaReader.java:181–226,
     * applied to the row-level feed). Sidecar count = changed partitions,
-    * bounded by the change set.
+    * bounded by the change set: the split shuffles the change rows by
+    * partition first.
     */
   def stage(
       spark: SparkSession,
@@ -94,7 +130,8 @@ object ChangeDataFeed {
     require(changes.columns.contains(TypeCol),
       s"change frame must carry $TypeCol")
     def write(df: DataFrame, partitionBy: Seq[String]) = {
-      val protocol = new TableCommitProtocol(tablePath, f"cd-$version%020d",
+      val protocol = new TableCommitProtocol(tablePath,
+        graft.sources.ChangeRows.stem(version),
         java.util.UUID.randomUUID().toString.take(8),
         sidecarDir = Some("_change_data"))
       TableCommitProtocol.write(spark, df, partitionBy, protocol)
@@ -129,10 +166,7 @@ object ChangeDataFeed {
         }
         write(shadowed.repartition(shadow.map(col): _*), shadow)
       }
-    written.map(w => CdcFile(w.relPath,
-      TableWriter.partitionValuesOf(w.partitionDir).map {
-        case (k, v) => k.stripPrefix("_cdp_") -> v
-      }, w.size))
+    written.map(cdcFile)
   }
 
   /** Refuse a change-feed range that reaches at or below the earliest

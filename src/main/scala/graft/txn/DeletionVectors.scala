@@ -400,21 +400,66 @@ object DeletionVectors {
       live => live.join(keys.select(keyCols.map(col): _*).distinct(),
         keyCols, "left_semi"))
 
-  /** Per-file kills of `rows` — `(file name, row position)` — as
-    * Roaring bitmaps, in one job: each partition folds its own rows, the
-    * driver ORs what they return (a bitmap per file a partition saw, so
-    * the collect is bounded by the affected files, not the rows).
+  /** Per-file kills of `rows` as Roaring bitmaps of their `_ri`
+    * positions, keyed by column `key` (a file name or path), in one job:
+    * each task folds its own rows, the driver ORs what they return (a
+    * bitmap per file a task saw, so the collect is bounded by the
+    * affected files, not the rows). With `changes`, the same tasks write
+    * every row as a `delete` change row, so the deleted rows are never
+    * read again; the result then also holds the sidecars' actions. A task
+    * that fails deletes its sidecars; when the job fails, so do the tasks
+    * that finished.
     */
-  private[graft] def collectKills(rows: DataFrame): Map[String, Roaring64Bitmap] = {
-    import org.apache.spark.sql.Encoders
-    orKills(rows.as(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
-      .mapPartitions { it =>
-        val open = scala.collection.mutable.HashMap
-          .empty[String, Roaring64Bitmap]
-        it.foreach { case (f, p) =>
-          open.getOrElseUpdate(f, new Roaring64Bitmap()).addLong(p) }
-        open.iterator.map { case (f, bm) => f -> serializeBitmap(bm) }
-      }(Encoders.tuple(Encoders.STRING, Encoders.BINARY)).collect())
+  private[graft] def collectKills(
+      rows: DataFrame,
+      key: String,
+      changes: Option[graft.sources.ChangeRows] = None)
+      : (Map[String, Roaring64Bitmap], Seq[CdcFile]) = {
+    val schema = rows.schema
+    val keyIdx = schema.fieldIndex(key)
+    val posIdx = schema.fieldIndex("_ri")
+    val ordinals = changes.map(_.columns.fieldNames.toSeq.map(schema.fieldIndex))
+    val sc = rows.sparkSession.sparkContext
+    val finished = sc.collectionAccumulator[CdcFile]("graft change rows")
+    val qe = rows.queryExecution
+    val results = try {
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+          Some("graft deletion-vector kills")) {
+        qe.toRdd.mapPartitions { it =>
+          val task = org.apache.spark.TaskContext.get()
+          val out = changes.map(_.writer(task.partitionId(),
+            task.taskAttemptId(), ordinals.get))
+          try {
+            val open = scala.collection.mutable.HashMap
+              .empty[UTF8String, Roaring64Bitmap]
+            var last: UTF8String = null
+            var bm: Roaring64Bitmap = null
+            it.foreach { r =>
+              val k = r.getUTF8String(keyIdx)
+              if (last == null || last != k) {
+                last = k.clone()
+                bm = open.getOrElseUpdate(last, new Roaring64Bitmap())
+              }
+              bm.addLong(r.getLong(posIdx))
+              out.foreach(_.write(r, ChangeDataFeed.Delete))
+            }
+            val written = out.toSeq.flatMap(_.committed())
+            written.foreach(finished.add)
+            Iterator.single((open.toSeq.map { case (f, b) =>
+              f.toString -> serializeBitmap(b) }, written))
+          } catch { case t: Throwable =>
+            out.foreach(_.abort())
+            throw t
+          }
+        }.collect()
+      }
+    } catch { case t: Throwable =>
+      changes.foreach(c => graft.sources.ChangeRows.drop(c.files.tablePath,
+        rows.sparkSession.sessionState.newHadoopConf(),
+        finished.value.asScala.toSeq))
+      throw t
+    }
+    (orKills(results.iterator.flatMap(_._1)), results.toSeq.flatMap(_._2))
   }
 
   /** Serialized per-file bitmaps ORed into one bitmap per file. */
@@ -519,37 +564,31 @@ object DeletionVectors {
     TxnLog.assertWritable(snap, tablePath)
     // the marker evaluates over the LIVE view (already-deleted rows
     // can't re-match — their deleted_at must keep the original version)
-    val cdfOn = ChangeDataFeed.enabled(snap)
     // loaded once: the marking scan drops them, the new vector carries them
     val loaded = masks(spark, tablePath, snap.files)
     val marked = mark(readSnapshot(spark, tablePath, snap,
       withRowMeta = true, masks = Some(loaded)))
-    // with the change feed on, the marking scan also yields the delete
-    // change rows: cached, so the table is read once
-    if (cdfOn) marked.persist()
-    try {
-    // the marking scan folds its kills into per-file bitmaps (one job)
-    val kills = collectKills(marked.select(col("_fn"), col("_ri")))
+    val changes = ChangeDataFeed.deleteRows(snap, tablePath, marked, version)
+    // the marking scan folds its kills into per-file bitmaps and, with
+    // the change feed on, writes the deleted rows as it sees them (one job)
+    val (kills, cdcActions) = collectKills(marked, "_fn", changes)
     if (kills.isEmpty) {
       log.commit(version, Seq(CommitInfo("DELETE_DV", commitTs)))
       return
     }
     val affected = snap.files
       .filter(f => kills.contains(new Path(f.path).getName))
-    val (_, vector) = commitVector(spark, tablePath, snap, version, commitTs,
+    val (dir, vector) = commitVector(spark, tablePath, snap, version, commitTs,
       kills, affected, loaded)
-    // Change data feed: the exact deleted rows, straight from the cached
-    // marking scan (no second table read)
-    val cdcActions: Seq[Action] =
-      if (!cdfOn) Seq.empty
-      else ChangeDataFeed.stage(spark,
-        marked.drop("_fn", "_ri", "_path")
-          .withColumn(ChangeDataFeed.TypeCol, lit(ChangeDataFeed.Delete)),
-        tablePath, version, partitionColumns =
-          snap.metadata.map(_.partitionColumns).getOrElse(Seq.empty))
-    log.commit(version,
+    try log.commit(version,
       vector ++ cdcActions :+ CommitInfo("DELETE_DV", commitTs))
-    } finally if (cdfOn) marked.unpersist()
+    catch { case e: IllegalStateException
+        if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
+      // the retry writes its own vector and change rows
+      dropVector(spark, tablePath, dir)
+      graft.sources.ChangeRows.drop(tablePath, conf, cdcActions)
+      throw e
+    }
   }
 
   /** Fold every deletion vector back into plain files: DV-carrying files

@@ -2055,7 +2055,6 @@ object TableWriter extends Serializable {
       pred: org.apache.spark.sql.Column,
       version: Long,
       commitTs: Long): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, regexp_replace}
     val conf = spark.sessionState.newHadoopConf()
     val log = new TxnLog(tablePath, conf)
     val snap = log.snapshotLatest()
@@ -2069,35 +2068,41 @@ object TableWriter extends Serializable {
       .replaceFirst("^file:/+", "/") -> f).toMap
     // the vectors' masks load once for every read of the statement
     val masks = Some(DeletionVectors.masks(spark, tablePath, snap.files))
-    val target = DeletionVectors
+    // the deleted rows: pred IS TRUE (a row whose predicate evaluates
+    // NULL, e.g. `x > 5` with null x, survives)
+    val doomed = DeletionVectors
       .readSnapshot(spark, tablePath, snap, withRowMeta = true, masks)
-      .withColumnRenamed("_path", "_file")
-    val affected = DeletionVectors.distinctValues(target.filter(pred), "_file")
-      .toSeq.sorted.flatMap(byRel.get)
+      .filter(pred)
+    // one job finds the affected files and, with the change feed on,
+    // writes the deleted rows as it sees them
+    val (hit, cdcActions) = DeletionVectors.collectKills(doomed, "_path",
+      ChangeDataFeed.deleteRows(snap, tablePath, doomed, version))
+    val affected = hit.keys.toSeq.sorted.flatMap(byRel.get)
     if (affected.isEmpty) {
       log.commit(version, Seq(CommitInfo("DELETE", commitTs)))
       return
     }
-    // SQL DELETE deletes rows where pred IS TRUE; a row whose predicate
-    // evaluates NULL (e.g. `x > 5` with null x) survives. `!pred` alone
-    // would map NULL → NULL and silently drop those rows at rewrite.
-    val base = readDeclared(spark, tablePath, snap, affected.toIndexedSeq, masks)
-    val survivors = base
-      .filter(!(pred <=> org.apache.spark.sql.functions.lit(true)))
-    // Change data feed: the exact deleted rows (pred IS TRUE — the same
-    // 3VL rule the rewrite uses, so feed and state can never disagree)
-    val cdcActions: Seq[Action] =
-      if (!ChangeDataFeed.enabled(snap)) Seq.empty
-      else ChangeDataFeed.stage(spark,
-        base.filter(pred <=> org.apache.spark.sql.functions.lit(true))
-          .withColumn(ChangeDataFeed.TypeCol, lit(ChangeDataFeed.Delete)),
-        tablePath, version, partitionColumns = partCols)
-    val adds = stageAndMove(spark, survivors, tablePath, partCols, version,
-      commitTs, dataChange = true, snap.metadata)
+    // the survivors: NOT (pred IS TRUE) — `!pred` alone would map NULL →
+    // NULL and silently drop those rows at rewrite
+    val survivors = readDeclared(spark, tablePath, snap, affected.toIndexedSeq,
+      masks).filter(!(pred <=> org.apache.spark.sql.functions.lit(true)))
+    val adds =
+      try stageAndMove(spark, survivors, tablePath, partCols, version,
+        commitTs, dataChange = true, snap.metadata)
+      catch { case t: Throwable =>
+        graft.sources.ChangeRows.drop(tablePath, conf, cdcActions)
+        throw t
+      }
     val removes = affected.map(f =>
       RemoveFile(f.path, commitTs, f.partitionValues)).toIndexedSeq
-    log.commit(version,
+    try log.commit(version,
       (removes ++ adds) ++ cdcActions :+ CommitInfo("DELETE", commitTs))
+    catch { case e: IllegalStateException
+        if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
+      // the retry writes its own change rows
+      graft.sources.ChangeRows.drop(tablePath, conf, cdcActions)
+      throw e
+    }
   }
 
   /** Row-level UPDATE WHERE: rewrite only the files that CONTAIN a

@@ -162,6 +162,7 @@ class CommitFileCountSpec extends AnyFunSuite {
     assertVectorInPlace(s"$warehouse/default/u", c, moved)
     assert(cdc == 0, "no .staging-cdc* path may be created")
     assert(c.driverDataOpens == DmlDriverDataOpens, c)
+    assert(c.logLists == DmlLogLists, c)
     assert(spark.sql("SELECT sum(v) FROM gcfc.default.u").head().getLong(0)
       == (0 until 40).map(10L * _).sum + 2)
   }
@@ -182,6 +183,7 @@ class CommitFileCountSpec extends AnyFunSuite {
     assertVectorInPlace(s"$warehouse/default/m", c, moved)
     assert(cdc == 0, "no .staging-cdc* path may be created")
     assert(c.driverDataOpens == DmlDriverDataOpens, c)
+    assert(c.logLists == DmlLogLists, c)
     assert(spark.sql("SELECT count(*) FROM gcfc.default.m").head().getLong(0)
       == 41L)
   }
@@ -222,4 +224,10 @@ class CommitFileCountSpec extends AnyFunSuite {
 
   // the DML statements open no data file on the driver
   private val DmlDriverDataOpens = 0
+  // `_txn_log` listings of one SQL DV UPDATE or MERGE, planning included:
+  // the commit attempt replays the log once, and validates the new rows
+  // and looks for concurrent appends against that same snapshot (the
+  // versions after the scan's are read by number); 22 when both checks
+  // listed and replayed the log again
+  private val DmlLogLists = 18
 }

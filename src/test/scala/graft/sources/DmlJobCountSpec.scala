@@ -123,10 +123,9 @@ class DmlJobCountSpec extends AnyFunSuite
     assert(table("u") == before -- hit ++ post)
     assert(changes("u") == Map(
       ChangeDataFeed.UpdatePre -> hit, ChangeDataFeed.UpdatePost -> post))
-    // the WriteDelta job, whose tasks return the kills (the driver
-    // writes the vector, no job); the change rows' shuffle by partition
-    // and write (the pre-images are picked from the kills, no join)
-    assertJobs("DV UPDATE", sites, 3)
+    // the WriteDelta job, whose tasks return the kills and write the
+    // change rows (the driver writes the vector, no job)
+    assertJobs("DV UPDATE", sites, 1)
   }
 
   test("MERGE: jobs, table and change rows") {
@@ -146,9 +145,9 @@ class DmlJobCountSpec extends AnyFunSuite
     assert(table("m") == before -- hit ++ post ++ ins)
     assert(changes("m") == Map(ChangeDataFeed.UpdatePre -> hit,
       ChangeDataFeed.UpdatePost -> post, ChangeDataFeed.Insert -> ins))
-    // the MERGE join's two shuffle stages and its WriteDelta job; then
-    // the same two change-row jobs as the UPDATE
-    assertJobs("MERGE", sites, 5)
+    // the MERGE join's two shuffle stages and its WriteDelta job, whose
+    // tasks write the change rows as the UPDATE's do
+    assertJobs("MERGE", sites, 3)
   }
 
   test("DV DELETE: jobs, table and change rows") {
@@ -160,11 +159,10 @@ class DmlJobCountSpec extends AnyFunSuite
     val hit = before.filter(r => r._1 == 8L || r._1 == 13L)
     assert(table("d") == before -- hit)
     assert(changes("d") == Map(ChangeDataFeed.Delete -> hit))
-    // the marking scan, which fills the cache and collects the kills as
-    // per-file bitmaps (the masks are loaded and the vector written on
-    // the driver, no job); the change rows' shuffle and write, both from
-    // the cache
-    assertJobs("DV DELETE", sites, 3)
+    // the marking scan, whose tasks collect the kills as per-file
+    // bitmaps and write the deleted rows as change rows (the masks are
+    // loaded and the vector written on the driver, no job)
+    assertJobs("DV DELETE", sites, 1)
   }
 
   test("copy-on-write DELETE: jobs, table and change rows") {
@@ -176,9 +174,10 @@ class DmlJobCountSpec extends AnyFunSuite
     val hit = before.filter(r => r._1 == 12L || r._1 == 13L)
     assert(table("c") == before -- hit)
     assert(changes("c") == Map(ChangeDataFeed.Delete -> hit))
-    // the affected-file collect, the survivors' write, the change rows'
-    // shuffle and write: the three scans share masks loaded once on the
-    // driver, so none of them broadcasts the dead rows in a job
-    assertJobs("copy-on-write DELETE", sites, 4)
+    // the affected-file collect, whose tasks also write the deleted rows
+    // as change rows, and the survivors' write: both scans share masks
+    // loaded once on the driver, so neither broadcasts the dead rows in
+    // a job
+    assertJobs("copy-on-write DELETE", sites, 2)
   }
 }
