@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -11,8 +10,7 @@ import org.apache.spark.sql.connector.metric.{CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructType}
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /** The one parquet partition reader behind `graft`, `graft-cdc` and
@@ -37,12 +35,14 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   *    partition value, CDC envelope, CDF trailer, file path), the row's
   *    position, or its row id.
   *
-  * `readSchema` spells columns as the files do (physical names).
+  * `readSchema` spells columns as the files do (physical names). The
+  * reader ships with the one broadcast Spark's parquet reader makes of
+  * the Hadoop conf; sizes and vector masks come from the planner, so the
+  * executors need nothing else from the driver.
   */
 private[sources] final class FileRows private (
     val readSchema: StructType,
-    read: PartitionedFile => Iterator[InternalRow],
-    conf: Broadcast[SerializableConfiguration]) extends Serializable {
+    read: PartitionedFile => Iterator[InternalRow]) extends Serializable {
   import FileRows._
 
   private val types: Array[DataType] = readSchema.fields.map(_.dataType)
@@ -63,9 +63,9 @@ private[sources] final class FileRows private (
 
   /** Rows of one file's byte `range` (the whole-file sentinel or a
     * [[ParquetSplits.ranges]] split), projected to `out`. `size` is the
-    * logged file size; an unknown one (a pre-size-retention remove logs
-    * none) is looked up where the reader runs. `where` keeps rows whose
-    * read column equals the given internal value.
+    * file's size, known where the partitions were planned (see
+    * [[FileRows.sizeOf]]). `where` keeps rows whose read column equals
+    * the given internal value.
     */
   def open(
       path: String,
@@ -77,13 +77,11 @@ private[sources] final class FileRows private (
       untilRow: Long = -1L,
       limit: Int = -1,
       where: Seq[(Int, Any)] = Nil): PartitionReader[InternalRow] = {
-    val file = new Path(path)
-    val fileSize =
-      if (size > 0) size
-      else file.getFileSystem(conf.value.value).getFileStatus(file).getLen
+    require(size >= 0, s"unknown size of $path: resolve it where partitions are planned")
     val (start, end) = range
-    val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(file),
-      start, math.min(end, fileSize) - start, Array.empty, 0L, fileSize))
+    val rows = read(PartitionedFile(InternalRow.empty,
+      SparkPath.fromPath(new Path(path)), start, math.min(end, size) - start,
+      Array.empty, 0L, size))
     val mask = dv.map(_.rows).orNull
     val onlyDead = dv.exists(_.onlyDead)
 
@@ -197,23 +195,25 @@ private[sources] object FileRows {
       spark, withPos, new StructType(), withPos, Nil,
       Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       new Configuration(hadoopConf))
-    new FileRows(readSchema, read, spark.sparkContext.broadcast(
-      new SerializableConfiguration(hadoopConf)))
+    new FileRows(readSchema, read)
   }
+
+  /** The size of the file at `path`: the logged `size`, else (a
+    * pre-size-retention remove logs none) the file's own, looked up here,
+    * where the partitions are planned.
+    */
+  def sizeOf(conf: => Configuration, path: String, size: Long): Long =
+    if (size > 0) size
+    else {
+      val p = new Path(path)
+      p.getFileSystem(conf).getFileStatus(p).getLen
+    }
 
   /** `schema` with every field nullable, nested ones too: what a file
     * reader can promise once files predate columns or nested fields.
     */
   def asNullable(schema: StructType): StructType =
-    nullable(schema).asInstanceOf[StructType]
-
-  private def nullable(dt: DataType): DataType = dt match {
-    case s: StructType => StructType(s.fields.map(f =>
-      f.copy(dataType = nullable(f.dataType), nullable = true)))
-    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
-    case MapType(k, v, _) => MapType(nullable(k), nullable(v), true)
-    case other => other
-  }
+    org.apache.spark.sql.graft.ColumnBridge.asNullable(schema)
 
   /** The readers of one stream instance, one per distinct read schema (a
     * column-mapping change between triggers moves physical names):

@@ -108,11 +108,9 @@ private[sources] object GraftBatch {
     val conf = org.apache.spark.sql.SparkSession.active
       .sessionState.newHadoopConf()
     val log = new TxnLog(tablePath, conf)
-    val version = vOpt
-      .orElse(tOpt.map(log.versionAtTimestamp))
-      .getOrElse(log.latestVersion().getOrElse(
-        throw new IllegalArgumentException(s"empty table at $tablePath")))
-    val snap = log.snapshot(version)
+    val asOf = vOpt.orElse(tOpt.map(log.versionAtTimestamp))
+    val snap = asOf.fold(log.snapshotLatest())(log.snapshot)
+    val version = asOf.getOrElse(snap.version)
     val meta = snap.metadata.getOrElse(
       throw new IllegalArgumentException(s"no Metadata action in $tablePath"))
     Resolved(tablePath, version, snap.files,
@@ -1304,14 +1302,18 @@ private[sources] class GraftBatchScan(
     // whole-file (they stop after a handful of rows anyway).
     val maxSplit = org.apache.spark.sql.internal.SQLConf.get
       .filesMaxPartitionBytes
+    lazy val conf = org.apache.spark.sql.SparkSession.active
+      .sessionState.newHadoopConf()
     kept.flatMap { f =>
+      val path = TxnLog.dataPath(resolved.tablePath, f.path)
+      val size = FileRows.sizeOf(conf, path, f.size)
       val ranges: Seq[(Long, Long)] =
         if (limit >= 0) Seq(ParquetSplits.WholeFile)
-        else ParquetSplits.ranges(f.size, maxSplit)
+        else ParquetSplits.ranges(size, maxSplit)
       val dv = f.dv.map(p => FileRows.Dv(masks.dead(f.path, p)))
       ranges.map { case (rs, re) =>
         GraftBatchPartition(
-          TxnLog.dataPath(resolved.tablePath, f.path),
+          path,
           f.partitionValues,
           dv = dv,
           limit = limit,
@@ -1320,7 +1322,7 @@ private[sources] class GraftBatchScan(
             f.partitionValues(fd.name), fd.dataType)).toArray),
           rangeStart = rs,
           rangeEnd = re,
-          size = f.size)
+          size = size)
       }
     }.toArray
   }

@@ -452,7 +452,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def dropTable(ident: Identifier): Boolean = {
     val dir = new Path(tableDir(ident))
     if (!isTableDir(dir)) false
-    else fs.delete(dir, true)
+    else try fs.delete(dir, true)
+    finally TxnLog.evictUnder(dir.toString, conf)
   }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
@@ -463,8 +464,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (isTableDir(dst))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(newIdent)
     fs.mkdirs(dst.getParent)
-    if (!fs.rename(src, dst))
-      throw new IllegalStateException(s"rename failed: $src -> $dst")
+    try {
+      if (!fs.rename(src, dst))
+        throw new IllegalStateException(s"rename failed: $src -> $dst")
+    } finally TxnLog.evictUnder(src.toString, conf)
   }
 
   // ------ namespaces (directories under the warehouse) ------
@@ -518,7 +521,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       if (!cascade && fs.listStatus(p).nonEmpty)
         throw new IllegalStateException(
           s"namespace ${namespace.mkString(".")} is not empty")
-      fs.delete(p, true)
+      try fs.delete(p, true)
+      finally TxnLog.evictUnder(p.toString, conf)
     }
   }
 }

@@ -39,7 +39,8 @@ class GraftCdc extends TableProvider
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     // fail fast on bad options at load(), not first batch
     val parsed = CdcOptions.parse(options.asCaseSensitiveMap().asScala.toMap)
-    val payload = GraftCdc.declaredSchema(parsed.tablePath, new Configuration())
+    val payload = GraftCdc.declaredSchema(parsed.tablePath,
+      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
     GraftCdc.refuseEnvelopeClash(payload, parsed.tablePath)
     GraftCdc.envelopeSchema(payload)
   }
@@ -500,11 +501,13 @@ private[sources] class GraftCdcMicroBatchStream(
             if (ev.op == "d")
               FileRows.Dv(masks.diedAt(ev.rel, p, v), onlyDead = true)
             else FileRows.Dv(masks.dead(ev.rel, p)))
-          ParquetSplits.ranges(ev.size, maxSplit).map { case (rs, re) =>
-            CdcFilePartition(TxnLog.dataPath(opts.tablePath, ev.rel), ev.op,
+          val path = TxnLog.dataPath(opts.tablePath, ev.rel)
+          val size = FileRows.sizeOf(hadoopConf, path, ev.size)
+          ParquetSplits.ranges(size, maxSplit).map { case (rs, re) =>
+            CdcFilePartition(path, ev.op,
               CdcReader.partitionValueString(ev.pv), ev.pv, ev.ts, v,
               skipRows, untilRow, dv = dv,
-              rangeStart = rs, rangeEnd = re, size = ev.size)
+              rangeStart = rs, rangeEnd = re, size = size)
           }
       }
     }
@@ -592,7 +595,7 @@ private[sources] case class CdcFileEvent(
     ts: Long,
     dv: Option[String] = None,
     // logged file size (bytes) for byte-range split planning; -1 =
-    // unknown (pre-size-retention removes) → plan the whole file
+    // unknown (pre-size-retention removes) → looked up by the planner
     size: Long = -1L,
     // logged RAW row count (FileStats.numRecords — physical rows, exact
     // even under a DV, which only narrows the logical view); -1 =
@@ -620,7 +623,7 @@ private[sources] case class CdcFilePartition(
     // split-invariant
     rangeStart: Long = 0L,
     rangeEnd: Long = Long.MaxValue,
-    // logged file size; -1 = unknown (looked up by the reader)
+    // file size, resolved by the planner when the log has none
     size: Long = -1L) extends InputPartition
 
 /** A schema-change control row (op='m'). */

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.txn._
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -50,7 +49,8 @@ class GraftCdf extends TableProvider
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = options.get("tablePath")
     require(path != null && path.nonEmpty, "tablePath is required")
-    GraftCdf.cdfSchema(GraftCdc.declaredSchema(path, new Configuration()))
+    GraftCdf.cdfSchema(GraftCdc.declaredSchema(path,
+      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
   }
 
   override def getTable(
@@ -148,24 +148,29 @@ private[sources] class GraftCdfMicroBatchStream(
   // appended by the reader, never read from the log schema)
   private val payload = StructType(schema.fields.dropRight(3))
   private val readers = new FileRows.PerSchema(spark, hadoopConf)
-  // sidecars carry LOGICAL names plus their own `_change_type`; data
-  // files carry the physical names of the latest planned mapping
-  private lazy val sidecarRows = readers(
-    payload.add(ChangeDataFeed.TypeCol, StringType))
-  @volatile private var dataRows: FileRows = _
 
   override def initialOffset(): Offset = CdfOffset(startingVersion - 1)
 
+  // Last version this stream instance confirmed committed: seeds the
+  // forward probe, so finding the latest version costs exists() probes
+  // per new commit, not a log listing per trigger, and a commit still
+  // being written is never admitted (see TxnLog.latestVersionFrom).
+  @volatile private var lastSeenVersion: Long = -1L
+  private def latestVersion(): Long = {
+    val lv = log.latestVersionFrom(lastSeenVersion).getOrElse(-1L)
+    if (lv > lastSeenVersion) lastSeenVersion = lv
+    lv
+  }
+
   @volatile private var availableNowCap: Option[Long] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(log.latestVersion().getOrElse(-1L))
+    availableNowCap = Some(latestVersion())
 
   private def capped(v: Long): Long =
     availableNowCap.fold(v)(math.min(v, _))
 
   override def latestOffset(): Offset =
-    CdfOffset(math.max(capped(log.latestVersion().getOrElse(-1L)),
-      startingVersion - 1))
+    CdfOffset(math.max(capped(latestVersion()), startingVersion - 1))
 
   override def getDefaultReadLimit
       : org.apache.spark.sql.connector.read.streaming.ReadLimit =
@@ -184,7 +189,7 @@ private[sources] class GraftCdfMicroBatchStream(
         // negative, take(negative) returns empty, and the offset would
         // silently never advance.
         val admitted = log.versions()
-          .filter(v => v > s && v <= capped(Long.MaxValue))
+          .filter(v => v > s && v <= capped(latestVersion()))
           .take(math.min(cap, Int.MaxValue.toLong).toInt)
         CdfOffset(admitted.lastOption.getOrElse(s))
     }
@@ -196,27 +201,50 @@ private[sources] class GraftCdfMicroBatchStream(
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
+  // The last planned batch: its offsets and partitions. Spark plans one
+  // batch more than once (4 times for an AvailableNow read).
+  @volatile private var planned: ((Long, Long), Array[InputPartition]) = _
+  // The readers, each built when a planned batch first needs it: change
+  // sidecars carry LOGICAL names plus their own `_change_type`; data files
+  // the physical names of the latest planned mapping.
+  @volatile private var sidecarRows: FileRows = _
+  @volatile private var dataRows: FileRows = _
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[CdfOffset].v
-    val e = end.asInstanceOf[CdfOffset].v
+    val key = (start.asInstanceOf[CdfOffset].v, end.asInstanceOf[CdfOffset].v)
+    if (planned == null || planned._1 != key) {
+      val parts = plan(key._1, key._2)
+      val kinds = parts.map(_.asInstanceOf[CdfFilePartition].constKind.isEmpty)
+      if (kinds.contains(true))
+        sidecarRows = readers(payload.add(ChangeDataFeed.TypeCol, StringType))
+      // physical names never change after creation (RENAME is
+      // metadata-only), so the latest mapping resolves every file in the
+      // log; columns a file predates read as null
+      if (kinds.contains(false))
+        dataRows = readers(ColumnMapping.physicalSchema(payload,
+          log.snapshotLatest().metadata.map(_.columnMapping)
+            .getOrElse(Map.empty)))
+      planned = (key, parts)
+    }
+    planned._2
+  }
+
+  private def plan(s: Long, e: Long): Array[InputPartition] = {
     val l = log
-    val inRange = l.versions().filter(v => v > s && v <= e)
-    // Versions are assigned DENSELY, so a gap at the resume boundary can
-    // only mean log retention expired commits past the checkpoint —
-    // silently resuming after it would lose their changes forever.
-    require(inRange.isEmpty || inRange.head == s + 1,
-      s"streaming change feed: versions ${s + 1}..${inRange.headOption
-        .map(_ - 1).getOrElse(s + 1)} of $tablePath have been expired " +
-        "by log retention — the checkpointed offset cannot resume " +
-        "without losing changes; restart from a fresh checkpoint")
-    // Column mapping: physical names never change after creation (RENAME
-    // is metadata-only), so the LATEST mapping resolves every file in
-    // the log; columns a file predates read as null through the reader's
-    // by-name resolution.
-    val snapMeta = l.snapshotLatest().metadata
-    dataRows = readers(ColumnMapping.physicalSchema(payload,
-      snapMeta.map(_.columnMapping).getOrElse(Map.empty)))
-    val versioned = inRange.map(v => v -> l.read(v))
+    // Versions are assigned DENSELY, so a missing version at the resume
+    // boundary can only mean log retention expired commits past the
+    // checkpoint — silently resuming after it would lose their changes
+    // forever.
+    val versioned = (s + 1 to e).map { v =>
+      v -> (try l.read(v) catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(
+            s"streaming change feed: version $v of $tablePath has been " +
+              "expired by log retention — the checkpointed offset cannot " +
+              "resume without losing changes; restart from a fresh checkpoint")
+      })
+    }
+    lazy val snapMeta = l.snapshotLatest().metadata
     // one evaluation over the admitted range's distinct partition
     // values builds the predicate's action-level keep function
     val rangePvs = versioned.flatMap(_._2).collect {
@@ -270,14 +298,17 @@ private[sources] class GraftCdfMicroBatchStream(
         cdcFiles
           .filter(c => (c.partitionValues.isEmpty ||
             keepPv(c.partitionValues)) && keepFn(c.partitionValues))
-          .flatMap(c => ParquetSplits.ranges(c.size, maxSplit).map {
-            case (rs, re) => CdfFilePartition(
-              TxnLog.dataPath(tablePath, c.path), constKind = None,
-              partitionValues = Map.empty, version = v, ts = ts,
-              rowFilter =
-                if (c.partitionValues.isEmpty) partitionFilter else Map.empty,
-              rangeStart = rs, rangeEnd = re, size = c.size)
-          })
+          .flatMap { c =>
+            val path = TxnLog.dataPath(tablePath, c.path)
+            val size = FileRows.sizeOf(hadoopConf, path, c.size)
+            ParquetSplits.ranges(size, maxSplit).map { case (rs, re) =>
+              CdfFilePartition(path, constKind = None,
+                partitionValues = Map.empty, version = v, ts = ts,
+                rowFilter =
+                  if (c.partitionValues.isEmpty) partitionFilter else Map.empty,
+                rangeStart = rs, rangeEnd = re, size = size)
+            }
+          }
       } else {
         val adds = actions.collect { case a: AddFile if a.dataChange => a }
         val removes = actions.collect {
@@ -303,11 +334,13 @@ private[sources] class GraftCdfMicroBatchStream(
             s"streaming change feed: version $v of $tablePath adds " +
               s"${a.path} with a deletion vector (a clone import?) — " +
               "start from a later version or use the batch feed")
-          ParquetSplits.ranges(a.size, maxSplit).map { case (rs, re) =>
-            CdfFilePartition(TxnLog.dataPath(tablePath, a.path),
+          val path = TxnLog.dataPath(tablePath, a.path)
+          val size = FileRows.sizeOf(hadoopConf, path, a.size)
+          ParquetSplits.ranges(size, maxSplit).map { case (rs, re) =>
+            CdfFilePartition(path,
               constKind = Some(ChangeDataFeed.Insert),
               partitionValues = a.partitionValues, version = v, ts = ts,
-              rangeStart = rs, rangeEnd = re, size = a.size)
+              rangeStart = rs, rangeEnd = re, size = size)
           }
         }
       }
@@ -330,13 +363,14 @@ private[sources] final case class CdfFilePartition(
     // byte range of the split ((0, MaxValue) = whole file)
     rangeStart: Long = 0L,
     rangeEnd: Long = Long.MaxValue,
-    // logged file size; -1 = unknown (looked up by the reader)
+    // file size, resolved by the planner when the log has none
     size: Long = -1L) extends InputPartition
 
 /** Reads one data or change file as CDF rows: the payload columns (hive
   * partition values from the log; columns a file predates read as null),
   * then `_change_type` (constant for inferred inserts, read from the
-  * sidecar otherwise), `_commit_version`, `_commit_timestamp`.
+  * sidecar otherwise), `_commit_version`, `_commit_timestamp`. A reader
+  * no planned batch has needed yet is null.
   */
 private[sources] class CdfReaderFactory(sidecarRows: FileRows,
     dataRows: FileRows) extends PartitionReaderFactory {

@@ -31,13 +31,14 @@ final case class CdcOptions(
 
   /** Resolve the concrete start version against a table's log. */
   def resolveStartVersion(log: TxnLog): Long = {
-    val last = log.latestVersion().getOrElse(
+    val versions = log.versions()
+    val last = versions.lastOption.getOrElse(
       throw new IllegalArgumentException(s"empty table at $tablePath"))
     startingVersion.map { v =>
-      if (!log.versions().contains(v))
+      if (!versions.contains(v))
         throw new IllegalArgumentException(
           s"startingVersion $v does not exist in $tablePath " +
-            s"(have ${log.versions().headOption.get}..$last)")
+            s"(have ${versions.head}..$last)")
       v
     }.orElse(startingTimestamp.map(log.versionAtTimestamp))
       .getOrElse(last)

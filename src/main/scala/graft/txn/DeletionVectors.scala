@@ -65,9 +65,10 @@ object DeletionVectors {
     * footer says which shape it holds.
     *
     * Every reader applies a vector the same way: [[masks]] reads each
-    * directory a read needs ONCE, on the driver (one LIST, each part
-    * file once, no Spark job), into one bitmap per (file, deleted_at)
-    * for the files the read touches; the DSv2 readers ship each split
+    * directory a read needs once per table state, on the driver (one
+    * LIST, each part file once, no Spark job), into one bitmap per
+    * (file, deleted_at) for the files the read touches, and later reads
+    * of the table reuse them; the DSv2 readers ship each split
     * its own file's bitmap, the DataFrame reads ([[readFiles]]) filter
     * `_metadata.row_index` against the broadcast per-file masks.
     */
@@ -93,6 +94,8 @@ object DeletionVectors {
     */
   final class Masks private[DeletionVectors] (
       vectors: Map[(String, String), Seq[(Long, Roaring64Bitmap)]]) {
+    // the bitmaps may be shared with the table's cached state: every
+    // accessor below reads them or unions them into a new one
     private def of(path: String, pointer: String) =
       vectors.getOrElse((new Path(path).getName, pointer), Nil)
 
@@ -128,20 +131,39 @@ object DeletionVectors {
     val empty: Masks = new Masks(Map.empty)
   }
 
-  /** Load the masks of `files` (logged path, vector pointer): one LIST
-    * per directory, each part file read once on the driver, only the
-    * rows of the named files kept.
+  /** The masks of `files` (logged path, vector pointer). A vector
+    * directory is immutable and its name unique to one commit attempt, so
+    * a mask once loaded holds for good: the table's cached driver state
+    * ([[TxnLog]]) keeps every mask loaded for it, and an advanced state
+    * keeps those of files whose pointer did not change. Only vectors not
+    * seen yet are loaded: one LIST per directory, each part file read
+    * once on the driver, only the rows of the named files kept.
     */
   def masks(
       conf: org.apache.hadoop.conf.Configuration,
       tablePath: String,
       files: Iterable[(String, String)]): Masks = {
+    val wanted = files.iterator.map { case (p, ptr) =>
+      (new Path(p).getName, ptr) }.toSet
+    val store = new TxnLog(tablePath, conf).vectorMasks
+    val missing = store.fold(wanted)(s => wanted.filterNot(s.containsKey))
+    val loaded = load(conf, tablePath, missing)
+    store.foreach(s => missing.foreach(k => s.put(k, loaded.getOrElse(k, Nil))))
+    new Masks(wanted.iterator.map(k => k -> loaded.getOrElse(k,
+      store.flatMap(s => Option(s.get(k))).getOrElse(Nil))).toMap)
+  }
+
+  /** Read the vectors of `files` (data file name, vector pointer). */
+  private def load(
+      conf: org.apache.hadoop.conf.Configuration,
+      tablePath: String,
+      files: Set[(String, String)]): Map[(String, String), Seq[(Long, Roaring64Bitmap)]] = {
     import scala.collection.mutable
     val out = mutable.HashMap.empty[(String, String),
       mutable.ArrayBuffer[(Long, Roaring64Bitmap)]]
     val legacy = mutable.HashMap.empty[((String, String), Long), Roaring64Bitmap]
     files.groupBy(_._2).toSeq.sortBy(_._1).foreach { case (pointer, fs) =>
-      val names = fs.map(f => new Path(f._1).getName).toSet
+      val names = fs.map(_._1)
       val dir = new Path(TxnLog.dataPath(tablePath, pointer))
       dir.getFileSystem(conf).listStatus(dir)
         .filter(_.getPath.getName.endsWith(".parquet"))
@@ -166,7 +188,7 @@ object DeletionVectors {
           } finally r.close()
         }
     }
-    new Masks(out.map { case (file, bms) => file -> bms.toSeq }.toMap)
+    out.map { case (file, bms) => file -> bms.toSeq }.toMap
   }
 
   /** The masks of the vector-carrying files among `files`. */
@@ -266,14 +288,14 @@ object DeletionVectors {
       if (!TxnLog.isExternal(f.path)) tablePath
       else f.path.split('/').dropRight(f.partitionValues.size + 1)
         .mkString("/")
-    def scanOne(group: Seq[AddFile], base: String): DataFrame = {
-      val reader0 = spark.read.option("basePath", base)
-      // Column mapping: the scan asks for PHYSICAL names (what the files
-      // carry; logical names would resolve to nulls), then renames the
-      // frame back to logical before anything downstream sees it.
-      val reader = schema.fold(reader0)(s =>
-        reader0.schema(ColumnMapping.physicalSchema(s, mapping)))
-      reader.parquet(group.map(f => TxnLog.dataPath(tablePath, f.path)): _*)
+    // Column mapping: the scan asks for PHYSICAL names (what the files
+    // carry; logical names would resolve to nulls), then renames the
+    // frame back to logical before anything downstream sees it.
+    def scanOne(group: Seq[AddFile], base: String): DataFrame = schema match {
+      case Some(s) => knownFiles(spark, tablePath, group, base,
+        ColumnMapping.physicalSchema(s, mapping))
+      case None => spark.read.option("basePath", base)
+        .parquet(group.map(f => TxnLog.dataPath(tablePath, f.path)): _*)
     }
     def logical(df: DataFrame): DataFrame = ColumnMapping.toLogical(df, mapping)
     // `_metadata` resolves only against a scan relation, never through a
@@ -305,6 +327,47 @@ object DeletionVectors {
         .withColumn("_path",
           regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
     }
+  }
+
+  /** A parquet scan of `files` under `base` with the given (physical)
+    * `schema`, hive partition values inferred from the paths as
+    * `spark.read.parquet` does. The log knows each file's size and
+    * modification time, so the scan's file index is handed them instead
+    * of listing every file (one LIST per file, and a Spark job once a
+    * scan passes 32 files); a file logged without a size (a removed
+    * file's CDC read) is listed as before.
+    */
+  private def knownFiles(spark: SparkSession, tablePath: String,
+      files: Seq[AddFile], base: String, schema: StructType): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val conf = spark.sessionState.newHadoopConf()
+    val paths = files.map { f =>
+      val p = new Path(TxnLog.dataPath(tablePath, f.path))
+      (f, p.getFileSystem(conf).makeQualified(p))
+    }
+    val known = paths.collect { case (f, p) if f.size > 0 =>
+      p -> Array(new org.apache.hadoop.fs.FileStatus(f.size, false, 1, 0L,
+        f.modificationTime, p))
+    }.toMap
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[org.apache.hadoop.fs.FileStatus]] =
+        known.get(path)
+      override def putLeafFiles(path: Path,
+          leaves: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val options = Map("basePath" -> base)
+    val index = new InMemoryFileIndex(spark, paths.map(_._2), options,
+      Some(schema), listed)
+    val resolver = spark.sessionState.conf.resolver
+    val partitions = index.partitionSchema
+    val data = StructType(schema.filterNot(f =>
+      partitions.exists(p => resolver(p.name, f.name))))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitions,
+      ColumnBridge.asNullable(data), None,
+      new ParquetFileFormat, options)(spark))
   }
 
   /** A filter on rows whose mask, the one `masks` holds under the row's

@@ -19,11 +19,8 @@ object SnapshotReader {
     require(versionAsOf.isEmpty || timestampAsOf.isEmpty,
       "versionAsOf and timestampAsOf are mutually exclusive") // cfg XOR, DeltaLakeConnectorConfig.java:65–70
     val log = new TxnLog(tablePath, spark.sessionState.newHadoopConf())
-    val version = versionAsOf
-      .orElse(timestampAsOf.map(log.versionAtTimestamp))
-      .getOrElse(log.latestVersion().getOrElse(
-        throw new IllegalArgumentException(s"empty table at $tablePath")))
-    val snap = log.snapshot(version)
+    val snap = versionAsOf.orElse(timestampAsOf.map(log.versionAtTimestamp))
+      .fold(log.snapshotLatest())(log.snapshot)
     if (snap.files.isEmpty) {
       // valid but empty snapshot: produce an empty frame with the schema
       val schema = snap.metadata.map(m =>

@@ -1,7 +1,7 @@
 package graft.txn
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
@@ -15,6 +15,28 @@ import java.nio.charset.StandardCharsets
   * action per line. Commits are atomic via write-temp + rename-if-absent,
   * which is the single-writer optimistic-concurrency protocol the
   * reference relies on delta-standalone for (DeltaReader.java:301–303).
+  *
+  * Reading a version starts from ONE `listStatus` of `_txn_log`: the
+  * committed versions, each commit file's length and modification time,
+  * and the complete checkpoint sets all come from that listing, and
+  * nothing re-lists the directory for the same snapshot.
+  *
+  * The driver state of a table version is built once per JVM: a cache
+  * keeps, per qualified table path, the newest [[Snapshot]] resolved, the
+  * length and modification time of its commit file, the checkpoint it
+  * was replayed from, and the deletion-vector masks loaded for it. A
+  * snapshot of version v reuses the entry at version c ≤ v when the
+  * listing still shows c's commit file with the same length and
+  * modification time and the same newest checkpoint ≤ v; it then applies
+  * only commits c+1..v. Anything else — a rewritten or vanished commit, a
+  * new checkpoint, time travel below c — replays from the checkpoint as a
+  * cold read does, so a cached snapshot always equals a cold replay, file
+  * order included. A table dropped and re-created at the same path with a
+  * commit of the same length in the same millisecond would pass the
+  * check: dropping a table through [[graft.sources.GraftCatalog]] evicts
+  * its entry for that reason. Entries are softly referenced, one per
+  * table, so the cache needs no size setting and yields under memory
+  * pressure.
   */
 final class TxnLog(
     val tablePath: String,
@@ -52,25 +74,38 @@ final class TxnLog(
   private val PartName =
     """(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet""".r
 
-  /** The physical checkpoint file(s) of `v`: the single file when
-    * present, else the complete part set, else empty (no checkpoint /
-    * incomplete crash leftovers).
-    */
-  private def checkpointFilesOf(v: Long): Seq[Path] = {
-    if (fs.exists(checkpointFile(v))) return Seq(checkpointFile(v))
-    val parts = if (!fs.exists(logDir)) Seq.empty else
-      fs.listStatus(logDir).toSeq.map(_.getPath.getName).flatMap {
-        case PartName(ver, p, n) if ver.toLong == v =>
-          Some((p.toInt, n.toInt))
-        case _ => None
+  private val CommitName = """(\d{20})\.json""".r
+  private val CheckpointName = """(\d{20})\.checkpoint\.parquet""".r
+
+  /** One `listStatus` of `_txn_log`: see [[TxnLog.Listing]]. */
+  private[txn] def listing(): TxnLog.Listing = {
+    val statuses =
+      try fs.listStatus(logDir)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    val commits = scala.collection.immutable.TreeMap.newBuilder[Long, FileStatus]
+    val single = scala.collection.mutable.HashMap.empty[Long, Path]
+    val parts = scala.collection.mutable.HashMap.empty[(Long, Int), Set[Int]]
+    statuses.foreach { st =>
+      st.getPath.getName match {
+        case CommitName(v) => commits += v.toLong -> st
+        case CheckpointName(v) => single(v.toLong) = st.getPath
+        case PartName(v, p, n) =>
+          val k = (v.toLong, n.toInt)
+          parts(k) = parts.getOrElse(k, Set.empty) + p.toInt
+        case _ => ()
       }
-    parts.map(_._2).distinct.sorted.reverseIterator
-      .map(n => (n, parts.filter(_._2 == n).map(_._1).distinct.sorted))
-      .collectFirst { case (n, ps) if ps == (1 to n) =>
-        (1 to n).map(p => checkpointPartFile(v, p, n))
-      }
-      .getOrElse(Seq.empty)
+    }
+    val multi = parts.toSeq.collect { case ((v, n), ps) if ps.size == n &&
+        (1 to n).forall(ps.contains) => v -> n }
+      .groupMapReduce(_._1)(_._2)(math.max)
+      .map { case (v, n) => v -> (1 to n).map(checkpointPartFile(v, _, n)) }
+    val checkpoints = scala.collection.immutable.TreeMap.from(
+      multi ++ single.map { case (v, p) => v -> Seq(p) })
+    new TxnLog.Listing(commits.result(), checkpoints)
   }
+
+  private def checkpointFilesOf(v: Long): Seq[Path] =
+    listing().checkpoints.getOrElse(v, Seq.empty)
 
   /** Commit-file reads since construction — observability hook for the
     * checkpoint spec (proves snapshot() reads checkpoint + tail, not the
@@ -79,19 +114,13 @@ final class TxnLog(
   private[graft] var commitReads: Long = 0L
 
   /** All committed versions, ascending. */
-  def versions(): Seq[Long] = {
-    if (!fs.exists(logDir)) return Seq.empty
-    fs.listStatus(logDir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json").toLong)
-      .sorted
-  }
+  def versions(): Seq[Long] = listing().versions
 
-  def latestVersion(): Option[Long] = versions().lastOption
+  def latestVersion(): Option[Long] = listing().commits.lastOption.map(_._1)
 
-  /** Latest committed version, probed FORWARD from a known-committed
-    * `hint` with exists() calls instead of a whole-log-dir listing.
+  /** Latest COMPLETE committed version, probed FORWARD from a known-
+    * committed `hint` with exists() calls instead of a whole-log-dir
+    * listing.
     *
     * Sound because commit versions are CONTIGUOUS in the retained
     * range: allocation happens only at [[commit]]'s fail-if-exists
@@ -103,13 +132,27 @@ final class TxnLog(
     * (the directory-listing cost Delta pays on _delta_log — priced in
     * FileCountRehearsalSpec, red-on-regression). Falls back to the full
     * listing when the hint is unknown or vacuumed past.
+    *
+    * A commit file is created before its bytes land, so a version is
+    * admitted only once its terminator is readable: a planner handed the
+    * result never reads a commit that is still being written (the
+    * writer's close can take longer than [[read]]'s short retry).
     */
   def latestVersionFrom(hint: Long): Option[Long] = {
-    if (hint < 0 || !fs.exists(commitFile(hint))) return latestVersion()
+    if (hint < 0 || !fs.exists(commitFile(hint))) {
+      val l = listing()
+      return l.commits.keys.toSeq.reverseIterator
+        .find(v => isCached(v, l.commits(v)) || complete(v))
+    }
     var v = hint
-    while (fs.exists(commitFile(v + 1))) v += 1
+    while (fs.exists(commitFile(v + 1)) && complete(v + 1)) v += 1
     Some(v)
   }
+
+  /** Whether commit `v` is fully written (its terminator is readable). */
+  private def complete(v: Long): Boolean =
+    try tryReadComplete(v).isRight
+    catch { case _: java.io.FileNotFoundException => false }
 
   /** Atomically commit `actions` as version `v`. Fails if v exists.
     *
@@ -326,7 +369,8 @@ final class TxnLog(
       retainMillis: Long,
       nowMillis: Long = System.currentTimeMillis()): Seq[String] = {
     val cutoff = nowMillis - retainMillis
-    val vs = versions()
+    val l = listing()
+    val vs = l.versions
     def tsOf(v: Long): Long = read(v)
       .collectFirst { case c: CommitInfo => c.timestamp }
       .getOrElse(Long.MaxValue)
@@ -350,33 +394,18 @@ final class TxnLog(
       if (runMax < cutoff) horizon = v else halted = true
     }
     if (horizon < 0) return Seq.empty
-    checkpointVersions().filter(_ <= horizon).lastOption match {
+    l.checkpoints.rangeTo(horizon).lastOption match {
       case None => Seq.empty
-      case Some(base) =>
+      case Some((base, _)) =>
         val doomed = vs.filter(_ < base).map(commitFile) ++
-          checkpointVersions().filter(_ < base).flatMap(checkpointFilesOf)
+          l.checkpoints.rangeUntil(base).values.flatten
         doomed.foreach(p => fs.delete(p, false))
         doomed.map(_.getName)
     }
   }
 
   /** Committed checkpoint versions, ascending. */
-  def checkpointVersions(): Seq[Long] = {
-    if (!fs.exists(logDir)) return Seq.empty
-    val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-    val single = names.filter(_.endsWith(".checkpoint.parquet"))
-      .map(_.stripSuffix(".checkpoint.parquet").toLong)
-    // multipart: complete sets only (all n of parts 1..n present)
-    val parts = names.flatMap {
-      case PartName(ver, p, n) => Some((ver.toLong, p.toInt, n.toInt))
-      case _ => None
-    }
-    val multi = parts.groupBy(_._1).collect {
-      case (v, ps) if ps.map(_._3).distinct.exists(n =>
-        ps.filter(_._3 == n).map(_._2).distinct.sorted == (1 to n)) => v
-    }
-    (single ++ multi).distinct.sorted
-  }
+  def checkpointVersions(): Seq[Long] = listing().checkpoints.keys.toSeq
 
   /** Write the live-file state at `v` as a parquet checkpoint: one row
     * per action (kind ∈ {add, meta, remove, cdc, …}, json = the LogLine
@@ -393,7 +422,8 @@ final class TxnLog(
     * removal times it retains for. Snapshot replay ignores these rows.
     */
   def writeCheckpoint(v: Long): Unit = {
-    val snap = snapshot(v)
+    val l = listing()
+    val snap = snapshotFrom(l, v)
     val ckptTs = read(v)
       .collectFirst { case c: CommitInfo => c.timestamp }
       .getOrElse(Long.MaxValue)
@@ -408,16 +438,17 @@ final class TxnLog(
     // WITHOUT the tombstone marker (written before the feature) carries
     // nothing, so the gather falls back to the whole retained log — the
     // one-time upgrade cost that makes the marker trustworthy.
-    val prevCp = checkpointVersions().filter(_ < v).lastOption
-    val (prevTombs, prevCdc, prevHasMarker) =
-      prevCp.map(readCheckpointExtras).getOrElse((Seq.empty, Seq.empty, false))
+    val prevCp = l.checkpoints.rangeUntil(v).lastOption
+    val (prevTombs, prevCdc, prevHasMarker) = prevCp
+      .map { case (_, paths) => readCheckpointExtras(paths) }
+      .getOrElse((Seq.empty, Seq.empty, false))
     val tombByPath = scala.collection.mutable.Map.empty[String, RemoveFile]
     prevTombs.foreach(r => tombByPath(r.path) = r)
     val cdcByPath = scala.collection.mutable.Map.empty[String, CdcFile]
     prevCdc.foreach(c => cdcByPath(c.path) = c)
     val gatherFrom =
-      if (prevHasMarker) prevCp.getOrElse(-1L) else -1L
-    versions().filter(x => x > gatherFrom && x <= v).foreach { tv =>
+      if (prevHasMarker) prevCp.fold(-1L)(_._1) else -1L
+    l.versions.filter(x => x > gatherFrom && x <= v).foreach { tv =>
       val actions = read(tv)
       val ts = actions.collectFirst { case c: CommitInfo => c.timestamp }
         .getOrElse(0L)
@@ -495,11 +526,14 @@ final class TxnLog(
           .append("kind", kind).append("json", json))
       } finally writer.close()
     }
+    // what a cold replay of `v` now reads back from the checkpoint; the
+    // cache moves onto it once every file is in place
+    val written = snap.copy(txnMarkers = keptTxns.map(t => t.appId -> t).toMap)
     if (total <= checkpointPartSize) {
       val tmp = new Path(logDir, f".$v%020d.checkpoint.parquet.tmp")
       writeOne(tmp, lines)
-      if (!fs.rename(tmp, checkpointFile(v)))
-        fs.delete(tmp, false) // lost benign race
+      if (fs.rename(tmp, checkpointFile(v))) rebase(l, written)
+      else fs.delete(tmp, false) // lost benign race
     } else {
       val n = ((total + checkpointPartSize - 1) / checkpointPartSize).toInt
       // write EVERY part to a temp first, then rename the set in: a
@@ -511,9 +545,10 @@ final class TxnLog(
           writeOne(tmp, chunk.iterator)
           (tmp, checkpointPartFile(v, i + 1, n))
         }.toSeq
-      staged.foreach { case (tmp, dst) =>
-        if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
+      val renamed = staged.map { case (tmp, dst) =>
+        fs.rename(tmp, dst) || { fs.delete(tmp, false); false }
       }
+      if (renamed.forall(identity)) rebase(l, written)
     }
   }
 
@@ -523,11 +558,15 @@ final class TxnLog(
     * [[writeCheckpoint]]'s carry-forward input and vacuum's unit pins.
     */
   private[graft] def readCheckpointExtras(v: Long)
+      : (Seq[RemoveFile], Seq[CdcFile], Boolean) =
+    readCheckpointExtras(checkpointFilesOf(v))
+
+  private def readCheckpointExtras(paths: Seq[Path])
       : (Seq[RemoveFile], Seq[CdcFile], Boolean) = {
     val tombs = scala.collection.mutable.ArrayBuffer.empty[RemoveFile]
     val cdc = scala.collection.mutable.ArrayBuffer.empty[CdcFile]
     var marker = false
-    checkpointFilesOf(v).foreach { path =>
+    paths.foreach { path =>
       val reader = org.apache.parquet.hadoop.ParquetReader
         .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), path)
         .withConf(conf)
@@ -553,12 +592,8 @@ final class TxnLog(
     */
   private[graft] def checkpointPaths(v: Long): Seq[Path] = checkpointFilesOf(v)
 
-  /** Read a checkpoint back into (live files, metadata, protocol, txns). */
-  private def readCheckpoint(v: Long)
-      : (Seq[AddFile], Option[Metadata], Option[Protocol], Map[String, SetTxn]) = {
-    val paths = checkpointFilesOf(v)
-    require(paths.nonEmpty,
-      s"no complete checkpoint at version $v of $tablePath")
+  /** Read a checkpoint's files back into its state (version unset). */
+  private def readCheckpoint(paths: Seq[Path]): Snapshot = {
     val files = scala.collection.mutable.ArrayBuffer.empty[AddFile]
     var meta: Option[Metadata] = None
     var proto: Option[Protocol] = None
@@ -583,56 +618,131 @@ final class TxnLog(
         }
       } finally reader.close()
     }
-    (files.toSeq, meta, proto, txns)
+    Snapshot(-1L, files.toSeq, meta, proto, txns)
   }
 
   /** Replay the log up to `asOf` (inclusive) into the live-file state,
     * starting from the newest checkpoint ≤ asOf when one exists — the
     * driver then reads ≤ checkpointInterval+1 commit files regardless of
-    * log length.
+    * log length — or from the cached state of an older version when the
+    * listing shows it still holds (see the class doc).
     */
-  def snapshot(asOf: Long): Snapshot = {
-    val vs = versions().filter(_ <= asOf)
-    if (vs.isEmpty)
-      throw new IllegalArgumentException(
-        s"version $asOf does not exist in $tablePath (earliest: " +
-          s"${versions().headOption.getOrElse("<empty log>")})")
-    val cp = checkpointVersions().filter(_ <= asOf).lastOption
-    // insertion-ordered and mutable: O(1) per action, so a replay is
-    // linear in the files; a re-added path keeps its place, a removed
-    // then re-added one moves last
-    val files = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    var meta: Option[Metadata] = None
-    var proto: Option[Protocol] = None
-    var txns = Map.empty[String, SetTxn]
-    cp.foreach { cv =>
-      val (cpFiles, cpMeta, cpProto, cpTxns) = readCheckpoint(cv)
-      cpFiles.foreach(a => files(a.path) = a)
-      meta = cpMeta
-      proto = cpProto
-      txns = cpTxns
-    }
-    vs.filter(v => cp.forall(v > _)).foreach { v =>
-      read(v).foreach {
-        case a: AddFile    => files(a.path) = a
-        case r: RemoveFile => files -= r.path
-        case m: Metadata   => meta = Some(m)
-        case p: Protocol   => proto = Some(p)
-        case t: SetTxn     => txns += (t.appId -> t)
-        case _: CommitInfo => ()
-        case _: CdcFile    => () // change-data sidecars are never table state
-      }
-    }
-    proto.foreach(TxnLog.assertReadable(_, tablePath))
-    Snapshot(vs.last, files.values.toSeq, meta, proto, txns)
-  }
+  def snapshot(asOf: Long): Snapshot = snapshotFrom(listing(), asOf)
 
   /** Latest snapshot; fails on an empty log (strict, per SURVEY §7.1 —
     * the reference's silent fallback-to-latest was defect-adjacent).
     */
-  def snapshotLatest(): Snapshot =
-    snapshot(latestVersion().getOrElse(
+  def snapshotLatest(): Snapshot = {
+    val l = listing()
+    snapshotFrom(l, l.commits.lastOption.map(_._1).getOrElse(
       throw new IllegalArgumentException(s"empty table at $tablePath")))
+  }
+
+  private def snapshotFrom(l: TxnLog.Listing, asOf: Long): Snapshot = {
+    val vs = l.commits.rangeTo(asOf).keys
+    if (vs.isEmpty)
+      throw new IllegalArgumentException(
+        s"version $asOf does not exist in $tablePath (earliest: " +
+          s"${l.commits.headOption.map(_._1).getOrElse("<empty log>")})")
+    val target = vs.last
+    val cp = l.checkpointAtOrBelow(target)
+    cached.filter(c => c.snapshot.version <= target && c.base == cp &&
+        c.matches(l)) match {
+      case Some(c) if c.snapshot.version == target => c.snapshot
+      case Some(c) =>
+        val r = new Replay(c.snapshot)
+        l.commits.range(c.snapshot.version + 1, target + 1).keys
+          .foreach(v => r(read(v)))
+        publish(l, r.result(target), cp, Some(c))
+      case None =>
+        val r = cp match {
+          case -1L => new Replay(Snapshot(-1L, Nil, None))
+          case v => new Replay(readCheckpoint(l.checkpoints(v)))
+        }
+        vs.filter(_ > cp).foreach(v => r(read(v)))
+        publish(l, r.result(target), cp, None)
+    }
+  }
+
+  /** Live state under replay: the files stay in a copied
+    * insertion-ordered map only once an action touches them — O(1) per
+    * action, so a replay is linear in the files; a re-added path keeps
+    * its place, a removed then re-added one moves last.
+    */
+  private final class Replay(from: Snapshot) {
+    private var files: scala.collection.mutable.LinkedHashMap[String, AddFile] = _
+    private var meta = from.metadata
+    private var proto = from.protocol
+    private var txns = from.txnMarkers
+
+    private def live = {
+      if (files == null) {
+        files = scala.collection.mutable.LinkedHashMap.empty
+        from.files.foreach(a => files(a.path) = a)
+      }
+      files
+    }
+
+    def apply(actions: Seq[Action]): Unit = actions.foreach {
+      case a: AddFile    => live(a.path) = a
+      case r: RemoveFile => live -= r.path
+      case m: Metadata   => meta = Some(m)
+      case p: Protocol   => proto = Some(p)
+      case t: SetTxn     => txns += (t.appId -> t)
+      case _: CommitInfo => ()
+      case _: CdcFile    => () // change-data sidecars are never table state
+    }
+
+    def result(version: Long): Snapshot = {
+      proto.foreach(TxnLog.assertReadable(_, tablePath))
+      Snapshot(version, if (files == null) from.files else files.values.toSeq,
+        meta, proto, txns)
+    }
+  }
+
+  private def cached: Option[TxnLog.Cached] =
+    Option(TxnLog.cache.get(lockKey)).flatMap(r => Option(r.get()))
+
+  /** Whether the cache holds version `v` as listed with `status`: then
+    * that commit was read whole, terminator included.
+    */
+  private def isCached(v: Long, status: FileStatus): Boolean =
+    cached.exists(c => c.snapshot.version == v && c.status == TxnLog.stamp(status))
+
+  /** Make `snap` (replayed from checkpoint `base`) the table's entry
+    * unless a newer entry the listing still vouches for is in place. The
+    * masks of the replaced state's files whose vector did not change
+    * carry over.
+    */
+  private def publish(l: TxnLog.Listing, snap: Snapshot, base: Long,
+      from: Option[TxnLog.Cached]): Snapshot = {
+    val status = TxnLog.stamp(l.commits(snap.version))
+    TxnLog.cache.compute(lockKey, (_, ref) => {
+      val old = Option(ref).flatMap(r => Option(r.get())).filter(_.matches(l))
+      if (old.exists(_.snapshot.version > snap.version)) ref
+      else new java.lang.ref.SoftReference(new TxnLog.Cached(snap, status, base,
+        TxnLog.carried(snap, from.orElse(old))))
+    })
+    snap
+  }
+
+  /** After a checkpoint of `snap.version` landed: the entry at that
+    * version now stands on it.
+    */
+  private def rebase(l: TxnLog.Listing, snap: Snapshot): Unit =
+    TxnLog.cache.computeIfPresent(lockKey, (_, ref) =>
+      Option(ref.get()).filter(c => c.snapshot.version == snap.version &&
+          c.matches(l))
+        .fold(ref)(c => new java.lang.ref.SoftReference(
+          new TxnLog.Cached(snap, c.status, snap.version, c.vectors))))
+
+  /** The deletion-vector masks loaded for this table's cached state, by
+    * (data file name, vector pointer); None when nothing is cached.
+    */
+  private[txn] def vectorMasks: Option[TxnLog.Vectors] = cached.map(_.vectors)
+
+  /** Drop this table's cached state: the next read replays cold. */
+  private[graft] def evictCached(): Unit = TxnLog.cache.remove(lockKey)
 
   /** Commit history, newest first: (version, operation, timestamp,
     * n_adds, n_removes) — the DESCRIBE HISTORY surface. `limit` bounds
@@ -683,6 +793,68 @@ final class TxnLog(
 }
 
 object TxnLog {
+  /** One `listStatus` of `_txn_log`, read into every fact a snapshot
+    * needs: the commit files by version, and per checkpointed version its
+    * physical file(s) — the single file when present, else the complete
+    * part set (all n of `.i.n.parquet`; a crash mid-set leaves an ignored
+    * incomplete set, never a torn read).
+    */
+  private[txn] final class Listing(
+      val commits: scala.collection.immutable.SortedMap[Long, FileStatus],
+      val checkpoints: scala.collection.immutable.SortedMap[Long, Seq[Path]]) {
+    def versions: Seq[Long] = commits.keys.toSeq
+    /** Newest checkpoint at or below `v`, -1 if none. */
+    def checkpointAtOrBelow(v: Long): Long =
+      checkpoints.rangeTo(v).lastOption.fold(-1L)(_._1)
+  }
+
+  /** A table's cached driver state: its newest resolved snapshot, the
+    * (length, modification time) of that version's commit file, the
+    * checkpoint the state was replayed from (-1: none), and the vector
+    * masks loaded for it by (data file name, vector pointer).
+    */
+  private[txn] final class Cached(
+      val snapshot: Snapshot,
+      val status: (Long, Long),
+      val base: Long,
+      val vectors: Vectors) {
+    /** The listing still shows this version's commit file unchanged. */
+    def matches(l: Listing): Boolean =
+      l.commits.get(snapshot.version).exists(stamp(_) == status)
+  }
+
+  /** Vector masks by (data file name, vector pointer): (kill version,
+    * dead positions) per bitmap row of the vector.
+    */
+  private[txn] type Vectors = java.util.concurrent.ConcurrentHashMap[
+    (String, String), Seq[(Long, org.roaringbitmap.longlong.Roaring64Bitmap)]]
+
+  private[txn] def stamp(st: FileStatus): (Long, Long) =
+    (st.getLen, st.getModificationTime)
+
+  /** One softly referenced entry per qualified table path. */
+  private[txn] val cache = new java.util.concurrent.ConcurrentHashMap[
+    String, java.lang.ref.SoftReference[Cached]]()
+
+  /** `from`'s masks of files `snap` still holds with the same vector. */
+  private def carried(snap: Snapshot, from: Option[Cached]): Vectors = {
+    val out: Vectors = new java.util.concurrent.ConcurrentHashMap()
+    from.filterNot(_.vectors.isEmpty).foreach { c =>
+      val keep = snap.files.iterator
+        .flatMap(f => f.dv.map(new Path(f.path).getName -> _)).toSet
+      c.vectors.forEach((k, v) => if (keep.contains(k)) out.put(k, v))
+    }
+    out
+  }
+
+  /** Drop the cached state of the table at `path` and of every table
+    * under it: for paths whose logs are deleted or moved.
+    */
+  private[graft] def evictUnder(path: String, conf: Configuration): Unit = {
+    val key = new TxnLog(path, conf).lockKey.stripSuffix("/")
+    cache.keySet.removeIf(k => k == key || k.startsWith(key + "/"))
+  }
+
   /** Checkpoint every N commits (Delta defaults to 10; same trade-off:
     * tail replay ≤ N commit files, checkpoint write amortized over N).
     */

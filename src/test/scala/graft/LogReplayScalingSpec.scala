@@ -6,11 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Log replay is linear in the files it replays: a commit of n AddFiles,
-  * and a checkpoint of n, replay into a snapshot with twice the files in
-  * at most 2.5× the time (an insertion-ordered map rebuilt per action is
-  * quadratic: 4× and worse at these sizes). Timings are the median of
-  * three runs after one warm-up, the two sizes taking turns. The replay
-  * keeps the log's file order.
+  * and a checkpoint of n, replay cold (the table's cached state dropped)
+  * into a snapshot with twice the files in at most 2.5× the time (an
+  * insertion-ordered map rebuilt per action is quadratic: 4× and worse at
+  * these sizes). Timings are the median of three runs after one warm-up,
+  * the two sizes taking turns. The replay keeps the log's file order.
+  *
+  * Advancing the cached state of a 100k-file snapshot by one commit
+  * costs under a tenth of a cold replay of the same version.
   */
 class LogReplayScalingSpec extends AnyFunSuite {
 
@@ -32,6 +35,7 @@ class LogReplayScalingSpec extends AnyFunSuite {
   }
 
   private def replayMillis(l: TxnLog, n: Int): Double = {
+    l.evictCached()
     val t0 = System.nanoTime()
     val snap = l.snapshot(0L)
     val ms = (System.nanoTime() - t0) / 1e6
@@ -57,6 +61,35 @@ class LogReplayScalingSpec extends AnyFunSuite {
       info(f"$source: $Small files $s%.0f ms, $Large files $l%.0f ms")
       assert(l <= 2.5 * s, f"2x the files took ${l / s}%.2fx the time")
     }
+  }
+
+  test("advancing a cached 100k-file snapshot by one commit costs " +
+      "under a tenth of a cold replay") {
+    val n = 100000
+    val l = log(n, checkpoint = true)
+    def add(i: Int) = AddFile(s"p=0/new-$i.parquet", Map("p" -> "0"), 1L, 10L,
+      dataChange = true)
+    def timed(body: => Snapshot): (Double, Snapshot) = {
+      val t0 = System.nanoTime()
+      val s = body
+      ((System.nanoTime() - t0) / 1e6, s)
+    }
+    val runs = (1 to 3).map { i =>
+      val v = i.toLong
+      l.evictCached()
+      l.snapshot(v - 1) // the cached state at v - 1
+      l.commit(v, Seq(add(i), RemoveFile(f"p=${i % 7}/part-$i%06d.parquet",
+        20L, Map("p" -> (i % 7).toString)), CommitInfo("WRITE", 10L + v)))
+      val (advance, warm) = timed(l.snapshot(v))
+      l.evictCached()
+      val (cold, fresh) = timed(l.snapshot(v))
+      assert(warm == fresh, "an advanced state must equal a cold replay")
+      assert(warm.files.size == n)
+      (advance, cold)
+    }
+    val (a, c) = (median(runs.map(_._1)), median(runs.map(_._2)))
+    info(f"$n files: advance by one commit $a%.1f ms, cold replay $c%.0f ms")
+    assert(a < c / 10, f"advance $a%.1f ms vs cold $c%.1f ms")
   }
 
   test("replay keeps the log's file order") {

@@ -170,11 +170,16 @@ class TxnLogSpec extends AnyFunSuite {
       log.commit(v.toLong, actions)
     }
     assert(log.checkpointVersions().nonEmpty)
-    // a fresh reader resolves the snapshot from checkpoint + ≤ 10 tail commits
+    // a cold reader (the table's cached state dropped) resolves the
+    // snapshot from checkpoint + ≤ 10 tail commits
     val reader = new TxnLog(dir, conf)
+    reader.evictCached()
     val snap = reader.snapshot(199L)
     assert(reader.commitReads <= log.checkpointInterval + 1,
       s"snapshot read ${reader.commitReads} commit files")
+    // and the state it built serves the next read without a commit read
+    val warm = new TxnLog(dir, conf)
+    assert(warm.snapshot(199L) == snap && warm.commitReads == 0)
     // state identical to a full no-checkpoint replay
     val noCp = new TxnLog(java.nio.file.Files.createTempDirectory("txn_nocp").toString,
       conf, checkpointInterval = 0)

@@ -67,11 +67,14 @@ class CommitFileCountSpec extends AnyFunSuite {
       commitTs = 3000L))
     info(s"append: $c")
     assertDirect(c)
-    // latestVersion and the snapshot's version and checkpoint listings;
-    // the commit reads its row-id mark without a listing
-    assert(c.logLists == 3, c)
-    // the replay reads v0 and v1; the commit reads v1's row-id mark
-    assert(c.logOpens == 3, c)
+    // latestVersion's listing and the snapshot's one; the commit reads
+    // its row-id mark without a listing (3 when the snapshot listed the
+    // log twice)
+    assert(c.logLists == 2, c)
+    // v1's state is cached, so nothing is replayed; the commit reads
+    // v1's row-id mark and the new version is cached by reading it once
+    // (3 when the append replayed v0 and v1)
+    assert(c.logOpens == 2, c)
     assert(SnapshotReader.read(spark, t).count() == 600L)
   }
 
@@ -85,11 +88,13 @@ class CommitFileCountSpec extends AnyFunSuite {
       GraftTableSink.commitBatch(rows(500L, 600L), t, 1L, Seq("p"), 3000L)))
     info(s"commitBatch: $c")
     assertDirect(c)
-    // the marker check's listing and the snapshot's two
-    assert(c.logLists == 3, c)
-    // the marker check reads v1; the replay v0 and v1; the commit v1's
-    // row-id mark
-    assert(c.logOpens == 4, c)
+    // the marker check's listing and the snapshot's one (3 when the
+    // snapshot listed the log twice)
+    assert(c.logLists == 2, c)
+    // the marker check reads v1; the snapshot advances the cached state
+    // by it; the commit reads v1's row-id mark (4 when the snapshot
+    // replayed v0 and v1)
+    assert(c.logOpens == 3, c)
     assert(SnapshotReader.read(spark, t).count() == 600L)
     assert(!GraftTableSink.commitBatch(rows(500L, 600L), t, 1L, Seq("p")),
       "a replayed batch is skipped")
@@ -222,12 +227,57 @@ class CommitFileCountSpec extends AnyFunSuite {
     assert(SnapshotReader.read(spark, t).count() == 400L - 40L - 20L)
   }
 
+  test("one format(graft) read and one graft-cdf read of the latest " +
+      "version: one log listing each, no commit re-read") {
+    val t = freshTable()
+    TableWriter.write(spark, rows(0L, 400L), t, Seq("p"), version = 0L,
+      commitTs = 1000L)
+    TableWriter.append(spark, rows(400L, 500L), t, Seq("p"), commitTs = 2000L)
+    def sum(): Long = spark.read.format("graft").option("tablePath", t).load()
+      .agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0)
+    assert(sum() == (0L until 500L).sum)
+    val read = counted(assert(sum() == (0L until 500L).sum))
+    info(s"format(graft): $read")
+    assert(read.driverDataOpens == 0, read)
+    assert(read.logLists == GraftReadLogLists, read)
+    assert(read.logOpens == 0, read)
+    def cdf(): Long = {
+      val n = new java.util.concurrent.atomic.AtomicLong()
+      spark.readStream.format("graft-cdf").option("tablePath", t)
+        .option("startingVersion", "1").load()
+        .writeStream.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("cfc_cdf").toString)
+        .foreachBatch { (df: DataFrame, _: Long) => n.addAndGet(df.count()); () }
+        .start().awaitTermination()
+      n.get()
+    }
+    val c = counted(assert(cdf() == 100L))
+    info(s"graft-cdf: $c")
+    assert(c.driverDataOpens == 0, c)
+    assert(c.logLists == CdfReadLogLists, c)
+    assert(c.logOpens == CdfReadLogOpens, c)
+  }
+
   // the DML statements open no data file on the driver
   private val DmlDriverDataOpens = 0
   // `_txn_log` listings of one SQL DV UPDATE or MERGE, planning included:
-  // the commit attempt replays the log once, and validates the new rows
-  // and looks for concurrent appends against that same snapshot (the
-  // versions after the scan's are read by number); 22 when both checks
+  // each snapshot the statement resolves lists the log once and reuses
+  // the table's cached state, and the commit attempt validates the new
+  // rows and looks for concurrent appends against its one snapshot (the
+  // versions after the scan's are read by number); 18 when each snapshot
+  // listed the log twice and replayed it, 22 when both checks also
   // listed and replayed the log again
-  private val DmlLogLists = 18
+  private val DmlLogLists = 6
+  // the schema inference's snapshot and the scan's (4 when each listed
+  // the log twice)
+  private val GraftReadLogLists = 2
+  // the schema inference's snapshot, the AvailableNow pin's listing (the
+  // stream has no version to probe from yet) and the planner's latest
+  // metadata; the planner reads the one commit in range, whose
+  // completeness the pin saw in the cached state (22 listings and 24
+  // commit reads when each of Spark's four plans of the batch planned it
+  // anew)
+  private val CdfReadLogLists = 3
+  private val CdfReadLogOpens = 1
 }

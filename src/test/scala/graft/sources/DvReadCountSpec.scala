@@ -9,13 +9,14 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Each read applies a deletion vector from ONE read of it, however many
-  * files share the vector: on `mockfs://`, a table whose F files all
+/** A deletion vector is loaded once, however many files share it and
+  * however many reads apply it: on `mockfs://`, a table whose F files all
   * point at one vector directory is read through the DSv2 scan,
   * `SnapshotReader`, a `CdcReader.cdc` backfill and a `graft-cdc`
-  * AvailableNow backfill. Each makes one listing under `_dv/` per vector
-  * directory and one open per vector part file, for F = 4 and F = 32
-  * alike; a per-split or per-file vector read would grow with F.
+  * AvailableNow backfill. Together they make one listing under `_dv/` and
+  * one open per vector part file, for F = 4 and F = 32 alike: the first
+  * read loads the masks into the table's cached state and the others
+  * reuse them. A per-split, per-file or per-read vector load would grow.
   *
   * The DSv2 scan's `dvDroppedRows` metric is checked against counts taken
   * without the engine's loader: the rows the delete removed, and the
@@ -80,8 +81,8 @@ class DvReadCountSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   for (files <- Seq(4, 32)) {
-    test(s"F = $files files sharing one vector: each read lists it once " +
-        "and opens each part once") {
+    test(s"F = $files files sharing one vector: four reads list it once " +
+        "and open each part once") {
       val t = table(files)
       val parts = vectorParts(t).size
       assert(parts >= 1)
@@ -93,14 +94,15 @@ class DvReadCountSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         "CdcReader.cdc backfill" -> (() =>
           CdcReader.cdc(spark, t, startingVersion = 1L).count()),
         "graft-cdc AvailableNow backfill" -> (() => graftCdcBackfill(t)))
-      reads.foreach { case (name, read) =>
-        var n = -1L
-        val (opens, lists) = dvReads { n = read() }
-        assert(n == live, s"$name read $n rows")
-        assert(opens == parts,
-          s"$name opened the vector $opens times for $parts part file(s)")
-        assert(lists == 1, s"$name listed the vector directory $lists times")
+      val (opens, lists) = dvReads {
+        reads.foreach { case (name, read) =>
+          val n = read()
+          assert(n == live, s"$name read $n rows")
+        }
       }
+      assert(opens == parts,
+        s"the reads opened the vector $opens times for $parts part file(s)")
+      assert(lists == 1, s"the reads listed the vector directory $lists times")
     }
   }
 
